@@ -33,16 +33,7 @@ package graft
   */
 object Bench {
 
-  /** Release EVERYTHING between timed runs: `catalog.clearCache()` only
-    * drops CacheManager-tracked DataFrame caches — raw `rdd.persist`
-    * blocks (materializeLeaf leaves, the LSH signature stage) are not in
-    * that registry and would accumulate disk blocks across the 66×3
-    * query invocations of a bench session.
-    */
-  private def clearAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
+  import Sessions.clearAll
 
   private def jsonStr(s: String): String = Json.str(s)
 

@@ -79,6 +79,25 @@ object Sessions {
     s
   }
 
+  /** Core count for the hand-run tools: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees. (`Bench` and `Verify` keep their own defaults —
+    * `Bench.DefaultCpus` is part of its record policy.)
+    */
+  def toolCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Release EVERYTHING between timed runs: `catalog.clearCache()` only
+    * drops CacheManager-tracked DataFrame caches — raw `rdd.persist`
+    * blocks (materializeLeaf leaves, the LSH signature stage) are not in
+    * that registry and would accumulate disk blocks across the 66×3
+    * query invocations of a bench session.
+    */
+  def clearAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
   /** The cluster posture, as data — one source of truth the builder
     * applies and specs/deploy scripts can read (`--conf` lines are
     * exactly these pairs).

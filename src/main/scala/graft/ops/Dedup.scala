@@ -70,6 +70,32 @@ object Dedup {
       result
     } finally intermediates.foreach(_.unpersist(blocking = false))
 
+  /** Runs `side` on a concurrent job while `main` runs inline — two
+    * independent actions overlapped — and ALWAYS awaits `side` before
+    * returning or rethrowing, so no job started here outlives the call
+    * and the caller's `finally` never unpersists an input a running job
+    * still reads. If `main` throws, a successful `side` result is handed
+    * to `release` before the rethrow (a failed `side` is attached as
+    * suppressed).
+    */
+  private[graft] def overlapped[A, B](side: => A)(release: A => Unit)(main: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val fut = Future(side)(scala.concurrent.ExecutionContext.global)
+    val b =
+      try main
+      catch {
+        case t: Throwable =>
+          Await.ready(fut, Duration.Inf).value.get match {
+            case scala.util.Success(a) =>
+              try release(a) catch { case r: Throwable => t.addSuppressed(r) }
+            case scala.util.Failure(e) => t.addSuppressed(e)
+          }
+          throw t
+      }
+    (Await.result(fut, Duration.Inf), b)
+  }
+
   /** [[eagerlyWith]] for INDEX-PROBING operators: the materialized
     * result lives OUTSIDE the cache manager (`localCheckpoint`, eager),
     * with lineage severed. These operators are called repeatedly in a
@@ -1115,13 +1141,10 @@ object Dedup {
       // concurrent writes would RACE the cache population and tokenize
       // the corpus twice.
       freq.count()
-      val tokensFut = scala.concurrent.Future {
-        graft.etl.Refresh.overwriteStagedUncounted(
-          setSimSized(tok, freq), s"$path/tokens")
-      }(scala.concurrent.ExecutionContext.global)
-      graft.etl.Refresh.overwriteStagedUncounted(freq, s"$path/freq")
-      scala.concurrent.Await.result(tokensFut,
-        scala.concurrent.duration.Duration.Inf)
+      overlapped(graft.etl.Refresh.overwriteStagedUncounted(
+          setSimSized(tok, freq), s"$path/tokens"))(_ => ()) {
+        graft.etl.Refresh.overwriteStagedUncounted(freq, s"$path/freq")
+      }
     } finally {
       freq.unpersist(blocking = false)
       tok.unpersist(blocking = false)

@@ -262,16 +262,15 @@ object Extensions {
       // concurrent job so its stages back-fill the executors those
       // actions leave idle (guide §2.6; r18 profile: q_pq_full_stack
       // spent >half its wall in driver gaps between 26 tiny jobs). Same
-      // results by construction — only job scheduling overlaps.
-      val exactFut = scala.concurrent.Future {
+      // results by construction — only job scheduling overlaps; a failed
+      // approximate leg still waits for the exact leg and releases it.
+      val ((exact, exactRdd), approx) = Dedup.overlapped(
         Dedup.materializeLeaf(
           Similarity.annJoinExact(probes, corpus, "vec_id", "embedding", k)
-            .select(col("query_id"), col("match_id")))
-      }(scala.concurrent.ExecutionContext.global)
-      val approx = approxJoin(probes, corpus)
-        .select(col("query_id"), col("match_id"))
-      val (exact, exactRdd) = scala.concurrent.Await.result(
-        exactFut, scala.concurrent.duration.Duration.Inf)
+            .select(col("query_id"), col("match_id"))))(
+        _._2.unpersist(blocking = false)) {
+        approxJoin(probes, corpus).select(col("query_id"), col("match_id"))
+      }
       val hits = exact.join(approx, Seq("query_id", "match_id"))
         .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
       val out = exact.select("query_id").distinct()

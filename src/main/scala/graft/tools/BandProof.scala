@@ -19,11 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object BandProof {
 
-  private def clearAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     require(args.length >= 2, "usage: BandProof <factor> <bandWidth> [outPath]")
@@ -31,8 +26,7 @@ object BandProof {
     val w = args(1).toInt
     val outPath = if (args.length > 2) args(2) else s"bandproof_x$factor.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-bandproof")
+    val spark = graft.Sessions.local(graft.Sessions.toolCpus, "graft-bandproof")
 
     val dir = ScaleUp.ensure(spark, sfDir, factor)
 
@@ -46,7 +40,7 @@ object BandProof {
             "s_a", "s_b", maxDist = 2, prefixLen = 3, lengthBand = band)
           .filter(col("id_a") < col("id_b")).count()
         val t = (System.nanoTime() - t0) / 1e9
-        clearAll(spark); (t, n)
+        graft.Sessions.clearAll(spark); (t, n)
       }
       once() // warm-up
       val (t1, n1) = once(); val (t2, n2) = once()

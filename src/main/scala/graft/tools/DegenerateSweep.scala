@@ -46,8 +46,7 @@ object DegenerateSweep {
     val mode = if (args.nonEmpty) args(0) else "empty"
     require(mode == "empty" || mode == "one", s"unknown mode $mode")
     val outPath = if (args.length > 1) Some(args(1)) else None
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, s"graft-degenerate-$mode")
+    val spark = graft.Sessions.local(graft.Sessions.toolCpus, s"graft-degenerate-$mode")
     val dir = ensure(spark, if (mode == "empty") 0 else 1, mode)
 
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
@@ -55,11 +54,11 @@ object DegenerateSweep {
       val fn = graft.SparkEntry.queries(name)
       try {
         val rows = fn(spark, dir).collect().length
-        spark.catalog.clearCache()
+        graft.Sessions.clearAll(spark)
         name -> Right(rows)
       } catch {
         case NonFatal(e) =>
-          spark.catalog.clearCache()
+          graft.Sessions.clearAll(spark)
           val root = { var c: Throwable = e; while (c.getCause != null && c.getCause != c) c = c.getCause; c }
           val msg = s"${root.getClass.getSimpleName}: ${Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString}"
           name -> Left(msg)

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions.clearAll
 import graft.ops.{CapMetrics, Dedup}
 
 /** Giant-component stress proof for the dedup closure — the adversarial
@@ -39,11 +40,6 @@ import graft.ops.{CapMetrics, Dedup}
   * and stdout.
   */
 object GiantProof {
-
-  private def clearAll(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
 
   /** Chain edges 0—1—2—…—(n−1): one component, diameter n−1. */
   private def chainEdges(spark: SparkSession, n: Long): DataFrame = {
@@ -90,8 +86,7 @@ object GiantProof {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val factor = if (args.length > 0) args(0).toInt else 64
     val outPath = if (args.length > 1) args(1) else "GIANTPROOF.json"
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-giantproof")
+    val spark = graft.Sessions.local(graft.Sessions.toolCpus, "graft-giantproof")
     val chainN0 = 20000L
     val corpusN0 = 2000L
     val nBoiler = Dedup.DefaultMaxBucket + 1000

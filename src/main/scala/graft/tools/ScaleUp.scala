@@ -113,13 +113,12 @@ object ScaleUp {
   }
 
   /** CLI: `runMain graft.tools.ScaleUp <sfDir> <factor>` — prints the
-    * scaled dir (for pointing Verify/Explain at it by hand).
+    * scaled dir (for pointing Verify or Profile at it).
     */
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 8
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scaleup")
+    val spark = graft.Sessions.local(graft.Sessions.toolCpus, "graft-scaleup")
     val out = ensure(spark, sfDir, factor)
     println(s"[scaleup] $out")
     spark.stop()

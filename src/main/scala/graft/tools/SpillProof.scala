@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,7 +18,7 @@ import org.apache.spark.sql.functions._
   *      per-task execution memory in the ~12 MB range, far below the
   *      ×F shuffle/aggregate working sets) re-runs each query and must
   *      (a) complete and (b) reproduce the digest bit-for-bit.
-  * A stage listener totals memory+disk spill bytes so the record PROVES
+  * [[Profile.Listener]] totals memory+disk spill bytes so the record PROVES
   * the pressure was real: zero spill would mean the squeeze didn't bite
   * and the pass proves nothing. `spark.memory.fraction` is a static
   * conf, hence two sequential SparkContexts rather than two sessions.
@@ -70,7 +67,6 @@ object SpillProof {
     val (scaledDir, refDigests) = ref
 
     // pass 2: squeezed unified memory, spill accounting on
-    val spilledBytes = new AtomicLong(0L)
     val squeezed = SparkSession.builder()
       .master("local[32]")
       .appName("graft-spillproof-squeezed")
@@ -82,24 +78,17 @@ object SpillProof {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     squeezed.sparkContext.setLogLevel("WARN")
-    squeezed.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null)
-          spilledBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        ()
-      }
-    })
+    val stages = new Profile.Listener
+    squeezed.sparkContext.addSparkListener(stages)
     val rows = try names.map { n =>
+      stages.reset()
       val t0 = System.nanoTime()
-      val before = spilledBytes.get()
       val (nRows, h) = digest(squeezed, n, scaledDir)
       val t = (System.nanoTime() - t0) / 1e9
-      // listener events are async (the bus drain API is private[spark]);
-      // a short settle keeps per-query attribution honest — worst case a
-      // straggler event credits the NEXT query, never the total
-      Thread.sleep(2000L)
-      val spill = spilledBytes.get() - before
+      // stage events arrive asynchronously: drain the bus so every stage
+      // of this query is counted, and none credits the next one
+      org.apache.spark.sql.graftshim.Shim.waitForListenerBus(squeezed)
+      val spill = stages.spillBytes
       val (refRows, refH) = refDigests(n)
       val ok = nRows == refRows && h == refH
       System.err.println(f"[spillproof] $n rows=$nRows match=$ok " +

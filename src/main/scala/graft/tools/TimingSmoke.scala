@@ -30,11 +30,6 @@ object TimingSmoke {
     */
   val SuspectFloorSec = 2.0
 
-  private def clearAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
   /** Parse the previous committed ledger's per-query times, pure so a
     * spec can pin it. Whitespace-tolerant like Bench's prev parse (the
     * r4 lesson: a pretty-printed ledger must not silently reset the
@@ -81,8 +76,7 @@ object TimingSmoke {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val outPath = if (args.nonEmpty) args(0) else "SMOKE_TIMING.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt, "graft-timing-smoke")
+    val spark = graft.Sessions.local(graft.Sessions.toolCpus, "graft-timing-smoke")
 
     val headliners = graft.SparkEntry.benchQueries.toSet
     val names = graft.SparkEntry.queries.keys.toSeq.filterNot(headliners).sorted
@@ -91,7 +85,7 @@ object TimingSmoke {
       val r =
         try { graft.SparkEntry.queries(name)(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
         catch { case NonFatal(e) => Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}") }
-      clearAll(spark)
+      graft.Sessions.clearAll(spark)
       name -> r
     }
     val times = timed.collect { case (n, Right(t)) => n -> t }

@@ -68,4 +68,10 @@ object Shim {
     */
   def waitForListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Whether a stage writes shuffle output (`shuffleDepId` is
+    * `private[spark]`).
+    */
+  def isShuffleMap(i: org.apache.spark.scheduler.StageInfo): Boolean =
+    i.shuffleDepId.isDefined
 }
