@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times the headline queries at SPARK_GRAFT_SF_DIR
   * and prints exactly one JSON line for the driver.
@@ -8,10 +13,10 @@ package graft
   *  - a query that throws is NOT timed as ~0s — it is excluded from the
   *    total and reported under "errors" (a regression must never
   *    masquerade as a speedup);
-  *  - the cache is cleared between timed runs, so best-of-2 measures
-  *    steady-state compute, not a cache hit of the first run (persist()
-  *    matches by analyzed plan, and several pipelines persist
-  *    intermediates internally);
+  *  - the cache is cleared after every timed run (see [[timedRun]]), so
+  *    best-of-2 measures steady-state compute, not a cache hit of the
+  *    first run (persist() matches by analyzed plan, and several
+  *    pipelines persist intermediates internally);
   *  - the JSON line goes to stdout AND to a file (SPARK_GRAFT_BENCH_OUT,
   *    default bench_out.json) so the driver's parser never has to fish
   *    it out of sbt log prefixes;
@@ -25,15 +30,14 @@ package graft
   *    headliners; "drift" (max/min sample) > 3x marks the record
   *    "contaminated": true — machine contention self-identifies instead
   *    of masquerading as a per-query regression;
-  *  - the scaling section carries the record-acceptance verdict
+  *  - whether the run becomes the comparison record is ONE pure decision
+  *    table, [[verdict]]; the scaling section carries it
   *    ("session_accepted") and QUARANTINES its superlinear flags
   *    unconditionally: each flag must reproduce in a fresh Spark
   *    session or it is published under "suspect_contention" with its
   *    fresh ratio, never under "superlinear" (see [[quarantineFlags]]).
   */
 object Bench {
-
-  import Sessions.clearAll
 
   private def jsonStr(s: String): String = Json.str(s)
 
@@ -43,14 +47,32 @@ object Bench {
     */
   private[graft] val DefaultSfDir = "/root/testdata/sf0.1"
 
-  /** Sampling policy stamp carried in every record, so a comparator can
-    * tell whether two records were measured under the same policy (the
-    * r10 best-of-2 → best-of-3 change biased one round of deltas toward
-    * "improvement" invisibly).
+  /** The canonical bench core count — the width of the main bench run,
+    * at which records are comparable.
     */
-  private[graft] val SamplingPolicy =
-    "best-of-2; +1 sample when min >= 0.5 s; +1 settle sample for the " +
-      "top-10 record-inflated queries when the shared-query total > 1.1x the record"
+  private[graft] val DefaultCpus = 32
+
+  /** Default ×F of the scaling section's replica. */
+  private[graft] val DefaultScaleFactor = 8
+
+  /** The smallest SF: JVM/codegen warm-up and the contention canary run
+    * here, so they price the engine, not the data.
+    */
+  private[graft] val WarmSfDir = "/root/testdata/sf0.001"
+
+  /** The contention canary: a fixed trivial query at [[WarmSfDir]], run
+    * before every [[CanaryEvery]] headliners and once after the last.
+    */
+  private[graft] val CanaryQuery = "q_token_count"
+  private[graft] val CanaryEvery = 5
+
+  /** HEAVY queries (best-of-2 min >= this) pay one extra sample: r9's
+    * delta ledger had q_bloom_decontaminate swing 1.87x between two clean
+    * runs of identical code — on the multi-second tail a single contended
+    * sample dominates a 2-sample min, and those are exactly the queries
+    * the round-over-round gate is judged on.
+    */
+  private[graft] val HeavySec = 0.5
 
   /** Shared-total band above the comparison record past which the
     * slow-tail settle pass fires (r15): two r14 invocations of identical
@@ -61,6 +83,15 @@ object Bench {
     */
   private[graft] val SettleBand = 1.10
   private[graft] val SettleTopN = 10
+
+  /** Sampling policy stamp carried in every record, so a comparator can
+    * tell whether two records were measured under the same policy (the
+    * r10 best-of-2 → best-of-3 change biased one round of deltas toward
+    * "improvement" invisibly).
+    */
+  private[graft] val SamplingPolicy =
+    s"best-of-2; +1 sample when min >= $HeavySec s; +1 settle sample for the " +
+      s"top-$SettleTopN record-inflated queries when the shared-query total > ${SettleBand}x the record"
 
   /** The settle pass's targets (pure, BenchPolicySpec-pinned): when the
     * SHARED-query total (only queries present in both this run and the
@@ -90,11 +121,11 @@ object Bench {
   }
 
   /** Canary drift above which a run may NOT become the comparison
-    * record. Stricter than the 3.0 "contaminated" verdict: r10's run had
-    * drift 1.81× and a broad 1.14× slowdown on untouched queries — not
-    * contaminated enough to flag, but adopting it as `bench_prev` made
-    * the next round's deltas compare against an inflated base. A record
-    * is a BASELINE; it must be measured on a quiet box.
+    * record. Stricter than the [[ContaminatedDrift]] verdict: r10's run
+    * had drift 1.81× and a broad 1.14× slowdown on untouched queries —
+    * not contaminated enough to flag, but adopting it as `bench_prev`
+    * made the next round's deltas compare against an inflated base. A
+    * record is a BASELINE; it must be measured on a quiet box.
     */
   private[graft] val RecordAcceptDrift = 1.5
 
@@ -107,6 +138,13 @@ object Bench {
     * wins; the ACCEPT threshold stays [[RecordAcceptDrift]].
     */
   private[graft] val RetryDrift = 1.25
+
+  /** Canary drift above which the record is "contaminated": some window
+    * of the run competed for the machine and its figures are suspect. A
+    * contaminated session never counts toward a regime either — an
+    * actively-competing box is not a regime.
+    */
+  private[graft] val ContaminatedDrift = 3.0
 
   /** Outlier-tolerant canary drift (2nd slowest / 2nd fastest when ≥4
     * samples — one transient GC/writeback hiccup must not taint the run)
@@ -122,30 +160,7 @@ object Bench {
     (drift, raw)
   }
 
-  /** Whether a retry pass replaces the first pass: strictly lower canary
-    * drift AND itself error-free. A quieter-but-errored second pass must
-    * never displace a clean first pass — `anyError` would then reject the
-    * record outright, discarding the clean figures already in hand.
-    */
-  private[graft] def adoptRetry(firstDrift: Double, retryDrift: Double,
-                                retryErrorFree: Boolean): Boolean =
-    retryDrift < firstDrift && retryErrorFree
-
-  /** Whether the COOL-DOWN escalation fires after the immediate retry:
-    * the run still ends above the accept gate, i.e. whatever the gate
-    * would publish is a sample the harness itself refuses to adopt as
-    * the comparison record. r15 ended exactly there — drift 1.53, record
-    * refused, yet the contended 53.65 s total became the committed round
-    * artifact while the adopted record said 39.79. The immediate retry
-    * ran back-to-back into the same contention window; this pass sleeps
-    * [[CooldownSec]] first (transient load — a build, a backup — usually
-    * clears in that window) and the lowest-drift error-free pass wins,
-    * same [[adoptRetry]] rule.
-    */
-  private[graft] def cooldownRetryNeeded(canaryDrift: Double): Boolean =
-    canaryDrift > RecordAcceptDrift
-
-  /** Cool-down before the escalation pass (seconds; env-overridable). */
+  /** Cool-down before the escalation pass (seconds). */
   private[graft] val CooldownSec = 90
 
   // ---- record lifecycle under a sustained environment shift (r17) ----
@@ -181,42 +196,6 @@ object Bench {
     */
   private[graft] val RegimeAgreeBand = 0.10
 
-  /** Sessions above the contamination verdict (canary drift > 3) never
-    * count toward a regime — an actively-competing box is not a regime.
-    */
-  private[graft] val RegimeMaxDrift = 3.0
-
-  /** Whether this clean-but-refused run re-qualifies the comparison
-    * record as a regime shift. `history` is (total, drift, accepted, n,
-    * nFailed, cpus) per prior session at this sf, oldest → newest; the
-    * streak counts backwards from the latest and BREAKS on any accepted
-    * session (the record was fresh then), any contaminated one, a
-    * different query-surface size (totals are not comparable across n),
-    * an ERRORED session (nFailed > 0: its total omits the failed
-    * queries' samples, so it is a deflated non-comparable figure — r17
-    * ledger lines predate the marker and parse as nFailed 0, which
-    * matches what they were: full clean runs), or a DIFFERENT core
-    * count (r18: totals are not comparable across cpus; pre-r19 ledger
-    * lines carry no cpus marker, parse as -1, and never vouch — the
-    * conservative read, since the r18 ledger mixes 8- and 32-core
-    * lines indistinguishably). Pure — BenchPolicySpec pins the policy.
-    */
-  private[graft] def regimeShiftAdopt(curTotal: Double, curDrift: Double,
-      curN: Int, history: Seq[(Double, Double, Boolean, Int, Int, Int)],
-      curCpus: Int = DefaultCpus,
-      minSessions: Int = RegimeMinSessions,
-      band: Double = RegimeAgreeBand,
-      maxDrift: Double = RegimeMaxDrift): Boolean =
-    if (curDrift > maxDrift || curTotal <= 0.0) false
-    else {
-      val streak = history.reverse
-        .takeWhile { case (_, d, acc, n, nf, c) =>
-          !acc && d <= maxDrift && n == curN && nf == 0 && c == curCpus }
-        .take(minSessions - 1)
-      val totals = curTotal +: streak.map(_._1)
-      totals.size >= minSessions && totals.max <= totals.min * (1.0 + band)
-    }
-
   /** Median (the canary regime probe: outlier-tolerant where max/min
     * drift is outlier-sensitive — one GC hiccup moves the drift, not
     * the median).
@@ -229,57 +208,256 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
     }
 
-  /** Whether this run's figures may replace the comparison record
-    * (`bench_prev`): no error on ANY run (a flaky query's surviving
-    * sample is unrepresentative), canary drift within
-    * [[RecordAcceptDrift]] (a contended run must not become the baseline
-    * the next round flatters itself against), and the sf-dir rule — a
-    * run at a different sf than the stored record leaves it alone,
-    * except at the canonical sf (which may reclaim a stale record a
-    * smoke run seeded when none existed).
-    */
-  private[graft] def acceptAsRecord(anyError: Boolean, canaryDrift: Double,
-                                    prevSfMatches: Option[Boolean],
-                                    sfDir: String,
-                                    prevCpusMatches: Option[Boolean] = None,
-                                    cpus: Int = DefaultCpus): Boolean =
-    !anyError && canaryDrift <= RecordAcceptDrift &&
-      sfRuleOk(prevSfMatches, sfDir) && cpusRuleOk(prevCpusMatches, cpus)
+  // ---- settings ---------------------------------------------------------
+  /** Every setting Bench reads, read ONCE before the warm-up. */
+  private[graft] case class Settings(sfDir: String, cpus: Int,
+                                     scaleFactor: Int, outPath: String,
+                                     prevPath: String, histPath: String,
+                                     acceptedPath: String)
 
-  /** The sf-dir record rule, shared by [[acceptAsRecord]] AND the
-    * regime-adoption path: a run at a different sf than the stored
-    * record leaves the record alone, except at the canonical sf (which
-    * may reclaim a stale record a smoke run seeded when none existed).
-    * Extracted because r17 shipped it only on the accept gate — a clean
-    * low-drift smoke run at a non-canonical sf was refused ONLY for the
-    * sf mismatch, logged to the ledger as refused-but-sane, and after
-    * RegimeMinSessions agreeing smoke sessions the regime path would
-    * overwrite the canonical record: exactly the clobbering the rule
-    * exists to prevent.
+  /** A malformed width or factor fails here, naming the variable, before
+    * any query runs: past the timed loop the same typo would throw away
+    * every figure of the run before a record is written.
     */
-  private[graft] def sfRuleOk(prevSfMatches: Option[Boolean],
-                              sfDir: String): Boolean =
-    prevSfMatches != Some(false) || sfDir == DefaultSfDir
+  private[graft] def settings(env: Map[String, String]): Settings = {
+    def int(k: String, default: Int): Int = env.get(k).fold(default)(v =>
+      v.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$k must be an integer, got '$v'")))
+    Settings(
+      sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir),
+      cpus = int("SPARK_GRAFT_CPUS", DefaultCpus),
+      scaleFactor = int("SPARK_GRAFT_SCALE_FACTOR", DefaultScaleFactor),
+      outPath = env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"),
+      prevPath = env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_prev.json"),
+      histPath = env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "bench_history.jsonl"),
+      acceptedPath = env.getOrElse("SPARK_GRAFT_BENCH_ACCEPTED", "bench_accepted.json"))
+  }
 
-  /** The canonical bench core count — the width the driver's main run
-    * uses and records are comparable at.
+  // ---- ledger reader ------------------------------------------------------
+  /** The fields the policy reads back from a bench-shaped ledger
+    * (bench_prev.json, bench_accepted.json, SMOKE_TIMING.json): top-level
+    * `sf` ("" when absent), `cpus` (None on pre-r19 records), `value`,
+    * the numeric entries of `queries` (a failed query's null is no
+    * figure) and the median of `canary.times`. Any JSON layout reads the
+    * same (the r4 lesson: a pretty-printed ledger must not silently reset
+    * the comparison).
     */
-  private[graft] val DefaultCpus = 32
+  private[graft] case class Record(sf: String, cpus: Option[Int],
+                                   value: Option[Double],
+                                   queries: Map[String, Double],
+                                   canaryMedian: Option[Double])
 
-  /** The cpus-dimension record rule (r18 verdict "what's wrong" #2: the
-    * driver's SPARK_GRAFT_CPUS=8 scaling run self-accepted as the
-    * comparison record — totals happened to be close at sf0.1, but the
-    * record policy had no cpus dimension at all, so next round's deltas
-    * would baseline against a different-width run). Same shape as
-    * [[sfRuleOk]]: a run at a different core count than the stored
-    * record leaves the record alone, except at the canonical width
-    * (which may reclaim a record a scaling run seeded). `None` (a
-    * pre-r19 record with no cpus field) permits — the canonical-width
-    * run that follows stamps the field and engages the rule.
+  /** One line of the session history ledger. */
+  private[graft] case class Session(total: Double, drift: Double,
+                                    accepted: Boolean, n: Int, nFailed: Int,
+                                    cpus: Int)
+
+  private val mapper = new ObjectMapper()
+
+  /** A JSON object, or None for anything malformed, empty or not an
+    * object — an unreadable ledger is no ledger, never a crash.
     */
-  private[graft] def cpusRuleOk(prevCpusMatches: Option[Boolean],
-                                cpus: Int): Boolean =
-    prevCpusMatches != Some(false) || cpus == DefaultCpus
+  private def parseObject(txt: String): Option[JsonNode] =
+    try Option(mapper.readTree(txt)).filter(_.isObject)
+    catch { case NonFatal(_) => None }
+
+  private def field(o: JsonNode, k: String): Option[JsonNode] =
+    Option(o.get(k)).filterNot(_.isNull)
+  private def num(o: JsonNode, k: String): Option[Double] =
+    field(o, k).filter(_.isNumber).map(_.asDouble)
+  private def text(o: JsonNode, k: String): Option[String] =
+    field(o, k).filter(_.isTextual).map(_.asText)
+
+  private[graft] def readRecord(txt: String): Option[Record] =
+    parseObject(txt).map { o =>
+      val queries = field(o, "queries").toSeq.flatMap(_.properties.asScala)
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+      val canary = field(o, "canary").flatMap(field(_, "times")).toSeq
+        .flatMap(_.asScala).filter(_.isNumber).map(_.asDouble)
+      Record(text(o, "sf").getOrElse(""),
+        field(o, "cpus").filter(_.isIntegralNumber).map(_.asInt),
+        num(o, "value"), queries.toMap, medianOf(canary))
+    }
+
+  /** The per-query figures of a ledger recorded at `sfDir`; empty for a
+    * ledger at another sf (the comparison resets deliberately) or an
+    * unreadable one.
+    */
+  private[graft] def queriesAt(txt: String, sfDir: String): Map[String, Double] =
+    readRecord(txt).filter(_.sf == sfDir).fold(Map.empty[String, Double])(_.queries)
+
+  /** The history ledger's sessions at `sfDir`, oldest first. A malformed
+    * line is no session. Pre-r18 lines predate the error marker and were
+    * full clean runs — a missing n_failed reads as 0. Pre-r19 lines
+    * predate the cpus marker and the r18 ledger mixes 8- and 32-core
+    * sessions indistinguishably — a missing cpus reads as -1, which never
+    * matches a real width (unmarked sessions cannot vouch for a regime).
+    */
+  private[graft] def readHistory(lines: Seq[String], sfDir: String): Seq[Session] =
+    lines.flatMap(parseObject).filter(text(_, "sf").contains(sfDir)).flatMap { o =>
+      for {
+        t <- num(o, "total"); d <- num(o, "drift"); n <- num(o, "n")
+        a <- field(o, "accepted").filter(_.isBoolean)
+      } yield Session(t, d, a.asBoolean, n.toInt,
+        num(o, "n_failed").fold(0)(_.toInt), num(o, "cpus").fold(-1)(_.toInt))
+    }
+
+  private def readFile(path: String): Option[String] =
+    try Some(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+    catch { case NonFatal(_) => None }
+
+  // ---- the record decision table ------------------------------------------
+  /** What the decision table reads. `prevSfMatches`/`prevCpusMatches`:
+    * Some(true/false) = the stored record was/wasn't measured at this
+    * run's sf dir / core count; None = no readable record / no cpus
+    * stamp (pre-r19). `history`: prior sessions at this sf, oldest first.
+    */
+  private[graft] case class Facts(anyError: Boolean, drift: Double,
+                                  sfDir: String, cpus: Int,
+                                  prevSfMatches: Option[Boolean],
+                                  prevCpusMatches: Option[Boolean],
+                                  total: Double, n: Int,
+                                  history: Seq[Session])
+
+  private[graft] sealed trait Outcome
+  private[graft] case object Accept extends Outcome
+  private[graft] case object RegimeShift extends Outcome
+  private[graft] case class Refuse(reason: String) extends Outcome
+
+  private[graft] case class Verdict(outcome: Outcome, contaminated: Boolean) {
+    /** Whether this run becomes the comparison record (`bench_prev`). */
+    def adopted: Boolean = outcome == Accept || outcome == RegimeShift
+  }
+
+  /** Whether this run's figures may replace the comparison record — the
+    * whole record policy, one row per rule, first match wins:
+    *
+    *  1. ANY error refuses (a flaky query's surviving sample is
+    *     unrepresentative, and an errored total omits the failed
+    *     queries' samples).
+    *  2. The sf rule: a run at a different sf than the stored record
+    *     leaves it alone, except at the canonical sf (which may reclaim a
+    *     stale record a smoke run seeded when none existed). It gates the
+    *     regime path too — r17 shipped it only on the accept gate, and
+    *     after [[RegimeMinSessions]] agreeing smoke sessions the regime
+    *     path would have clobbered the canonical record.
+    *  3. The cpus rule, same shape (r18 verdict "what's wrong" #2: an
+    *     8-core scaling run self-accepted as the record): only
+    *     the canonical width may reclaim a different-width record; an
+    *     unstamped (pre-r19) record permits, and the canonical run that
+    *     follows stamps it.
+    *  4. Canary drift within [[RecordAcceptDrift]] accepts.
+    *  5. Otherwise a regime shift: the run is not contaminated, and it
+    *     plus the trailing streak of refused sessions agree within
+    *     [[RegimeAgreeBand]] over [[RegimeMinSessions]] totals. The
+    *     streak counts back from the latest session and BREAKS on any
+    *     accepted session (the record was fresh then), a contaminated
+    *     one, a different query-surface size, an errored one, or a
+    *     different core count — none of those totals are comparable.
+    *  6. Anything else refuses on drift.
+    */
+  private[graft] def verdict(f: Facts): Verdict = {
+    val contaminated = f.drift > ContaminatedDrift
+    lazy val regime = {
+      val streak = f.history.reverse
+        .takeWhile(s => !s.accepted && s.drift <= ContaminatedDrift &&
+          s.n == f.n && s.nFailed == 0 && s.cpus == f.cpus)
+        .take(RegimeMinSessions - 1)
+      val totals = f.total +: streak.map(_.total)
+      totals.size >= RegimeMinSessions &&
+        totals.max <= totals.min * (1.0 + RegimeAgreeBand)
+    }
+    val outcome =
+      if (f.anyError) Refuse("a query errored")
+      else if (f.prevSfMatches.contains(false) && f.sfDir != DefaultSfDir)
+        Refuse("the record was measured at another sf")
+      else if (f.prevCpusMatches.contains(false) && f.cpus != DefaultCpus)
+        Refuse("the record was measured at another core count")
+      else if (f.drift <= RecordAcceptDrift) Accept
+      else if (!contaminated && f.total > 0.0 && regime) RegimeShift
+      else Refuse(f"canary drift ${f.drift}%.2fx > $RecordAcceptDrift%.2fx — a " +
+        "contended run must not become the baseline next round's deltas " +
+        "flatter themselves against")
+    Verdict(outcome, contaminated)
+  }
+
+  // ---- the pass ladder ------------------------------------------------------
+  /** One query's samples and its last error. */
+  private[graft] case class Run(name: String, times: Seq[Double],
+                                err: Option[Throwable])
+
+  /** One full timed pass over the headliners, with its canary samples. */
+  private[graft] case class Pass(runs: Seq[Run], canary: Seq[Double]) {
+    val (drift, driftRaw) = driftOf(canary)
+    def errorFree: Boolean = runs.forall(_.err.isEmpty)
+    def total: Double = runs.flatMap(_.times.minOption).sum
+  }
+
+  /** A further pass, run when the best pass so far is error-free and its
+    * drift is above `above`, after `coolSec` of cool-down.
+    */
+  private[graft] case class Rung(above: Double, coolSec: Int)
+
+  /** The immediate retry fires on the RETRY band, not the accept gate: a
+    * 1.4-drift run would be ACCEPTED yet still carries ~1.1× inflated
+    * figures (r11). The cool-down escalation fires when the run STILL
+    * ends above the accept gate — whatever it would publish is a sample
+    * the harness itself refuses as the record. r15 ended exactly there:
+    * drift 1.53, record refused, and the contended 53.65 s total became
+    * the committed round artifact while the record said 39.79. The
+    * immediate retry ran back-to-back into the same contention window;
+    * the escalation sleeps [[CooldownSec]] first (transient load — a
+    * build, a backup — usually clears in that window).
+    */
+  private[graft] val Ladder =
+    Seq(Rung(RetryDrift, 0), Rung(RecordAcceptDrift, CooldownSec))
+
+  /** Climbs [[Ladder]] from `first`: each rung that fires runs `measure`,
+    * and the new pass wins wholesale — figures and canary together,
+    * never mixed — only when it is error-free AND of strictly lower drift:
+    * a quieter-but-errored pass must never displace a clean one (the
+    * error would then refuse the record outright, discarding the clean
+    * figures). Returns the winning pass and the rungs that ran. Pure
+    * given `measure`.
+    */
+  private[graft] def climb(first: Pass)(measure: Rung => Pass): (Pass, Seq[Rung]) =
+    Ladder.foldLeft((first, Seq.empty[Rung])) { case ((best, ran), rung) =>
+      if (!best.errorFree || best.drift <= rung.above) (best, ran)
+      else {
+        val p = measure(rung)
+        (if (p.errorFree && p.drift < best.drift) p else best, ran :+ rung)
+      }
+    }
+
+  /** Times one run of query `name` at `dir`, then releases every cache
+    * (see [[Sessions.clearAll]]) so the next run cannot hit this one's
+    * persisted intermediates. Any throwable is returned, never timed.
+    */
+  private[graft] def timedRun(spark: SparkSession, name: String,
+                              dir: String): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val r =
+      try { SparkEntry.queries(name)(spark, dir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
+    Sessions.clearAll(spark)
+    r
+  }
+
+  // ---- scaling section --------------------------------------------------------
+  /** The heaviest headliners the scaling section re-times at ×F. */
+  private[graft] val ScaleTopN = 20
+
+  /** A ×F ratio above this many times F is a superlinear flag. */
+  private[graft] val SuperlinearSlack = 1.3
+  private[graft] def superlinearAt(factor: Int): Double = SuperlinearSlack * factor
+
+  /** Past this, a ×F warm-up's own figure is recorded instead of paying
+    * a second full run — a genuinely slow query must not stall the bench.
+    */
+  private[graft] val WarmBudgetSec = 60.0
+
+  /** A would-be flag sample up to this long pays one reproduction. */
+  private[graft] val ReproCapSec = 180.0
 
   /** Quarantine for the scaling section's superlinear flags (pure, so
     * BenchPolicySpec pins the policy): EVERY flag must REPRODUCE in a
@@ -367,46 +545,173 @@ object Bench {
         (n, r, declaredSwitchAllowed(n, factor).get) })
   }
 
+  // ---- emitters -----------------------------------------------------------------
+  private def jsonArr(xs: Seq[String]): String = xs.map(jsonStr).mkString("[", ",", "]")
+
+  private def optNum(x: Option[Double], fmt: String): String =
+    x.fold("null")(fmt.format(_))
+
+  /** The scaling section: per-query (t1, tF) pairs, the session verdict,
+    * the quarantine split, and — only when non-empty — the fresh
+    * reproductions and the in-band declared switches.
+    */
+  private[graft] def scalingJson(factor: Int,
+      entries: Seq[(String, Double, Option[Double])], sessionAccepted: Boolean,
+      upheld: Seq[String], suspect: Seq[String],
+      fresh: Map[String, Option[Double]],
+      declared: Seq[(String, Double, Double)]): String = {
+    val qjson = entries.map { case (n, t1, tF) =>
+      jsonStr(n) + ":" + (tF match {
+        case Some(t) => f"""{"t1":$t1%.4f,"tf":$t%.4f,"ratio":${t / t1}%.3f}"""
+        case None => f"""{"t1":$t1%.4f,"tf":null,"ratio":null}"""
+      })
+    }.mkString("{", ",", "}")
+    val freshJson =
+      if (fresh.isEmpty) ""
+      else fresh.toSeq.sortBy(_._1).map { case (n, r) =>
+        jsonStr(n) + ":" + (r match {
+          case Some(x) =>
+            f"""{"ratio":$x%.3f,"reproduced_fresh":${x > superlinearAt(factor)}}"""
+          case None => """{"ratio":null,"reproduced_fresh":false}"""
+        })
+      }.mkString(""","fresh_repro":{""", ",", "}")
+    val declaredJson =
+      if (declared.isEmpty) ""
+      else declared.sortBy(_._1).map { case (n, r, allowed) =>
+        jsonStr(n) + ":" +
+          f"""{"ratio":$r%.3f,"allowed":$allowed%.3f,""" +
+          s""""note":${jsonStr(DeclaredSwitches(n).note)}}"""
+      }.mkString(""","declared_switch":{""", ",", "}")
+    s"""{"factor":$factor,"queries":$qjson,""" +
+      s""""session_accepted":$sessionAccepted,""" +
+      s""""superlinear":${jsonArr(upheld)},""" +
+      s""""suspect_contention":${jsonArr(suspect)}""" +
+      freshJson + declaredJson + "}"
+  }
+
+  /** The full record line (bench_out.json, the ledgers), pure: every
+    * figure comes in as an argument. `prevQueries` is the comparison
+    * record's per-query map (empty unless comparable), `sibling` the
+    * accepted-sibling pointer JSON (or "null").
+    */
+  private[graft] def recordLine(s: Settings, pass: Pass,
+      cooldownRetried: Boolean, v: Verdict, prevQueries: Map[String, Double],
+      prevCanaryMedian: Option[Double], settled: Seq[String],
+      capDrops: Map[String, ops.CapReport], sibling: String,
+      scaling: Option[String]): String = {
+    val runs = pass.runs
+    val total = pass.total
+    val qs = runs.map { r =>
+      jsonStr(r.name) + ":" + r.times.minOption.fold("null")(_.toString)
+    }.mkString("{", ",", "}")
+    // report ANY error, including flaky one-of-two failures that still
+    // produced a timing — a nondeterministic regression must not
+    // masquerade as healthy
+    val errs = runs.collect { case Run(k, _, Some(e)) =>
+      jsonStr(k) + ":" + jsonStr(e.toString.take(300))
+    }.mkString("{", ",", "}")
+    // per-query cur/prev ratio against the comparison record
+    val deltas = runs.flatMap { r =>
+      for (cur <- r.times.minOption; p <- prevQueries.get(r.name))
+        yield jsonStr(r.name) + ":" + (cur / p)
+    }.mkString("{", ",", "}")
+    // super-bucket cap observability: the LAST timed run per pipeline —
+    // non-zero drops at bench scale mean the geometry no longer fits
+    val caps = capDrops.toSeq.sortBy(_._1).map { case (p, r) =>
+      jsonStr(p) + s""":{"dropped_buckets":${r.droppedBuckets},"dropped_rows":${r.droppedRows}}"""
+    }.mkString("{", ",", "}")
+    // canary drift (driftOf): a clean box sits near 1.0; the
+    // CONTAMINATION verdict uses the outlier-tolerant ratio (2nd slowest
+    // / 2nd fastest): one transient hiccup in ~17 samples must not taint
+    // a quarter-hour run, while SUSTAINED competition still shows as >=2
+    // slow samples. The raw max/min ratio stays alongside.
+    val canaryJson =
+      s"""{"query":${jsonStr(CanaryQuery)},"n":${pass.canary.size},""" +
+        s""""times":${pass.canary.map(t => f"$t%.4f").mkString("[", ",", "]")},""" +
+        s""""drift":${pass.drift},"drift_raw":${pass.driftRaw},""" +
+        s""""cooldown_retried":$cooldownRetried,""" +
+        s""""contaminated":${v.contaminated}}"""
+    // machine regime probe: this run's canary median, the record's, and
+    // the normalized total — the round-over-round series that stays
+    // comparable under a uniform machine-speed shift
+    val curMedian = medianOf(pass.canary)
+    val machineScale = for (c <- curMedian; p <- prevCanaryMedian if p > 0.0) yield c / p
+    val machineJson =
+      s"""{"canary_median":${optNum(curMedian, "%.4f")},""" +
+        s""""prev_canary_median":${optNum(prevCanaryMedian, "%.4f")},""" +
+        s""""scale":${optNum(machineScale, "%.3f")},""" +
+        s""""total_normalized":${optNum(machineScale.map(total / _), "%.2f")}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""sf":${jsonStr(s.sfDir)},"cpus":${s.cpus},""" +
+      s""""n_failed":${runs.count(_.times.isEmpty)},"errors":$errs,""" +
+      s""""delta_vs_prev":$deltas,"cap_drops":$caps,"canary":$canaryJson,""" +
+      s""""sampling":${jsonStr(SamplingPolicy)},""" +
+      s""""settled":${jsonArr(settled)},""" +
+      s""""accepted_as_record":${v.outcome == Accept},""" +
+      s""""regime_shift":${v.outcome == RegimeShift},"machine":$machineJson,""" +
+      s""""accepted_sibling":$sibling,""" +
+      s""""scaling":${scaling.getOrElse("null")}}"""
+  }
+
+  /** The session history line (feeds the regime rule next round);
+    * `accepted` includes regime adoption so an adoption resets the
+    * streak (future sessions compare to the fresh record).
+    */
+  private[graft] def historyLine(ts: Long, s: Settings, pass: Pass,
+                                 v: Verdict): String =
+    s"""{"ts":$ts,"sf":${jsonStr(s.sfDir)},"cpus":${s.cpus},""" +
+      s""""n":${pass.runs.size},"n_failed":${pass.runs.count(_.times.isEmpty)},""" +
+      s""""total":${f"${pass.total}%.3f"},"drift":${f"${pass.drift}%.3f"},""" +
+      s""""accepted":${v.adopted}}"""
+
+  /** Queries the compact line keeps, slowest first. */
+  private[graft] val CompactTopN = 10
+
   /** The compact last-line summary the driver's tail parser reads: same
     * schema head as the full record (metric/value/unit/queries/sf) with
-    * `queries` truncated to the slowest 10 so the object stays well
-    * under a bounded tail window. Kept as a pure function so a spec can
-    * pin that it parses as JSON with the expected keys — the emitter
-    * half of the guard; the build-flag half (StdoutOutput/showSuccess)
-    * is pinned by the same spec against build.sbt.
+    * `queries` truncated to the slowest [[CompactTopN]] so the object
+    * stays well under a bounded tail window. Kept as a pure function so
+    * a spec can pin that it parses as JSON with the expected keys — the
+    * emitter half of the guard; the build-flag half
+    * (StdoutOutput/showSuccess) is pinned by the same spec against
+    * build.sbt.
     */
-  private[graft] def compactLine(total: Double, slow10: Seq[(String, Double)],
+  private[graft] def compactLine(total: Double, slowest: Seq[(String, Double)],
                                  sfDir: String, n: Int, nFailed: Int,
                                  outPath: String): String = {
-    val qs = slow10.map { case (k, t) => jsonStr(k) + ":" + f"$t%.3f" }
+    val qs = slowest.map { case (k, t) => jsonStr(k) + ":" + f"$t%.3f" }
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""sf":${jsonStr(sfDir)},"n":$n,"n_failed":$nFailed,""" +
-      s""""queries_truncated_to_slowest":10,"full_record":${jsonStr(outPath)}}"""
+      s""""queries_truncated_to_slowest":$CompactTopN,"full_record":${jsonStr(outPath)}}"""
   }
+
+  private def write(path: String, line: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), line + "\n")
 
   def main(args: Array[String]): Unit = {
     // the record line is machine-parsed: f"" interpolators format via
     // the DEFAULT locale, and a comma-decimal locale (de_DE etc.) would
     // emit unparseable JSON — pin ROOT for the whole run
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val s = settings(sys.env)
     // var: the scaling section's flag-reproduction path restarts the
     // session to get a fresh context (see quarantineFlags)
-    var spark = Sessions.local(cpus.toInt, "graft-bench")
+    var spark = Sessions.local(s.cpus, "graft-bench")
 
     val names =
       if (SparkEntry.benchQueries.nonEmpty) SparkEntry.benchQueries
       else SparkEntry.queries.keys.toSeq.sorted
     // JVM/codegen warm-up on the smallest SF so we time the query, not
     // the first-call compilation; a query that fails here fails loudly in
-    // the timed loop below, so the warm-up itself may stay quiet.
+    // the timed loop below, so the warm-up itself may stay quiet. Caches
+    // stay up across the warm-up queries (releasing them after each one
+    // makes the warm-up markedly slower); the canary prime that opens
+    // every timed pass releases them (see measureOnce).
     names.foreach { n =>
-      try { SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count(); () }
-      catch { case _: Throwable => () }
+      try SparkEntry.queries(n)(spark, WarmSfDir).count()
+      catch { case _: Throwable => 0L }
     }
-    clearAll(spark)
 
     // contention canary: a fixed trivial query re-timed between every
     // few headliners. If the box degrades mid-run (a concurrent build, a
@@ -422,201 +727,52 @@ object Bench {
     // the environment, the retry band (>1.25) recovers mildly-noisy
     // first passes, and the accept gate (>1.5) still refuses the
     // sustained-contention regime (r10's 1.81).
-    val canaryQuery = "q_token_count"
-    val canaryEvery = 5
-    val canarySf = "/root/testdata/sf0.001"
 
     // ONE full timed pass over the headliners, canary interleaved.
     // best-of-2 at the target SF: the first run can still absorb SF-
     // specific JIT/codegen; the min is the steady-state figure and is
-    // stable round over round. Cache cleared between runs (see above).
-    // HEAVY queries (best-of-2 min >= 0.5 s) pay one extra sample:
-    // r9's delta ledger had q_bloom_decontaminate swing 1.87x between
-    // two clean runs of identical code — on the multi-second tail a
-    // single contended sample dominates a 2-sample min, and those are
-    // exactly the queries the round-over-round gate is judged on.
-    val heavyThreshold = 0.5
-    def measureOnce(): (Seq[(String, Seq[Double], Option[Throwable])], Seq[Double]) = {
-      val canaryTimes = scala.collection.mutable.ArrayBuffer[Double]()
-      def runCanary(): Unit =
-        if (SparkEntry.queries.contains(canaryQuery)) {
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(canaryQuery)(spark, canarySf).count()
-            canaryTimes += (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => () }
-          clearAll(spark)
-        }
+    // stable round over round. HEAVY queries pay one extra sample.
+    def measureOnce(): Pass = {
+      val canary = scala.collection.mutable.ArrayBuffer[Double]()
+      def runCanary(): Unit = timedRun(spark, CanaryQuery, WarmSfDir).foreach(canary += _)
       // Prime the canary once untimed: its first post-clearCache call
       // pays re-read + re-JIT (~2-3x steady state), which would inflate
       // max/min drift toward the contamination threshold on a healthy box.
-      if (SparkEntry.queries.contains(canaryQuery)) {
-        try { SparkEntry.queries(canaryQuery)(spark, canarySf).count(); () }
-        catch { case _: Throwable => () }
-        clearAll(spark)
-      }
-      val results = names.zipWithIndex.map { case (name, i) =>
-        if (i % canaryEvery == 0) runCanary()
-        var err: Option[Throwable] = None
-        def sample(): Option[Double] = {
-          val t0 = System.nanoTime()
-          val t =
-            try { SparkEntry.queries(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable => err = Some(e); None }
-          clearAll(spark)
-          t
-        }
-        var times = (1 to 2).flatMap(_ => sample())
-        if (times.nonEmpty && times.min >= heavyThreshold && err.isEmpty)
-          times = times ++ sample()
-        (name, times, err)
+      // Its cache release also clears whatever the warm-up left.
+      timedRun(spark, CanaryQuery, WarmSfDir)
+      val runs = names.zipWithIndex.map { case (name, i) =>
+        if (i % CanaryEvery == 0) runCanary()
+        val two = Seq.fill(2)(timedRun(spark, name, s.sfDir))
+        val attempts =
+          if (two.forall(_.exists(_ >= HeavySec))) two :+ timedRun(spark, name, s.sfDir)
+          else two
+        Run(name, attempts.collect { case Right(t) => t },
+          attempts.collect { case Left(e) => e }.lastOption)
       }
       runCanary()
-      (results, canaryTimes.toSeq)
+      Pass(runs, canary.toSeq)
     }
 
-    var (results, canaryTimes) = measureOnce()
-    var (canaryDrift, canaryDriftRaw) = driftOf(canaryTimes)
-    // a contended first pass retries the timed loop ONCE (unless
-    // disabled): transient contention (a build, a backup) usually clears
-    // within the few minutes the first pass took. The trigger is the
-    // RETRY band (> RetryDrift), not the accept gate — a 1.4-drift run
-    // would be ACCEPTED as the record yet still carries ~1.1× inflated
-    // figures (r11), so it deserves a second chance too. The LOWER-drift
-    // pass wins wholesale — figures and canary together, never mixed —
-    // and ONLY if it is itself error-free: a quieter-but-errored retry
-    // must never displace a clean first pass (anyError would then reject
-    // the record outright, discarding clean figures).
-    val retryEnabled = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY", "1") != "0"
-    if (retryEnabled && canaryDrift > RetryDrift && results.forall(_._3.isEmpty)) {
-      System.err.println(
-        f"[bench] WARN canary drift $canaryDrift%.2fx > retry band $RetryDrift%.2fx — " +
-          "contended first pass; retrying the timed loop once")
-      val (r2, c2) = measureOnce()
-      val (d2, raw2) = driftOf(c2)
-      if (adoptRetry(canaryDrift, d2, r2.forall(_._3.isEmpty))) {
-        results = r2; canaryTimes = c2; canaryDrift = d2; canaryDriftRaw = raw2
-      }
-    }
-    // ---- cool-down escalation (policy in cooldownRetryNeeded): the run
-    // STILL ends above the accept gate after the immediate retry, so the
-    // published figures would be a sample the harness itself refuses as
-    // the record. Sleep out the transient load and measure once more;
-    // lowest-drift error-free pass wins. One extra loop, only on a box
-    // contended enough that the record was already lost.
-    var cooldownRetried = false
-    if (retryEnabled && cooldownRetryNeeded(canaryDrift) &&
-        results.forall(_._3.isEmpty)) {
-      val coolSec = sys.env.get("SPARK_GRAFT_BENCH_COOLDOWN_SEC")
-        .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(CooldownSec)
-      System.err.println(
-        f"[bench] WARN canary drift $canaryDrift%.2fx still > accept gate " +
-          f"$RecordAcceptDrift%.2fx after retry — cooling down ${coolSec}s, " +
-          "then one escalation pass")
-      Thread.sleep(coolSec * 1000L)
-      cooldownRetried = true
-      val (r3, c3) = measureOnce()
-      val (d3, raw3) = driftOf(c3)
-      if (adoptRetry(canaryDrift, d3, r3.forall(_._3.isEmpty))) {
-        results = r3; canaryTimes = c3; canaryDrift = d3; canaryDriftRaw = raw3
-      }
+    val (climbed, rungsRun) = climb(measureOnce()) { rung =>
+      System.err.println(f"[bench] WARN canary drift > ${rung.above}%.2fx — " +
+        (if (rung.coolSec == 0) "retrying the timed loop once"
+         else s"cooling down ${rung.coolSec}s, then one escalation pass"))
+      Thread.sleep(rung.coolSec * 1000L)
+      measureOnce()
     }
 
-    // ---- previous record + acceptance verdict (BEFORE the scale-proof:
-    // the scaling section gates its flags on the verdict) --------------
-    // per-query cur/prev ratio, only when the prev record exists and was
-    // measured at the same sf dir (a 0.01-vs-0.1 "delta" would be noise
-    // presented as signal)
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_prev.json")
-    // Some(true/false) = prev record exists and was/wasn't measured at this
-    // run's sf dir; None = no readable prev record. Gates BOTH the delta
-    // computation and the record refresh — a smoke run at another SF must
-    // not clobber the canonical record.
-    var prevSfMatches: Option[Boolean] = None
-    // Some(true/false) = prev record carries a cpus stamp that does/
-    // doesn't match this run's core count; None = pre-r19 record with no
-    // stamp. Gates deltas, the settle pass, and the record refresh — an
-    // 8-core scaling run's record must not baseline a 32-core round (r18
-    // verdict "what's wrong" #2).
-    var prevCpusMatches: Option[Boolean] = None
-    // the previous record's canary median (regime probe) — parsed from
-    // its "canary":{...,"times":[...]} array so old-format records work;
-    // only meaningful against a record at the same sf dir
-    var prevCanaryMedian: Option[Double] = None
-    val prev: Map[String, Double] =
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(prevPath))
-        prevCpusMatches = "\"cpus\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt == cpus.toInt)
-        prevCanaryMedian =
-          "\"canary\"\\s*:\\s*\\{[^}]*?\"times\"\\s*:\\s*\\[([^\\]]*)\\]".r
-            .findFirstMatchIn(txt)
-            .flatMap(m => medianOf(m.group(1).split(",")
-              .map(_.trim).filter(_.nonEmpty).flatMap(_.toDoubleOption).toSeq))
-        // whitespace-tolerant: the prev record may have been re-dumped by
-        // a pretty-printer ("sf": "..." with spaces) — r4's deltas came
-        // out empty because the matcher here assumed compact JSON
-        val sfOk = ("\"sf\"\\s*:\\s*" + java.util.regex.Pattern.quote(jsonStr(sfDir)))
-          .r.findFirstIn(txt).isDefined
-        prevSfMatches = Some(sfOk)
-        // a cpus-stamped record at a DIFFERENT width yields no deltas
-        // and no settle targets (cross-width "deltas" are noise
-        // presented as signal, the sf-mismatch rule's twin)
-        if (!sfOk || prevCpusMatches.contains(false)) Map.empty
-        else {
-          val qm = "\"queries\"\\s*:\\s*\\{".r.findFirstMatchIn(txt)
-          qm.map { m =>
-            val qTxt = txt.substring(m.end, txt.indexOf("}", m.end))
-            // the first-'}' slice holds only while the object stays
-            // flat; a nested value would truncate the map and feed the
-            // settle pass partial data — throw instead (the enclosing
-            // catch degrades to Map.empty: no deltas, no settle — a
-            // VISIBLE degradation, same policy as TimingSmoke.parsePrev)
-            require(!qTxt.contains("{"),
-              "prev record's queries object is not flat — the first-'}' " +
-                "extraction would truncate it")
-            "\"([^\"]+)\"\\s*:\\s*([0-9][0-9.eE+-]*)".r.findAllMatchIn(qTxt)
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-          }.getOrElse(Map.empty)
-        }
-      } catch { case _: Throwable => Map.empty }
-    val accepted = acceptAsRecord(results.exists(_._3.nonEmpty), canaryDrift,
-      prevSfMatches, sfDir, prevCpusMatches, cpus.toInt)
-
-    // ---- regime-shift re-qualification (policy in regimeShiftAdopt):
-    // prior sessions at this sf from the history ledger, oldest-first.
-    // Line-oriented regex parse (the prev-record pattern): a malformed
-    // line degrades to "not part of a streak", never to a crash.
-    val histPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
-      "bench_history.jsonl")
-    def numField(txt: String, k: String): Option[Double] =
-      (s""""$k"\\s*:\\s*(-?[0-9][0-9.eE+-]*)""").r
-        .findFirstMatchIn(txt).flatMap(_.group(1).toDoubleOption)
-    def boolField(txt: String, k: String): Option[Boolean] =
-      (s""""$k"\\s*:\\s*(true|false)""").r
-        .findFirstMatchIn(txt).map(_.group(1) == "true")
-    val history: Seq[(Double, Double, Boolean, Int, Int, Int)] =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(java.nio.file.Paths.get(histPath))
-          .asScala.toSeq
-          .filter(("\"sf\"\\s*:\\s*" + java.util.regex.Pattern.quote(jsonStr(sfDir)))
-            .r.findFirstIn(_).isDefined)
-          .flatMap { ln =>
-            for {
-              t <- numField(ln, "total"); d <- numField(ln, "drift")
-              a <- boolField(ln, "accepted"); n <- numField(ln, "n")
-              // pre-r18 lines predate the error marker and were full
-              // clean runs — missing n_failed reads as 0. Pre-r19 lines
-              // predate the cpus marker and the r18 ledger mixes 8- and
-              // 32-core sessions indistinguishably — missing cpus reads
-              // as -1, which never matches a real width (conservative:
-              // unmarked sessions cannot vouch for a regime).
-            } yield (t, d, a, n.toInt,
-              numField(ln, "n_failed").map(_.toInt).getOrElse(0),
-              numField(ln, "cpus").map(_.toInt).getOrElse(-1))
-          }
-      } catch { case _: Throwable => Seq.empty }
+    // ---- the comparison record: per-query deltas and the settle pass
+    // only against a record at the SAME sf dir (a 0.01-vs-0.1 "delta"
+    // would be noise presented as signal) and not at a different stamped
+    // width (the sf rule's twin, r18 verdict "what's wrong" #2)
+    val prevTxt = readFile(s.prevPath)
+    val prev = prevTxt.flatMap(readRecord)
+    // a record file that exists but does not parse counts as another sf's:
+    // only the canonical sf may replace it
+    val prevSfMatches = prevTxt.map(_ => prev.exists(_.sf == s.sfDir))
+    val prevCpusMatches = prev.flatMap(_.cpus).map(_ == s.cpus)
+    val prevQueries = prev.filter(p => p.sf == s.sfDir && !p.cpus.exists(_ != s.cpus))
+      .fold(Map.empty[String, Double])(_.queries)
 
     // ---- slow-tail settle pass (policy in settleTargets): when this
     // session reads materially slower than the comparison record, the
@@ -624,40 +780,37 @@ object Bench {
     // total converges to steady state instead of carrying ~10% of
     // session noise into the round ledger. ~n extra samples on a noisy
     // session; a quiet one never pays.
-    val settledQueries: Seq[String] =
-      if (results.exists(_._3.nonEmpty)) Seq.empty
-      else {
-        val cur = results.collect { case (k, ts, _) if ts.nonEmpty => k -> ts.min }
-        val targets = settleTargets(cur, prev)
-        if (targets.isEmpty) targets
-        else {
-          System.err.println(
-            s"[bench] WARN shared-query total > ${SettleBand}x the record — " +
-              s"settle pass (+1 sample) over ${targets.mkString(", ")}")
-          val tset = targets.toSet
-          // the published "settled" list names only queries whose extra
-          // sample actually RAN — a swallowed failure must not read as
-          // a taken sample in the round record
-          val sampled = scala.collection.mutable.ArrayBuffer[String]()
-          results = results.map {
-            case (name, ts, err) if tset.contains(name) =>
-              val t0 = System.nanoTime()
-              val extra =
-                try {
-                  SparkEntry.queries(name)(spark, sfDir).count()
-                  sampled += name
-                  Some((System.nanoTime() - t0) / 1e9)
-                } catch { case e: Throwable =>
-                  System.err.println(s"[bench] settle sample $name failed: $e")
-                  None
-                }
-              clearAll(spark)
-              (name, ts ++ extra, err)
-            case r => r
-          }
-          sampled.toSeq
+    val targets =
+      if (!climbed.errorFree) Seq.empty
+      else settleTargets(climbed.runs.collect {
+        case Run(k, ts, _) if ts.nonEmpty => k -> ts.min }, prevQueries)
+    if (targets.nonEmpty)
+      System.err.println(
+        s"[bench] WARN shared-query total > ${SettleBand}x the record — " +
+          s"settle pass (+1 sample) over ${targets.mkString(", ")}")
+    // the published "settled" list names only queries whose extra
+    // sample actually RAN — a swallowed failure must not read as a
+    // taken sample in the round record
+    val settledRuns = climbed.runs.map {
+      case r if targets.contains(r.name) =>
+        timedRun(spark, r.name, s.sfDir) match {
+          case Right(t) => (r.copy(times = r.times :+ t), true)
+          case Left(e) =>
+            System.err.println(s"[bench] settle sample ${r.name} failed: $e")
+            (r, false)
         }
-      }
+      case r => (r, false)
+    }
+    val pass = climbed.copy(runs = settledRuns.map(_._1))
+    val settled = settledRuns.collect { case (r, true) => r.name }
+
+    val history =
+      try readHistory(java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s.histPath)).asScala.toSeq, s.sfDir)
+      catch { case NonFatal(_) => Seq.empty }
+    val v = verdict(Facts(!pass.errorFree, pass.drift, s.sfDir, s.cpus,
+      prevSfMatches, prevCpusMatches, pass.total, pass.runs.size, history))
+    val accepted = v.outcome == Accept
 
     // ---- scale-proof: re-time the heaviest headliners at ×F ----------
     // Every figure above is one point at one SF; the 100 TB question is
@@ -667,69 +820,50 @@ object Bench {
     // and each of the top-N heaviest queries is re-timed at both sizes:
     // ratio ≈ F is linear, ratio ≫ F is a superlinear red flag, named in
     // "superlinear" so a regression is machine-visible in the record —
-    // after surviving the quarantine policy (see quarantineFlags): a
-    // session the canary rejected must reproduce each flag in a FRESH
-    // session before publishing it.
-    val scaleFactor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
-    val scaleTopN = sys.env.getOrElse("SPARK_GRAFT_SCALE_TOPN", "20").toInt
+    // after surviving the quarantine policy (see quarantineFlags).
+    def timeOrLog(what: String, name: String, dir: String): Option[Double] =
+      timedRun(spark, name, dir) match {
+        case Right(t) => Some(t)
+        case Left(e) => System.err.println(s"[bench] $what $name at $dir: $e"); None
+      }
     val scaling: Option[String] =
-      if (scaleFactor < 2 || scaleTopN < 1) None
+      if (s.scaleFactor < 2) None
       else try {
-        val scaledDir = graft.tools.ScaleUp.ensure(spark, sfDir, scaleFactor)
-        clearAll(spark)
-        val byWeight = results.collect { case (k, ts, _) if ts.nonEmpty => (k, ts.min) }
-          .sortBy(-_._2)
-        // SPARK_GRAFT_SCALE_INCLUDE forces named queries into the
-        // scale-proof regardless of rank — for benching a scale-path
-        // VARIANT (e.g. hashed-gram spans) side by side with the exact
-        // form even when the variant is too fast to make the top N
-        val include = sys.env.getOrElse("SPARK_GRAFT_SCALE_INCLUDE", "")
-          .split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val heaviest = (byWeight.take(scaleTopN) ++
-          byWeight.filter(kv => include.contains(kv._1))).distinct
+        val scaledDir = graft.tools.ScaleUp.ensure(spark, s.sfDir, s.scaleFactor)
+        val flagAt = superlinearAt(s.scaleFactor)
+        val heaviest = pass.runs.collect { case Run(k, ts, _) if ts.nonEmpty => (k, ts.min) }
+          .sortBy(-_._2).take(ScaleTopN)
         val entries = heaviest.map { case (name, t1main) =>
-          val q = SparkEntry.queries(name)
-          def time(dir: String): Option[Double] = {
-            val t0 = System.nanoTime()
-            val r = try { q(spark, dir).count(); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] scaling $name at $dir: $e"); None }
-            clearAll(spark)
-            r
-          }
+          def time(dir: String): Option[Double] = timeOrLog("scaling", name, dir)
           // one fresh 1× sample folded with the main run's best-of-2, so
           // both sides of the ratio share session state; the ×F side pays
           // one warm-up first — a query's first run at the scaled dir can
           // absorb one-time fixture setup (bucketed-table writes, blob
           // fixtures) that the 1× side already amortized, which would
           // record a linear query as superlinear. The warm-up is TIMED as
-          // a budget guard: past 60 s its own figure is recorded (setup
-          // cost included, accepted) instead of paying a second full run —
-          // a genuinely slow query must not stall the whole bench. A
-          // throwing warm-up is REPORTED by time() (stderr), never
+          // a budget guard: past WarmBudgetSec its own figure is recorded
+          // (setup cost included, accepted) instead of paying a second
+          // full run. A throwing warm-up is REPORTED (stderr), never
           // silently swallowed, and the timed sample still runs.
-          val t1 = (time(sfDir).toSeq :+ t1main).min
-          val warm = time(scaledDir)
-          val tF = warm match {
-            case Some(w) if w > 60.0 =>
+          val t1 = (time(s.sfDir).toSeq :+ t1main).min
+          val tF = time(scaledDir) match {
+            case Some(w) if w > WarmBudgetSec =>
               // the budget path must still honor reproduce-before-flag:
               // a warm figure that WOULD read as superlinear can be pure
               // one-time fixture setup, so it pays exactly one timed
               // reproduction (min of the two); a non-flagging figure is
               // recorded as-is without a second multi-minute run
-              if (w / t1 > 1.3 * scaleFactor)
-                Some(math.min(w, time(scaledDir).getOrElse(w)))
+              if (w / t1 > flagAt) Some(math.min(w, time(scaledDir).getOrElse(w)))
               else Some(w)
             case _ =>
               time(scaledDir) match {
-                case Some(t) if t / t1 > 1.3 * scaleFactor && t <= 180.0 =>
+                case Some(t) if t / t1 > flagAt && t <= ReproCapSec =>
                   // a would-be superlinear flag must REPRODUCE: hours of
                   // prior session work (GC pressure late in the bench)
                   // can inflate one sample 3-4x over a fresh-session run
                   // of the same query — keep the min of two timed runs,
-                  // the same best-of-2 policy the main loop uses, so a
-                  // flagged exponent is a property of the QUERY, not of
-                  // the session's heap history. The 180 s cap is the
+                  // so a flagged exponent is a property of the QUERY, not
+                  // of the session's heap history. ReproCapSec is the
                   // retry budget guard, sized so a 3-4x noise spike on
                   // any real headliner still retries; only a sample
                   // that would cost minutes to reproduce flags directly
@@ -739,18 +873,11 @@ object Bench {
           }
           (name, t1, tF)
         }
-        val qjson = entries.map { case (n, t1, tF) =>
-          jsonStr(n) + ":" + (tF match {
-            case Some(t) => f"""{"t1":$t1%.4f,"tf":$t%.4f,"ratio":${t / t1}%.3f}"""
-            case None => f"""{"t1":$t1%.4f,"tf":null,"ratio":null}"""
-          })
-        }.mkString("{", ",", "}")
         val flaggedAll = entries.collect {
-          case (n, t1, Some(tF)) if tF / t1 > 1.3 * scaleFactor => (n, tF / t1) }
+          case (n, t1, Some(tF)) if tF / t1 > flagAt => (n, tF / t1) }
         // declared algorithm switches (see DeclaredSwitches): in-band
         // ratios publish as annotation, not flag, and skip quarantine
-        val (flagged, declaredOk) =
-          splitDeclaredSwitches(flaggedAll, scaleFactor)
+        val (flagged, declaredOk) = splitDeclaredSwitches(flaggedAll, s.scaleFactor)
         // fresh-context reproduction, engaged by quarantineFlags for
         // EVERY flag (accepted sessions included since r14 — the r13
         // accepted session published ×8 flags physically inconsistent
@@ -765,128 +892,23 @@ object Bench {
             if (!freshStarted) {
               System.err.println(
                 s"[bench] reproducing ${flagged.size} scale flag(s) in a fresh session " +
-                  f"(canary drift $canaryDrift%.2fx; session accepted=$accepted)")
+                  f"(canary drift ${pass.drift}%.2fx; session accepted=$accepted)")
               spark.stop()
-              spark = Sessions.local(cpus.toInt, "graft-bench-fresh")
+              spark = Sessions.local(s.cpus, "graft-bench-fresh")
               freshStarted = true
             }
-            def best2(dir: String): Option[Double] = {
-              val ts = (1 to 2).flatMap { _ =>
-                val t0 = System.nanoTime()
-                val r =
-                  try {
-                    SparkEntry.queries(name)(spark, dir).count()
-                    Some((System.nanoTime() - t0) / 1e9)
-                  } catch { case e: Throwable =>
-                    System.err.println(s"[bench] fresh repro $name at $dir: $e"); None }
-                clearAll(spark)
-                r
-              }
-              ts.minOption
-            }
-            for (f1 <- best2(sfDir); fF <- best2(scaledDir)) yield fF / f1
+            def best2(dir: String): Option[Double] =
+              Seq.fill(2)(timeOrLog("fresh repro", name, dir)).flatten.minOption
+            for (f1 <- best2(s.sfDir); fF <- best2(scaledDir)) yield fF / f1
           } catch { case e: Throwable =>
             System.err.println(s"[bench] fresh repro $name failed: $e"); None }
-        val (upheld, suspect, freshRatios) =
-          quarantineFlags(flagged, 1.3 * scaleFactor, reproduceFresh)
-        val freshJson =
-          if (freshRatios.isEmpty) ""
-          else {
-            val fr = freshRatios.toSeq.sortBy(_._1).map { case (n, r) =>
-              jsonStr(n) + ":" + (r match {
-                case Some(x) =>
-                  f"""{"ratio":$x%.3f,"reproduced_fresh":${x > 1.3 * scaleFactor}}"""
-                case None => """{"ratio":null,"reproduced_fresh":false}"""
-              })
-            }.mkString("{", ",", "}")
-            s""","fresh_repro":$fr"""
-          }
-        val declaredJson =
-          if (declaredOk.isEmpty) ""
-          else {
-            val dj = declaredOk.sortBy(_._1).map { case (n, r, allowed) =>
-              jsonStr(n) + ":" +
-                f"""{"ratio":$r%.3f,"allowed":$allowed%.3f,""" +
-                s""""note":${jsonStr(DeclaredSwitches(n).note)}}"""
-            }.mkString("{", ",", "}")
-            s""","declared_switch":$dj"""
-          }
-        Some(s"""{"factor":$scaleFactor,"queries":$qjson,""" +
-          s""""session_accepted":$accepted,""" +
-          s""""superlinear":${upheld.map(jsonStr).mkString("[", ",", "]")},""" +
-          s""""suspect_contention":${suspect.map(jsonStr).mkString("[", ",", "]")}""" +
-          freshJson + declaredJson + "}")
+        val (upheld, suspect, freshRatios) = quarantineFlags(flagged, flagAt, reproduceFresh)
+        Some(scalingJson(s.scaleFactor, entries, accepted, upheld, suspect,
+          freshRatios, declaredOk))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] scaling section failed: $e"); None
       }
-
-    val qs = results.map { case (k, ts, _) =>
-      jsonStr(k) + ":" + (if (ts.nonEmpty) ts.min.toString else "null")
-    }.mkString("{", ",", "}")
-    val failed = results.filter(_._2.isEmpty)
-    // report ANY error, including flaky one-of-two failures that still
-    // produced a timing — a nondeterministic regression must not
-    // masquerade as healthy
-    val errs = results.filter(_._3.nonEmpty).map { case (k, _, e) =>
-      jsonStr(k) + ":" + jsonStr(e.map(_.toString).getOrElse("?").take(300))
-    }.mkString("{", ",", "}")
-    val total = results.flatMap(_._2.minOption).sum
-
-    // regime decision (needs the final settled total) — see
-    // regimeShiftAdopt: a clean run the accept gate refused may still
-    // re-qualify the record when it agrees with the trailing refused
-    // sessions, because sustained cross-session agreement is a regime,
-    // not contention.
-    // sfRuleOk gates regime adoption too: sustained agreement among
-    // smoke runs at a NON-canonical sf is a regime of the wrong
-    // experiment — it must not clobber the canonical record
-    val regimeAdopted = !accepted && results.forall(_._3.isEmpty) &&
-      sfRuleOk(prevSfMatches, sfDir) &&
-      cpusRuleOk(prevCpusMatches, cpus.toInt) &&
-      regimeShiftAdopt(total, canaryDrift, results.size, history, cpus.toInt)
-
-    // machine regime probe: this run's canary median, the record's, and
-    // the normalized total — the round-over-round series that stays
-    // comparable under a uniform machine-speed shift
-    val curCanaryMedian = medianOf(canaryTimes)
-    val machineScale = for (c <- curCanaryMedian; p <- prevCanaryMedian
-                            if p > 0.0) yield c / p
-    val totalNormalized = machineScale.map(total / _)
-    val machineJson =
-      s"""{"canary_median":${curCanaryMedian.map(m => f"$m%.4f").getOrElse("null")},""" +
-        s""""prev_canary_median":${prevCanaryMedian.map(m => f"$m%.4f").getOrElse("null")},""" +
-        s""""scale":${machineScale.map(m => f"$m%.3f").getOrElse("null")},""" +
-        s""""total_normalized":${totalNormalized.map(t => f"$t%.2f").getOrElse("null")}}"""
-
-    // previous round's figures (parsed above, before the scale-proof):
-    // per-query cur/prev ratio against the comparison record
-    val deltas = results.flatMap { case (k, ts, _) =>
-      for (cur <- ts.minOption; p <- prev.get(k))
-        yield jsonStr(k) + ":" + (cur / p)
-    }.mkString("{", ",", "}")
-
-    // super-bucket cap observability: the LAST timed run per pipeline —
-    // non-zero drops at bench scale mean the geometry no longer fits
-    val capDrops = graft.ops.CapMetrics.snapshot.toSeq.sortBy(_._1)
-      .map { case (p, r) =>
-        jsonStr(p) + s""":{"dropped_buckets":${r.droppedBuckets},"dropped_rows":${r.droppedRows}}"""
-      }.mkString("{", ",", "}")
-
-    // canary drift (computed by driftOf at measure time): a clean box
-    // sits near 1.0; >3x means some window of the run competed for the
-    // machine and figures from it are suspect. The CONTAMINATION verdict
-    // uses an outlier-tolerant ratio (2nd slowest / 2nd fastest): one
-    // transient hiccup in ~17 samples (GC, page cache writeback) must
-    // not taint a quarter-hour run, while SUSTAINED competition still
-    // shows as >=2 slow samples. The raw max/min ratio is kept alongside
-    // so the single-sample story stays visible in the record.
-    val canaryJson =
-      s"""{"query":${jsonStr(canaryQuery)},"n":${canaryTimes.size},""" +
-        s""""times":${canaryTimes.map(t => f"$t%.4f").mkString("[", ",", "]")},""" +
-        s""""drift":$canaryDrift,"drift_raw":$canaryDriftRaw,""" +
-        s""""cooldown_retried":$cooldownRetried,""" +
-        s""""contaminated":${canaryDrift > 3.0}}"""
 
     // accepted-sibling pointer (r17 "what's wrong" #2): when a session
     // is ACCEPTED (or regime-adopted) its full record is also written
@@ -895,90 +917,63 @@ object Bench {
     // committed round artifact that happens to be a refused sample still
     // names the accepted figures from the same box instead of reading as
     // the round's only truth.
-    val acceptedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACCEPTED",
-      "bench_accepted.json")
-    val acceptedSibling: String =
-      if (accepted || regimeAdopted) "null" // this run IS the accepted one
-      else try {
-        val p = java.nio.file.Paths.get(acceptedPath)
-        val txt = java.nio.file.Files.readString(p)
-        val sfOfSib = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        numField(txt, "value").map { v =>
-          s"""{"path":${jsonStr(acceptedPath)},"total":${f"$v%.3f"},""" +
-            s""""sf":${jsonStr(sfOfSib)},""" +
-            s""""mtime_ms":${java.nio.file.Files.getLastModifiedTime(p).toMillis}}"""
-        }.getOrElse("null")
-      } catch { case _: Throwable => "null" }
+    val sibling: String =
+      if (v.adopted) "null" // this run IS the accepted one
+      else (for {
+        rec <- readFile(s.acceptedPath).flatMap(readRecord)
+        total <- rec.value
+        mtime <- scala.util.Try(java.nio.file.Files.getLastModifiedTime(
+          java.nio.file.Paths.get(s.acceptedPath)).toMillis).toOption
+      } yield s"""{"path":${jsonStr(s.acceptedPath)},"total":${f"$total%.3f"},""" +
+        s""""sf":${jsonStr(rec.sf)},"mtime_ms":$mtime}""").getOrElse("null")
 
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":${jsonStr(sfDir)},"cpus":${cpus.toInt},""" +
-        s""""n_failed":${failed.size},"errors":$errs,""" +
-        s""""delta_vs_prev":$deltas,"cap_drops":$capDrops,"canary":$canaryJson,""" +
-        s""""sampling":${jsonStr(SamplingPolicy)},""" +
-        s""""settled":${settledQueries.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""accepted_as_record":$accepted,""" +
-        s""""regime_shift":$regimeAdopted,"machine":$machineJson,""" +
-        s""""accepted_sibling":$acceptedSibling,""" +
-        s""""scaling":${scaling.getOrElse("null")}}"""
+    val line = recordLine(s, pass, rungsRun.exists(_.coolSec > 0), v, prevQueries,
+      prev.flatMap(_.canaryMedian), settled, graft.ops.CapMetrics.snapshot,
+      sibling, scaling)
 
     // grep-stable tagged copy FIRST (r7 driver records had "parsed": null
     // — a tail-parser can anchor on the BENCH_JSON prefix), then the bare
-    // JSON as the final stdout line for last-line parsers.
+    // JSON; the compact line below is the final stdout line.
     println("BENCH_JSON " + line)
     println(line)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    // a clean run (no failures, canary drift within RecordAcceptDrift)
-    // becomes the next round's comparison record, so delta_vs_prev always
-    // tracks the latest accepted figures instead of drifting rounds
-    // behind — see acceptAsRecord for the full rule. A rejected run still
-    // wrote bench_out.json above (the round's figures stay visible); it
-    // just doesn't become the baseline.
-    // the accepted-sibling aside (see acceptedSibling above): every
-    // accepted/adopted session leaves its full record at acceptedPath
-    if (accepted || regimeAdopted)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(acceptedPath), line + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] accepted-sibling write failed: $e") }
-    if (accepted)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(prevPath), line + "\n")
-    else if (regimeAdopted) {
-      System.err.println(
-        f"[bench] WARN regime shift: this refused run (total $total%.2f s, drift " +
-          f"$canaryDrift%.2fx) agrees within ${RegimeAgreeBand * 100}%.0f%% with the " +
-          s"trailing refused sessions in $histPath — adopting as the comparison " +
-          "record with \"regime_shift\": true (the box's new price, not contention)")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(prevPath), line + "\n")
-    } else if (results.forall(_._3.isEmpty) && canaryDrift > RecordAcceptDrift)
-      System.err.println(
-        f"[bench] WARN run NOT adopted as comparison record: canary drift " +
-          f"$canaryDrift%.2fx > $RecordAcceptDrift%.1fx — a contended run must " +
-          "not become the baseline next round's deltas flatter themselves against")
-    // session history ledger (feeds regimeShiftAdopt next round): one
-    // line per full bench run; `accepted` here includes regime adoption
-    // so an adoption resets the streak (future sessions compare to the
-    // fresh record). Append-only; never fails the bench.
-    try {
-      val entry = s"""{"ts":${System.currentTimeMillis()},"sf":${jsonStr(sfDir)},""" +
-        s""""cpus":${cpus.toInt},""" +
-        s""""n":${results.size},"n_failed":${failed.size},"total":${f"$total%.3f"},""" +
-        s""""drift":${f"$canaryDrift%.3f"},"accepted":${accepted || regimeAdopted}}"""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(histPath),
-        entry + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] history append failed: $e") }
-    results.filter(_._3.nonEmpty).foreach { case (k, ts, e) =>
-      val kind = if (ts.isEmpty) "FAILED" else "FLAKY"
-      System.err.println(s"[bench] $kind $k: ${e.map(_.toString).getOrElse("?")}")
+    write(s.outPath, line)
+    // an adopted run becomes the next round's comparison record, so
+    // delta_vs_prev always tracks the latest accepted figures instead of
+    // drifting rounds behind, and leaves its full record aside at the
+    // accepted-sibling path. A refused run still wrote bench_out.json
+    // above (the round's figures stay visible); it just doesn't become
+    // the baseline.
+    v.outcome match {
+      case Accept | RegimeShift =>
+        try write(s.acceptedPath, line)
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] accepted-sibling write failed: $e") }
+        if (v.outcome == RegimeShift)
+          System.err.println(
+            f"[bench] WARN regime shift: this refused run (total ${pass.total}%.2f s, drift " +
+              f"${pass.drift}%.2fx) agrees within ${RegimeAgreeBand * 100}%.0f%% with the " +
+              s"trailing refused sessions in ${s.histPath} — adopting as the comparison " +
+              "record with \"regime_shift\": true (the box's new price, not contention)")
+        write(s.prevPath, line)
+      case Refuse(reason) =>
+        System.err.println(s"[bench] WARN run NOT adopted as comparison record: $reason")
     }
-    if (canaryDrift > 3.0)
+    // session history ledger: one line per full bench run. Append-only;
+    // never fails the bench.
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(s.histPath),
+      historyLine(System.currentTimeMillis(), s, pass, v) + "\n",
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] history append failed: $e") }
+    pass.runs.foreach {
+      case Run(k, ts, Some(e)) =>
+        System.err.println(s"[bench] ${if (ts.isEmpty) "FAILED" else "FLAKY"} $k: $e")
+      case _ =>
+    }
+    if (v.contaminated)
       System.err.println(
-        f"[bench] WARN canary drift $canaryDrift%.1fx (${canaryTimes.mkString(", ")}) — " +
+        f"[bench] WARN canary drift ${pass.drift}%.1fx (${pass.canary.mkString(", ")}) — " +
           "machine contention during this run; treat per-query figures as suspect")
     spark.stop()
     // Compact summary as the TRUE last stdout write of the process —
@@ -988,17 +983,17 @@ object Bench {
     // window (the driver's bench record carried "parsed": null for nine
     // straight rounds because of it). This line keeps the same schema
     // (metric/value/unit/queries/sf) but truncates `queries` to the
-    // slowest 10, so any last-line JSON parser gets a complete object
-    // well under 2,000 chars; the full per-query map lives in
+    // slowest CompactTopN, so any last-line JSON parser gets a complete
+    // object well under 2,000 chars; the full per-query map lives in
     // bench_out.json (and earlier on stdout). Requires the build-level
     // fix too: run/outputStrategy=StdoutOutput (no "[info] " prefix) and
     // showSuccess=false (no trailing "[success] Total time" line) in
     // build.sbt.
     val compact = compactLine(
-      total,
-      results.flatMap { case (k, ts, _) => ts.minOption.map(k -> _) }
-        .sortBy(-_._2).take(10),
-      sfDir, results.size, failed.size, outPath)
+      pass.total,
+      pass.runs.flatMap(r => r.times.minOption.map(r.name -> _))
+        .sortBy(-_._2).take(CompactTopN),
+      s.sfDir, pass.runs.size, pass.runs.count(_.times.isEmpty), s.outPath)
     System.err.println(compact)
     println(compact)
     System.out.flush()

@@ -30,38 +30,6 @@ object TimingSmoke {
     */
   val SuspectFloorSec = 2.0
 
-  /** Parse the previous committed ledger's per-query times, pure so a
-    * spec can pin it. Whitespace-tolerant like Bench's prev parse (the
-    * r4 lesson: a pretty-printed ledger must not silently reset the
-    * comparison and disable the gate); a ledger recorded at another sf
-    * resets the comparison deliberately; the queries-object extraction
-    * is a guarded regex match, never an indexOf(-1) slice.
-    */
-  private[tools] def parsePrev(txt: String, sfDir: String): Map[String, Double] = {
-    val sfOk = ("\"sf\"\\s*:\\s*" +
-      java.util.regex.Pattern.quote(graft.Json.str(sfDir)))
-      .r.findFirstIn(txt).isDefined
-    if (!sfOk) Map.empty
-    else {
-      // the queries object is flat: parse exactly it, nothing after
-      "\"queries\"\\s*:\\s*\\{".r.findFirstMatchIn(txt).map { m =>
-        txt.indexOf("}", m.end) match {
-          case -1 => Map.empty[String, Double]
-          case close =>
-            val qTxt = txt.substring(m.end, close)
-            // the first-'}' slice is correct ONLY while the object stays
-            // flat — a nested value would truncate the map and silently
-            // half-disable the suspect gate; fail loudly instead
-            require(!qTxt.contains("{"),
-              "prev ledger's queries object is not flat — parsePrev's " +
-                "first-'}' extraction would truncate it; update the parser")
-            "\"([^\"]+)\"\\s*:\\s*([0-9][0-9.eE+-]*)".r.findAllMatchIn(qTxt)
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-        }
-      }.getOrElse(Map.empty)
-    }
-  }
-
   /** The suspect gate, pure so a spec can pin it. */
   private[tools] def suspects(cur: Map[String, Double], prev: Map[String, Double])
       : Map[String, (Double, Double)] =
@@ -81,20 +49,16 @@ object TimingSmoke {
     val headliners = graft.SparkEntry.benchQueries.toSet
     val names = graft.SparkEntry.queries.keys.toSeq.filterNot(headliners).sorted
     val timed = names.map { name =>
-      val t0 = System.nanoTime()
-      val r =
-        try { graft.SparkEntry.queries(name)(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case NonFatal(e) => Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}") }
-      graft.Sessions.clearAll(spark)
-      name -> r
+      name -> graft.Bench.timedRun(spark, name, sfDir).left.map(e =>
+        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}")
     }
     val times = timed.collect { case (n, Right(t)) => n -> t }
     val errors = timed.collect { case (n, Left(m)) => n -> m }
 
     // previous committed ledger (same sf only — a re-scaled run resets
-    // the comparison instead of flagging everything); see [[parsePrev]]
+    // the comparison instead of flagging everything); see Bench.queriesAt
     val prev: Map[String, Double] =
-      try parsePrev(
+      try graft.Bench.queriesAt(
         java.nio.file.Files.readString(java.nio.file.Paths.get(outPath)), sfDir)
       catch { case NonFatal(_) => Map.empty }
     val sus = suspects(times.toMap, prev)

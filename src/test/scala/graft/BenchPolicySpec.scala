@@ -1,13 +1,19 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench-record integrity rules without running a bench:
   *
   *  - canary drift (outlier-tolerant + raw) — the contention signal;
-  *  - record acceptance — a contended or flaky run must never become
-  *    `bench_prev`, the baseline the next round's deltas compare against
-  *    (r10's 1.81×-drift run was adopted and inflated the base);
+  *  - the record decision table ([[Bench.verdict]]) — a contended or
+  *    flaky run must never become `bench_prev`, the baseline the next
+  *    round's deltas compare against (r10's 1.81×-drift run was adopted
+  *    and inflated the base); each case is an input → verdict row;
+  *  - the pass ladder ([[Bench.climb]]) — retry band, cool-down
+  *    escalation, and which pass wins;
+  *  - the ledger reader, against the committed ledgers;
   *  - the compact last-stdout-line summary parses as JSON with the keys
   *    the driver's tail parser expects, and the two build.sbt flags that
   *    keep it the LAST stdout line (forked StdoutOutput, no [success]
@@ -15,6 +21,51 @@ import org.scalatest.funsuite.AnyFunSuite
   *    ended with exactly those two flags and nothing else guarded them.
   */
 class BenchPolicySpec extends AnyFunSuite {
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A file at the repo root, found by walking up from the test cwd
+    * (forked tests run at the repo root, but don't depend on it).
+    */
+  private def repoFile(name: String): java.io.File = {
+    val start = new java.io.File(sys.props("user.dir")).getAbsoluteFile
+    Iterator.iterate(start)(_.getParentFile)
+      .takeWhile(_ != null).take(4)
+      .map(d => new java.io.File(d, name)).find(_.exists)
+      .getOrElse(fail(s"$name not found near test cwd"))
+  }
+
+  private def repoText(name: String): String =
+    java.nio.file.Files.readString(repoFile(name).toPath)
+
+  /** Facts of a run, canonical sf and width unless a row says otherwise. */
+  private def facts(drift: Double, anyError: Boolean = false,
+                    sfDir: String = Bench.DefaultSfDir,
+                    cpus: Int = Bench.DefaultCpus,
+                    prevSf: Option[Boolean] = None,
+                    prevCpus: Option[Boolean] = None,
+                    total: Double = 0.0, n: Int = 95,
+                    history: Seq[Bench.Session] = Nil): Bench.Facts =
+    Bench.Facts(anyError, drift, sfDir, cpus, prevSf, prevCpus, total, n, history)
+
+  private def outcome(f: Bench.Facts): Bench.Outcome = Bench.verdict(f).outcome
+
+  private def refused(f: Bench.Facts): Boolean =
+    outcome(f).isInstanceOf[Bench.Refuse]
+
+  /** A pass whose canary drift is exactly `drift` (two samples). */
+  private def pass(drift: Double, errored: Boolean = false): Bench.Pass =
+    Bench.Pass(Seq(
+      if (errored) Bench.Run("q", Nil, Some(new RuntimeException("boom")))
+      else Bench.Run("q", Seq(1.0), None)), Seq(1.0, drift))
+
+  /** Climbs the ladder from `first`; each rung that fires gets the next
+    * of `next`, and an extra rung fails the test.
+    */
+  private def climb(first: Bench.Pass, next: Bench.Pass*): (Bench.Pass, Seq[Bench.Rung]) = {
+    val it = next.iterator
+    Bench.climb(first)(_ => if (it.hasNext) it.next() else fail("an unexpected pass ran"))
+  }
 
   // ---- driftOf -------------------------------------------------------
 
@@ -31,26 +82,25 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.driftOf(Nil) == ((1.0, 1.0)))
   }
 
-  // ---- acceptAsRecord -------------------------------------------------
+  // ---- the accept rows of the decision table --------------------------
 
   test("acceptAsRecord: clean quiet runs pass; contention/flake/sf-mismatch refuse") {
-    val sf = Bench.DefaultSfDir
     // clean + quiet -> accepted (prev missing, matching, at canonical sf)
-    assert(Bench.acceptAsRecord(anyError = false, 1.0, None, sf))
-    assert(Bench.acceptAsRecord(anyError = false, 1.49, Some(true), sf))
+    assert(outcome(facts(1.0)) == Bench.Accept)
+    assert(outcome(facts(1.49, prevSf = Some(true))) == Bench.Accept)
     // exactly at the threshold is still quiet
-    assert(Bench.acceptAsRecord(anyError = false, Bench.RecordAcceptDrift, None, sf))
+    assert(outcome(facts(Bench.RecordAcceptDrift)) == Bench.Accept)
     // contended run: refused even with zero errors (the r10 case: 1.81)
-    assert(!Bench.acceptAsRecord(anyError = false, 1.81, Some(true), sf))
+    assert(refused(facts(1.81, prevSf = Some(true))))
     // any error (even a flaky one-of-two) keeps the old record
-    assert(!Bench.acceptAsRecord(anyError = true, 1.0, Some(true), sf))
+    assert(refused(facts(1.0, anyError = true, prevSf = Some(true))))
     // sf mismatch: a smoke run at another sf leaves the record alone...
-    assert(!Bench.acceptAsRecord(anyError = false, 1.0, Some(false), "/tmp/sf0.01"))
+    assert(refused(facts(1.0, sfDir = "/tmp/sf0.01", prevSf = Some(false))))
     // ...but the canonical sf may reclaim a stale record
-    assert(Bench.acceptAsRecord(anyError = false, 1.0, Some(false), sf))
+    assert(outcome(facts(1.0, prevSf = Some(false))) == Bench.Accept)
   }
 
-  // ---- retry band + swap gate ------------------------------------------
+  // ---- the pass ladder -------------------------------------------------
 
   test("retry band sits below the accept gate; errored retries never displace clean passes") {
     // the r11 lesson: a 1.40-drift run passes the 1.5 accept gate yet
@@ -60,14 +110,21 @@ class BenchPolicySpec extends AnyFunSuite {
       "retry band must start below the accept gate or mildly-contended " +
         "runs are adopted without a second chance")
     assert(Bench.RetryDrift == 1.25)
+    // below the band nothing retries
+    val quiet = pass(1.2)
+    assert(climb(quiet) == ((quiet, Nil)))
     // swap gate: lower drift AND error-free retry wins...
-    assert(Bench.adoptRetry(1.4, 1.05, retryErrorFree = true))
+    val (first, calm) = (pass(1.4), pass(1.05))
+    assert(climb(first, calm) == ((calm, Seq(Bench.Ladder.head))))
     // ...a quieter-but-errored retry must never displace a clean pass
-    // (anyError would then reject the record, discarding clean figures)
-    assert(!Bench.adoptRetry(1.4, 1.05, retryErrorFree = false))
+    // (the error would then refuse the record, discarding clean figures)
+    assert(climb(first, pass(1.05, errored = true))._1 == first)
     // ...and a noisier retry never wins regardless
-    assert(!Bench.adoptRetry(1.4, 1.6, retryErrorFree = true))
-    assert(!Bench.adoptRetry(1.4, 1.4, retryErrorFree = true))
+    assert(climb(first, pass(1.6))._1 == first)
+    assert(climb(first, pass(1.4))._1 == first)
+    // an errored first pass is refused anyway: no retry is paid for it
+    val broken = pass(2.0, errored = true)
+    assert(climb(broken) == ((broken, Nil)))
   }
 
   test("cool-down escalation fires exactly when the run ends above the accept gate") {
@@ -76,11 +133,19 @@ class BenchPolicySpec extends AnyFunSuite {
     // record (drift > 1.5) pays one more pass after a cool-down, so the
     // committed round artifact is an accepted measurement whenever the
     // contention was transient
-    assert(!Bench.cooldownRetryNeeded(Bench.RecordAcceptDrift),
+    val atGate = Bench.RecordAcceptDrift
+    assert(climb(pass(atGate), pass(atGate))._2 == Seq(Bench.Ladder.head),
       "at exactly the gate the record is accepted — no escalation")
-    assert(Bench.cooldownRetryNeeded(Bench.RecordAcceptDrift + 0.01))
-    assert(!Bench.cooldownRetryNeeded(1.0))
+    val (_, ran) = climb(pass(atGate + 0.01), pass(atGate + 0.01), pass(atGate + 0.01))
+    assert(ran.map(_.coolSec) == Seq(0, Bench.CooldownSec))
+    assert(climb(pass(1.0))._2.isEmpty)
     assert(Bench.CooldownSec > 0)
+    // the lowest-drift error-free pass of the three wins
+    val cooled = pass(1.1)
+    assert(climb(pass(1.6), pass(1.55), cooled)._1 == cooled)
+    // a retry that lands within the gate ends the ladder
+    val retried = pass(1.3)
+    assert(climb(pass(1.8), retried) == ((retried, Seq(Bench.Ladder.head))))
   }
 
   // ---- compact summary line guard -------------------------------------
@@ -113,13 +178,15 @@ class BenchPolicySpec extends AnyFunSuite {
     // the published policy stamp names the settle rule (comparators must
     // see the r15 policy change the way they saw r10's best-of change)
     assert(Bench.SamplingPolicy.contains("settle"))
+    assert(Bench.SamplingPolicy ==
+      "best-of-2; +1 sample when min >= 0.5 s; +1 settle sample for the " +
+        "top-10 record-inflated queries when the shared-query total > 1.1x the record")
   }
 
   test("compact bench line parses as JSON with the driver's expected keys") {
     val line = Bench.compactLine(12.345,
       Seq("q_heavy" -> 3.0, "q_next" -> 1.5), "/root/testdata/sf0.1",
       n = 87, nFailed = 0, outPath = "bench_out.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(line) // throws on malformed JSON
     for (k <- Seq("metric", "value", "unit", "queries", "sf", "n",
         "n_failed", "queries_truncated_to_slowest", "full_record"))
@@ -127,8 +194,50 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(node.get("metric").asText == "total")
     assert(node.get("value").asDouble == 12.345)
     assert(node.get("queries").get("q_heavy").asDouble == 3.0)
+    assert(node.get("queries_truncated_to_slowest").asInt == 10)
     // the line must be ONE line (a tail parser reads exactly one)
     assert(!line.contains("\n"))
+  }
+
+  test("full bench record keeps the committed record's schema") {
+    // the full record (bench_out.json, bench_prev.json) is what the
+    // ledgers and their readers consume: its top-level, canary, machine
+    // and scaling keys — in order — must match the committed record
+    val s = Bench.settings(Map.empty)
+    val p = Bench.Pass(Seq(
+      Bench.Run("q_a", Seq(1.0, 0.9), None),
+      Bench.Run("q_b", Nil, Some(new RuntimeException("boom")))),
+      Seq(0.10, 0.11, 0.12, 0.10))
+    val v = Bench.verdict(facts(p.drift, anyError = !p.errorFree))
+    val scaling = Bench.scalingJson(8, Seq(("q_a", 0.9, Some(5.0)), ("q_c", 0.5, None)),
+      sessionAccepted = false, Nil, Nil, Map.empty, Nil)
+    val line = Bench.recordLine(s, p, cooldownRetried = false, v,
+      Map("q_a" -> 1.0), Some(0.1), Seq("q_a"),
+      Map("minhash_lsh" -> ops.CapReport("minhash_lsh", 10, 0, 0)), "null", Some(scaling))
+    assert(!line.contains("\n"))
+    val got = mapper.readTree(line)
+    val committed = mapper.readTree(repoText("bench_accepted.json"))
+    def keys(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+      n.fieldNames.asScala.toSeq
+    assert(keys(got) == keys(committed))
+    for (k <- Seq("canary", "machine", "scaling"))
+      assert(keys(got.get(k)) == keys(committed.get(k)), s"$k keys drifted")
+    // the figures land where the readers look for them
+    assert(got.get("value").asDouble == 0.9 && got.get("n_failed").asInt == 1)
+    assert(got.get("queries").get("q_b").isNull && got.get("errors").has("q_b"))
+    assert(got.get("delta_vs_prev").get("q_a").asDouble == 0.9)
+    assert(!got.get("accepted_as_record").asBoolean)
+    // the optional scaling keys appear exactly when they carry entries
+    val full = mapper.readTree(Bench.scalingJson(8, Nil, sessionAccepted = true,
+      Seq("q_a"), Seq("q_b"), Map("q_a" -> Some(12.0), "q_b" -> None),
+      Seq(("q_salted_join", 20.0, 31.65))))
+    assert(full.get("fresh_repro").get("q_a").get("reproduced_fresh").asBoolean)
+    assert(full.get("fresh_repro").get("q_b").get("ratio").isNull)
+    assert(full.get("declared_switch").has("q_salted_join"))
+    // the history line keeps the ledger's keys
+    val lastHistory = repoText("bench_history.jsonl").linesIterator.toSeq.last
+    assert(keys(mapper.readTree(Bench.historyLine(1L, s, p, v))) ==
+      keys(mapper.readTree(lastHistory)))
   }
 
   // ---- quarantineFlags -------------------------------------------------
@@ -182,12 +291,7 @@ class BenchPolicySpec extends AnyFunSuite {
     // "193/193" vs a 196-query surface) — pin the doc to the code so
     // adding a query without touching the README fails HERE, not in a
     // judge's diff
-    val start = new java.io.File(sys.props("user.dir")).getAbsoluteFile
-    val readme = Iterator.iterate(start)(_.getParentFile)
-      .takeWhile(_ != null).take(4)
-      .map(d => new java.io.File(d, "README.md")).find(_.isFile)
-    assert(readme.isDefined, "README.md not found near test cwd")
-    val txt = java.nio.file.Files.readString(readme.get.toPath)
+    val txt = repoText("README.md")
     val declared = "(\\d+) as of r\\d+".r.findFirstMatchIn(txt).map(_.group(1).toInt)
     assert(declared.isDefined, "README lost its '<N> as of r<round>' count")
     assert(declared.get == SparkEntry.queries.size,
@@ -201,81 +305,170 @@ class BenchPolicySpec extends AnyFunSuite {
         s"SparkEntry declares ${SparkEntry.queries.size}")
   }
 
+  test("every SPARK_GRAFT_* variable src/main reads is documented, and only those") {
+    // a new env switch must surface in the docs instead of going
+    // unnoticed; a deleted one must leave them
+    val pat = "SPARK_GRAFT_[A-Z_]+".r
+    val read = java.nio.file.Files.walk(repoFile("src/main").toPath)
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(f => pat.findAllIn(java.nio.file.Files.readString(f))).toSet
+    val documented = Seq("README.md", ".claude/skills/verify/SKILL.md")
+      .flatMap(f => pat.findAllIn(repoText(f))).toSet
+    assert(read.nonEmpty)
+    assert(read == documented,
+      s"read but undocumented: ${read -- documented}; " +
+        s"documented but never read: ${documented -- read}")
+  }
+
+  test("settings are read once; a malformed width or factor names its variable") {
+    assert(Bench.settings(Map.empty) == Bench.Settings(Bench.DefaultSfDir,
+      Bench.DefaultCpus, Bench.DefaultScaleFactor, "bench_out.json",
+      "bench_prev.json", "bench_history.jsonl", "bench_accepted.json"))
+    val s = Bench.settings(Map("SPARK_GRAFT_SF_DIR" -> "/tmp/sf",
+      "SPARK_GRAFT_CPUS" -> "4", "SPARK_GRAFT_SCALE_FACTOR" -> "2",
+      "SPARK_GRAFT_BENCH_HISTORY" -> "/tmp/h.jsonl"))
+    assert(s.sfDir == "/tmp/sf" && s.cpus == 4 && s.scaleFactor == 2 &&
+      s.histPath == "/tmp/h.jsonl")
+    // read before the warm-up: past the timed loop a typo would throw
+    // away every figure before any record is written
+    val f = intercept[IllegalArgumentException](
+      Bench.settings(Map("SPARK_GRAFT_SCALE_FACTOR" -> "x8")))
+    assert(f.getMessage.contains("SPARK_GRAFT_SCALE_FACTOR") && f.getMessage.contains("x8"))
+    val c = intercept[IllegalArgumentException](
+      Bench.settings(Map("SPARK_GRAFT_CPUS" -> "four")))
+    assert(c.getMessage.contains("SPARK_GRAFT_CPUS"))
+  }
+
+  test("record reader: the committed ledgers read as the former regex parsers read them") {
+    // expected values were taken once from the regex parsers this reader
+    // replaced; a newly committed record or smoke ledger re-pins them
+    val sf = Bench.DefaultSfDir
+    for (f <- Seq("bench_prev.json", "bench_accepted.json")) {
+      val r = Bench.readRecord(repoText(f)).getOrElse(fail(s"$f unreadable"))
+      assert(r.sf == sf && r.cpus.contains(32), f)
+      assert(r.value.contains(58.13863992000002), f)
+      assert(r.canaryMedian.contains(0.118), f)
+      assert(r.queries.size == 98, f)
+      assert(math.abs(r.queries.values.sum - 58.13863992000002) < 1e-9, f)
+      assert(r.queries("q_tpch_q1") == 0.213233229 &&
+        r.queries("q_ann_join") == 0.2304488 &&
+        r.queries("q_setsim_join") == 2.970439511 &&
+        r.queries("q_dedup_funnel") == 2.927330666, f)
+    }
+    // the history ledger is append-only: its first 20 lines are fixed.
+    // The ts:0 seed lines carry no n_failed and no cpus: 0 and -1.
+    val lines = repoText("bench_history.jsonl").linesIterator.take(20).toSeq
+    assert(lines.size == 20)
+    def sess(t: Double, d: Double, a: Boolean, n: Int, c: Int) =
+      Bench.Session(t, d, a, n, 0, c)
+    assert(Bench.readHistory(lines, sf) == Seq(
+      sess(73.21, 2.24, false, 95, -1), sess(73.79, 1.6, false, 95, -1),
+      sess(68.49, 1.86, false, 95, -1), sess(60.272, 1.452, true, 95, -1),
+      sess(58.403, 1.734, false, 95, -1), sess(66.8, 1.783, false, 95, -1),
+      sess(70.71, 1.577, false, 98, -1), sess(62.247, 1.452, true, 98, -1),
+      sess(59.852, 1.753, false, 98, -1), sess(60.952, 1.369, true, 98, -1),
+      sess(64.706, 1.622, false, 98, -1), sess(56.807, 1.736, false, 98, -1),
+      sess(55.622, 1.499, true, 98, -1), sess(63.186, 1.741, false, 98, 32),
+      sess(55.592, 1.571, false, 98, 32), sess(57.625, 1.531, false, 98, 32),
+      sess(59.876, 1.408, true, 98, 32), sess(58.139, 1.372, true, 98, 32),
+      sess(50.345, 1.42, false, 98, 8)))
+    assert(Bench.readHistory(lines, "/root/testdata/sf0.01") ==
+      Seq(sess(41.803, 1.751, false, 98, 8)))
+    // a malformed line is no session, never a crash
+    assert(Bench.readHistory(Seq("{\"sf\":", "", "[]"), sf).isEmpty)
+    // the timing-smoke ledger shares the reader
+    val smoke = repoText("SMOKE_TIMING.json")
+    val q = Bench.queriesAt(smoke, "/root/testdata/sf0.01")
+    assert(q.size == 130 && math.abs(q.values.sum - 126.661) < 1e-9)
+    assert(q("q_ann_recall_audit") == 11.455 && q("q_zipf_fit_gate") == 0.582)
+    assert(Bench.queriesAt(smoke, sf).isEmpty)
+  }
+
   test("regimeShiftAdopt: N agreeing refused sessions re-qualify; anything else doesn't") {
+    def s(t: Double, d: Double, a: Boolean, nf: Int = 0, c: Int = 32, n: Int = 95) =
+      Bench.Session(t, d, a, n, nf, c)
+    def regime(total: Double, drift: Double, history: Seq[Bench.Session],
+               n: Int = 95, cpus: Int = Bench.DefaultCpus): Bench.Outcome =
+      outcome(facts(drift, total = total, n = n, cpus = cpus, history = history))
     // the r16 calibration case: three refused sessions at 73.21/73.79/
     // 68.49 agree within 7.7% — a current run inside that band adopts
-    val r16 = Seq((73.21, 2.24, false, 95, 0, 32), (73.79, 1.60, false, 95, 0, 32))
-    assert(Bench.regimeShiftAdopt(68.49, 1.86, 95, r16))
-    // a quiet-window fast run does NOT regime-adopt (it would be
-    // accepted by the normal gate anyway; here it just disagrees)
-    assert(!Bench.regimeShiftAdopt(39.8, 1.2, 95, r16))
+    val r16 = Seq(s(73.21, 2.24, false), s(73.79, 1.60, false))
+    assert(regime(68.49, 1.86, r16) == Bench.RegimeShift)
+    // a quiet-window fast run takes the accept gate, never the regime
+    // path; at a contended drift its total disagrees and it is refused
+    assert(regime(39.8, 1.2, r16) == Bench.Accept)
+    assert(regime(39.8, 1.6, r16).isInstanceOf[Bench.Refuse])
     // fewer than minSessions-1 prior refused sessions: no adoption
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95, r16.take(1)))
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95, Nil))
+    assert(regime(68.49, 1.86, r16.take(1)).isInstanceOf[Bench.Refuse])
+    assert(regime(68.49, 1.86, Nil).isInstanceOf[Bench.Refuse])
     // an accepted session BREAKS the streak (the record was fresh then)
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 2.24, false, 95, 0, 32), (40.0, 1.1, true, 95, 0, 32),
-        (73.79, 1.6, false, 95, 0, 32))))
+    assert(regime(68.49, 1.86, Seq(s(73.21, 2.24, false), s(40.0, 1.1, true),
+      s(73.79, 1.6, false))).isInstanceOf[Bench.Refuse])
     // ...but older history BEFORE the streak does not interfere
-    assert(Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      (40.0, 1.1, true, 95, 0, 32) +: r16))
+    assert(regime(68.49, 1.86, s(40.0, 1.1, true) +: r16) == Bench.RegimeShift)
     // a contaminated session (drift > 3) never counts — in the streak
     // or as the current run
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 4.5, false, 95, 0, 32), (73.79, 1.6, false, 95, 0, 32))))
-    assert(!Bench.regimeShiftAdopt(68.49, 3.5, 95, r16))
+    assert(regime(68.49, 1.86, Seq(s(73.21, 4.5, false), s(73.79, 1.6, false)))
+      .isInstanceOf[Bench.Refuse])
+    assert(regime(68.49, 3.5, r16).isInstanceOf[Bench.Refuse])
+    assert(Bench.verdict(facts(3.5)).contaminated && !Bench.verdict(facts(3.0)).contaminated)
     // a different query-surface size is not total-comparable
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 97, r16))
+    assert(regime(68.49, 1.86, r16, n = 97).isInstanceOf[Bench.Refuse])
     // an ERRORED session (n_failed > 0) breaks the streak — its total
     // omits the failed queries' samples, a deflated non-comparable
     // figure that must not vouch for a regime (r17 ADVICE)
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 2.24, false, 95, 0, 32), (73.79, 1.60, false, 95, 2, 32))))
+    assert(regime(68.49, 1.86, Seq(s(73.21, 2.24, false), s(73.79, 1.60, false, nf = 2)))
+      .isInstanceOf[Bench.Refuse])
     // agreement is the FULL set including the current run: two priors
     // agreeing with each other but not with the current run refuse
-    assert(!Bench.regimeShiftAdopt(90.0, 1.86, 95, r16))
+    assert(regime(90.0, 1.86, r16).isInstanceOf[Bench.Refuse])
     // a DIFFERENT-core-count session breaks the streak (r18: totals are
     // not comparable across cpus), and pre-r19 ledger lines with no
-    // cpus marker (parsed as -1) never vouch
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 2.24, false, 95, 0, 32), (73.79, 1.60, false, 95, 0, 8))))
-    assert(!Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 2.24, false, 95, 0, -1), (73.79, 1.60, false, 95, 0, -1))))
+    // cpus marker (read as -1) never vouch
+    assert(regime(68.49, 1.86, Seq(s(73.21, 2.24, false), s(73.79, 1.60, false, c = 8)))
+      .isInstanceOf[Bench.Refuse])
+    assert(regime(68.49, 1.86, Seq(s(73.21, 2.24, false, c = -1), s(73.79, 1.60, false, c = -1)))
+      .isInstanceOf[Bench.Refuse])
     // and an 8-core run only adopts against an 8-core streak
-    assert(Bench.regimeShiftAdopt(68.49, 1.86, 95,
-      Seq((73.21, 2.24, false, 95, 0, 8), (73.79, 1.60, false, 95, 0, 8)),
-      curCpus = 8))
+    assert(regime(68.49, 1.86, Seq(s(73.21, 2.24, false, c = 8), s(73.79, 1.60, false, c = 8)),
+      cpus = 8) == Bench.RegimeShift)
   }
 
   test("cpusRuleOk: a different-width record blocks adoption except at canonical width (r18 #2)") {
     // matching or unstamped (pre-r19) prev record: fine at any width
-    assert(Bench.cpusRuleOk(Some(true), 8))
-    assert(Bench.cpusRuleOk(None, 8))
+    assert(outcome(facts(1.0, cpus = 8, prevCpus = Some(true))) == Bench.Accept)
+    assert(outcome(facts(1.0, cpus = 8, prevCpus = None)) == Bench.Accept)
     // mismatched width: only the canonical 32-core run may reclaim the
     // record (exactly how an 8-core scaling run's record gets replaced)
-    assert(!Bench.cpusRuleOk(Some(false), 8))
-    assert(Bench.cpusRuleOk(Some(false), Bench.DefaultCpus))
-    // and acceptAsRecord routes through the rule
-    assert(!Bench.acceptAsRecord(anyError = false, 1.0, Some(true),
-      Bench.DefaultSfDir, prevCpusMatches = Some(false), cpus = 8))
-    assert(Bench.acceptAsRecord(anyError = false, 1.0, Some(true),
-      Bench.DefaultSfDir, prevCpusMatches = Some(false),
-      cpus = Bench.DefaultCpus))
-    assert(Bench.acceptAsRecord(anyError = false, 1.0, Some(true),
-      Bench.DefaultSfDir, prevCpusMatches = Some(true), cpus = 8))
+    assert(refused(facts(1.0, cpus = 8, prevSf = Some(true), prevCpus = Some(false))))
+    assert(outcome(facts(1.0, prevSf = Some(true), prevCpus = Some(false))) == Bench.Accept)
+    assert(outcome(facts(1.0, cpus = 8, prevSf = Some(true), prevCpus = Some(true))) ==
+      Bench.Accept)
+    // the regime path routes through the same rule
+    val streak8 = Seq(Bench.Session(73.21, 2.24, false, 95, 0, 8),
+      Bench.Session(73.79, 1.60, false, 95, 0, 8))
+    assert(outcome(facts(1.86, cpus = 8, total = 68.49, history = streak8)) ==
+      Bench.RegimeShift)
+    assert(refused(facts(1.86, cpus = 8, prevCpus = Some(false), total = 68.49,
+      history = streak8)))
   }
 
   test("sfRuleOk is shared by accept AND regime paths (r17 ADVICE)") {
-    val sf = Bench.DefaultSfDir
+    val other = "/tmp/sf0.01"
     // matching or unknown prev sf: fine anywhere
-    assert(Bench.sfRuleOk(Some(true), "/tmp/sf0.01"))
-    assert(Bench.sfRuleOk(None, "/tmp/sf0.01"))
+    assert(outcome(facts(1.0, sfDir = other, prevSf = Some(true))) == Bench.Accept)
+    assert(outcome(facts(1.0, sfDir = other, prevSf = None)) == Bench.Accept)
     // mismatched prev sf: only the canonical sf may reclaim the record
-    assert(!Bench.sfRuleOk(Some(false), "/tmp/sf0.01"))
-    assert(Bench.sfRuleOk(Some(false), sf))
-    // and acceptAsRecord still routes through the same rule
-    assert(Bench.acceptAsRecord(anyError = false, 1.0, Some(false), sf))
-    assert(!Bench.acceptAsRecord(anyError = false, 1.0, Some(false), "/tmp/sf0.01"))
+    assert(refused(facts(1.0, sfDir = other, prevSf = Some(false))))
+    assert(outcome(facts(1.0, prevSf = Some(false))) == Bench.Accept)
+    // sustained agreement among smoke runs at a NON-canonical sf is a
+    // regime of the wrong experiment — it must not clobber the record
+    val streak = Seq(Bench.Session(73.21, 2.24, false, 95, 0, 32),
+      Bench.Session(73.79, 1.60, false, 95, 0, 32))
+    assert(outcome(facts(1.86, sfDir = other, prevSf = Some(true), total = 68.49,
+      history = streak)) == Bench.RegimeShift)
+    assert(refused(facts(1.86, sfDir = other, prevSf = Some(false), total = 68.49,
+      history = streak)))
   }
 
   test("declared switch: in-band ratio annotates, out-of-band flags (r17 #2)") {
@@ -309,14 +502,7 @@ class BenchPolicySpec extends AnyFunSuite {
   }
 
   test("build.sbt keeps the flags that make the bench line the last stdout line") {
-    // walk up from the test cwd to find build.sbt (forked tests run at
-    // the repo root, but don't depend on it)
-    val start = new java.io.File(sys.props("user.dir")).getAbsoluteFile
-    val buildSbt = Iterator.iterate(start)(_.getParentFile)
-      .takeWhile(_ != null).take(4)
-      .map(d => new java.io.File(d, "build.sbt")).find(_.isFile)
-    assert(buildSbt.isDefined, "build.sbt not found near test cwd")
-    val txt = java.nio.file.Files.readString(buildSbt.get.toPath)
+    val txt = repoText("build.sbt")
     assert(txt.contains("StdoutOutput"),
       "run/outputStrategy := StdoutOutput is gone — forked main output " +
         "gets [info] prefixes and the driver's bench-line parse breaks")

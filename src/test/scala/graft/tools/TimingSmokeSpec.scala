@@ -36,18 +36,18 @@ class TimingSmokeSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.01"
     val compact =
       s"""{"tool":"timing_smoke","sf":"$sf","queries":{"q_a":1.5,"q_b":0.25},"x":1}"""
-    assert(TimingSmoke.parsePrev(compact, sf) == Map("q_a" -> 1.5, "q_b" -> 0.25))
+    assert(graft.Bench.queriesAt(compact, sf) == Map("q_a" -> 1.5, "q_b" -> 0.25))
     // a pretty-printer re-dump must NOT silently reset the comparison
     // (the r4 bench lesson, applied here since r14)
     val pretty =
       s"""{\n  "tool": "timing_smoke",\n  "sf": "$sf",\n  "queries": {\n    "q_a": 1.5,\n    "q_b": 0.25\n  }\n}"""
-    assert(TimingSmoke.parsePrev(pretty, sf) == Map("q_a" -> 1.5, "q_b" -> 0.25),
+    assert(graft.Bench.queriesAt(pretty, sf) == Map("q_a" -> 1.5, "q_b" -> 0.25),
       "pretty-printed ledger silently disabled the suspect gate")
     // a ledger recorded at another sf resets the comparison DELIBERATELY
-    assert(TimingSmoke.parsePrev(compact, "/root/testdata/sf0.1").isEmpty)
+    assert(graft.Bench.queriesAt(compact, "/root/testdata/sf0.1").isEmpty)
     // malformed ledgers degrade to empty, never throw or slice garbage
-    assert(TimingSmoke.parsePrev(s"""{"sf":"$sf","queries":{""", sf).isEmpty)
-    assert(TimingSmoke.parsePrev(s"""{"sf":"$sf"}""", sf).isEmpty)
-    assert(TimingSmoke.parsePrev("", sf).isEmpty)
+    assert(graft.Bench.queriesAt(s"""{"sf":"$sf","queries":{""", sf).isEmpty)
+    assert(graft.Bench.queriesAt(s"""{"sf":"$sf"}""", sf).isEmpty)
+    assert(graft.Bench.queriesAt("", sf).isEmpty)
   }
 }
