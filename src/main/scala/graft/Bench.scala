@@ -386,10 +386,15 @@ object Bench {
   private[graft] case class Run(name: String, times: Seq[Double],
                                 err: Option[Throwable])
 
-  /** One full timed pass over the headliners, with its canary samples. */
-  private[graft] case class Pass(runs: Seq[Run], canary: Seq[Double]) {
+  /** One full timed pass over the headliners, with its canary samples
+    * and the canary's last error. A failed canary sample is an error
+    * like a failed query's: the samples that survive cannot vouch for
+    * the pass, and with none at all drift reads a quiet 1.0.
+    */
+  private[graft] case class Pass(runs: Seq[Run], canary: Seq[Double],
+                                 canaryErr: Option[Throwable] = None) {
     val (drift, driftRaw) = driftOf(canary)
-    def errorFree: Boolean = runs.forall(_.err.isEmpty)
+    def errorFree: Boolean = runs.forall(_.err.isEmpty) && canaryErr.isEmpty
     def total: Double = runs.flatMap(_.times.minOption).sum
   }
 
@@ -607,7 +612,8 @@ object Bench {
     // report ANY error, including flaky one-of-two failures that still
     // produced a timing — a nondeterministic regression must not
     // masquerade as healthy
-    val errs = runs.collect { case Run(k, _, Some(e)) =>
+    val errs = (runs.collect { case Run(k, _, Some(e)) => (k, e) } ++
+      pass.canaryErr.map(e => (s"canary:$CanaryQuery", e))).map { case (k, e) =>
       jsonStr(k) + ":" + jsonStr(e.toString.take(300))
     }.mkString("{", ",", "}")
     // per-query cur/prev ratio against the comparison record
@@ -733,8 +739,8 @@ object Bench {
     // specific JIT/codegen; the min is the steady-state figure and is
     // stable round over round. HEAVY queries pay one extra sample.
     def measureOnce(): Pass = {
-      val canary = scala.collection.mutable.ArrayBuffer[Double]()
-      def runCanary(): Unit = timedRun(spark, CanaryQuery, WarmSfDir).foreach(canary += _)
+      val canary = scala.collection.mutable.ArrayBuffer[Either[Throwable, Double]]()
+      def runCanary(): Unit = canary += timedRun(spark, CanaryQuery, WarmSfDir)
       // Prime the canary once untimed: its first post-clearCache call
       // pays re-read + re-JIT (~2-3x steady state), which would inflate
       // max/min drift toward the contamination threshold on a healthy box.
@@ -750,7 +756,8 @@ object Bench {
           attempts.collect { case Left(e) => e }.lastOption)
       }
       runCanary()
-      Pass(runs, canary.toSeq)
+      Pass(runs, canary.collect { case Right(t) => t }.toSeq,
+        canary.collect { case Left(e) => e }.lastOption)
     }
 
     val (climbed, rungsRun) = climb(measureOnce()) { rung =>
@@ -971,6 +978,8 @@ object Bench {
         System.err.println(s"[bench] ${if (ts.isEmpty) "FAILED" else "FLAKY"} $k: $e")
       case _ =>
     }
+    pass.canaryErr.foreach(e =>
+      System.err.println(s"[bench] canary $CanaryQuery FAILED at $WarmSfDir: $e"))
     if (v.contaminated)
       System.err.println(
         f"[bench] WARN canary drift ${pass.drift}%.1fx (${pass.canary.mkString(", ")}) — " +

@@ -57,10 +57,6 @@ class Metrics {
     ()
   }
 
-  private[graft] def inProgressNow: Long = inProgress.get()
-  private[graft] def successfulTotal: Long = successful.get()
-  private[graft] def failedTotal: Long = failed.get()
-
   /** Prometheus text format 0.0.4. Counter metric NAMES carry the
     * `_total` suffix the python client appends at exposition time, so a
     * scraper migrating from the reference keeps its series names.

@@ -194,10 +194,6 @@ object Refresh {
     swapInto(fs, staging, target)
   }
 
-  /** Full-refresh pipeline: read → overwrite extract → count. */
-  def fullRefresh(spark: SparkSession, source: DataFrame, extractPath: String): Long =
-    overwrite(source, extractPath)
-
   /** DYNAMIC partition overwrite: replace ONLY the hive partitions
     * present in `df`, leaving every other partition's files untouched.
     * At 100 TB a refresh almost never touches the whole lake — a

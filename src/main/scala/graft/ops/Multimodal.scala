@@ -64,14 +64,6 @@ object Multimodal {
   def withAudioMeta(df: DataFrame, payloadCol: String = "payload"): DataFrame =
     df.withColumn("audio_meta", graft.functions.AudioMeta(col(payloadCol)))
 
-  /** REAL video metadata from container headers (ISO BMFF moov/mvhd +
-    * trak/tkhd, AVI avih — [[graft.functions.VideoMeta]]): duration and
-    * display size. Duration filtering and hour-count accounting over a
-    * video corpus without decoding a frame.
-    */
-  def withVideoMeta(df: DataFrame, payloadCol: String = "payload"): DataFrame =
-    df.withColumn("video_meta", graft.functions.VideoMeta(col(payloadCol)))
-
   val FeatureDim = 16
 
   /** REAL image decode via the JDK's bundled codecs (javax.imageio ships

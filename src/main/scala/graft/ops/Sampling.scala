@@ -82,23 +82,6 @@ object Sampling {
     df.filter(stratumBucket(col(strataCol), col(keyCol)) < pct)
   }
 
-  /** Suppress rows whose `keys` group has fewer than `k` members — the
-    * k-anonymity-style small-group filter of privacy-aware curation (a
-    * (lang, source) combination seen twice identifies its contributor;
-    * a window count keeps whole groups or drops them, never samples
-    * within). One shuffle on the group key; count is a frame-less
-    * window (no sort), map-side pre-aggregated by Spark's window
-    * group-limit optimizations at scale.
-    */
-  def suppressRareGroups(df: DataFrame, keys: Seq[String], k: Int): DataFrame = {
-    require(k >= 1, s"need k >= 1; got $k")
-    import org.apache.spark.sql.expressions.Window
-    df.withColumn("__gn",
-        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-      .filter(col("__gn") >= k)
-      .drop("__gn")
-  }
-
   /** Per-key cap: keep the first `cap` rows of each `keys` group in
     * `order` (e.g. at most N documents per domain — the anti-boilerplate
     * mixture guard). Two-phase for hot keys: a LOCAL cap within each

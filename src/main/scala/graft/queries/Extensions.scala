@@ -230,6 +230,53 @@ object Extensions {
        |GROUP BY c.id_a, c.id_b)""".stripMargin
   private val LshPairsCtes = lshPairsCtesOver("documents")
 
+  /** Oracle for q_minhash_signature AND q_minhash_udaf: the typed
+    * Aggregator must produce the codegen path's signature exactly.
+    */
+  private val MinhashSignatureSql =
+    s"WITH $ShinglesCte SELECT id AS doc_id, $SigCols FROM sh GROUP BY id ORDER BY doc_id"
+      .replace("\n", " ")
+
+  /** Oracle for q_minhash_lsh_pairs AND q_sql_neardup: the one-statement
+    * Spark SQL pipeline is result-identical to the DataFrame one.
+    */
+  private val NearDupPairsSql =
+    s"""WITH $LshPairsCtes
+       |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
+       |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
+       |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
+       |ORDER BY id_a, id_b""".stripMargin.replace("\n", " ")
+
+  /** Oracle for q_decontaminate AND q_bloom_decontaminate: the Bloom
+    * prefilter must not change the exact answer.
+    */
+  private val DecontaminateSql =
+    s"""WITH $ShinglesCte,
+       |own AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles
+       |FROM sh WHERE id % 50 <> 0 GROUP BY id),
+       |b AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
+       |hits AS (SELECT id, CAST(count(*) AS BIGINT) AS n_overlap FROM sh
+       |WHERE id % 50 <> 0 AND shingle IN (SELECT shingle FROM b) GROUP BY id)
+       |SELECT own.id AS doc_id, n_shingles,
+       |CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
+       |round(CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles, 5) AS overlap_ratio
+       |FROM own LEFT JOIN hits ON own.id = hits.id
+       |ORDER BY doc_id""".stripMargin.replace("\n", " ")
+
+  /** Oracle for q_bigram_lm AND q_bigram_lm_hashed: the hashed keys are
+    * answer-identical to the exact bigram strings absent ~2⁻⁶⁴ collisions.
+    */
+  private val BigramLmSql =
+    """WITH w AS (SELECT doc_id AS id, string_split(text, ' ') AS w FROM documents),
+      |bg AS (SELECT id, w[i] || ' ' || w[i+1] AS bg FROM w,
+      |LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
+      |bgc AS (SELECT bg, count(*) AS cb FROM bg GROUP BY bg),
+      |pc AS (SELECT string_split(bg, ' ')[1] AS pref, sum(cb) AS cp FROM bgc GROUP BY 1)
+      |SELECT id, CAST(count(*) AS BIGINT) AS n_bigrams,
+      |round(avg(log2(CAST(cb AS DOUBLE) / CAST(cp AS DOUBLE))), 3) AS mean_log2p
+      |FROM bg JOIN bgc USING (bg) JOIN pc ON string_split(bg, ' ')[1] = pref
+      |GROUP BY id ORDER BY id""".stripMargin.replace("\n", " ")
+
   /** Shared recall-audit harness (X149/X152/X154/X161): per probe,
     * recall@10 of `approxJoin`'s (query_id, match_id) pairs against the
     * exact cosine top-10 over the fixed probe/corpus split. One place
@@ -244,16 +291,14 @@ object Extensions {
   private def recallAudit(s: org.apache.spark.sql.SparkSession, d: String,
       approxJoin: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
         org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val probes = emb.filter(col("vec_id") < 5)
-    val corpus = emb.filter(col("vec_id") >= 5)
-    val k = 10
+    val (probes, corpus) = annSplit(s, d)
+    val k = AuditK
     // empty corpus (degenerate tenant): nothing to recall against, and
     // the approximate legs cannot even derive their geometry — answer
     // the empty audit (take(1) stops at the first row, trivial at scale)
     if (corpus.select(col("vec_id")).take(1).isEmpty)
       probes.select(col("vec_id").as("query_id"),
-        lit(0L).as("n_hits"), lit(0.0).as("recall_at_10")).limit(0)
+        lit(0L).as("n_hits"), lit(0.0).as(s"recall_at_$k")).limit(0)
     else {
       // the exact ground-truth leg and the approximate leg are
       // independent until the hits join, and the approximate leg's
@@ -278,11 +323,408 @@ object Extensions {
         .select(col("query_id"),
           coalesce(col("n_hits"), lit(0L)).as("n_hits"),
           round(coalesce(col("n_hits"), lit(0L)).cast(DoubleType) / lit(k.toDouble), 4)
-            .as("recall_at_10"))
+            .as(s"recall_at_$k"))
         .orderBy("query_id")
       Dedup.eagerlyWith(out, () => { exactRdd.unpersist(blocking = false); () })
     }
   }
+
+  // ---- vector-search family geometry ----------------------------------
+  // Read by each member's Spark call AND by [[AnnSql]], so the engine
+  // and its oracle replay cannot drift apart on a dial.
+
+  /** `vec_id < ProbeIds` are the probes, the rest is the corpus. */
+  private val ProbeIds = 5
+  /** Recall is measured at this k. */
+  private val AuditK = 10
+  /** Coarse IVF cells, seeded from the lowest-id corpus vectors. */
+  private val Cells = 8
+  /** Cells each probe reads. */
+  private val NProbe = 2
+  /** PQ subspaces per vector, and codewords per subspace. */
+  private val PqM = 4
+  private val PqKs = 8
+  /** The re-rank shortlist is Refine·k ADC candidates. */
+  private val Refine = 8
+  /** The refine curve's shortlist tiers (multiples of k). */
+  private val RefineTiers = Seq(1, 2, 4, 8, 12)
+  /** Lloyd rounds of the refined-cell tiers. */
+  private val LloydIters = 2
+  /** Sign-LSH hyperplanes, and the audited multi-probe radius. */
+  private val LshPlanes = 4
+  private val LshRadius = 2
+  /** Top-k of the non-audit members: q_ivf_join, and q_pq_adc/q_ivf_pq. */
+  private val IvfJoinK = 3
+  private val PqTopK = 5
+  /** Embedding width: the engine reads it off the data, SQL spells it. */
+  private val Dim = 64
+  private val SubDim = Dim / PqM
+
+  /** The probe/corpus split every family member reads. */
+  private def annSplit(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val emb = Tables.embeddings(s, d)
+    (emb.filter(col("vec_id") < ProbeIds), emb.filter(col("vec_id") >= ProbeIds))
+  }
+
+  /** Oracle composer of the vector-search family: each member's DuckDB
+    * replay is a list of the named CTE pieces below plus a tail, so a
+    * piece (the Lloyd round, the cell assignment, the ADC fold, …) is
+    * written once. Every piece keeps the engine's arithmetic and
+    * tie-breaks: cosines are `list_cosine_similarity(probe, other)`,
+    * nearest-cell ties go to the larger cell (the ivfAssign side),
+    * codeword ties to the smaller index, neighbor ties to the smaller
+    * id, and subvector distances fold in ascending subspace order.
+    *
+    * Relations: `qs`/`corp` (vec_id, l DOUBLE[]) are probes and corpus;
+    * `pairs` (query_id, match_id, sim) every probe × corpus cosine;
+    * `ex` the exact top-k; `ap` the approximate leg the tail scores.
+    */
+  private object AnnSql {
+
+    /** Probes `qs` and corpus `corp`; `whole` keeps the probes in the
+      * corpus (q_pq_adc, q_ivf_pq search the whole table).
+      */
+    def split(whole: Boolean = false): String =
+      s"""qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
+         |FROM embeddings WHERE vec_id < $ProbeIds),
+         |corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
+         |FROM embeddings${if (whole) "" else s" WHERE vec_id >= $ProbeIds"})""".stripMargin
+
+    /** `name(query_id, match_id, sim)`: every probe × `other` cosine. */
+    def cosine(name: String, other: String): String =
+      s"""$name AS (SELECT qs.vec_id AS query_id, $other.vec_id AS match_id,
+         |list_cosine_similarity(qs.l, $other.l) AS sim FROM qs CROSS JOIN $other)""".stripMargin
+
+    /** `name`: per probe (and `dial` tier) the `k` nearest rows of
+      * `from` — `sim` descending or `adc` ascending, ties to the smaller
+      * match_id — with the score and the rank `rk`.
+      */
+    def top(name: String, from: String, score: String, k: Int, dial: String = ""): String = {
+      val by = if (dial.isEmpty) "query_id" else s"query_id, $dial"
+      val order = if (score == "adc") "adc" else s"$score DESC"
+      s"""$name AS (SELECT * FROM (SELECT $by, match_id, $score,
+         |row_number() OVER (PARTITION BY $by ORDER BY $order, match_id) AS rk
+         |FROM $from) t WHERE rk <= $k)""".stripMargin
+    }
+
+    /** `pairs` and the exact top-k leg `ex`. */
+    private val Exact: String = cosine("pairs", "corp") + ",\n" + top("ex", "pairs", "sim", AuditK)
+
+    /** `name(vec_id, l, cell)`: each corpus vector's nearest centroid. */
+    private def assign(name: String, cents: String): String =
+      s"""$name AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $cents.cell,
+         |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
+         |list_cosine_similarity(corp.l, $cents.c) DESC, $cents.cell DESC) AS rn
+         |FROM corp CROSS JOIN $cents) t WHERE rn = 1)""".stripMargin
+
+    /** `cents(cell, c)`: the [[Cells]] lowest-id corpus vectors refined
+      * by `iters` Lloyd rounds, unrolled the way q_pagerank unrolls its
+      * CTE — per round, assign against the previous centroids, average
+      * each cell's members element-wise (sum/count, the
+      * ivfCentroidsKMeans formulation), and emptied cells keep their
+      * previous centroid. Then `assigned`: the corpus against `cents`.
+      */
+    def cells(iters: Int): String = {
+      def c(i: Int) = if (i == iters) "cents" else s"cents$i"
+      val rounds = (0 until iters).map { i =>
+        s"""${assign(s"a$i", c(i))},
+           |m$i AS (SELECT cell, list(x ORDER BY i) AS c FROM
+           |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
+           |FROM a$i, range(1, ${Dim + 1}) t(i) GROUP BY cell, t.i) s GROUP BY cell),
+           |${c(i + 1)} AS (SELECT ${c(i)}.cell, coalesce(m$i.c, ${c(i)}.c) AS c
+           |FROM ${c(i)} LEFT JOIN m$i ON m$i.cell = ${c(i)}.cell)""".stripMargin
+      }
+      (s"${c(0)} AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT $Cells)" +:
+        rounds :+ assign("assigned", "cents")).mkString(",\n")
+    }
+
+    /** The probe window: `qranks`, each probe's `nProbe` nearest cells
+      * ranked as `cellrank`, and `cand(query_id, match_id, cell,
+      * cellrank)`, the corpus vectors assigned to them.
+      */
+    def probe(nProbe: Int): String =
+      s"""qranks AS (SELECT * FROM (SELECT qs.vec_id AS query_id, cents.cell,
+         |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
+         |list_cosine_similarity(qs.l, cents.c) DESC, cents.cell DESC) AS cellrank
+         |FROM qs CROSS JOIN cents) t WHERE cellrank <= $nProbe),
+         |cand AS (SELECT r.query_id, a.vec_id AS match_id, r.cell, r.cellrank
+         |FROM qranks r JOIN assigned a ON a.cell = r.cell)""".stripMargin
+
+    /** `ivfc`: every candidate's exact cosine — the exact-in-cell tier. */
+    val InCell: String =
+      """ivfc AS (SELECT c.query_id, c.match_id, c.cellrank, p.sim FROM cand c
+        |JOIN pairs p ON p.query_id = c.query_id AND p.match_id = c.match_id)""".stripMargin
+
+    /** Squared L2 between subvector element `x(i)` and codeword `cb.w`. */
+    private def sqDist(x: String): String =
+      s"list_sum(list_transform(range(1, ${SubDim + 1}), i -> ($x - cb.w[i]) * ($x - cb.w[i])))"
+
+    /** The PQ codebook over the raw corpus, or over the residuals
+      * `resi` (vector − its cell's centroid): `cb(mi, c, w)` seeds
+      * codeword c of subspace mi from the c-th lowest-id vector, and
+      * `codes(vec_id, mi, c)` is each subvector's nearest codeword. Below
+      * [[PqKs]] corpus vectors there is no quantizer to build: the seeds
+      * are empty, so every ADC leg is — the engine's skip.
+      */
+    def codes(residual: Boolean): String = {
+      val src = if (residual) "resi" else "corp"
+      val resi =
+        if (!residual) ""
+        else s"""resi AS (SELECT a.vec_id,
+                |list_transform(range(1, ${Dim + 1}), i -> a.l[i] - ct.c[i]) AS l
+                |FROM assigned a JOIN cents ct ON ct.cell = a.cell),
+                |""".stripMargin
+      resi +
+        s"""seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
+           |FROM (SELECT vec_id, l FROM $src ORDER BY vec_id LIMIT $PqKs) s
+           |WHERE (SELECT count(*) FROM corp) >= $PqKs),
+           |ms AS (SELECT unnest(range(0, $PqM)) AS mi),
+           |cb AS (SELECT ms.mi, seeds.c,
+           |list_slice(seeds.l, ms.mi*$SubDim + 1, ms.mi*$SubDim + $SubDim) AS w
+           |FROM seeds CROSS JOIN ms),
+           |dist AS (SELECT $src.vec_id, cb.mi, cb.c,
+           |${sqDist(s"$src.l[cb.mi*$SubDim + i]")} AS dd
+           |FROM $src CROSS JOIN cb),
+           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
+           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
+           |FROM dist) t WHERE rn = 1)""".stripMargin
+    }
+
+    /** The ADC fold, `adc(query_id, match_id, adc)`: per `cand` pair
+      * and subspace, the squared L2 from the probe's subvector
+      * (residualized against the candidate's cell centroid when
+      * `residual`) to the candidate's codeword, summed in ascending
+      * subspace order like the pq_adc kernel.
+      */
+    def adc(residual: Boolean): String = {
+      val (x, centroid) =
+        if (residual) (s"(q.l[co.mi*$SubDim + i] - ct.c[co.mi*$SubDim + i])",
+          "\nJOIN cents ct ON ct.cell = cand.cell")
+        else (s"q.l[co.mi*$SubDim + i]", "")
+      s"""sub AS (SELECT cand.query_id, cand.match_id, co.mi,
+         |${sqDist(x)} AS dd
+         |FROM cand JOIN qs q ON q.vec_id = cand.query_id$centroid
+         |JOIN codes co ON co.vec_id = cand.match_id
+         |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
+         |adc AS (SELECT query_id, match_id,
+         |list_sum(list(dd ORDER BY mi)) AS adc
+         |FROM sub GROUP BY query_id, match_id)""".stripMargin
+    }
+
+    /** The refine stage: `short`, the Refine·k best of `from` by ADC,
+      * re-ranked by exact cosine into `ap`.
+      */
+    def rerank(from: String, dial: String = ""): String =
+      top("short", from, "adc", Refine * AuditK, dial) + ",\n" +
+        top("ap", "short JOIN pairs USING (query_id, match_id)", "sim", AuditK, dial)
+
+    /** `lsh`: every exact pair with the Hamming distance between the two
+      * sign-LSH buckets; the md5 hyperplanes are deterministic, so they
+      * inline as literal DOUBLE arrays.
+      */
+    val Lsh: String = {
+      val planes = Similarity.hyperplanes(LshPlanes, Dim)
+      val bucket = planes.zipWithIndex.map { case (p, i) =>
+        s"(CASE WHEN list_dot_product(l, ${p.mkString("[", ",", "]")}) >= 0 THEN ${1L << i} ELSE 0 END)"
+      }.mkString(" + ")
+      s"""bk AS (SELECT vec_id, $bucket AS bucket
+         |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l FROM embeddings) e),
+         |lsh AS (SELECT p.*, bit_count(xor(bq.bucket, bc.bucket)) AS dist FROM pairs p
+         |JOIN bk bq ON bq.vec_id = p.query_id JOIN bk bc ON bc.vec_id = p.match_id)""".stripMargin
+    }
+
+    /** SQ8: `deq`, the corpus quantized to int8 and back (scale factored
+      * as maxabs/127 exactly like the engine), and `sq8`, the probes'
+      * cosines against it.
+      */
+    val Sq8: String =
+      s"""deq AS (SELECT vec_id, CASE WHEN maxabs > 0
+         |THEN list_transform(l, x -> round(x / maxabs * 127.0) * (maxabs / 127.0))
+         |ELSE list_transform(l, x -> 0.0) END AS l
+         |FROM (SELECT vec_id, l, list_max(list_transform(l, x -> abs(x))) AS maxabs FROM corp) t),
+         |${cosine("sq8", "deq")}""".stripMargin
+
+    /** The replay: `ctes` in order, then `select`. */
+    def answer(ctes: String*)(select: String): String =
+      ("WITH " + ctes.mkString(",\n") + "\n" + select).replace("\n", " ")
+
+    /** `hits` of `ap` in `ex`, per probe (and `dial` tier). */
+    private def hits(dial: String): String = {
+      val d = if (dial.isEmpty) "" else s", ap.$dial"
+      s"""hits AS (SELECT ex.query_id$d, count(*) AS n_hits
+         |FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
+         |GROUP BY ex.query_id$d)""".stripMargin
+    }
+
+    /** A recall audit: per probe, recall@k of the approximate leg `ap`
+      * that `ctes` build against the exact leg.
+      */
+    def audit(ctes: String*): String =
+      answer(split() +: Exact +: ctes :+ hits(""): _*)(
+        s"""SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / ${AuditK.toDouble}, 4) AS recall_at_$AuditK
+           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
+           |ORDER BY query_id""".stripMargin)
+
+    /** A recall curve: per tier of `dial` (the relation `dial` holds
+      * `values`), the mean recall@k over probes of the approximate leg
+      * `ap` that `ctes` build against the exact leg.
+      */
+    def curve(dial: String, values: Seq[Int])(ctes: String*): String =
+      answer((split() +: Exact +:
+        s"dial AS (SELECT unnest(${values.mkString("[", ", ", "]")}) AS $dial)" +: ctes) :+
+        hits(dial) :+
+        s"""grid AS (SELECT q.query_id, dial.$dial
+           |FROM (SELECT DISTINCT query_id FROM ex) q CROSS JOIN dial)""".stripMargin: _*)(
+        s"""SELECT CAST(g.$dial AS INTEGER) AS $dial,
+           |CAST(count(*) AS BIGINT) AS n_queries,
+           |round(CAST(sum(coalesce(h.n_hits, 0)) AS DOUBLE) /
+           |CAST(count(*) * $AuditK AS DOUBLE), 4) AS mean_recall_at_$AuditK
+           |FROM grid g LEFT JOIN hits h
+           |ON h.query_id = g.query_id AND h.$dial = g.$dial
+           |GROUP BY g.$dial ORDER BY $dial""".stripMargin)
+  }
+
+  // ---- the trained hashed-bucket classifier trio ----------------------
+  // q_classifier_trained, q_classifier_holdout and
+  // q_classifier_holdout_sketch share one feature projection, one
+  // teacher-gated trainer and one confusion matrix, on both sides.
+
+  /** Hash buckets of the trained classifier: its weight vector's width. */
+  private val ClfBuckets = 4096
+
+  /** Documents with the teacher feature `swr` (the stopword ratio) and,
+    * when `split`, the leakage-safe `is_train` key (q_leakage_safe_split's
+    * content hash, ~80% train). Persisted: every later pass re-reads it.
+    */
+  private def clfDocs(s: org.apache.spark.sql.SparkSession, d: String,
+      split: Boolean): org.apache.spark.sql.DataFrame = {
+    val toksArr = TextAnalysis.tokens(col("text"))
+    val swr = (size(filter(toksArr,
+      t => t.isin(TextAnalysis.StopwordsEn.map(lit): _*))).cast(DoubleType) /
+      size(toksArr).cast(DoubleType)).as("swr")
+    val isTrain = (Sampling.hashBucket(
+      md5(TextAnalysis.normalizeText(col("text"))), 100) < 80).as("is_train")
+    Tables.documents(s, d)
+      .select(Seq(col("doc_id"), col("text"), swr) ++ (if (split) Seq(isTrain) else Nil): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The teacher gate: stopword ratio at or above `thr` (null → drop). */
+  private def clfTeacher(thr: Any): org.apache.spark.sql.Column =
+    coalesce(col("swr") >= thr, lit(false))
+
+  /** The teacher at the exact interpolated P25 of `train`'s swr. */
+  private def clfP25Teacher(train: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Column = {
+    val thrRow = train.agg(expr("percentile(swr, 0.25)")).head()
+    clfTeacher(if (thrRow.isNullAt(0)) null else thrRow.getDouble(0))
+  }
+
+  /** Fits the bucket weights against `teacher` over `train` (the
+    * closed form q_classifier_trained describes): explode to (bucket,
+    * ±1 label), map-side-combine to <= [[ClfBuckets]] rows, and collect
+    * the model to the driver. Buckets unseen in `train` stay 0.0.
+    */
+  private def clfFit(train: org.apache.spark.sql.DataFrame,
+      teacher: org.apache.spark.sql.Column): Array[Double] = {
+    val occ = train
+      .select(explode(TextAnalysis.tokens(lower(col("text")))).as("tok"),
+        when(teacher, lit(1L)).otherwise(lit(-1L)).as("lab"))
+      .select((conv(substring(md5(col("tok")), 1, 8), 16, 10)
+        .cast(LongType) % ClfBuckets).as("b"), col("lab"))
+    val w = new Array[Double](ClfBuckets)
+    val rows = occ.groupBy(col("b"))
+      .agg(sum(col("lab")).as("sl"), count(lit(1)).as("c"))
+      .collect()
+    // mean label, floored onto the 2^-31 grid: s/c is one
+    // correctly-rounded division, *2^31 is exact (power of two),
+    // floor and /2^31 are exact — both engines land on the
+    // identical double. The global mean (class prior) rides the
+    // same grid, so centered weights stay grid-exact.
+    def grid(sl: Long, c: Long): Double =
+      math.floor(sl.toDouble / c.toDouble * 2147483648.0) / 2147483648.0
+    val (slAll, cAll) = rows.foldLeft((0L, 0L)) { case ((a, b), r) =>
+      (a + r.getLong(1), b + r.getLong(2))
+    }
+    val g = if (cAll > 0) grid(slAll, cAll) else 0.0
+    rows.foreach { r =>
+      w(r.getLong(0).toInt) = grid(r.getLong(1), r.getLong(2)) - g
+    }
+    w
+  }
+
+  /** The trained-vs-teacher confusion matrix of `eval`, served through
+    * the native margin kernel: (clf, heur, n_docs, mean_margin).
+    */
+  private def clfMatrix(eval: org.apache.spark.sql.DataFrame, w: Array[Double],
+      teacher: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    eval
+      .select(TextAnalysis.hashedClassifierMarginFrom(col("text"), w)
+          .as("margin"),
+        when(teacher, lit("keep")).otherwise(lit("drop")).as("heur"))
+      .select(
+        when(col("margin") > 0, lit("keep")).otherwise(lit("drop")).as("clf"),
+        col("heur"),
+        round(col("margin"), 9).cast("decimal(28,9)").as("m9"))
+      .groupBy("clf", "heur")
+      .agg(count(lit(1)).cast(LongType).as("n_docs"),
+        round(sum(col("m9")).cast(DoubleType) /
+          count(lit(1)).cast(DoubleType), 5).as("mean_margin"))
+
+  /** DuckDB replay of [[clfDocs]], opening the WITH list. */
+  private def clfDocsSql(split: Boolean): String =
+    s"""WITH docs AS (SELECT doc_id, text,
+       |CAST(len(list_filter(string_split(text, ' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
+       |/ CAST(len(string_split(text, ' ')) AS DOUBLE) AS swr""".stripMargin +
+      (if (!split) ""
+       else """,
+              |CAST(concat('0x', substring(md5(md5(trim(
+              |regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')
+              |))), 1, 4)) AS BIGINT) % 100 < 80 AS is_train""".stripMargin) +
+      " FROM documents),"
+
+  /** DuckDB replay of [[clfFit]]: `occ` (doc, label, bucket) over the
+    * labelled `lab` rows (train side only when `trainOnly`), the global
+    * mean `g`, and the centered grid weights `w`.
+    */
+  private def clfFitSql(trainOnly: Boolean): String =
+    s"""occ AS (SELECT doc_id, keep,
+       |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % $ClfBuckets AS b
+       |FROM (SELECT doc_id, keep, unnest(string_split(lower(text), ' ')) AS tok FROM lab${if (trainOnly) " WHERE is_train" else ""})),
+       |g AS (SELECT floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
+       |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0 AS gm FROM occ),
+       |w AS (SELECT b, floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
+       |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0
+       |- (SELECT gm FROM g) AS wt
+       |FROM occ GROUP BY b),""".stripMargin
+
+  /** DuckDB replay of [[clfMatrix]] over the margins `m` joined as `from`. */
+  private def clfMatrixSql(from: String, extra: String = ""): String =
+    s"""cells AS (SELECT CASE WHEN m.margin > 0 THEN 'keep' ELSE 'drop' END AS clf,
+       |CASE WHEN lab.keep THEN 'keep' ELSE 'drop' END AS heur,
+       |round(m.margin, 9) AS m9
+       |FROM $from)
+       |SELECT clf, heur, CAST(count(*) AS BIGINT) AS n_docs,
+       |round(CAST(sum(CAST(m9 AS DECIMAL(28,9))) AS DOUBLE) / count(*), 5) AS mean_margin$extra
+       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** Oracle of the two holdout forms: `thrCte` (may be empty) defines
+    * the teacher threshold `thr` reads; the held-out margins serve
+    * unseen buckets as 0.0 (a LEFT JOIN + coalesce, the kernel's
+    * default); `extra` appends output columns.
+    */
+  private def clfHoldoutSql(thrCte: String, thr: String, extra: String = ""): String =
+    (clfDocsSql(split = true) + s"""
+       |${thrCte}lab AS (SELECT doc_id, text, is_train,
+       |coalesce(swr >= $thr, FALSE) AS keep FROM docs),
+       |${clfFitSql(trainOnly = true)}
+       |etoks AS (SELECT doc_id,
+       |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % $ClfBuckets AS b
+       |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM lab WHERE NOT is_train)),
+       |m AS (SELECT etoks.doc_id, sum(coalesce(w.wt, 0.0)) / count(*) AS margin
+       |FROM etoks LEFT JOIN w USING (b) GROUP BY etoks.doc_id),
+       |${clfMatrixSql("lab JOIN m USING (doc_id) WHERE NOT lab.is_train", extra)}""".stripMargin)
+      .replace("\n", " ")
 
   val all: Seq[Q] = Seq(
 
@@ -887,77 +1329,19 @@ object Extensions {
     // driver-sized) and serve as one codegen'd scan 3.
     Q("q_classifier_trained",
       (s, d) => {
-        val toksArr = TextAnalysis.tokens(col("text"))
-        val dim = 4096
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
-          (size(filter(toksArr,
-            t => t.isin(TextAnalysis.StopwordsEn.map(lit): _*))).cast(DoubleType) /
-            size(toksArr).cast(DoubleType)).as("swr"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val thrRow = docs.agg(expr("percentile(swr, 0.25)")).head()
-        val thr: Any = if (thrRow.isNullAt(0)) null else thrRow.getDouble(0)
-        val teacher = coalesce(col("swr") >= thr, lit(false))
-        val occ = docs
-          .select(explode(TextAnalysis.tokens(lower(col("text")))).as("tok"),
-            when(teacher, lit(1L)).otherwise(lit(-1L)).as("lab"))
-          .select((conv(substring(md5(col("tok")), 1, 8), 16, 10)
-            .cast(LongType) % dim).as("b"), col("lab"))
-        val w = new Array[Double](dim) // unseen buckets stay 0.0
-        val rows = occ.groupBy(col("b"))
-          .agg(sum(col("lab")).as("sl"), count(lit(1)).as("c"))
-          .collect()
-        // mean label, floored onto the 2^-31 grid: s/c is one
-        // correctly-rounded division, *2^31 is exact (power of two),
-        // floor and /2^31 are exact — both engines land on the
-        // identical double. The global mean (class prior) rides the
-        // same grid, so centered weights stay grid-exact.
-        def grid(sl: Long, c: Long): Double =
-          math.floor(sl.toDouble / c.toDouble * 2147483648.0) / 2147483648.0
-        val (slAll, cAll) = rows.foldLeft((0L, 0L)) { case ((a, b), r) =>
-          (a + r.getLong(1), b + r.getLong(2))
-        }
-        val g = if (cAll > 0) grid(slAll, cAll) else 0.0
-        rows.foreach { r =>
-          w(r.getLong(0).toInt) = grid(r.getLong(1), r.getLong(2)) - g
-        }
-        val out = docs
-          .select(TextAnalysis.hashedClassifierMarginFrom(col("text"), w)
-              .as("margin"),
-            when(teacher, lit("keep")).otherwise(lit("drop")).as("heur"))
-          .select(
-            when(col("margin") > 0, lit("keep")).otherwise(lit("drop")).as("clf"),
-            col("heur"),
-            round(col("margin"), 9).cast("decimal(28,9)").as("m9"))
-          .groupBy("clf", "heur")
-          .agg(count(lit(1)).cast(LongType).as("n_docs"),
-            round(sum(col("m9")).cast(DoubleType) /
-              count(lit(1)).cast(DoubleType), 5).as("mean_margin"))
-          .orderBy("clf", "heur")
-        Dedup.eagerly(out, docs)
+        val docs = clfDocs(s, d, split = false)
+        val teacher = clfP25Teacher(docs)
+        Dedup.eagerly(clfMatrix(docs, clfFit(docs, teacher), teacher)
+          .orderBy("clf", "heur"), docs)
       },
-      Some(s"""WITH docs AS (SELECT doc_id, text,
-             |CAST(len(list_filter(string_split(text, ' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
-             |/ CAST(len(string_split(text, ' ')) AS DOUBLE) AS swr FROM documents),
+      Some((clfDocsSql(split = false) + s"""
              |lab AS (SELECT doc_id, text,
              |coalesce(swr >= (SELECT quantile_cont(swr, 0.25) FROM docs), FALSE) AS keep FROM docs),
-             |occ AS (SELECT doc_id, keep,
-             |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % 4096 AS b
-             |FROM (SELECT doc_id, keep, unnest(string_split(lower(text), ' ')) AS tok FROM lab)),
-             |g AS (SELECT floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0 AS gm FROM occ),
-             |w AS (SELECT b, floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0
-             |- (SELECT gm FROM g) AS wt
-             |FROM occ GROUP BY b),
+             |${clfFitSql(trainOnly = false)}
              |m AS (SELECT occ.doc_id, sum(w.wt) / count(*) AS margin
              |FROM occ JOIN w USING (b) GROUP BY occ.doc_id),
-             |cells AS (SELECT CASE WHEN m.margin > 0 THEN 'keep' ELSE 'drop' END AS clf,
-             |CASE WHEN lab.keep THEN 'keep' ELSE 'drop' END AS heur,
-             |round(m.margin, 9) AS m9
-             |FROM lab LEFT JOIN m USING (doc_id))
-             |SELECT clf, heur, CAST(count(*) AS BIGINT) AS n_docs,
-             |round(CAST(sum(CAST(m9 AS DECIMAL(28,9))) AS DOUBLE) / count(*), 5) AS mean_margin
-             |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " "))),
+             |${clfMatrixSql("lab LEFT JOIN m USING (doc_id)")}""".stripMargin)
+        .replace("\n", " "))),
 
     // The trained classifier evaluated HONESTLY: q_classifier_trained
     // fits and scores on the same corpus (resubstitution — the matrix
@@ -978,81 +1362,13 @@ object Extensions {
     // doubles), and evaluation is one codegen'd scan of the holdout.
     Q("q_classifier_holdout",
       (s, d) => {
-        val toksArr = TextAnalysis.tokens(col("text"))
-        val dim = 4096
-        val all = Tables.documents(s, d).select(col("doc_id"), col("text"),
-          (size(filter(toksArr,
-            t => t.isin(TextAnalysis.StopwordsEn.map(lit): _*))).cast(DoubleType) /
-            size(toksArr).cast(DoubleType)).as("swr"),
-          (Sampling.hashBucket(
-            md5(TextAnalysis.normalizeText(col("text"))), 100) < 80).as("is_train"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val all = clfDocs(s, d, split = true)
         val train = all.filter(col("is_train"))
-        val thrRow = train.agg(expr("percentile(swr, 0.25)")).head()
-        val thr: Any = if (thrRow.isNullAt(0)) null else thrRow.getDouble(0)
-        val teacher = coalesce(col("swr") >= thr, lit(false))
-        val occ = train
-          .select(explode(TextAnalysis.tokens(lower(col("text")))).as("tok"),
-            when(teacher, lit(1L)).otherwise(lit(-1L)).as("lab"))
-          .select((conv(substring(md5(col("tok")), 1, 8), 16, 10)
-            .cast(LongType) % dim).as("b"), col("lab"))
-        val w = new Array[Double](dim) // buckets unseen in TRAIN stay 0.0
-        val rows = occ.groupBy(col("b"))
-          .agg(sum(col("lab")).as("sl"), count(lit(1)).as("c"))
-          .collect()
-        def grid(sl: Long, c: Long): Double =
-          math.floor(sl.toDouble / c.toDouble * 2147483648.0) / 2147483648.0
-        val (slAll, cAll) = rows.foldLeft((0L, 0L)) { case ((a, b), r) =>
-          (a + r.getLong(1), b + r.getLong(2))
-        }
-        val g = if (cAll > 0) grid(slAll, cAll) else 0.0
-        rows.foreach { r =>
-          w(r.getLong(0).toInt) = grid(r.getLong(1), r.getLong(2)) - g
-        }
-        val out = all.filter(!col("is_train"))
-          .select(TextAnalysis.hashedClassifierMarginFrom(col("text"), w)
-              .as("margin"),
-            when(teacher, lit("keep")).otherwise(lit("drop")).as("heur"))
-          .select(
-            when(col("margin") > 0, lit("keep")).otherwise(lit("drop")).as("clf"),
-            col("heur"),
-            round(col("margin"), 9).cast("decimal(28,9)").as("m9"))
-          .groupBy("clf", "heur")
-          .agg(count(lit(1)).cast(LongType).as("n_docs"),
-            round(sum(col("m9")).cast(DoubleType) /
-              count(lit(1)).cast(DoubleType), 5).as("mean_margin"))
-          .orderBy("clf", "heur")
-        Dedup.eagerly(out, all)
+        val teacher = clfP25Teacher(train)
+        Dedup.eagerly(clfMatrix(all.filter(!col("is_train")), clfFit(train, teacher), teacher)
+          .orderBy("clf", "heur"), all)
       },
-      Some(s"""WITH docs AS (SELECT doc_id, text,
-             |CAST(len(list_filter(string_split(text, ' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
-             |/ CAST(len(string_split(text, ' ')) AS DOUBLE) AS swr,
-             |CAST(concat('0x', substring(md5(md5(trim(
-             |regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')
-             |))), 1, 4)) AS BIGINT) % 100 < 80 AS is_train FROM documents),
-             |lab AS (SELECT doc_id, text, is_train,
-             |coalesce(swr >= (SELECT quantile_cont(swr, 0.25) FROM docs WHERE is_train), FALSE) AS keep FROM docs),
-             |occ AS (SELECT doc_id, keep,
-             |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % 4096 AS b
-             |FROM (SELECT doc_id, keep, unnest(string_split(lower(text), ' ')) AS tok FROM lab WHERE is_train)),
-             |g AS (SELECT floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0 AS gm FROM occ),
-             |w AS (SELECT b, floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0
-             |- (SELECT gm FROM g) AS wt
-             |FROM occ GROUP BY b),
-             |etoks AS (SELECT doc_id,
-             |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % 4096 AS b
-             |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM lab WHERE NOT is_train)),
-             |m AS (SELECT etoks.doc_id, sum(coalesce(w.wt, 0.0)) / count(*) AS margin
-             |FROM etoks LEFT JOIN w USING (b) GROUP BY etoks.doc_id),
-             |cells AS (SELECT CASE WHEN m.margin > 0 THEN 'keep' ELSE 'drop' END AS clf,
-             |CASE WHEN lab.keep THEN 'keep' ELSE 'drop' END AS heur,
-             |round(m.margin, 9) AS m9
-             |FROM lab JOIN m USING (doc_id) WHERE NOT lab.is_train)
-             |SELECT clf, heur, CAST(count(*) AS BIGINT) AS n_docs,
-             |round(CAST(sum(CAST(m9 AS DECIMAL(28,9))) AS DOUBLE) / count(*), 5) AS mean_margin
-             |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " "))),
+      Some(clfHoldoutSql("", "(SELECT quantile_cont(swr, 0.25) FROM docs WHERE is_train)"))),
 
     // q_classifier_holdout's 100 TB form: the train-side teacher
     // threshold — the one remaining exact `percentile` on a corpus-∝
@@ -1077,16 +1393,8 @@ object Extensions {
     // weights, AND the holdout matrix already gate on the sketch alone.
     Q("q_classifier_holdout_sketch",
       (s, d) => {
-        val toksArr = TextAnalysis.tokens(col("text"))
-        val dim = 4096
         val accuracy = 10000
-        val all = Tables.documents(s, d).select(col("doc_id"), col("text"),
-          (size(filter(toksArr,
-            t => t.isin(TextAnalysis.StopwordsEn.map(lit): _*))).cast(DoubleType) /
-            size(toksArr).cast(DoubleType)).as("swr"),
-          (Sampling.hashBucket(
-            md5(TextAnalysis.normalizeText(col("text"))), 100) < 80).as("is_train"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val all = clfDocs(s, d, split = true)
         val train = all.filter(col("is_train"))
         val t = train.agg(
           expr(s"approx_percentile(swr, 0.25, $accuracy)"),
@@ -1095,79 +1403,21 @@ object Extensions {
         val thrS: Any = if (t.isNullAt(0)) null else t.getDouble(0)
         val thrD: Any = if (t.isNullAt(1)) null else t.getDouble(1)
         val nTrain = t.getLong(2)
-        def gate(th: Any) = coalesce(col("swr") >= th, lit(false))
         val flips = if (t.isNullAt(0) || t.isNullAt(1)) 0L
-          else train.filter(gate(thrS) =!= gate(thrD)).count()
+          else train.filter(clfTeacher(thrS) =!= clfTeacher(thrD)).count()
         val ok = flips.toDouble <= math.max(3.0, 2.0 * nTrain / accuracy)
-        val teacher = gate(thrS)
-        val occ = train
-          .select(explode(TextAnalysis.tokens(lower(col("text")))).as("tok"),
-            when(teacher, lit(1L)).otherwise(lit(-1L)).as("lab"))
-          .select((conv(substring(md5(col("tok")), 1, 8), 16, 10)
-            .cast(LongType) % dim).as("b"), col("lab"))
-        val w = new Array[Double](dim)
-        val rows = occ.groupBy(col("b"))
-          .agg(sum(col("lab")).as("sl"), count(lit(1)).as("c"))
-          .collect()
-        def grid(sl: Long, c: Long): Double =
-          math.floor(sl.toDouble / c.toDouble * 2147483648.0) / 2147483648.0
-        val (slAll, cAll) = rows.foldLeft((0L, 0L)) { case ((a, b), r) =>
-          (a + r.getLong(1), b + r.getLong(2))
-        }
-        val g = if (cAll > 0) grid(slAll, cAll) else 0.0
-        rows.foreach { r =>
-          w(r.getLong(0).toInt) = grid(r.getLong(1), r.getLong(2)) - g
-        }
-        val out = all.filter(!col("is_train"))
-          .select(TextAnalysis.hashedClassifierMarginFrom(col("text"), w)
-              .as("margin"),
-            when(teacher, lit("keep")).otherwise(lit("drop")).as("heur"))
-          .select(
-            when(col("margin") > 0, lit("keep")).otherwise(lit("drop")).as("clf"),
-            col("heur"),
-            round(col("margin"), 9).cast("decimal(28,9)").as("m9"))
-          .groupBy("clf", "heur")
-          .agg(count(lit(1)).cast(LongType).as("n_docs"),
-            round(sum(col("m9")).cast(DoubleType) /
-              count(lit(1)).cast(DoubleType), 5).as("mean_margin"))
+        val teacher = clfTeacher(thrS)
+        Dedup.eagerly(clfMatrix(all.filter(!col("is_train")), clfFit(train, teacher), teacher)
           .select(col("clf"), col("heur"), col("n_docs"), col("mean_margin"),
             lit(ok).as("sketch_within_bound"))
-          .orderBy("clf", "heur")
-        Dedup.eagerly(out, all)
+          .orderBy("clf", "heur"), all)
       },
-      Some(s"""WITH docs AS (SELECT doc_id, text,
-             |CAST(len(list_filter(string_split(text, ' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
-             |/ CAST(len(string_split(text, ' ')) AS DOUBLE) AS swr,
-             |CAST(concat('0x', substring(md5(md5(trim(
-             |regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')
-             |))), 1, 4)) AS BIGINT) % 100 < 80 AS is_train FROM documents),
-             |thr AS (SELECT swr FROM
-             |(SELECT swr, row_number() OVER (ORDER BY swr) AS rk FROM docs WHERE is_train) r
-             |WHERE rk = CAST(ceil(0.25 * (SELECT count(*) FROM docs WHERE is_train)) AS BIGINT)),
-             |lab AS (SELECT doc_id, text, is_train,
-             |coalesce(swr >= (SELECT swr FROM thr), FALSE) AS keep FROM docs),
-             |occ AS (SELECT doc_id, keep,
-             |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % 4096 AS b
-             |FROM (SELECT doc_id, keep, unnest(string_split(lower(text), ' ')) AS tok FROM lab WHERE is_train)),
-             |g AS (SELECT floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0 AS gm FROM occ),
-             |w AS (SELECT b, floor(CAST(sum(CASE WHEN keep THEN 1 ELSE -1 END) AS DOUBLE)
-             |/ CAST(count(*) AS DOUBLE) * 2147483648.0) / 2147483648.0
-             |- (SELECT gm FROM g) AS wt
-             |FROM occ GROUP BY b),
-             |etoks AS (SELECT doc_id,
-             |CAST(concat('0x', substring(md5(tok), 1, 8)) AS BIGINT) % 4096 AS b
-             |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM lab WHERE NOT is_train)),
-             |m AS (SELECT etoks.doc_id, sum(coalesce(w.wt, 0.0)) / count(*) AS margin
-             |FROM etoks LEFT JOIN w USING (b) GROUP BY etoks.doc_id),
-             |cells AS (SELECT CASE WHEN m.margin > 0 THEN 'keep' ELSE 'drop' END AS clf,
-             |CASE WHEN lab.keep THEN 'keep' ELSE 'drop' END AS heur,
-             |round(m.margin, 9) AS m9
-             |FROM lab JOIN m USING (doc_id) WHERE NOT lab.is_train)
-             |SELECT clf, heur, CAST(count(*) AS BIGINT) AS n_docs,
-             |round(CAST(sum(CAST(m9 AS DECIMAL(28,9))) AS DOUBLE) / count(*), 5) AS mean_margin,
-             |TRUE AS sketch_within_bound
-             |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " "))),
+      Some(clfHoldoutSql(
+        """thr AS (SELECT swr FROM
+          |(SELECT swr, row_number() OVER (ORDER BY swr) AS rk FROM docs WHERE is_train) r
+          |WHERE rk = CAST(ceil(0.25 * (SELECT count(*) FROM docs WHERE is_train)) AS BIGINT)),
+          |""".stripMargin,
+        "(SELECT swr FROM thr)", ",\nTRUE AS sketch_within_bound"))),
 
     // Intra-document repetition ratio (duplicate word 3-grams / total) —
     // the "repetitious text" quality signal; narrow array projection,
@@ -1889,20 +2139,14 @@ object Extensions {
       (s, d) => Dedup.minhashSignatureNarrow(Tables.documents(s, d), "doc_id", "text", k = 6)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
-      Some(s"""WITH $ShinglesCte
-             |SELECT id AS doc_id, $SigCols FROM sh GROUP BY id ORDER BY doc_id"""
-        .stripMargin.replace("\n", " "))),
+      Some(MinhashSignatureSql)),
 
     Q("q_minhash_lsh_pairs",
       (s, d) => Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
           threshold = 0.8, k = 6, bandRows = 2)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH $LshPairsCtes
-             |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin.replace("\n", " "))),
+      Some(NearDupPairsSql)),
 
     // LSH index health — the q_ivf_stats analog for the MinHash band
     // family: per-band bucket population, hottest bucket, docs in
@@ -2644,17 +2888,7 @@ object Extensions {
             round(col("overlap_ratio"), 5).as("overlap_ratio"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH $ShinglesCte,
-             |own AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles
-             |FROM sh WHERE id % 50 <> 0 GROUP BY id),
-             |b AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
-             |hits AS (SELECT id, CAST(count(*) AS BIGINT) AS n_overlap FROM sh
-             |WHERE id % 50 <> 0 AND shingle IN (SELECT shingle FROM b) GROUP BY id)
-             |SELECT own.id AS doc_id, n_shingles,
-             |CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-             |round(CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles, 5) AS overlap_ratio
-             |FROM own LEFT JOIN hits ON own.id = hits.id
-             |ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+      Some(DecontaminateSql)),
 
     // Canonical corpus after near-dup collapse — the end-to-end "dedup
     // the corpus" operation: pairs → clusters → keep each cluster's
@@ -2849,39 +3083,10 @@ object Extensions {
     // radius-2 probe set, both rank windows, and the hit intersection.
     Q("q_ann_recall_audit",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.annJoin(probes, corpus, "vec_id", "embedding", 10,
-          nPlanes = 4, probeRadius = 2)),
-      Some {
-        val planes = Similarity.hyperplanes(nPlanes = 4, dim = 64)
-        def arr(p: Array[Double]) = p.map(_.toString).mkString("[", ",", "]")
-        def bucketOf(v: String) = planes.zipWithIndex.map { case (p, i) =>
-          s"(CASE WHEN list_dot_product($v, ${arr(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""WITH p AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v,
-           |${bucketOf("CAST(embedding AS DOUBLE[])")} AS bucket
-           |FROM embeddings WHERE vec_id < 5),
-           |c AS (SELECT vec_id AS match_id, CAST(embedding AS DOUBLE[]) AS v,
-           |${bucketOf("CAST(embedding AS DOUBLE[])")} AS bucket
-           |FROM embeddings WHERE vec_id >= 5),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT p.query_id, c.match_id,
-           |row_number() OVER (PARTITION BY p.query_id ORDER BY
-           |list_cosine_similarity(p.v, c.v) DESC, c.match_id) AS rk
-           |FROM p CROSS JOIN c) t WHERE rk <= 10),
-           |ap AS (SELECT query_id, match_id FROM (
-           |SELECT p.query_id, c.match_id,
-           |row_number() OVER (PARTITION BY p.query_id ORDER BY
-           |list_cosine_similarity(p.v, c.v) DESC, c.match_id) AS rk
-           |FROM p JOIN c ON bit_count(xor(p.bucket, c.bucket)) <= 2) t
-           |WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-           |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id)
-           |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-           |ORDER BY query_id""".stripMargin.replace("\n", " ")
-      }),
+        Similarity.annJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          nPlanes = LshPlanes, probeRadius = LshRadius)),
+      Some(AnnSql.audit(AnnSql.Lsh,
+        AnnSql.top("ap", s"lsh WHERE dist <= $LshRadius", "sim", AuditK)))),
 
     // The SQ8 tier's recall audit — the OTHER quantization family:
     // symmetric int8 scalar quantization (Similarity.quantize8, 4×
@@ -2905,13 +3110,11 @@ object Extensions {
     // the corpus scans of the round's worst ×64 exponent (50.0).
     Q("q_sq8_recall_audit",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val probes = emb.filter(col("vec_id") < 5)
-        val corpus = emb.filter(col("vec_id") >= 5)
-        val k = 10
+        val (probes, corpus) = annSplit(s, d)
+        val k = AuditK
         if (corpus.select(col("vec_id")).take(1).isEmpty)
           probes.select(col("vec_id").as("query_id"),
-            lit(0L).as("n_hits"), lit(0.0).as("recall_at_10")).limit(0)
+            lit(0L).as("n_hits"), lit(0.0).as(s"recall_at_$k")).limit(0)
         else {
           // broadcast the PROBE side: a nested-loop join streams the
           // non-broadcast side, so building the corpus instead would
@@ -2945,36 +3148,13 @@ object Extensions {
             .select(col("query_id"),
               coalesce(col("n_hits"), lit(0L)).as("n_hits"),
               round(coalesce(col("n_hits"), lit(0L)).cast(DoubleType) /
-                lit(k.toDouble), 4).as("recall_at_10"))
+                lit(k.toDouble), 4).as(s"recall_at_$k"))
             .orderBy("query_id")
           Dedup.eagerly(out, pairs)
         }
       },
-      Some("""WITH p AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v
-             |FROM embeddings WHERE vec_id < 5),
-             |c AS (SELECT vec_id AS match_id, CAST(embedding AS DOUBLE[]) AS v
-             |FROM embeddings WHERE vec_id >= 5),
-             |cq AS (SELECT match_id, CASE WHEN maxabs > 0
-             |THEN list_transform(v, x -> round(x / maxabs * 127.0) * (maxabs / 127.0))
-             |ELSE list_transform(v, x -> 0.0) END AS dv
-             |FROM (SELECT match_id, v, list_max(list_transform(v, x -> abs(x))) AS maxabs FROM c) t),
-             |ex AS (SELECT query_id, match_id FROM (
-             |SELECT p.query_id, c.match_id,
-             |row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |list_cosine_similarity(p.v, c.v) DESC, c.match_id) AS rk
-             |FROM p CROSS JOIN c) t WHERE rk <= 10),
-             |ap AS (SELECT query_id, match_id FROM (
-             |SELECT p.query_id, cq.match_id,
-             |row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |list_cosine_similarity(p.v, cq.dv) DESC, cq.match_id) AS rk
-             |FROM p CROSS JOIN cq) t WHERE rk <= 10),
-             |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-             |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-             |GROUP BY ex.query_id)
-             |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-             |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-             |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-             |ORDER BY query_id""".stripMargin.replace("\n", " "))),
+      Some(AnnSql.audit(AnnSql.Sq8,
+        AnnSql.top("ap", "sq8", "sim", AuditK)))),
 
     // The IVF tier's recall audit — q_ann_recall_audit's pattern applied
     // to the second approximate neighbor stage: per probe, recall@10 of
@@ -2987,42 +3167,11 @@ object Extensions {
     // state alone.
     Q("q_ivf_recall_audit",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2)),
-      Some("""WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS c
-             |FROM embeddings WHERE vec_id >= 5 ORDER BY vec_id LIMIT 8),
-             |qsims AS (SELECT q.vec_id AS query_id, cents.cell, q.embedding,
-             |list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), cents.c) AS sim
-             |FROM embeddings q CROSS JOIN cents WHERE q.vec_id < 5),
-             |probes AS (SELECT query_id, cell, embedding FROM (SELECT query_id, cell, embedding,
-             |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM qsims) t WHERE rn <= 2),
-             |csims AS (SELECT e.vec_id, cents.cell, e.embedding,
-             |list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cents.c) AS sim
-             |FROM embeddings e CROSS JOIN cents WHERE e.vec_id >= 5),
-             |assigned AS (SELECT vec_id, cell, embedding FROM (SELECT vec_id, cell, embedding,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM csims) t WHERE rn = 1),
-             |ap AS (SELECT query_id, match_id FROM (
-             |SELECT p.query_id, a.vec_id AS match_id,
-             |row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
-             |CAST(a.embedding AS DOUBLE[])) DESC, a.vec_id) AS rk
-             |FROM probes p JOIN assigned a ON a.cell = p.cell) t WHERE rk <= 10),
-             |ex AS (SELECT query_id, match_id FROM (
-             |SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-             |row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             |list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-             |CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rk
-             |FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND c.vec_id >= 5) t
-             |WHERE rk <= 10),
-             |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-             |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-             |GROUP BY ex.query_id)
-             |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-             |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-             |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-             |ORDER BY query_id""".stripMargin.replace("\n", " "))),
+        Similarity.ivfJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe)),
+      Some(AnnSql.audit(AnnSql.cells(0),
+        AnnSql.probe(NProbe), AnnSql.InCell,
+        AnnSql.top("ap", "ivfc", "sim", AuditK)))),
 
     // The recall audit of the IVF tier a deployment actually SHIPS:
     // q_ivf_recall_audit measures the id-rank-seeded centroids
@@ -3030,68 +3179,19 @@ object Extensions {
     // centroids by default — the number that licenses switching the
     // exact stage off is the refined tier's. Lloyd's is deterministic
     // given the id-rank seeds and a fixed iteration count, so the
-    // oracle replays the iterations relationally the way q_pagerank
-    // unrolls its CTE: per round, assign every corpus vector to its
-    // nearest centroid (tie → larger cell, the ivfAssign side), average
-    // each cell's members element-wise (sum/count — the
-    // ivfCentroidsKMeans formulation), emptied cells keep their
-    // previous centroid. Two rounds: measured on this fixture the
+    // oracle replays the iterations relationally (AnnSql.cells). Two
+    // rounds (LloydIters): measured on this fixture the
     // refined tier's recall@10 strictly dominates the id-rank tier's
     // per probe (and further iterations overfit an unclustered corpus —
     // k-means converges to a partition whose 2-of-8 probe geometry is
     // no better; the audit is exactly the query that would catch that).
     Q("q_ivf_recall_refined",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, kmeansIters = 2)),
-      Some {
-        // one Lloyd round as CTEs: assign vs `prev`, element-wise member
-        // means, emptied cells carry `prev` forward into `next`
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, v, cell FROM (SELECT corp.vec_id, corp.v, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.v, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(v[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           |FROM embeddings WHERE vec_id >= 5),
-           |cents0 AS (SELECT vec_id AS cell, v AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |qsims AS (SELECT q.vec_id AS query_id, cents2.cell, q.embedding,
-           |list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), cents2.c) AS sim
-           |FROM embeddings q CROSS JOIN cents2 WHERE q.vec_id < 5),
-           |probes AS (SELECT query_id, cell, embedding FROM (SELECT query_id, cell, embedding,
-           |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM qsims) t WHERE rn <= 2),
-           |csims AS (SELECT corp.vec_id, cents2.cell, corp.v,
-           |list_cosine_similarity(corp.v, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell, v FROM (SELECT vec_id, cell, v,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM csims) t WHERE rn = 1),
-           |ap AS (SELECT query_id, match_id FROM (
-           |SELECT p.query_id, a.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY p.query_id ORDER BY
-           |list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), a.v) DESC, a.vec_id) AS rk
-           |FROM probes p JOIN assigned a ON a.cell = p.cell) t WHERE rk <= 10),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT q.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY q.vec_id ORDER BY
-           |list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), corp.v) DESC, corp.vec_id) AS rk
-           |FROM embeddings q CROSS JOIN corp WHERE q.vec_id < 5) t
-           |WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-           |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id)
-           |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-           |ORDER BY query_id""".stripMargin.replace("\n", " ")
-      }),
+        Similarity.ivfJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, kmeansIters = LloydIters)),
+      Some(AnnSql.audit(AnnSql.cells(LloydIters),
+        AnnSql.probe(NProbe), AnnSql.InCell,
+        AnnSql.top("ap", "ivfc", "sim", AuditK)))),
 
     // The nProbe dial priced as a CURVE: mean recall@10 of the IVF
     // join per probe budget nProbe ∈ 1..8, one row per budget, in ONE
@@ -3104,49 +3204,14 @@ object Extensions {
     // every cell (the built-in sanity anchor).
     Q("q_ivf_probe_curve",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfProbeCurve(emb.filter(col("vec_id") < 5),
-          emb.filter(col("vec_id") >= 5), "vec_id", "embedding", k = 10, m = 8)
+        val (probes, corpus) = annSplit(s, d)
+        Similarity.ivfProbeCurve(probes, corpus, "vec_id", "embedding",
+          k = AuditK, m = Cells)
       },
-      Some("""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |FROM embeddings WHERE vec_id >= 5),
-             |cents AS (SELECT vec_id AS cell, v AS c FROM corp ORDER BY vec_id LIMIT 8),
-             |qs AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v
-             |FROM embeddings WHERE vec_id < 5),
-             |qranks AS (SELECT query_id, v, cell,
-             |row_number() OVER (PARTITION BY query_id ORDER BY
-             |list_cosine_similarity(v, cents.c) DESC, cell DESC) AS cellrank
-             |FROM qs CROSS JOIN cents),
-             |assigned AS (SELECT vec_id, v, cell FROM (SELECT corp.vec_id, corp.v, cents.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.v, cents.c) DESC, cents.cell DESC) AS rn
-             |FROM corp CROSS JOIN cents) t WHERE rn = 1),
-             |cands AS (SELECT r.query_id, a.vec_id AS match_id,
-             |list_cosine_similarity(r.v, a.v) AS sim, r.cellrank
-             |FROM qranks r JOIN assigned a ON a.cell = r.cell),
-             |expl AS (SELECT c.query_id, c.match_id, c.sim, p.i AS n_probe
-             |FROM cands c JOIN range(1, 9) p(i) ON c.cellrank <= p.i),
-             |ap AS (SELECT query_id, n_probe, match_id FROM (
-             |SELECT query_id, n_probe, match_id,
-             |row_number() OVER (PARTITION BY query_id, n_probe
-             |ORDER BY sim DESC, match_id) AS rk FROM expl) t WHERE rk <= 10),
-             |ex AS (SELECT query_id, match_id FROM (
-             |SELECT q.query_id, corp.vec_id AS match_id,
-             |row_number() OVER (PARTITION BY q.query_id ORDER BY
-             |list_cosine_similarity(q.v, corp.v) DESC, corp.vec_id) AS rk
-             |FROM qs q CROSS JOIN corp) t WHERE rk <= 10),
-             |hits AS (SELECT ex.query_id, ap.n_probe, count(*) AS n_hits
-             |FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-             |GROUP BY ex.query_id, ap.n_probe),
-             |grid AS (SELECT q.query_id, p.i AS n_probe
-             |FROM (SELECT DISTINCT query_id FROM ex) q CROSS JOIN range(1, 9) p(i))
-             |SELECT CAST(g.n_probe AS INTEGER) AS n_probe,
-             |CAST(count(*) AS BIGINT) AS n_queries,
-             |round(CAST(sum(coalesce(h.n_hits, 0)) AS DOUBLE) /
-             |CAST(count(*) * 10 AS DOUBLE), 4) AS mean_recall_at_10
-             |FROM grid g LEFT JOIN hits h
-             |ON h.query_id = g.query_id AND h.n_probe = g.n_probe
-             |GROUP BY g.n_probe ORDER BY n_probe""".stripMargin.replace("\n", " "))),
+      Some(AnnSql.curve("n_probe", 1 to Cells)(
+        AnnSql.cells(0), AnnSql.probe(Cells), AnnSql.InCell,
+        "expl AS (SELECT ivfc.*, dial.n_probe FROM ivfc JOIN dial ON ivfc.cellrank <= dial.n_probe)",
+        AnnSql.top("ap", "expl", "sim", AuditK, "n_probe")))),
 
     // The IVF-PQ tier's recall audit (r14) — the LAST unaudited
     // approximate stage: LSH (X149) and IVF (X152/X154) have recall
@@ -3162,70 +3227,17 @@ object Extensions {
     // the hit intersection — from relational state alone (the q_ivf_pq
     // CTEs + the audit tail). Sub-ks corpora: ivfPqJoin skips (no
     // quantizer to build → empty approx leg → all-zero n_hits rows),
-    // and the oracle's ap CTE gates on the same count(corp) >= ks
-    // predicate — BOTH sides answer the all-zero audit for a
-    // 1..ks−1-row corpus, closing the contract on every corpus size,
-    // not just the driver's full/empty/one-row fixtures (unlike
-    // q_pq_adc, whose limit(0)-frame contract has no SQL analog).
+    // and the oracle's codebook seeds gate on the same count(corp) >= ks
+    // predicate (AnnSql.codes) — BOTH sides answer the all-zero audit
+    // for a 1..ks−1-row corpus, closing the contract on every corpus
+    // size, not just the full/empty/one-row fixtures.
     Q("q_pq_recall_audit",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfPqJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, pqM = 4, pqKs = 8)),
-      Some("""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-             |FROM embeddings WHERE vec_id >= 5),
-             |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-             |FROM embeddings WHERE vec_id < 5),
-             |seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
-             |FROM (SELECT vec_id, l FROM corp ORDER BY vec_id LIMIT 8) s),
-             |ms AS (SELECT unnest(range(0, 4)) AS mi),
-             |cb AS (SELECT ms.mi, seeds.c,
-             |list_slice(seeds.l, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-             |FROM seeds CROSS JOIN ms),
-             |dist AS (SELECT corp.vec_id, cb.mi, cb.c,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (corp.l[cb.mi*16 + i] - cb.w[i]) * (corp.l[cb.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM corp CROSS JOIN cb),
-             |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-             |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-             |FROM dist) t WHERE rn = 1),
-             |cents AS (SELECT vec_id AS cell, l AS cl FROM corp ORDER BY vec_id LIMIT 8),
-             |asim AS (SELECT corp.vec_id, cents.cell,
-             |list_cosine_similarity(corp.l, cents.cl) AS sim FROM corp CROSS JOIN cents),
-             |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM asim) t WHERE rn = 1),
-             |qsim AS (SELECT qs.vec_id, cents.cell,
-             |list_cosine_similarity(qs.l, cents.cl) AS sim FROM qs CROSS JOIN cents),
-             |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM qsim) t WHERE rn <= 2),
-             |cand AS (SELECT p.query_id, a.vec_id AS match_id
-             |FROM probes p JOIN assigned a ON a.cell = p.cell),
-             |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (q.l[co.mi*16 + i] - cb.w[i]) * (q.l[co.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-             |JOIN codes co ON co.vec_id = cand.match_id
-             |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-             |adc AS (SELECT query_id, match_id,
-             |list_sum(list(dd ORDER BY mi)) AS adc
-             |FROM sub GROUP BY query_id, match_id),
-             |ap AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-             |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-             |FROM adc) t WHERE rk <= 10
-             |AND (SELECT count(*) FROM corp) >= 8),
-             |ex AS (SELECT query_id, match_id FROM (
-             |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-             |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-             |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-             |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-             |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-             |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-             |GROUP BY ex.query_id)
-             |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-             |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-             |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-             |ORDER BY query_id""".stripMargin.replace("\n", " "))),
+        Similarity.ivfPqJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs)),
+      Some(AnnSql.audit(AnnSql.cells(0),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = false),
+        AnnSql.adc(residual = false), AnnSql.top("ap", "adc", "adc", AuditK)))),
 
     // The PQ re-rank tier (r15) — the fix for the loss X161 just
     // priced: q_pq_recall_audit measures the pure-ADC tier at recall@10
@@ -3244,73 +3256,16 @@ object Extensions {
     // ADC-top-40). Oracle = X161's CTE chain through `adc`, then the
     // shortlist window and the exact re-rank window — all relational.
     // Sub-ks corpora: ivfPqRerankJoin inherits ivfPqJoin's skip (empty
-    // approx leg), and the oracle's `short` CTE carries the same
+    // approx leg), and the oracle's codebook carries the same
     // count(corp) >= ks gate, so both sides answer the all-zero audit
     // on every corpus size.
     Q("q_pq_rerank",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, pqM = 4, pqKs = 8, refine = 8)),
-      Some("""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-             |FROM embeddings WHERE vec_id >= 5),
-             |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-             |FROM embeddings WHERE vec_id < 5),
-             |seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
-             |FROM (SELECT vec_id, l FROM corp ORDER BY vec_id LIMIT 8) s),
-             |ms AS (SELECT unnest(range(0, 4)) AS mi),
-             |cb AS (SELECT ms.mi, seeds.c,
-             |list_slice(seeds.l, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-             |FROM seeds CROSS JOIN ms),
-             |dist AS (SELECT corp.vec_id, cb.mi, cb.c,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (corp.l[cb.mi*16 + i] - cb.w[i]) * (corp.l[cb.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM corp CROSS JOIN cb),
-             |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-             |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-             |FROM dist) t WHERE rn = 1),
-             |cents AS (SELECT vec_id AS cell, l AS cl FROM corp ORDER BY vec_id LIMIT 8),
-             |asim AS (SELECT corp.vec_id, cents.cell,
-             |list_cosine_similarity(corp.l, cents.cl) AS sim FROM corp CROSS JOIN cents),
-             |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM asim) t WHERE rn = 1),
-             |qsim AS (SELECT qs.vec_id, cents.cell,
-             |list_cosine_similarity(qs.l, cents.cl) AS sim FROM qs CROSS JOIN cents),
-             |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM qsim) t WHERE rn <= 2),
-             |cand AS (SELECT p.query_id, a.vec_id AS match_id
-             |FROM probes p JOIN assigned a ON a.cell = p.cell),
-             |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (q.l[co.mi*16 + i] - cb.w[i]) * (q.l[co.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-             |JOIN codes co ON co.vec_id = cand.match_id
-             |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-             |adc AS (SELECT query_id, match_id,
-             |list_sum(list(dd ORDER BY mi)) AS adc
-             |FROM sub GROUP BY query_id, match_id),
-             |short AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-             |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-             |FROM adc) t WHERE rk <= 80
-             |AND (SELECT count(*) FROM corp) >= 8),
-             |ap AS (SELECT query_id, match_id FROM (SELECT sh.query_id, sh.match_id,
-             |row_number() OVER (PARTITION BY sh.query_id ORDER BY
-             |list_cosine_similarity(q.l, c.l) DESC, sh.match_id) AS rk
-             |FROM short sh JOIN qs q ON q.vec_id = sh.query_id
-             |JOIN corp c ON c.vec_id = sh.match_id) t WHERE rk <= 10),
-             |ex AS (SELECT query_id, match_id FROM (
-             |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-             |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-             |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-             |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-             |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-             |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-             |GROUP BY ex.query_id)
-             |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-             |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-             |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-             |ORDER BY query_id""".stripMargin.replace("\n", " "))),
+        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs, refine = Refine)),
+      Some(AnnSql.audit(AnnSql.cells(0),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = false),
+        AnnSql.adc(residual = false), AnnSql.rerank("adc")))),
 
     // The full serving recipe the PQ stack would actually SHIP (r15):
     // Lloyd-2-refined coarse quantizer (X154's tier — cell selection is
@@ -3327,86 +3282,12 @@ object Extensions {
     // and X161's codebook/code/ADC chain — plus the two rank windows.
     Q("q_pq_rerank_refined",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, pqM = 4, pqKs = 8, refine = 8,
-          kmeansIters = 2)),
-      Some {
-        // X154's one-Lloyd-round CTE over the `corp(vec_id, l)` leg:
-        // assign vs `prev` (tie → larger cell), element-wise member
-        // means, emptied cells carry `prev` forward
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.l, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id >= 5),
-           |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id < 5),
-           |seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
-           |FROM (SELECT vec_id, l FROM corp ORDER BY vec_id LIMIT 8) s),
-           |ms AS (SELECT unnest(range(0, 4)) AS mi),
-           |cb AS (SELECT ms.mi, seeds.c,
-           |list_slice(seeds.l, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-           |FROM seeds CROSS JOIN ms),
-           |dist AS (SELECT corp.vec_id, cb.mi, cb.c,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (corp.l[cb.mi*16 + i] - cb.w[i]) * (corp.l[cb.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM corp CROSS JOIN cb),
-           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-           |FROM dist) t WHERE rn = 1),
-           |cents0 AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |asim AS (SELECT corp.vec_id, cents2.cell,
-           |list_cosine_similarity(corp.l, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM asim) t WHERE rn = 1),
-           |qsim AS (SELECT qs.vec_id, cents2.cell,
-           |list_cosine_similarity(qs.l, cents2.c) AS sim FROM qs CROSS JOIN cents2),
-           |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM qsim) t WHERE rn <= 2),
-           |cand AS (SELECT p.query_id, a.vec_id AS match_id
-           |FROM probes p JOIN assigned a ON a.cell = p.cell),
-           |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (q.l[co.mi*16 + i] - cb.w[i]) * (q.l[co.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-           |JOIN codes co ON co.vec_id = cand.match_id
-           |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-           |adc AS (SELECT query_id, match_id,
-           |list_sum(list(dd ORDER BY mi)) AS adc
-           |FROM sub GROUP BY query_id, match_id),
-           |short AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-           |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-           |FROM adc) t WHERE rk <= 80
-           |AND (SELECT count(*) FROM corp) >= 8),
-           |ap AS (SELECT query_id, match_id FROM (SELECT sh.query_id, sh.match_id,
-           |row_number() OVER (PARTITION BY sh.query_id ORDER BY
-           |list_cosine_similarity(q.l, c.l) DESC, sh.match_id) AS rk
-           |FROM short sh JOIN qs q ON q.vec_id = sh.query_id
-           |JOIN corp c ON c.vec_id = sh.match_id) t WHERE rk <= 10),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-           |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-           |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id)
-           |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-           |ORDER BY query_id""".stripMargin.replace("\n", " ")
-      }),
+        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs, refine = Refine,
+          kmeansIters = LloydIters)),
+      Some(AnnSql.audit(AnnSql.cells(LloydIters),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = false),
+        AnnSql.adc(residual = false), AnnSql.rerank("adc")))),
 
     // The COMPLETE PQ serving stack (r15): Lloyd-2-refined coarse
     // quantizer + RESIDUAL codes + ADC shortlist + exact re-rank — every
@@ -3423,88 +3304,12 @@ object Extensions {
     // curve). Oracle composes all three proven replays.
     Q("q_pq_full_stack",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, pqM = 4, pqKs = 8, refine = 8,
-          kmeansIters = 2, residual = true)),
-      Some {
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.l, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id >= 5),
-           |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id < 5),
-           |cents0 AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |asim AS (SELECT corp.vec_id, cents2.cell,
-           |list_cosine_similarity(corp.l, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM asim) t WHERE rn = 1),
-           |resi AS (SELECT corp.vec_id, a.cell,
-           |list_transform(range(1, 65), i -> corp.l[i] - ct.c[i]) AS rl
-           |FROM corp JOIN assigned a ON a.vec_id = corp.vec_id
-           |JOIN cents2 ct ON ct.cell = a.cell),
-           |seeds AS (SELECT rl, row_number() OVER (ORDER BY vec_id) - 1 AS c
-           |FROM (SELECT vec_id, rl FROM resi ORDER BY vec_id LIMIT 8) s),
-           |ms AS (SELECT unnest(range(0, 4)) AS mi),
-           |cb AS (SELECT ms.mi, seeds.c,
-           |list_slice(seeds.rl, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-           |FROM seeds CROSS JOIN ms),
-           |dist AS (SELECT resi.vec_id, cb.mi, cb.c,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (resi.rl[cb.mi*16 + i] - cb.w[i]) * (resi.rl[cb.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM resi CROSS JOIN cb),
-           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-           |FROM dist) t WHERE rn = 1),
-           |qsim AS (SELECT qs.vec_id, cents2.cell,
-           |list_cosine_similarity(qs.l, cents2.c) AS sim FROM qs CROSS JOIN cents2),
-           |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM qsim) t WHERE rn <= 2),
-           |cand AS (SELECT p.query_id, a.vec_id AS match_id, p.cell
-           |FROM probes p JOIN assigned a ON a.cell = p.cell),
-           |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-           |list_sum(list_transform(range(1, 17),
-           |i -> ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]) * ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]))) AS dd
-           |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-           |JOIN cents2 ct ON ct.cell = cand.cell
-           |JOIN codes co ON co.vec_id = cand.match_id
-           |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-           |adc AS (SELECT query_id, match_id,
-           |list_sum(list(dd ORDER BY mi)) AS adc
-           |FROM sub GROUP BY query_id, match_id),
-           |short AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-           |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-           |FROM adc) t WHERE rk <= 80
-           |AND (SELECT count(*) FROM corp) >= 8),
-           |ap AS (SELECT query_id, match_id FROM (SELECT sh.query_id, sh.match_id,
-           |row_number() OVER (PARTITION BY sh.query_id ORDER BY
-           |list_cosine_similarity(q.l, c.l) DESC, sh.match_id) AS rk
-           |FROM short sh JOIN qs q ON q.vec_id = sh.query_id
-           |JOIN corp c ON c.vec_id = sh.match_id) t WHERE rk <= 10),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-           |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-           |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id)
-           |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-           |ORDER BY query_id""".stripMargin.replace("\n", " ")
-      }),
+        Similarity.ivfPqRerankJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs, refine = Refine,
+          kmeansIters = LloydIters, residual = true)),
+      Some(AnnSql.audit(AnnSql.cells(LloydIters),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = true),
+        AnnSql.adc(residual = true), AnnSql.rerank("adc")))),
 
     // The nProbe dial of the FULL PQ serving stack, priced as a curve
     // (r15): X155 curves the exact-in-cell tier, but the tier that
@@ -3523,100 +3328,18 @@ object Extensions {
     // explode.
     Q("q_pq_probe_curve",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfPqRerankCurve(emb.filter(col("vec_id") < 5),
-          emb.filter(col("vec_id") >= 5), "vec_id", "embedding", k = 10,
-          m = 8, pqM = 4, pqKs = 8, refine = 8, kmeansIters = 2,
-          residual = true)
+        val (probes, corpus) = annSplit(s, d)
+        Similarity.ivfPqRerankCurve(probes, corpus, "vec_id", "embedding",
+          k = AuditK, m = Cells, pqM = PqM, pqKs = PqKs, refine = Refine,
+          kmeansIters = LloydIters, residual = true)
       },
-      Some {
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.l, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id >= 5),
-           |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id < 5),
-           |cents0 AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |asim AS (SELECT corp.vec_id, cents2.cell,
-           |list_cosine_similarity(corp.l, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM asim) t WHERE rn = 1),
-           |resi AS (SELECT corp.vec_id, a.cell,
-           |list_transform(range(1, 65), i -> corp.l[i] - ct.c[i]) AS rl
-           |FROM corp JOIN assigned a ON a.vec_id = corp.vec_id
-           |JOIN cents2 ct ON ct.cell = a.cell),
-           |seeds AS (SELECT rl, row_number() OVER (ORDER BY vec_id) - 1 AS c
-           |FROM (SELECT vec_id, rl FROM resi ORDER BY vec_id LIMIT 8) s),
-           |ms AS (SELECT unnest(range(0, 4)) AS mi),
-           |cb AS (SELECT ms.mi, seeds.c,
-           |list_slice(seeds.rl, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-           |FROM seeds CROSS JOIN ms),
-           |dist AS (SELECT resi.vec_id, cb.mi, cb.c,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (resi.rl[cb.mi*16 + i] - cb.w[i]) * (resi.rl[cb.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM resi CROSS JOIN cb),
-           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-           |FROM dist) t WHERE rn = 1),
-           |qranks AS (SELECT vec_id AS query_id, cell, cellrank FROM
-           |(SELECT qs.vec_id, cents2.cell,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, cents2.c) DESC, cents2.cell DESC) AS cellrank
-           |FROM qs CROSS JOIN cents2) t),
-           |cand AS (SELECT p.query_id, a.vec_id AS match_id, p.cell, p.cellrank
-           |FROM qranks p JOIN assigned a ON a.cell = p.cell),
-           |sub AS (SELECT cand.query_id, cand.match_id, cand.cellrank, co.mi,
-           |list_sum(list_transform(range(1, 17),
-           |i -> ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]) * ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]))) AS dd
-           |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-           |JOIN cents2 ct ON ct.cell = cand.cell
-           |JOIN codes co ON co.vec_id = cand.match_id
-           |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-           |adc AS (SELECT query_id, match_id, cellrank,
-           |list_sum(list(dd ORDER BY mi)) AS adc
-           |FROM sub GROUP BY query_id, match_id, cellrank),
-           |expl AS (SELECT a.query_id, a.match_id, a.adc, p.i AS n_probe
-           |FROM adc a JOIN range(1, 9) p(i) ON a.cellrank <= p.i),
-           |short AS (SELECT query_id, match_id, n_probe FROM
-           |(SELECT query_id, match_id, n_probe,
-           |row_number() OVER (PARTITION BY query_id, n_probe ORDER BY adc, match_id) AS rk
-           |FROM expl) t WHERE rk <= 80
-           |AND (SELECT count(*) FROM corp) >= 8),
-           |ap AS (SELECT query_id, match_id, n_probe FROM
-           |(SELECT sh.query_id, sh.match_id, sh.n_probe,
-           |row_number() OVER (PARTITION BY sh.query_id, sh.n_probe ORDER BY
-           |list_cosine_similarity(q.l, c.l) DESC, sh.match_id) AS rk
-           |FROM short sh JOIN qs q ON q.vec_id = sh.query_id
-           |JOIN corp c ON c.vec_id = sh.match_id) t WHERE rk <= 10),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-           |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, ap.n_probe, count(*) AS n_hits
-           |FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id, ap.n_probe),
-           |grid AS (SELECT q.query_id, p.i AS n_probe
-           |FROM (SELECT DISTINCT query_id FROM ex) q CROSS JOIN range(1, 9) p(i))
-           |SELECT CAST(g.n_probe AS INTEGER) AS n_probe,
-           |CAST(count(*) AS BIGINT) AS n_queries,
-           |round(CAST(sum(coalesce(h.n_hits, 0)) AS DOUBLE) /
-           |CAST(count(*) * 10 AS DOUBLE), 4) AS mean_recall_at_10
-           |FROM grid g LEFT JOIN hits h
-           |ON h.query_id = g.query_id AND h.n_probe = g.n_probe
-           |GROUP BY g.n_probe ORDER BY n_probe""".stripMargin.replace("\n", " ")
-      }),
+      Some(AnnSql.curve("n_probe", 1 to Cells)(
+        AnnSql.cells(LloydIters), AnnSql.probe(Cells), AnnSql.codes(residual = true),
+        AnnSql.adc(residual = true),
+        """expl AS (SELECT a.query_id, a.match_id, a.adc, dial.n_probe FROM adc a
+          |JOIN cand c ON c.query_id = a.query_id AND c.match_id = a.match_id
+          |JOIN dial ON c.cellrank <= dial.n_probe)""".stripMargin,
+        AnnSql.rerank("expl", "n_probe")))),
 
     // The refine dial of the full PQ stack, priced as a curve (r15) —
     // the companion of q_pq_probe_curve on the OTHER budget: X167 shows
@@ -3631,101 +3354,19 @@ object Extensions {
     // (nProbe, refine) plane around the shipped (2, 8) point.
     Q("q_pq_refine_curve",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfPqRefineCurve(emb.filter(col("vec_id") < 5),
-          emb.filter(col("vec_id") >= 5), "vec_id", "embedding", k = 10,
-          refines = Seq(1, 2, 4, 8, 12), m = 8, nProbe = 2,
-          pqM = 4, pqKs = 8, kmeansIters = 2, residual = true)
+        val (probes, corpus) = annSplit(s, d)
+        Similarity.ivfPqRefineCurve(probes, corpus, "vec_id", "embedding",
+          k = AuditK, refines = RefineTiers, m = Cells, nProbe = NProbe,
+          pqM = PqM, pqKs = PqKs, kmeansIters = LloydIters, residual = true)
       },
-      Some {
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.l, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id >= 5),
-           |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id < 5),
-           |cents0 AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |asim AS (SELECT corp.vec_id, cents2.cell,
-           |list_cosine_similarity(corp.l, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM asim) t WHERE rn = 1),
-           |resi AS (SELECT corp.vec_id, a.cell,
-           |list_transform(range(1, 65), i -> corp.l[i] - ct.c[i]) AS rl
-           |FROM corp JOIN assigned a ON a.vec_id = corp.vec_id
-           |JOIN cents2 ct ON ct.cell = a.cell),
-           |seeds AS (SELECT rl, row_number() OVER (ORDER BY vec_id) - 1 AS c
-           |FROM (SELECT vec_id, rl FROM resi ORDER BY vec_id LIMIT 8) s),
-           |ms AS (SELECT unnest(range(0, 4)) AS mi),
-           |cb AS (SELECT ms.mi, seeds.c,
-           |list_slice(seeds.rl, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-           |FROM seeds CROSS JOIN ms),
-           |dist AS (SELECT resi.vec_id, cb.mi, cb.c,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (resi.rl[cb.mi*16 + i] - cb.w[i]) * (resi.rl[cb.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM resi CROSS JOIN cb),
-           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-           |FROM dist) t WHERE rn = 1),
-           |qsim AS (SELECT qs.vec_id, cents2.cell,
-           |list_cosine_similarity(qs.l, cents2.c) AS sim FROM qs CROSS JOIN cents2),
-           |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM qsim) t WHERE rn <= 2),
-           |cand AS (SELECT p.query_id, a.vec_id AS match_id, p.cell
-           |FROM probes p JOIN assigned a ON a.cell = p.cell),
-           |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-           |list_sum(list_transform(range(1, 17),
-           |i -> ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]) * ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]))) AS dd
-           |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-           |JOIN cents2 ct ON ct.cell = cand.cell
-           |JOIN codes co ON co.vec_id = cand.match_id
-           |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-           |adc AS (SELECT query_id, match_id,
-           |list_sum(list(dd ORDER BY mi)) AS adc
-           |FROM sub GROUP BY query_id, match_id),
-           |shortr AS (SELECT query_id, match_id, adc,
-           |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-           |FROM adc),
-           |expl AS (SELECT s.query_id, s.match_id, r.r AS refine
-           |FROM shortr s JOIN (SELECT unnest([1, 2, 4, 8, 12]) AS r) r
-           |ON s.rk <= r.r * 10
-           |AND (SELECT count(*) FROM corp) >= 8),
-           |ap AS (SELECT query_id, match_id, refine FROM
-           |(SELECT e.query_id, e.match_id, e.refine,
-           |row_number() OVER (PARTITION BY e.query_id, e.refine ORDER BY
-           |list_cosine_similarity(q.l, c.l) DESC, e.match_id) AS rk
-           |FROM expl e JOIN qs q ON q.vec_id = e.query_id
-           |JOIN corp c ON c.vec_id = e.match_id) t WHERE rk <= 10),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-           |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, ap.refine, count(*) AS n_hits
-           |FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id, ap.refine),
-           |grid AS (SELECT q.query_id, r.r AS refine
-           |FROM (SELECT DISTINCT query_id FROM ex) q
-           |CROSS JOIN (SELECT unnest([1, 2, 4, 8, 12]) AS r) r)
-           |SELECT CAST(g.refine AS INTEGER) AS refine,
-           |CAST(count(*) AS BIGINT) AS n_queries,
-           |round(CAST(sum(coalesce(h.n_hits, 0)) AS DOUBLE) /
-           |CAST(count(*) * 10 AS DOUBLE), 4) AS mean_recall_at_10
-           |FROM grid g LEFT JOIN hits h
-           |ON h.query_id = g.query_id AND h.refine = g.refine
-           |GROUP BY g.refine ORDER BY refine""".stripMargin.replace("\n", " ")
-      }),
+      Some(AnnSql.curve("refine", RefineTiers)(
+        AnnSql.cells(LloydIters), AnnSql.probe(NProbe), AnnSql.codes(residual = true),
+        AnnSql.adc(residual = true),
+        AnnSql.top("shortr", "adc", "adc", RefineTiers.max * AuditK),
+        s"""expl AS (SELECT s.query_id, s.match_id, dial.refine FROM shortr s
+           |JOIN dial ON s.rk <= dial.refine * $AuditK)""".stripMargin,
+        AnnSql.top("ap", "expl JOIN pairs USING (query_id, match_id)", "sim", AuditK,
+          "refine")))),
 
     // Residual PQ encoding's recall audit (r15) — the standard IVF-PQ
     // construction quantizes the RESIDUAL v − centroid(cell(v)) instead
@@ -3743,83 +3384,12 @@ object Extensions {
     // residual space, and the per-probed-cell query residualization.
     Q("q_pq_residual_audit",
       (s, d) => recallAudit(s, d, (probes, corpus) =>
-        Similarity.ivfPqJoin(probes, corpus, "vec_id", "embedding", 10,
-          m = 8, nProbe = 2, pqM = 4, pqKs = 8, kmeansIters = 2,
-          residual = true)),
-      Some {
-        def lloydRound(prev: String, next: String, a: String, m: String) =
-          s"""$a AS (SELECT vec_id, l, cell FROM (SELECT corp.vec_id, corp.l, $prev.cell,
-             |row_number() OVER (PARTITION BY corp.vec_id ORDER BY
-             |list_cosine_similarity(corp.l, $prev.c) DESC, $prev.cell DESC) AS rn
-             |FROM corp CROSS JOIN $prev) t WHERE rn = 1),
-             |$m AS (SELECT cell, list(x ORDER BY i) AS c FROM
-             |(SELECT cell, t.i AS i, sum(l[t.i]) / count(*) AS x
-             |FROM $a, range(1, 65) t(i) GROUP BY cell, t.i) s GROUP BY cell),
-             |$next AS (SELECT $prev.cell, coalesce($m.c, $prev.c) AS c
-             |FROM $prev LEFT JOIN $m ON $m.cell = $prev.cell)""".stripMargin
-        s"""WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id >= 5),
-           |qs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l
-           |FROM embeddings WHERE vec_id < 5),
-           |cents0 AS (SELECT vec_id AS cell, l AS c FROM corp ORDER BY vec_id LIMIT 8),
-           |${lloydRound("cents0", "cents1", "a0", "m0")},
-           |${lloydRound("cents1", "cents2", "a1", "m1")},
-           |asim AS (SELECT corp.vec_id, cents2.cell,
-           |list_cosine_similarity(corp.l, cents2.c) AS sim FROM corp CROSS JOIN cents2),
-           |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM asim) t WHERE rn = 1),
-           |resi AS (SELECT corp.vec_id, a.cell,
-           |list_transform(range(1, 65), i -> corp.l[i] - ct.c[i]) AS rl
-           |FROM corp JOIN assigned a ON a.vec_id = corp.vec_id
-           |JOIN cents2 ct ON ct.cell = a.cell),
-           |seeds AS (SELECT rl, row_number() OVER (ORDER BY vec_id) - 1 AS c
-           |FROM (SELECT vec_id, rl FROM resi ORDER BY vec_id LIMIT 8) s),
-           |ms AS (SELECT unnest(range(0, 4)) AS mi),
-           |cb AS (SELECT ms.mi, seeds.c,
-           |list_slice(seeds.rl, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-           |FROM seeds CROSS JOIN ms),
-           |dist AS (SELECT resi.vec_id, cb.mi, cb.c,
-           |list_sum(list_transform(range(1, 17),
-           |i -> (resi.rl[cb.mi*16 + i] - cb.w[i]) * (resi.rl[cb.mi*16 + i] - cb.w[i]))) AS dd
-           |FROM resi CROSS JOIN cb),
-           |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-           |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-           |FROM dist) t WHERE rn = 1),
-           |qsim AS (SELECT qs.vec_id, cents2.cell,
-           |list_cosine_similarity(qs.l, cents2.c) AS sim FROM qs CROSS JOIN cents2),
-           |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-           |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-           |FROM qsim) t WHERE rn <= 2),
-           |cand AS (SELECT p.query_id, a.vec_id AS match_id, p.cell
-           |FROM probes p JOIN assigned a ON a.cell = p.cell),
-           |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-           |list_sum(list_transform(range(1, 17),
-           |i -> ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]) * ((q.l[co.mi*16 + i] - ct.c[co.mi*16 + i]) - cb.w[i]))) AS dd
-           |FROM cand JOIN qs q ON q.vec_id = cand.query_id
-           |JOIN cents2 ct ON ct.cell = cand.cell
-           |JOIN codes co ON co.vec_id = cand.match_id
-           |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-           |adc AS (SELECT query_id, match_id,
-           |list_sum(list(dd ORDER BY mi)) AS adc
-           |FROM sub GROUP BY query_id, match_id),
-           |ap AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-           |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rk
-           |FROM adc) t WHERE rk <= 10
-           |AND (SELECT count(*) FROM corp) >= 8),
-           |ex AS (SELECT query_id, match_id FROM (
-           |SELECT qs.vec_id AS query_id, corp.vec_id AS match_id,
-           |row_number() OVER (PARTITION BY qs.vec_id ORDER BY
-           |list_cosine_similarity(qs.l, corp.l) DESC, corp.vec_id) AS rk
-           |FROM qs CROSS JOIN corp) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, count(*) AS n_hits FROM ex JOIN ap
-           |ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id)
-           |SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-           |round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10.0, 4) AS recall_at_10
-           |FROM (SELECT DISTINCT query_id FROM ex) q LEFT JOIN hits h USING (query_id)
-           |ORDER BY query_id""".stripMargin.replace("\n", " ")
-      }),
+        Similarity.ivfPqJoin(probes, corpus, "vec_id", "embedding", AuditK,
+          m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs,
+          kmeansIters = LloydIters, residual = true)),
+      Some(AnnSql.audit(AnnSql.cells(LloydIters),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = true),
+        AnnSql.adc(residual = true), AnnSql.top("ap", "adc", "adc", AuditK)))),
 
     // The LSH multi-probe RADIUS dial priced as a curve (r14) —
     // q_ivf_probe_curve's pattern on the third dial: mean recall@10 of
@@ -3832,55 +3402,20 @@ object Extensions {
     // engine ships is priced by a committed curve, not a single point.
     Q("q_lsh_radius_curve",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val probes = emb.filter(col("vec_id") < 5)
-        val corpus = emb.filter(col("vec_id") >= 5)
+        val (probes, corpus) = annSplit(s, d)
         // empty-corpus guard: the q_ann_recall_audit note (and dimOf
         // cannot derive the plane dimension from an empty corpus)
         if (corpus.select(col("vec_id")).take(1).isEmpty)
           probes.select(lit(0).as("radius"), lit(0L).as("n_queries"),
-            lit(0.0).as("mean_recall_at_10")).limit(0)
+            lit(0.0).as(s"mean_recall_at_$AuditK")).limit(0)
         else
           Similarity.lshRadiusCurve(probes, corpus, "vec_id", "embedding",
-            k = 10, nPlanes = 4)
+            k = AuditK, nPlanes = LshPlanes)
       },
-      Some {
-        val planes = Similarity.hyperplanes(nPlanes = 4, dim = 64)
-        def arr(p: Array[Double]) = p.map(_.toString).mkString("[", ",", "]")
-        def bucketOf(v: String) = planes.zipWithIndex.map { case (p, i) =>
-          s"(CASE WHEN list_dot_product($v, ${arr(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""WITH p AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v,
-           |${bucketOf("CAST(embedding AS DOUBLE[])")} AS bucket
-           |FROM embeddings WHERE vec_id < 5),
-           |c AS (SELECT vec_id AS match_id, CAST(embedding AS DOUBLE[]) AS v,
-           |${bucketOf("CAST(embedding AS DOUBLE[])")} AS bucket
-           |FROM embeddings WHERE vec_id >= 5),
-           |pairs AS (SELECT p.query_id, c.match_id,
-           |list_cosine_similarity(p.v, c.v) AS sim,
-           |bit_count(xor(p.bucket, c.bucket)) AS dist FROM p CROSS JOIN c),
-           |ex AS (SELECT query_id, match_id FROM (SELECT query_id, match_id,
-           |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, match_id) AS rk
-           |FROM pairs) t WHERE rk <= 10),
-           |expl AS (SELECT query_id, match_id, sim, r.i AS radius
-           |FROM pairs JOIN range(0, 5) r(i) ON pairs.dist <= r.i),
-           |ap AS (SELECT query_id, radius, match_id FROM (
-           |SELECT query_id, radius, match_id,
-           |row_number() OVER (PARTITION BY query_id, radius
-           |ORDER BY sim DESC, match_id) AS rk FROM expl) t WHERE rk <= 10),
-           |hits AS (SELECT ex.query_id, ap.radius, count(*) AS n_hits
-           |FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.match_id = ex.match_id
-           |GROUP BY ex.query_id, ap.radius),
-           |grid AS (SELECT q.query_id, r.i AS radius
-           |FROM (SELECT DISTINCT query_id FROM ex) q CROSS JOIN range(0, 5) r(i))
-           |SELECT CAST(g.radius AS INTEGER) AS radius,
-           |CAST(count(*) AS BIGINT) AS n_queries,
-           |round(CAST(sum(coalesce(h.n_hits, 0)) AS DOUBLE) /
-           |CAST(count(*) * 10 AS DOUBLE), 4) AS mean_recall_at_10
-           |FROM grid g LEFT JOIN hits h
-           |ON h.query_id = g.query_id AND h.radius = g.radius
-           |GROUP BY g.radius ORDER BY radius""".stripMargin.replace("\n", " ")
-      }),
+      Some(AnnSql.curve("radius", 0 to LshPlanes)(
+        AnnSql.Lsh,
+        "expl AS (SELECT lsh.*, dial.radius FROM lsh JOIN dial ON lsh.dist <= dial.radius)",
+        AnnSql.top("ap", "expl", "sim", AuditK, "radius")))),
 
     // The LSH geometry PICKER, replayed relationally (r15): X147/X159/
     // X160 price band stats, the jaccard dial, and the radius dial, but
@@ -3980,36 +3515,16 @@ object Extensions {
     // probe set, and the final rank from scratch.
     Q("q_ivf_join",
       (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfJoin(emb.filter(col("vec_id") < 5),
-            emb.filter(col("vec_id") >= 5), "vec_id", "embedding",
-            k = 3, m = 8, nProbe = 2)
+        val (probes, corpus) = annSplit(s, d)
+        Similarity.ivfJoin(probes, corpus, "vec_id", "embedding",
+            k = IvfJoinK, m = Cells, nProbe = NProbe)
           .select(col("query_id"), col("match_id"), round(col("sim"), 6).as("sim"))
           .orderBy("query_id", "match_id")
       },
-      Some("""WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS c
-             |FROM embeddings WHERE vec_id >= 5 ORDER BY vec_id LIMIT 8),
-             |qsims AS (SELECT q.vec_id AS query_id, cents.cell, q.embedding,
-             |list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), cents.c) AS sim
-             |FROM embeddings q CROSS JOIN cents WHERE q.vec_id < 5),
-             |probes AS (SELECT query_id, cell, embedding FROM (SELECT query_id, cell, embedding,
-             |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM qsims) t WHERE rn <= 2),
-             |csims AS (SELECT e.vec_id, cents.cell, e.embedding,
-             |list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cents.c) AS sim
-             |FROM embeddings e CROSS JOIN cents WHERE e.vec_id >= 5),
-             |assigned AS (SELECT vec_id, cell, embedding FROM (SELECT vec_id, cell, embedding,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM csims) t WHERE rn = 1),
-             |ranked AS (SELECT p.query_id, a.vec_id AS match_id,
-             |list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
-             |CAST(a.embedding AS DOUBLE[])) AS sim,
-             |row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
-             |CAST(a.embedding AS DOUBLE[])) DESC, a.vec_id) AS rk
-             |FROM probes p JOIN assigned a ON a.cell = p.cell)
-             |SELECT query_id, match_id, round(sim, 6) AS sim FROM ranked
-             |WHERE rk <= 3 ORDER BY query_id, match_id""".stripMargin.replace("\n", " "))),
+      Some(AnnSql.answer(AnnSql.split(), AnnSql.cosine("pairs", "corp"),
+        AnnSql.cells(0), AnnSql.probe(NProbe), AnnSql.InCell,
+        AnnSql.top("ap", "ivfc", "sim", IvfJoinK))(
+        "SELECT query_id, match_id, round(sim, 6) AS sim FROM ap ORDER BY query_id, match_id"))),
 
     // Sign-LSH ANN probe. Fully oracle-checked: the hyperplanes are
     // deterministic md5 math (Similarity.planeComponent), so the SQL
@@ -4940,55 +4455,32 @@ object Extensions {
         // composed-flow guard: a corpus smaller than the ks=8 codebook
         // (degenerate tenant) answers an EMPTY frame with the declared
         // schema — the dummy codebooks below only shape the limit(0) plan
-        val cbOpt = Similarity.pqCodebooksOpt(emb, "vec_id", "v", m = 4, ks = 8)
+        val cbOpt = Similarity.pqCodebooksOpt(emb, "vec_id", "v", m = PqM, ks = PqKs)
         val cbLit = Similarity.pqCodebooksLit(
-          cbOpt.getOrElse(Array.fill(4, 8, 16)(0.0)))
+          cbOpt.getOrElse(Array.fill(PqM, PqKs, SubDim)(0.0)))
         val codes = emb.select(col("vec_id").as("match_id"),
-          graft.functions.PqEncode(col("v"), cbLit, ks = 8).as("codes"))
-        val probes = emb.filter(col("vec_id") < 5)
+          graft.functions.PqEncode(col("v"), cbLit, ks = PqKs).as("codes"))
+        val probes = emb.filter(col("vec_id") < ProbeIds)
           .select(col("vec_id").as("probe_id"), col("v").as("q"))
         val cands = broadcast(probes).crossJoin(codes)
           .filter(col("probe_id") =!= col("match_id"))
           .select(col("probe_id"), col("match_id"),
-            graft.functions.PqAdc(col("q"), col("codes"), cbLit, ks = 8).as("adc"))
+            graft.functions.PqAdc(col("q"), col("codes"), cbLit, ks = PqKs).as("adc"))
         val w = Window.partitionBy(col("probe_id"))
           .orderBy(col("adc"), col("match_id"))
         val out = cands.withColumn("rank", row_number().over(w).cast(LongType))
-          .filter(col("rank") <= 5)
+          .filter(col("rank") <= PqTopK)
           .select(col("probe_id"), col("rank"), col("match_id"),
             round(col("adc"), 4).as("adc"))
           .orderBy("probe_id", "rank")
         if (cbOpt.isDefined) out else out.limit(0)
       },
-      Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l FROM embeddings),
-             |seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
-             |FROM (SELECT vec_id, l FROM v ORDER BY vec_id LIMIT 8) s),
-             |ms AS (SELECT unnest(range(0, 4)) AS mi),
-             |cb AS (SELECT ms.mi, seeds.c,
-             |list_slice(seeds.l, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-             |FROM seeds CROSS JOIN ms),
-             |dist AS (SELECT v.vec_id, cb.mi, cb.c,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (v.l[cb.mi*16 + i] - cb.w[i]) * (v.l[cb.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM v CROSS JOIN cb),
-             |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-             |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-             |FROM dist) t WHERE rn = 1),
-             |sub AS (SELECT p.vec_id AS probe_id, co.vec_id AS match_id, co.mi,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (p.l[co.mi*16 + i] - cb.w[i]) * (p.l[co.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM (SELECT * FROM v WHERE vec_id < 5) p
-             |JOIN codes co ON co.vec_id <> p.vec_id
-             |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-             |adc AS (SELECT probe_id, match_id,
-             |list_sum(list(dd ORDER BY mi)) AS adc
-             |FROM sub GROUP BY probe_id, match_id),
-             |r AS (SELECT probe_id, match_id, adc,
-             |row_number() OVER (PARTITION BY probe_id ORDER BY adc, match_id) AS rank
-             |FROM adc)
-             |SELECT probe_id, CAST(rank AS BIGINT) AS rank, match_id,
-             |round(adc, 4) AS adc FROM r WHERE rank <= 5
-             |ORDER BY probe_id, rank""".stripMargin.replace("\n", " "))),
+      Some(AnnSql.answer(AnnSql.split(whole = true), AnnSql.codes(residual = false),
+        """cand AS (SELECT qs.vec_id AS query_id, corp.vec_id AS match_id
+          |FROM qs JOIN corp ON corp.vec_id <> qs.vec_id)""".stripMargin,
+        AnnSql.adc(residual = false), AnnSql.top("ap", "adc", "adc", PqTopK))(
+        """SELECT query_id AS probe_id, CAST(rk AS BIGINT) AS rank, match_id,
+          |round(adc, 4) AS adc FROM ap ORDER BY probe_id, rank""".stripMargin))),
 
     // The composed IVF-PQ batch join, oracle-checked end to end: probes
     // pick their nProbe nearest coarse cells (argsort EXPRESSION), cell
@@ -5003,9 +4495,9 @@ object Extensions {
     Q("q_ivf_pq",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val probes = emb.filter(col("vec_id") < 5)
+        val probes = emb.filter(col("vec_id") < ProbeIds)
         val nn = Similarity.ivfPqJoin(probes, emb, "vec_id", "embedding",
-          k = 5, m = 8, nProbe = 2, pqM = 4, pqKs = 8)
+          k = PqTopK, m = Cells, nProbe = NProbe, pqM = PqM, pqKs = PqKs)
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("sim").desc, col("match_id"))
         nn.withColumn("rank", row_number().over(w).cast(LongType))
@@ -5013,46 +4505,11 @@ object Extensions {
             round(-col("sim"), 4).as("adc"))
           .orderBy("query_id", "rank")
       },
-      Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS l FROM embeddings),
-             |seeds AS (SELECT l, row_number() OVER (ORDER BY vec_id) - 1 AS c
-             |FROM (SELECT vec_id, l FROM v ORDER BY vec_id LIMIT 8) s),
-             |ms AS (SELECT unnest(range(0, 4)) AS mi),
-             |cb AS (SELECT ms.mi, seeds.c,
-             |list_slice(seeds.l, ms.mi*16 + 1, ms.mi*16 + 16) AS w
-             |FROM seeds CROSS JOIN ms),
-             |dist AS (SELECT v.vec_id, cb.mi, cb.c,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (v.l[cb.mi*16 + i] - cb.w[i]) * (v.l[cb.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM v CROSS JOIN cb),
-             |codes AS (SELECT vec_id, mi, c FROM (SELECT vec_id, mi, c,
-             |row_number() OVER (PARTITION BY vec_id, mi ORDER BY dd, c) AS rn
-             |FROM dist) t WHERE rn = 1),
-             |cents AS (SELECT vec_id AS cell, l AS cl FROM v ORDER BY vec_id LIMIT 8),
-             |asim AS (SELECT v.vec_id, cents.cell,
-             |list_cosine_similarity(v.l, cents.cl) AS sim FROM v CROSS JOIN cents),
-             |assigned AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM asim) t WHERE rn = 1),
-             |probes AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell,
-             |row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) AS rn
-             |FROM asim WHERE vec_id < 5) t WHERE rn <= 2),
-             |cand AS (SELECT p.query_id, a.vec_id AS match_id
-             |FROM probes p JOIN assigned a ON a.cell = p.cell),
-             |sub AS (SELECT cand.query_id, cand.match_id, co.mi,
-             |list_sum(list_transform(range(1, 17),
-             |i -> (q.l[co.mi*16 + i] - cb.w[i]) * (q.l[co.mi*16 + i] - cb.w[i]))) AS dd
-             |FROM cand JOIN v q ON q.vec_id = cand.query_id
-             |JOIN codes co ON co.vec_id = cand.match_id
-             |JOIN cb ON cb.mi = co.mi AND cb.c = co.c),
-             |adc AS (SELECT query_id, match_id,
-             |list_sum(list(dd ORDER BY mi)) AS adc
-             |FROM sub GROUP BY query_id, match_id),
-             |r AS (SELECT query_id, match_id, adc,
-             |row_number() OVER (PARTITION BY query_id ORDER BY adc, match_id) AS rank
-             |FROM adc)
-             |SELECT query_id, CAST(rank AS BIGINT) AS rank, match_id,
-             |round(adc, 4) AS adc FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin.replace("\n", " "))),
+      Some(AnnSql.answer(AnnSql.split(whole = true), AnnSql.cells(0),
+        AnnSql.probe(NProbe), AnnSql.codes(residual = false),
+        AnnSql.adc(residual = false), AnnSql.top("ap", "adc", "adc", PqTopK))(
+        """SELECT query_id, CAST(rk AS BIGINT) AS rank, match_id,
+          |round(adc, 4) AS adc FROM ap ORDER BY query_id, rank""".stripMargin))),
 
     // Count-min-sketch heavy hitters (Cormode & Muthukrishnan 2005) over
     // the token stream: the d=4 × w=64 sketch is RELATIONAL (cells are
@@ -5458,17 +4915,7 @@ object Extensions {
             round(col("overlap_ratio"), 5).as("overlap_ratio"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH $ShinglesCte,
-             |own AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles
-             |FROM sh WHERE id % 50 <> 0 GROUP BY id),
-             |b AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
-             |hits AS (SELECT id, CAST(count(*) AS BIGINT) AS n_overlap FROM sh
-             |WHERE id % 50 <> 0 AND shingle IN (SELECT shingle FROM b) GROUP BY id)
-             |SELECT own.id AS doc_id, n_shingles,
-             |CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-             |round(CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles, 5) AS overlap_ratio
-             |FROM own LEFT JOIN hits ON own.id = hits.id
-             |ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+      Some(DecontaminateSql)),
 
     // ORC interchange round-trip (Spark-native columnar format besides
     // parquet): write the documents profile to ORC, read it back, and
@@ -5534,15 +4981,7 @@ object Extensions {
         .select(col("id"), col("n_bigrams"),
           round(col("mean_log2p"), 3).as("mean_log2p"))
         .orderBy("id"),
-      Some("""WITH w AS (SELECT doc_id AS id, string_split(text, ' ') AS w FROM documents),
-             |bg AS (SELECT id, w[i] || ' ' || w[i+1] AS bg FROM w,
-             |LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-             |bgc AS (SELECT bg, count(*) AS cb FROM bg GROUP BY bg),
-             |pc AS (SELECT string_split(bg, ' ')[1] AS pref, sum(cb) AS cp FROM bgc GROUP BY 1)
-             |SELECT id, CAST(count(*) AS BIGINT) AS n_bigrams,
-             |round(avg(log2(CAST(cb AS DOUBLE) / CAST(cp AS DOUBLE))), 3) AS mean_log2p
-             |FROM bg JOIN bgc USING (bg) JOIN pc ON string_split(bg, ' ')[1] = pref
-             |GROUP BY id ORDER BY id""".stripMargin.replace("\n", " "))),
+      Some(BigramLmSql)),
 
     // q_bigram_lm's 8-byte-BIGINT-key scale variant (the hashed-gram
     // shape of q_ngram_spans_hashed, applied to the LM family's worst
@@ -5557,15 +4996,7 @@ object Extensions {
         .select(col("id"), col("n_bigrams"),
           round(col("mean_log2p"), 3).as("mean_log2p"))
         .orderBy("id"),
-      Some("""WITH w AS (SELECT doc_id AS id, string_split(text, ' ') AS w FROM documents),
-             |bg AS (SELECT id, w[i] || ' ' || w[i+1] AS bg FROM w,
-             |LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-             |bgc AS (SELECT bg, count(*) AS cb FROM bg GROUP BY bg),
-             |pc AS (SELECT string_split(bg, ' ')[1] AS pref, sum(cb) AS cp FROM bgc GROUP BY 1)
-             |SELECT id, CAST(count(*) AS BIGINT) AS n_bigrams,
-             |round(avg(log2(CAST(cb AS DOUBLE) / CAST(cp AS DOUBLE))), 3) AS mean_log2p
-             |FROM bg JOIN bgc USING (bg) JOIN pc ON string_split(bg, ' ')[1] = pref
-             |GROUP BY id ORDER BY id""".stripMargin.replace("\n", " "))),
+      Some(BigramLmSql)),
 
     // Lexical diversity: type-token ratio + per-document token-entropy —
     // the vocabulary-richness/degeneracy quality signals (template and
@@ -5777,11 +5208,7 @@ object Extensions {
           SELECT id_a, id_b, round(j, 4) AS jaccard
           FROM scored WHERE j >= 0.8 ORDER BY id_a, id_b""")
       },
-      Some(s"""WITH $LshPairsCtes
-             |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin.replace("\n", " "))),
+      Some(NearDupPairsSql)),
 
     // Cross-document boilerplate removal — the MassiveText/CCNet
     // line-dedup tier above the intra-doc pass (q_paragraph_dedup): a
@@ -5885,9 +5312,7 @@ object Extensions {
             (0 until 6).map(i => element_at(col("sig"), i + 1).as(s"s$i")): _*)
           .orderBy("doc_id")
       },
-      Some(s"""WITH $ShinglesCte
-             |SELECT id AS doc_id, $SigCols
-             |FROM sh GROUP BY id ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+      Some(MinhashSignatureSql)),
 
     // Sketch-accuracy diagnostic: for every verified near-dup pair, the
     // MinHash ESTIMATE of Jaccard (fraction of agreeing signature

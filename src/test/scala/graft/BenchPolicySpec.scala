@@ -148,6 +148,28 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(climb(pass(1.8), retried) == ((retried, Seq(Bench.Ladder.head))))
   }
 
+  test("a failed canary sample refuses the record and pays no retry") {
+    // every canary sample failed (say, the warm-up sf dir is missing):
+    // no contention evidence at all, while driftOf(Nil) reads a quiet 1.0
+    val boom = new RuntimeException("canary dir missing")
+    val blind = Bench.Pass(Seq(Bench.Run("q", Seq(1.0), None)), Nil, Some(boom))
+    assert(blind.drift == 1.0 && !blind.errorFree)
+    assert(refused(facts(blind.drift, anyError = !blind.errorFree)))
+    assert(climb(blind) == ((blind, Nil)))
+    // one failed sample among quiet survivors refuses as well
+    val partial = Bench.Pass(Seq(Bench.Run("q", Seq(1.0), None)),
+      Seq(0.1, 0.1, 0.1, 0.1), Some(boom))
+    assert(refused(facts(partial.drift, anyError = !partial.errorFree)))
+    // a quieter retry whose canary failed never displaces a clean pass
+    val first = pass(1.4)
+    assert(climb(first, partial)._1 == first)
+    // and the record names the failure
+    val v = Bench.verdict(facts(blind.drift, anyError = !blind.errorFree))
+    val line = Bench.recordLine(Bench.settings(Map.empty), blind, cooldownRetried = false,
+      v, Map.empty, None, Nil, Map.empty, "null", None)
+    assert(mapper.readTree(line).get("errors").has(s"canary:${Bench.CanaryQuery}"))
+  }
+
   // ---- compact summary line guard -------------------------------------
 
   test("settleTargets: fires only past the band, only slow-direction, most-inflated first, capped") {
