@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -1648,32 +1649,35 @@ object Similarity {
     * plane count silently caps EVERY bucket once the corpus outgrows
     * 2^nPlanes * maxBucket. Drops are recorded in [[CapMetrics]] under
     * `"embed_neardup"`.
+    *
+    * Runs on [[blockVerify]]: one hash exchange on the bucket, then a
+    * per-bucket kernel that emits (id_a, id_b, sim) for every pair of
+    * rows with id_a < id_b and sim >= `threshold` (a duplicated row
+    * repeats its pairs). A bucket over `maxBucket` (and the NULL bucket)
+    * emits no pair. Eager: the result is persisted and counted before
+    * it is returned.
     */
   def nearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, nPlanes: Int = 0, dim: Int = 0,
                    maxBucket: Int = graft.ops.Dedup.DefaultMaxBucket): DataFrame = {
     val d = if (dim > 0) dim else dimOf(vectors, vecCol)
     val p = if (nPlanes > 0) nPlanes else nPlanesFor(vectors.count(), maxBucket)
-    val planes = hyperplanes(p, d)
-    // persisted: bucket assignment (the per-row plane dot products) is the
-    // expensive projection — the cap's bucket count and both self-join
-    // sides read it from cache, not recompute it
-    val withBucketAll = vectors
-      .select(col(idCol).as("__nid"), col(vecCol).as("__nv"))
-      .withColumn("__bucket", lshBucket(col("__nv"), planes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keyed = vectors.select(lshBucket(col(vecCol), hyperplanes(p, d)).as("__key"),
+      col(idCol).as("__id"), col(vecCol).as("__v"))
+    val idType = keyed.schema("__id").dataType
+    val out = StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
+      StructField("sim", DoubleType)))
     // super-bucket guard, ON by default (see Dedup.lshCandidates): an
     // embedding-space hot spot must not force a quadratic single-bucket
-    // self-join
-    val (withBucket, counts, recordCap) = graft.ops.Dedup.capByKey(
-      withBucketAll, Seq("__bucket"), maxBucket, "embed_neardup")
-    val a = withBucket.select(col("__bucket"), col("__nid").as("id_a"), col("__nv").as("v_a"))
-    val b = withBucket.select(col("__bucket"), col("__nid").as("id_b"), col("__nv").as("v_b"))
-    val result = a.join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-    graft.ops.Dedup.eagerlyWith(result, recordCap, Seq(withBucketAll) ++ counts: _*)
+    // verify
+    blockVerify(keyed, maxBucket, "embed_neardup", out)((_, _) => None) { b =>
+      (0 until b.size).iterator.flatMap { j =>
+        (0 until b.lower(j)).iterator.filter(b.comparable(_, j)).flatMap { i =>
+          val sim = b.cosine(i, j)
+          if (atLeast(sim, threshold)) Some(Row(b.id(i), b.id(j), sim)) else None
+        }
+      }
+    }
   }
 
   /** Exact all-pairs cosine at `threshold` (oracle-scale only). */
@@ -1687,20 +1691,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Semantic dedup (SemDeDup-style, Abbas et al. 2023): partition the
-    * embedding space into the IVF cells of `centroids` ([[ivfAssign]] —
-    * a narrow argmax scan), then inside each cell drop every vector that
-    * has a LOWER-id cell-mate with cosine >= `threshold` (keep-lowest-id
-    * — deterministic, engine-reproducible). Returns the KEPT vectors as
-    * (id, cell).
-    *
-    * Scale posture: the quadratic step is confined to within-cell pairs
-    * — `m` (centroid count) scales with the corpus so expected cell size
-    * stays bounded, and the super-bucket cap (drops recorded in
-    * [[graft.ops.CapMetrics]] under `"semantic_dedup"`) guards the hot
-    * cells a skewed embedding distribution produces. One shuffle on the
-    * cell id; the pair filter never leaves the cell.
-    */
   /** [[semanticDedup]] that builds its own cell map — k-means-refined
     * centroids by default, the production entry point (tighter cells →
     * fewer cross-cell near-dup escapes at the same m). The
@@ -1715,22 +1705,158 @@ object Similarity {
       else ivfCentroids(vectors, idCol, vecCol, m),
       threshold)
 
+  /** Semantic dedup (SemDeDup-style, Abbas et al. 2023): partition the
+    * embedding space into the IVF cells of `centroids` ([[ivfAssign]] —
+    * a narrow argmax scan), then inside each cell drop every vector that
+    * has a LOWER-id cell-mate with cosine >= `threshold` (keep-lowest-id
+    * — deterministic, engine-reproducible). Returns the KEPT vectors as
+    * (id, cell).
+    *
+    * Runs on [[blockVerify]]: one hash exchange on the cell, rows sorted
+    * by (cell, id), then a per-cell kernel that walks the ids in
+    * ascending order and marks a vector a loser at the FIRST lower-id
+    * cell-mate within `threshold` (every lower cell-mate counts, kept or
+    * not). Rows with a NULL id or a NULL cell are kept unverified.
+    *
+    * Id-key contract: one vector per id. Duplicated identical rows are
+    * inside it (each copy gets the same verdict); an id carrying two
+    * different vectors in two cells is outside it.
+    *
+    * Scale posture: the quadratic step is confined to within-cell pairs
+    * — `m` (centroid count) scales with the corpus so expected cell size
+    * stays bounded, and the super-bucket cap guards the hot cells a
+    * skewed embedding distribution produces: a cell over `maxCell` keeps
+    * every member unverified and is recorded in [[CapMetrics]] under
+    * `"semantic_dedup"` (the NULL cell counts as one bucket). Eager: the
+    * result is persisted and counted before it is returned.
+    */
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
                     centroids: Array[(Long, Array[Double])], threshold: Double,
                     maxCell: Int = graft.ops.Dedup.DefaultMaxBucket): DataFrame = {
-    val assignedAll = ivfAssign(vectors, idCol, vecCol, centroids)
-      .select(col(idCol).as("__sid"), col(vecCol).as("__sv"), col("__cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (assigned, counts, recordCap) = graft.ops.Dedup.capByKey(
-      assignedAll, Seq("__cell"), maxCell, "semantic_dedup")
-    val a = assigned.select(col("__cell"), col("__sid").as("id_a"), col("__sv").as("v_a"))
-    val b = assigned.select(col("__cell"), col("__sid").as("id_b"), col("__sv").as("v_b"))
-    val losers = a.join(b, Seq("__cell"))
-      .filter(col("id_a") < col("id_b") &&
-        cosine(col("v_a"), col("v_b")) >= threshold)
-      .select(col("id_b").as("__sid")).distinct()
-    val result = assignedAll.join(losers, Seq("__sid"), "left_anti")
-      .select(col("__sid").as("id"), col("__cell").as("cell"))
-    graft.ops.Dedup.eagerlyWith(result, recordCap, Seq(assignedAll) ++ counts: _*)
+    val keyed = ivfAssign(vectors, idCol, vecCol, centroids)
+      .select(col("__cell").as("__key"), col(idCol).as("__id"), col(vecCol).as("__v"))
+    val out = StructType(Seq(keyed.schema("__id").copy(name = "id"),
+      keyed.schema("__key").copy(name = "cell")))
+    blockVerify(keyed, maxCell, "semantic_dedup", out)((cell, id) => Some(Row(id, cell))) { b =>
+      (0 until b.size).iterator.filterNot { j =>
+        (0 until b.lower(j)).exists(i => b.comparable(i, j) && atLeast(b.cosine(i, j), threshold))
+      }.map(j => Row(b.id(j), b.key))
+    }
+  }
+
+  /** `sim >= threshold` as Spark SQL evaluates it on doubles (NaN above
+    * every number), so a kernel keeps exactly the rows a `>=` filter on
+    * `cosine_sim` would.
+    */
+  private def atLeast(sim: Double, threshold: Double): Boolean =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(sim, threshold) >= 0
+
+  /** A vector as the cell-local kernels read it: widened to `double`
+    * once, with its squared norm. `x` is null for a NULL vector or one
+    * with a NULL element. [[comparable]] and [[cosine]] reproduce
+    * `cosine_sim` (graft.functions.CosineSimilarity) bit for bit: the
+    * same sequential double sums and `dot / sqrt(na * nb)`, and no
+    * value where it returns NULL (a NULL element, a length mismatch, a
+    * zero norm).
+    */
+  private[graft] final class Widened(val x: Array[Double]) {
+    val norm2: Double = {
+      var s = 0.0
+      var i = 0
+      while (x != null && i < x.length) { s += x(i) * x(i); i += 1 }
+      s
+    }
+
+    def comparable(o: Widened): Boolean =
+      x != null && o.x != null && x.length == o.x.length && norm2 != 0.0 && o.norm2 != 0.0
+
+    /** Defined only where [[comparable]] holds. */
+    def cosine(o: Widened): Double = {
+      var dot = 0.0
+      var i = 0
+      while (i < x.length) { dot += x(i) * o.x(i); i += 1 }
+      dot / math.sqrt(norm2 * o.norm2)
+    }
+  }
+
+  private[graft] object Widened {
+    /** Widens an `array<float|double>` value as a Row holds it. */
+    def apply(v: Any): Widened = v match {
+      case s: scala.collection.Seq[_] if !s.contains(null) =>
+        new Widened(s.iterator.map {
+          case f: Float => f.toDouble
+          case d: Double => d
+        }.toArray)
+      case _ => new Widened(null)
+    }
+  }
+
+  /** One block of [[blockVerify]]: the non-NULL ids of one key in
+    * ascending order, with their widened vectors.
+    */
+  private final class Block(val key: Any, ids: Array[Any], vecs: Array[Widened]) {
+    // lower(j): the first row whose id equals row j's — the rows before
+    // it are exactly the block-mates with a strictly lower id
+    private val firstOf = {
+      val f = new Array[Int](ids.length)
+      for (j <- 1 until ids.length) f(j) = if (ids(j) == ids(j - 1)) f(j - 1) else j
+      f
+    }
+    def size: Int = ids.length
+    def id(j: Int): Any = ids(j)
+    def lower(j: Int): Int = firstOf(j)
+    def comparable(i: Int, j: Int): Boolean = vecs(i).comparable(vecs(j))
+    def cosine(i: Int, j: Int): Double = vecs(i).cosine(vecs(j))
+  }
+
+  /** Block → verify inside the partition that holds the block, the one
+    * candidate-verify operator of [[semanticDedup]] (IVF cells) and
+    * [[nearDupPairs]] (sign-LSH buckets). `keyed` has the columns
+    * `__key`, `__id`, `__v`. One hash exchange on `__key`, rows sorted
+    * by (key, id), then per key:
+    *  - a non-NULL key of at most `maxBlock` rows becomes a [[Block]]
+    *    (its non-NULL ids, vectors widened once) handed to `verify`;
+    *    its NULL-id rows go to `unverified`;
+    *  - the NULL key and every key over `maxBlock` stream all their rows
+    *    to `unverified`, buffering at most `maxBlock + 1` of them. A key
+    *    over `maxBlock` is recorded in [[CapMetrics]] under `pipeline`,
+    *    the report `Dedup.capByKey` gives for the same cap.
+    * No intermediate is persisted. Eager like [[Dedup.eagerlyWith]]:
+    * the result is persisted and counted, and the cap is recorded after
+    * that action from an accumulator keyed by block, so a re-run task
+    * counts its blocks once.
+    */
+  private def blockVerify(keyed: DataFrame, maxBlock: Int, pipeline: String,
+                          out: StructType)(unverified: (Any, Any) => Option[Row])(
+                          verify: Block => Iterator[Row]): DataFrame = {
+    val capped = keyed.sparkSession.sparkContext
+      .collectionAccumulator[(Option[Any], Long)](s"$pipeline capped blocks")
+    val result = keyed.repartition(col("__key"))
+      .sortWithinPartitions(col("__key"), col("__id"))
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        def more(key: Any) = in.hasNext && in.head.get(0) == key
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val key = in.head.get(0)
+          val head = scala.collection.mutable.ArrayBuffer.empty[Row]
+          if (key != null) while (head.length <= maxBlock && more(key)) head += in.next()
+          if (key != null && head.length <= maxBlock) {
+            val (loose, ided) = head.partition(_.isNullAt(1))
+            loose.iterator.flatMap(_ => unverified(key, null)) ++
+              verify(new Block(key, ided.map(_.get(1)).toArray, ided.map(r => Widened(r.get(2))).toArray))
+          } else {
+            var n = head.length.toLong
+            val tail = Iterator.continually(in).takeWhile(_ => more(key)).map { _ => n += 1; in.next() }
+            (head.iterator ++ tail).flatMap(r => unverified(key, r.get(1))) ++ {
+              if (n > maxBlock) capped.add((Option(key), n))
+              Iterator.empty
+            }
+          }
+        }
+      }(Encoders.row(out))
+    graft.ops.Dedup.eagerlyWith(result, () => {
+      val over = capped.value.asScala.toMap
+      CapMetrics.record(CapReport(pipeline, maxBlock, over.size.toLong, over.values.sum))
+    })
   }
 }

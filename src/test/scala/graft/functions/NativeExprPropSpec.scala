@@ -113,4 +113,50 @@ class NativeExprPropSpec extends SparkSpec {
       assert(math.abs(adc - expAdc) < 1e-12, s"vec $id adc $adc vs $expAdc")
     }
   }
+  test("kernel cosine with precomputed norms == cosine_sim bit for bit, " +
+    "and neither matches on a zero norm, a NULL element or a length mismatch") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.ops.Similarity.Widened
+    val rnd = new scala.util.Random(29)
+    def gen(n: Int): Seq[Double] = Seq.fill(n)(rnd.nextInt(4) match {
+      case 0 => rnd.nextGaussian()
+      case 1 => rnd.nextGaussian() * 1e-3
+      case 2 => rnd.nextGaussian() * 1e4
+      case _ => (rnd.nextInt(7) - 3).toDouble
+    })
+    val dims = Iterator.continually(1 + rnd.nextInt(70))
+    val pairs = Seq.fill(300) { val n = dims.next(); (gen(n), gen(n)) } ++ Seq(
+      (gen(5), Seq.fill(5)(0.0)), // zero norm
+      (Seq.fill(3)(0.0), Seq.fill(3)(0.0)),
+      (gen(6), gen(6).updated(4, Double.NaN)), // NaN is a value, not a NULL
+      (gen(6), gen(7)), // length mismatch
+      (gen(1), gen(0)))
+    for (elem <- Seq[DataType](FloatType, DoubleType)) {
+      def box(v: Seq[Double]): Seq[Any] =
+        if (elem == FloatType) v.map(x => Float.box(x.toFloat)) else v.map(Double.box)
+      val withNull = pairs.take(20).map { case (a, b) => (box(a), box(b).updated(0, null)) }
+      val rows = (pairs.map { case (a, b) => (box(a), box(b)) } ++ withNull)
+        .zipWithIndex.map { case ((a, b), i) => Row(i.toLong, a, b) }
+      val arr = ArrayType(elem, containsNull = true)
+      val schema = StructType(Seq(StructField("i", LongType),
+        StructField("a", arr), StructField("b", arr)))
+      val got = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+        .select($"i", $"a", $"b", CosineSimilarity($"a", $"b").as("sim"))
+        .collect()
+      assert(got.length == rows.length)
+      got.foreach { r =>
+        val (wa, wb) = (Widened(r.get(1)), Widened(r.get(2)))
+        if (r.isNullAt(3)) assert(!wa.comparable(wb), s"row ${r.getLong(0)}: kernel matches, cosine_sim is NULL")
+        else {
+          assert(wa.comparable(wb), s"row ${r.getLong(0)}: cosine_sim ${r.getDouble(3)}, kernel no match")
+          assert(java.lang.Double.doubleToLongBits(wa.cosine(wb)) ==
+            java.lang.Double.doubleToLongBits(r.getDouble(3)),
+            s"row ${r.getLong(0)} ($elem): ${wa.cosine(wb)} vs ${r.getDouble(3)}")
+        }
+      }
+      // the no-match cases all appeared: zero norm, NULL element, length mismatch
+      assert(got.count(_.isNullAt(3)) >= 2 + 20 + 2)
+    }
+  }
 }

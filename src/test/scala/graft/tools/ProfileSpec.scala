@@ -14,8 +14,9 @@ class ProfileSpec extends SparkSpec {
     "spark.shuffle_read_bytes", "spark.shuffle_write_bytes", "spark.spill_bytes",
     "slowest_stages", "plan")
 
-  // q_semantic_dedup shuffles AND persists intermediates, so both the
-  // counters and the cache release are exercised
+  // q_semantic_dedup shuffles (one exchange on the IVF cell) AND
+  // persists its result, so both the counters and the cache release are
+  // exercised
   test("one JSON line per query with every field; counters of a shuffle query; no cache left") {
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -5,7 +5,9 @@ Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir>
 
 Reads each <name>.parquet written by graft.Verify, runs the matching SQL
 from oracle_sql.json in DuckDB (tables = parquet files in sf_dir, bare
-stem names), and compares values with columns sorted by name.
+stem names), and compares values with columns sorted by name. A query
+whose Spark output cannot be read, or whose oracle raises (for example
+DuckDB running out of memory), fails on its own and the loop moves on.
 """
 import json, sys, glob, os
 import duckdb
@@ -17,6 +19,11 @@ for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
     name = os.path.basename(p)[:-len(".parquet")]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
+
+def first_line(e):
+    return (str(e).splitlines() or [type(e).__name__])[0]
+
+
 oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
 fails = 0
 for name, sql in sorted(oracle.items()):
@@ -25,8 +32,18 @@ for name, sql in sorted(oracle.items()):
         print(f"FAIL {name}: no spark output dir")
         fails += 1
         continue
-    got = con.sql(f"SELECT * FROM '{spark_dir}/*.parquet'").df()
-    want = con.sql(sql).df()
+    try:
+        got = con.sql(f"SELECT * FROM '{spark_dir}/*.parquet'").df()
+    except Exception as e:
+        print(f"FAIL {name}: spark read error: {first_line(e)}")
+        fails += 1
+        continue
+    try:
+        want = con.sql(sql).df()
+    except Exception as e:
+        print(f"FAIL {name}: oracle error: {first_line(e)}")
+        fails += 1
+        continue
     got = got[sorted(got.columns)].reset_index(drop=True)
     want = want[sorted(want.columns)].reset_index(drop=True)
     if list(got.columns) != list(want.columns):
@@ -42,7 +59,7 @@ for name, sql in sorted(oracle.items()):
                                       check_exact=True)
         print(f"OK   {name} ({len(got)} rows)")
     except AssertionError as e:
-        print(f"FAIL {name}: {str(e).splitlines()[0]}")
+        print(f"FAIL {name}: {first_line(e)}")
         fails += 1
 print(f"\n{len(oracle) - fails}/{len(oracle)} queries match")
 sys.exit(1 if fails else 0)
