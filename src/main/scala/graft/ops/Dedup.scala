@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
   *
@@ -612,49 +612,234 @@ object Dedup {
     * spuriously at exact multiples and SHORTENS the prefix, silently
     * voiding the completeness guarantee.
     *
-    * Scale shape: one explode to (id, distinct token), a vocabulary
-    * groupBy for frequencies, a per-doc window for the canonical order,
-    * the prefix self-join (bucket sizes = rare-token frequencies) with
-    * the PPJoin POSITIONAL filter pruning before the distinct (r17 —
-    * see [[setSimCandidates]]), and candidate-sized native verification
-    * (fused ShingleOverlap per pair — see [[setSimVerify]] for why the
-    * relational intersection count was the ×64 disk killer) — no arrays
-    * carried through the join, no all-pairs anywhere. Like any EXACT
-    * similarity join the OUTPUT can be quadratic on a degenerate corpus
-    * (everything similar to everything); when that is acceptable to
-    * approximate, [[nearDupPairs]] with its super-bucket cap is the
-    * knob.
+    * Scale shape: block → verify inside the partition that holds the
+    * block (the [[Similarity]] `blockVerify` pattern), three hash
+    * exchanges and no join:
+    *  1. the distinct shingle sets explode to (tok, id) and exchange on
+    *     the token; within a partition a token's rows are adjacent, so
+    *     one pass counts its frequency and gives it a `Long` element
+    *     ([[setSimElement]]) whose order is rarest first, ties by a
+    *     partition-local index — deterministic, so a re-run task gives
+    *     the same elements;
+    *  2. (id, element) exchanges on the id, sorted by (id, element): each
+    *     document's set becomes one ascending `long[]` (the canonical
+    *     order), and it emits one row per prefix position `pos ≤ s −
+    *     ⌈num·s/den⌉ + 1`, keyed by that element and carrying the array;
+    *  3. the prefix rows exchange on the key, sorted by (key, s, id): one
+    *     block per prefix element. The kernel ([[setSimBlockPairs]]) walks
+    *     each block's length-compatible pairs (sorted by size, so the
+    *     integer length filter exits early), applies the PPJoin
+    *     POSITIONAL filter, keeps a pair only in the block of its FIRST
+    *     common element (which replaces a `distinct`: every other block
+    *     it shares skips it) and counts |A∩B| by merging the two sorted
+    *     arrays with an early exit once the overlap can no longer reach
+    *     α = ⌈num·(s_a+s_b)/(num+den)⌉ ([[setSimOverlap]]).
+    * No intermediate is persisted and the result is lazy. Any shared
+    * total order keeps the join complete, so the element mapping and
+    * tie order change which pairs are verified, never the output, and
+    * `jaccard` is the same `round(inter / uni, 6)` over LONG counts.
+    * The shuffle ships each array once per prefix position (~0.3·s²
+    * longs per document at 7/10), and a block buffers its rows, O(block
+    * rows × s) longs: a giant block (one element in many prefixes)
+    * means the output is quadratic anyway.
+    *
+    * Id contract: ids of an integral type (returned in that type); rows
+    * with a NULL id never pair and are dropped before step 1. One text
+    * per id: duplicated identical rows are inside it — their sets merge
+    * into one, and each pair is returned once per combination of
+    * copies (c_a·c_b rows); an id carrying two different texts is
+    * outside it (it is joined as the union of its sets).
+    *
+    * Like any EXACT similarity join the OUTPUT can be quadratic on a
+    * degenerate corpus (everything similar to everything); when that is
+    * acceptable to approximate, [[nearDupPairs]] with its super-bucket
+    * cap is the knob.
     */
   def setSimJoinExact(docs: DataFrame, idCol: String, textCol: String,
                       num: Int, den: Int, n: Int = 3): DataFrame = {
     require(num >= 1 && den >= num,
       s"need a threshold in (0, 1]: got $num/$den")
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"setSimJoinExact needs an integral id column: $idCol is $idType")
     // documents with fewer than n words have no shingle set and are
     // absent from the join (the minhash-tier contract)
-    // the corpus is TOKENIZED once per join (r19): the persisted per-doc
-    // array frame feeds the frequency aggregate and the order join (as
-    // cheap explodes of cached arrays) AND the verification fetch (the
-    // arrays are the sets) — the r18 shape persisted the exploded rows
-    // instead, which left verification re-shingling every candidate doc
-    // from raw text (profiled as q_setsim_join's largest wall stage)
-    val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
-    val tok = setSimTokFromSets(sets)
-    val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    // the prefix frame feeds BOTH sides of the candidate self-join, and
-    // the broadcast build side defeats exchange reuse — the r18 plan
-    // capture (plans/r18/setsim_candidates_stage.txt) shows the whole
-    // explode → frequency → order-window pipeline planned TWICE. Persist
-    // it once; released after the verify stage materializes.
-    val prefix = setSimPrefix(tok, freq, num, den).persist(Disk)
-    setSimVerify(setSimCandFromPrefix(prefix, num, den, positionalFilter = true),
-      docs, docs, idCol, textCol, num, den, n,
-      releasables = Seq(sets, prefix),
-      preSetsA = Some(sets), preSetsB = Some(sets))
+    val elems = setSimSets(docs, idCol, textCol, n)
+      .filter(col("id").isNotNull)
+      .select(explode(col("__sh")).as("tok"), col("id").cast(LongType).as("id"))
+      .repartition(col("tok")).sortWithinPartitions("tok")
+      .as(Encoders.product[SetSimTok])
+      .mapPartitions(setSimElements)(Encoders.product[SetSimElem])
+    val prefixes = elems
+      .repartition(col("id")).sortWithinPartitions("id", "elem")
+      .mapPartitions(setSimPrefixRows(num, den))(Encoders.product[SetSimPrefix])
+    prefixes
+      .repartition(col("key")).sortWithinPartitions("key", "s", "id")
+      .mapPartitions(setSimBlockPairs(num, den))(Encoders.product[SetSimPair])
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
+        round(col("inter").cast("double") / col("uni").cast("double"), 6)
+          .as("jaccard"))
   }
 
-  /** The candidate stage of [[setSimJoinExact]] alone — (id_a, id_b,
-    * s_a, s_b) after the prefix join, the integer length filter, and the
-    * POSITIONAL filter, BEFORE verification. Public so the tier-pricing
+  private[ops] case class SetSimTok(tok: String, id: Long)
+  private[ops] case class SetSimElem(id: Long, elem: Long)
+  private[ops] case class SetSimPrefix(key: Long, id: Long, s: Int, pos: Int,
+                                       copies: Int, set: Array[Long])
+  private[ops] case class SetSimPair(id_a: Long, id_b: Long, inter: Long, uni: Long)
+
+  // [[setSimElement]] layout, high to low: capped frequency, partition,
+  // index of the token within its partition (sign bit clear)
+  private val ElemIdxBits = 27
+  private val ElemPidBits = 16
+  private val ElemCntMax = (1L << (63 - ElemPidBits - ElemIdxBits)) - 1
+
+  /** A token's element in the canonical order: rarest first (frequencies
+    * above 2^20 − 1 tie), then by (partition, index within the partition)
+    * of the token exchange — unique per token and the same on a re-run.
+    */
+  private def setSimElement(cnt: Long, pid: Long, idx: Long): Long = {
+    if (pid >= (1L << ElemPidBits) || idx >= (1L << ElemIdxBits))
+      throw new IllegalStateException(s"set-sim token exchange too wide for a " +
+        s"Long element: partition $pid, token $idx of its partition")
+    (math.min(cnt, ElemCntMax) << (ElemPidBits + ElemIdxBits)) | (pid << ElemIdxBits) | idx
+  }
+
+  /** Step 1 of [[setSimJoinExact]]: (tok, id) rows sorted by token within a
+    * partition of the token exchange → (id, element), one per input row.
+    */
+  private def setSimElements(rows: Iterator[SetSimTok]): Iterator[SetSimElem] = {
+    val pid = org.apache.spark.TaskContext.getPartitionId().toLong
+    val in = rows.buffered
+    var idx = -1L
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val tok = in.head.tok
+      val ids = Array.newBuilder[Long]
+      while (in.hasNext && in.head.tok == tok) ids += in.next().id
+      val ofTok = ids.result()
+      idx += 1
+      val elem = setSimElement(ofTok.length, pid, idx)
+      ofTok.iterator.map(SetSimElem(_, elem))
+    }
+  }
+
+  /** Step 2 of [[setSimJoinExact]]: (id, element) rows sorted by (id,
+    * element) → each document's ascending element array, emitted once per
+    * prefix position `pos ≤ s − ⌈num·s/den⌉ + 1` under that position's
+    * element. Copies of a duplicated row repeat each element; `copies`
+    * counts them.
+    */
+  private def setSimPrefixRows(num: Int, den: Int)(
+      rows: Iterator[SetSimElem]): Iterator[SetSimPrefix] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val id = in.head.id
+      val set = Array.newBuilder[Long]
+      var copies = 0
+      var run = 0
+      var last = 0L
+      while (in.hasNext && in.head.id == id) {
+        val e = in.next().elem
+        if (run > 0 && e == last) run += 1
+        else { set += e; last = e; run = 1 }
+        copies = math.max(copies, run)
+      }
+      val arr = set.result()
+      val s = arr.length
+      val p = (s - (num.toLong * s + den - 1) / den + 1).toInt
+      (1 to p).iterator.map(pos => SetSimPrefix(arr(pos - 1), id, s, pos, copies, arr))
+    }
+  }
+
+  /** Step 3 of [[setSimJoinExact]], the per-block kernel: prefix rows
+    * sorted by (key, s, id) → (id_a < id_b, inter, uni) for every pair of
+    * a block with Jaccard ≥ num/den whose first common element is the
+    * block's key, `copies_a · copies_b` times.
+    */
+  private def setSimBlockPairs(num: Int, den: Int)(
+      rows: Iterator[SetSimPrefix]): Iterator[SetSimPair] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head.key
+      val block = scala.collection.mutable.ArrayBuffer.empty[SetSimPrefix]
+      while (in.hasNext && in.head.key == key) block += in.next()
+      for {
+        j <- block.indices.iterator
+        b = block(j)
+        // sorted by size: the lower-index rows that pass the length filter
+        // den·s_a ≥ num·s_b are the ones right before j
+        a <- (j - 1 to 0 by -1).iterator.map(block)
+          .takeWhile(a => den.toLong * a.s >= num.toLong * b.s)
+        inter = setSimPairOverlap(a, b, num, den)
+        if inter >= 0
+        pair = SetSimPair(math.min(a.id, b.id), math.max(a.id, b.id), inter,
+          a.s.toLong + b.s - inter)
+        _ <- 0 until a.copies * b.copies
+      } yield pair
+    }
+  }
+
+  /** |A∩B| for two prefix rows of one block when their Jaccard reaches
+    * num/den and the block's key is their first common element, else
+    * the first check that failed, in order: [[SetSimPositional]] (the
+    * positional filter — see [[setSimCandidates]]: every shared element
+    * sits at or after `pos` in both arrays, so the overlap is at most
+    * 1 + min(s_a − pos_a, s_b − pos_b)), [[SetSimNotFirst]] (an earlier
+    * element is shared; the pair is verified in that element's block),
+    * [[SetSimBelow]] (the overlap is below α).
+    */
+  private[ops] def setSimPairOverlap(a: SetSimPrefix, b: SetSimPrefix,
+                                     num: Int, den: Int): Long = {
+    val ss = a.s.toLong + b.s
+    val ub = 1L + math.min(a.s - a.pos, b.s - b.pos)
+    if ((num + den).toLong * ub < num.toLong * ss) SetSimPositional
+    else if (setSimShareBefore(a.set, a.pos - 1, b.set, b.pos - 1)) SetSimNotFirst
+    else {
+      // (num+den)·inter ≥ num·(s_a+s_b) ⟺ den·inter ≥ num·uni
+      val need = ((num.toLong * ss + num + den - 1) / (num + den)).toInt
+      val inter = setSimOverlap(a.set, a.pos, b.set, b.pos, 1, need)
+      if (inter >= need) inter.toLong else SetSimBelow
+    }
+  }
+
+  private[ops] val SetSimPositional = -1L
+  private[ops] val SetSimNotFirst = -2L
+  private[ops] val SetSimBelow = -3L
+
+  /** Whether ascending, duplicate-free `a` and `b` share an element in
+    * `a[0, ia)` and `b[0, ib)`.
+    */
+  private def setSimShareBefore(a: Array[Long], ia: Int, b: Array[Long], ib: Int): Boolean = {
+    var i = 0
+    var j = 0
+    while (i < ia && j < ib) {
+      if (a(i) == b(j)) return true
+      if (a(i) < b(j)) i += 1 else j += 1
+    }
+    false
+  }
+
+  /** `have + |a[i0..] ∩ b[j0..]|` for ascending, duplicate-free arrays
+    * when that reaches `need`; otherwise some value below `need` — the
+    * merge stops as soon as the elements left cannot lift it to `need`.
+    */
+  private[graft] def setSimOverlap(a: Array[Long], i0: Int, b: Array[Long], j0: Int,
+                                   have: Int, need: Int): Int = {
+    var i = i0
+    var j = j0
+    var c = have
+    while (i < a.length && j < b.length && c + math.min(a.length - i, b.length - j) >= need) {
+      if (a(i) == b(j)) { c += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  /** The candidate stage of the exact prefix-filter join alone — (id_a,
+    * id_b, s_a, s_b) after the prefix self-join, the integer length
+    * filter, and the POSITIONAL filter, BEFORE verification
+    * ([[setSimJoinExact]] applies the same filters per block, under its
+    * own element order). Public so the tier-pricing
     * query (q_setsim_vs_lsh) can weigh the exact join's candidate volume
     * against the LSH tier's on the same corpus: candidates are where an
     * exact similarity join's cost lives, so the count per threshold IS
@@ -688,7 +873,7 @@ object Dedup {
     * shared by [[setSimCandidates]] and the one-pass tier sweep
     * ([[setSimExactCounts]]).
     */
-  private def setSimCandFromPrefix(prefix: DataFrame, num: Int, den: Int,
+  private[ops] def setSimCandFromPrefix(prefix: DataFrame, num: Int, den: Int,
                                    positionalFilter: Boolean): DataFrame = {
     val rows = prefix.as("a").join(prefix.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
@@ -862,9 +1047,9 @@ object Dedup {
                         num: Int, den: Int, n: Int = 3): DataFrame = {
     require(num >= 1 && den >= num,
       s"need a threshold in (0, 1]: got $num/$den")
-    // tokenize each side ONCE (r19, the setSimJoinExact pattern): the
-    // cached array frames feed the union-frequency aggregate, the prefix
-    // joins (cheap explodes), and the verification fetch
+    // tokenize each side ONCE (r19): the cached array frames feed the
+    // union-frequency aggregate, the prefix joins (cheap explodes), and
+    // the verification fetch
     val setsA = setSimSets(probes, idCol, textCol, n).persist(Disk)
     val setsB = setSimSets(corpus, idCol, textCol, n).persist(Disk)
     val tokA = setSimTokFromSets(setsA)
@@ -927,7 +1112,7 @@ object Dedup {
     * stage was the largest wall item of q_setsim_join, re-shingling
     * ~every candidate doc the prefix stage had already shingled).
     */
-  private def setSimSets(docs: DataFrame, idCol: String, textCol: String,
+  private[ops] def setSimSets(docs: DataFrame, idCol: String, textCol: String,
                          n: Int): DataFrame =
     docs.select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingleArray(col(textCol), n)).as("__sh"))
@@ -935,7 +1120,7 @@ object Dedup {
   /** The (id, s, tok) token stream derived from a (cached) [[setSimSets]]
     * frame — explode of in-memory arrays, no re-tokenization.
     */
-  private def setSimTokFromSets(sets: DataFrame): DataFrame =
+  private[ops] def setSimTokFromSets(sets: DataFrame): DataFrame =
     sets.select(col("id"), size(col("__sh")).cast(LongType).as("s"),
       explode(col("__sh")).as("tok"))
 
@@ -965,7 +1150,7 @@ object Dedup {
     * pos ≤ s − ⌈num·s/den⌉ + 1. `pos` rides along for the candidate
     * stage's positional filter.
     */
-  private def setSimPrefix(tok: DataFrame, freq: DataFrame,
+  private[ops] def setSimPrefix(tok: DataFrame, freq: DataFrame,
                            num: Int, den: Int): DataFrame =
     setSimSized(tok, freq)
       .filter(col("pos") <= col("s") -
@@ -990,7 +1175,7 @@ object Dedup {
     * keeps the relational formulation — opposite plan, identical
     * output, which is the point of the oracle.
     */
-  private def setSimVerify(cand: DataFrame, docsA: DataFrame, docsB: DataFrame,
+  private[ops] def setSimVerify(cand: DataFrame, docsA: DataFrame, docsB: DataFrame,
                            idCol: String, textCol: String,
                            num: Int, den: Int, n: Int,
                            detach: Boolean = false,

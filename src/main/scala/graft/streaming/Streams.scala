@@ -751,8 +751,10 @@ object Streams {
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
+          // setSimJoinExact is lazy: persisted so the index probe and the
+          // survivor count below read one computation of it
           val intra = graft.ops.Dedup.setSimJoinExact(batch, idCol, textCol,
-            num, den)
+            num, den).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           val batchClean = batch.join(
             intra.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
           val (fs, idxTok) = Refresh.hfs(spark, s"$indexPath/tokens")

@@ -159,4 +159,38 @@ class NativeExprPropSpec extends SparkSpec {
       assert(got.count(_.isNullAt(3)) >= 2 + 20 + 2)
     }
   }
+
+  test("set-sim merge overlap with early exit == Set intersection size whenever the " +
+    "threshold is reachable, and below it otherwise") {
+    val rnd = new scala.util.Random(31)
+    def draw(n: Int, from: Array[Long]): Array[Long] =
+      rnd.shuffle(from.toSeq).take(n).toArray.sorted
+    val pairs = Seq.fill(600) {
+      val universe = Array.fill(rnd.nextInt(400) + 1)(rnd.nextLong() >> rnd.nextInt(60)).distinct
+      val a = draw(rnd.nextInt(201), universe)
+      rnd.nextInt(3) match {
+        case 0 => (a, draw(rnd.nextInt(201), universe)) // random
+        case 1 => (a, (a.filter(_ => rnd.nextInt(10) > 0) ++ // heavy overlap
+          draw(rnd.nextInt(20), universe)).distinct.sorted)
+        case _ => (a, draw(rnd.nextInt(201), universe.filterNot(a.toSet))) // disjoint
+      }
+    } ++ Seq((Array.empty[Long], Array.empty[Long]), (Array(1L), Array.empty[Long]),
+      (Array(Long.MinValue, 0L, Long.MaxValue), Array(Long.MinValue, Long.MaxValue)))
+    var reached = 0
+    for ((a, b) <- pairs) {
+      val i0 = rnd.nextInt(a.length + 1)
+      val j0 = rnd.nextInt(b.length + 1)
+      val have = rnd.nextInt(3)
+      for ((from, to, base) <- Seq((0, 0, 0), (i0, j0, have))) {
+        val want = base + (a.drop(from).toSet & b.drop(to).toSet).size
+        val needs = Seq(0, 1, want - 1, want, want + 1, rnd.nextInt(math.min(a.length, b.length) + 2))
+        for (need <- needs.filter(_ >= 0)) {
+          val got = Dedup.setSimOverlap(a, from, b, to, base, need)
+          if (want >= need) { assert(got == want, s"need $need: $got vs $want"); reached += 1 }
+          else assert(got < need, s"need $need: reported $got, true overlap $want")
+        }
+      }
+    }
+    assert(reached > 1000 && pairs.count { case (a, b) => a.intersect(b).length > 50 } > 20)
+  }
 }

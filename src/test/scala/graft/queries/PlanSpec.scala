@@ -882,6 +882,19 @@ class PlanSpec extends SparkSpec {
       s"served plan should read materialized rows: ${served.take(300)}")
   }
 
+  test("exact set-sim self-join: three hash exchanges and the final sort, no join, no cache") {
+    // token → id → prefix element, each a hash exchange feeding a
+    // partition-local pass, then the orderBy; the prefix self-join chain
+    // it replaced planned broadcast fetch joins over persisted frames
+    // (r19 capture: 525 lines naming an Exchange)
+    val p = plan("q_setsim_join")
+    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"), p.take(1500))
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p.take(1500))
+    val exchanges = p.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges <= 4, s"$exchanges exchanges:\n$p")
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
+  }
+
   test("setsim decontamination: the probe prefix side broadcasts into the candidate join") {
     // the R-S join's scale contract: the eval-suite side is small, so
     // its prefix table must BROADCAST — the corpus side is scanned, not
