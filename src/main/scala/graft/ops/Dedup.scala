@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -441,39 +441,23 @@ object Dedup {
 
   /** Containment for the LSH candidate pairs of a corpus, end to end —
     * the scale path: same candidate generation and single-corpus-scan
-    * text fetch as [[nearDupPairs]], with the native
-    * [[graft.functions.ShingleOverlap]] kernel computing both
-    * containments per pair locally (no shingle explode, no
-    * shingle-keyed shuffle — the relational [[containmentForPairs]] is
-    * the composable cross-check, property-tested equal).
+    * text fetch as [[nearDupPairs]] ([[lshPairOverlap]]), with both
+    * containments computed per pair locally from the precomputed sets
+    * (no shingle explode, no shingle-keyed shuffle — the relational
+    * [[containmentForPairs]] is the composable cross-check,
+    * property-tested equal).
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        k: Int = 6, bandRows: Int = 2,
-                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sig = minhashSignatureNarrow(docs, idCol, textCol, k = k).persist(Disk)
-    val (cand, counts, recordCap) =
-      lshCandidatesReleasable(lshBands(sig, k, bandRows), maxBucket)
-    val pairs = cand.persist(Disk)
-    val txt = candidateShingles(docs, idCol, textCol, pairs)
-    val result = pairs
-      .join(txt.select(col("__cid").as("id_a"), col("__n").as("__na"),
-        col("__sh").as("__sha")), Seq("id_a"))
-      .join(txt.select(col("__cid").as("id_b"), col("__n").as("__nb"),
-        col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("__na"), col("__nb"),
-        size(array_intersect(col("__sha"), col("__shb"))).as("__i"))
+                       maxBucket: Int = DefaultMaxBucket): DataFrame =
+    lshPairOverlap(docs, idCol, textCol, k, bandRows, maxBucket)(_
       // a candidate pair can share a band yet no shingle (chunk-min hash
       // collision); the relational form and the oracle emit only
       // overlapping pairs, so filter to |∩| >= 1 for identical output
-      .filter(col("__i") >= 1)
+      .filter(col("inter") >= 1)
       .select(col("id_a"), col("id_b"),
-        (col("__i").cast("double") / col("__na").cast("double")).as("cont_a"),
-        (col("__i").cast("double") / col("__nb").cast("double")).as("cont_b"))
-    // eagerlyWith, not eagerly: the cap recorder must run or a capped
-    // super-bucket's dropped candidates would be silent recall loss —
-    // the exact contract nearDupPairs keeps
-    eagerlyWith(result, recordCap, Seq(sig, pairs, txt) ++ counts: _*)
-  }
+        (col("inter").cast("double") / col("na").cast("double")).as("cont_a"),
+        (col("inter").cast("double") / col("nb").cast("double")).as("cont_b")))
 
   /** MinHash+LSH near-dup pipeline: shingle → signature → bands →
     * candidates → Jaccard-verified pairs at `threshold`.
@@ -507,39 +491,17 @@ object Dedup {
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8, k: Int = 6, bandRows: Int = 2,
-                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // Signature is a narrow per-document projection (native expression —
-    // no explode, no shuffle); the ONLY corpus-wide shuffle in the
-    // pipeline is the band bucket join (super-bucket-capped, see
-    // lshCandidates). Verification joins each candidate pair (O(dups),
-    // persisted) back to its two texts — AQE broadcasts the pair side, so
-    // the corpus is only ever scanned, never shuffled — and the native
-    // ShingleJaccard expression verifies each pair locally; the 200x
-    // shingle blowup of the relational formulation never materializes.
-    val sig = minhashSignatureNarrow(docs, idCol, textCol, k = k).persist(Disk)
-    val (cand, counts, recordCap) =
-      lshCandidatesReleasable(lshBands(sig, k, bandRows), maxBucket)
-    val pairs = cand.persist(Disk)
-    val txt = candidateShingles(docs, idCol, textCol, pairs)
-    // inter / (|A| + |B| − inter) over the precomputed distinct sets —
-    // the same integer counts and the same double division the fused
-    // text kernel (ShingleJaccard) produced, without re-shingling both
-    // texts per pair (see candidateShingles). Candidates always carry a
-    // non-empty set (signature-less docs never reach banding), so the
-    // kernel's both-empty → null case cannot occur here.
-    val result = pairs
-      .join(txt.select(col("__cid").as("id_a"), col("__n").as("__na"),
-        col("__sh").as("__sha")), Seq("id_a"))
-      .join(txt.select(col("__cid").as("id_b"), col("__n").as("__nb"),
-        col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("__na"), col("__nb"),
-        size(array_intersect(col("__sha"), col("__shb"))).as("__i"))
+                   maxBucket: Int = DefaultMaxBucket): DataFrame =
+    // inter / (|A| + |B| − inter) — the same integer counts and the same
+    // double division the fused text kernel (ShingleJaccard) produced.
+    // Candidates always carry a non-empty set (signature-less docs never
+    // reach banding), so the kernel's both-empty → null case cannot
+    // occur here.
+    lshPairOverlap(docs, idCol, textCol, k, bandRows, maxBucket)(_
       .select(col("id_a"), col("id_b"),
-        (col("__i").cast("double") /
-          (col("__na") + col("__nb") - col("__i")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    eagerlyWith(result, recordCap, Seq(sig, pairs, txt) ++ counts: _*)
-  }
+        (col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")).cast("double")).as("jaccard"))
+      .filter(col("jaccard") >= threshold))
 
   /** [[nearDupPairs]]' pipeline with the RAW intersection/union counts
     * (id_a, id_b, inter, uni) instead of the double jaccard, gated by
@@ -558,24 +520,46 @@ object Dedup {
                         maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(num >= 1 && den >= num,
       s"need a threshold in (0, 1]: got $num/$den")
+    lshPairOverlap(docs, idCol, textCol, k, bandRows, maxBucket)(_
+      .select(col("id_a"), col("id_b"), col("inter").cast(LongType).as("inter"),
+        ((col("na") + col("nb")).cast(LongType) - col("inter").cast(LongType)).as("uni"))
+      .filter(lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni")))
+  }
+
+  /** The shared body of the LSH pair measures ([[nearDupPairs]],
+    * [[nearDupPairCounts]], [[containmentPairs]]): (id_a, id_b, na, nb,
+    * inter) per candidate pair — both distinct-shingle set sizes and
+    * |A∩B| as ints — handed to the caller's `tail` (its filter and
+    * columns), whose result is materialized before the intermediates are
+    * released.
+    *
+    * The signature is a narrow per-document projection (native
+    * expression — no explode, no shuffle); the ONLY corpus-wide shuffle
+    * is the band bucket join (super-bucket-capped, see [[lshCandidates]]).
+    * Verification joins each candidate pair (O(dups), persisted) back to
+    * its two precomputed shingle sets ([[candidateShingles]] — AQE
+    * broadcasts the pair side, so the corpus is only ever scanned, never
+    * shuffled) and intersects them locally: the 200× shingle blowup of
+    * the relational formulation never materializes. The cap recorder
+    * runs after materialization, so a capped super-bucket's dropped
+    * candidates are recorded, never silent recall loss.
+    */
+  private def lshPairOverlap(docs: DataFrame, idCol: String, textCol: String,
+                             k: Int, bandRows: Int, maxBucket: Int)(
+      tail: DataFrame => DataFrame): DataFrame = {
     val sig = minhashSignatureNarrow(docs, idCol, textCol, k = k).persist(Disk)
     val (cand, counts, recordCap) =
       lshCandidatesReleasable(lshBands(sig, k, bandRows), maxBucket)
     val pairs = cand.persist(Disk)
     val txt = candidateShingles(docs, idCol, textCol, pairs)
-    val result = pairs
-      .join(txt.select(col("__cid").as("id_a"), col("__n").as("__na"),
+    val overlap = pairs
+      .join(txt.select(col("__cid").as("id_a"), col("__n").as("na"),
         col("__sh").as("__sha")), Seq("id_a"))
-      .join(txt.select(col("__cid").as("id_b"), col("__n").as("__nb"),
+      .join(txt.select(col("__cid").as("id_b"), col("__n").as("nb"),
         col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__sha"), col("__shb"))).cast(LongType)
-          .as("inter"),
-        (col("__na") + col("__nb")).cast(LongType).as("__ss"))
-      .select(col("id_a"), col("id_b"), col("inter"),
-        (col("__ss") - col("inter")).as("uni"))
-      .filter(lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni"))
-    eagerlyWith(result, recordCap, Seq(sig, pairs, txt) ++ counts: _*)
+      .select(col("id_a"), col("id_b"), col("na"), col("nb"),
+        size(array_intersect(col("__sha"), col("__shb"))).as("inter"))
+    eagerlyWith(tail(overlap), recordCap, Seq(sig, pairs, txt) ++ counts: _*)
   }
 
   /** EXACT set-similarity self-join — every pair with Jaccard ≥
@@ -657,14 +641,29 @@ object Dedup {
     */
   def setSimJoinExact(docs: DataFrame, idCol: String, textCol: String,
                       num: Int, den: Int, n: Int = 3): DataFrame = {
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    setSimSelfJoin(setSimSets(docs, idCol, textCol, n), num, den)
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
+        round(col("inter").cast("double") / col("uni").cast("double"), 6)
+          .as("jaccard"))
+  }
+
+  /** [[setSimJoinExact]]'s pairs as LONG (id_a, id_b, inter, uni) from a
+    * [[setSimSets]] frame — the one engine of every exact set-sim
+    * SELF-join: the tier sweeps ([[setSimExactCounts]],
+    * [[lshGeometryFrontier]]) hand it their persisted frame once per
+    * threshold, so the corpus is tokenized once per sweep, and
+    * q_ngram_jaccard rounds its own measure from the counts.
+    */
+  private[graft] def setSimSelfJoin(sets: DataFrame, num: Int, den: Int): DataFrame = {
     require(num >= 1 && den >= num,
       s"need a threshold in (0, 1]: got $num/$den")
-    val idType = docs.select(col(idCol)).schema.head.dataType
+    val idType = sets.schema("id").dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"setSimJoinExact needs an integral id column: $idCol is $idType")
+      s"the exact set-sim join needs an integral id column: the id is $idType")
     // documents with fewer than n words have no shingle set and are
     // absent from the join (the minhash-tier contract)
-    val elems = setSimSets(docs, idCol, textCol, n)
+    val elems = sets
       .filter(col("id").isNotNull)
       .select(explode(col("__sh")).as("tok"), col("id").cast(LongType).as("id"))
       .repartition(col("tok")).sortWithinPartitions("tok")
@@ -676,9 +675,7 @@ object Dedup {
     prefixes
       .repartition(col("key")).sortWithinPartitions("key", "s", "id")
       .mapPartitions(setSimBlockPairs(num, den))(Encoders.product[SetSimPair])
-      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
-        round(col("inter").cast("double") / col("uni").cast("double"), 6)
-          .as("jaccard"))
+      .toDF()
   }
 
   private[ops] case class SetSimTok(tok: String, id: Long)
@@ -781,11 +778,22 @@ object Dedup {
   /** |A∩B| for two prefix rows of one block when their Jaccard reaches
     * num/den and the block's key is their first common element, else
     * the first check that failed, in order: [[SetSimPositional]] (the
-    * positional filter — see [[setSimCandidates]]: every shared element
-    * sits at or after `pos` in both arrays, so the overlap is at most
-    * 1 + min(s_a − pos_a, s_b − pos_b)), [[SetSimNotFirst]] (an earlier
-    * element is shared; the pair is verified in that element's block),
+    * positional filter, below), [[SetSimNotFirst]] (an earlier element
+    * is shared; the pair is verified in that element's block),
     * [[SetSimBelow]] (the overlap is below α).
+    *
+    * The positional filter (PPJoin, Xiao et al. 2008 §3.2): a pair with
+    * J ≥ num/den needs overlap α = ⌈num·(s_a+s_b)/(num+den)⌉; from its
+    * FIRST shared element (minimum in the canonical order — provably
+    * inside both prefixes whenever any shared prefix element exists) the
+    * whole shared set sits in both suffixes, so the overlap is at most
+    * ub = 1 + min(s_a − pos_a, s_b − pos_b). A row whose ub cannot reach
+    * α is dropped — integer form `(num+den)·ub ≥ num·(s_a+s_b)` (ub ≥ ⌈x⌉
+    * ⟺ ub ≥ x for integer ub). The row of a qualifying pair's first
+    * shared element always survives, so the filter changes candidates
+    * but never output; the relational candidate stage
+    * ([[setSimPrefixPairs]]) applies the same bound. Measured on the
+    * sf0.1 twin corpus at 7/10: 268k → 85k relational candidates (3.2×).
     */
   private[ops] def setSimPairOverlap(a: SetSimPrefix, b: SetSimPrefix,
                                      num: Int, den: Int): Long = {
@@ -835,98 +843,66 @@ object Dedup {
     c
   }
 
-  /** The candidate stage of the exact prefix-filter join alone — (id_a,
-    * id_b, s_a, s_b) after the prefix self-join, the integer length
-    * filter, and the POSITIONAL filter, BEFORE verification
-    * ([[setSimJoinExact]] applies the same filters per block, under its
-    * own element order). Public so the tier-pricing
-    * query (q_setsim_vs_lsh) can weigh the exact join's candidate volume
-    * against the LSH tier's on the same corpus: candidates are where an
-    * exact similarity join's cost lives, so the count per threshold IS
-    * the price of losslessness.
-    *
-    * The positional filter (PPJoin, Xiao et al. 2008 §3.2): a pair with
-    * J ≥ num/den needs overlap α = ⌈num·(s_a+s_b)/(num+den)⌉; for its
-    * FIRST shared token (minimum in the canonical order — provably
-    * inside both prefixes whenever any shared prefix token exists), the
-    * whole shared set sits in both suffixes from that token on, so
-    * overlap ≤ 1 + min(s_a−pos_a, s_b−pos_b). Rows where that upper
-    * bound can't reach α are dropped BEFORE the distinct — integer form
-    * `(num+den)·ub ≥ num·(s_a+s_b)` (ub ≥ ⌈x⌉ ⟺ ub ≥ x for integer ub).
-    * The max-bound row of a qualifying pair always survives, so the
-    * filter changes candidates but NEVER output (ExtensionsSpec pins
-    * this). Measured on the sf0.1 twin corpus at 7/10: 268k → 85k
-    * candidates (3.2×).
+  /** The relational candidate self-join of the prefix filter over an
+    * already-built prefix frame (tok, id, s, pos) — (id_a, id_b, s_a,
+    * s_b) once per pair sharing a prefix token, after the length and
+    * positional filters ([[setSimPrefixPairs]]). No join verifies these
+    * candidates ([[setSimJoinExact]] finds its pairs per block, under its
+    * own element order); their count is q_setsim_vs_lsh's
+    * `exact_candidates`, the candidate volume of the `(cnt, tok)` order,
+    * which the query's DuckDB oracle replays relationally.
     */
-  def setSimCandidates(docs: DataFrame, idCol: String, textCol: String,
-                       num: Int, den: Int, n: Int = 3,
-                       positionalFilter: Boolean = true): DataFrame = {
-    require(num >= 1 && den >= num,
-      s"need a threshold in (0, 1]: got $num/$den")
-    val tok = setSimTok(docs, idCol, textCol, n)
-    val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val prefix = setSimPrefix(tok, freq, num, den)
-    setSimCandFromPrefix(prefix, num, den, positionalFilter)
-  }
+  private[ops] def setSimCandFromPrefix(prefix: DataFrame, num: Int, den: Int): DataFrame =
+    setSimPrefixPairs(prefix, prefix, col("a.id") < col("b.id"), num, den)
 
-  /** The candidate self-join from an already-built prefix frame —
-    * shared by [[setSimCandidates]] and the one-pass tier sweep
-    * ([[setSimExactCounts]]).
+  /** The relational candidate stage shared by the prefix-filter shapes:
+    * prefix rows `a` × `b` on a shared token (and `on`), the integer
+    * length filter `den·min(s) ≥ num·max(s)`, the positional filter (see
+    * [[setSimPairOverlap]] — every shared token sits at or after `pos`
+    * on both sides, so `ub = 1 + min(s_a − pos_a, s_b − pos_b)` bounds the
+    * overlap; dropped BEFORE the distinct), then (id_a, id_b, s_a, s_b)
+    * once per pair. The two-table shapes ([[setSimJoinExactRS]],
+    * [[setSimAgainstIndexCandidates]]) pass their broadcast probe
+    * prefixes as `a`; the bound is order-agnostic, so it holds across
+    * tables under any shared order.
     */
-  private[ops] def setSimCandFromPrefix(prefix: DataFrame, num: Int, den: Int,
-                                   positionalFilter: Boolean): DataFrame = {
-    val rows = prefix.as("a").join(prefix.as("b"),
-        col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
+  private def setSimPrefixPairs(a: DataFrame, b: DataFrame, on: Column,
+                                num: Int, den: Int): DataFrame =
+    a.as("a").join(b.as("b"), col("a.tok") === col("b.tok") && on)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.s").as("s_a"), col("b.s").as("s_b"),
         (lit(1L) + least(col("a.s") - col("a.pos"), col("b.s") - col("b.pos")))
           .as("__ub"))
       .filter(lit(den.toLong) * least(col("s_a"), col("s_b")) >=
         lit(num.toLong) * greatest(col("s_a"), col("s_b")))
-    // the `positionalFilter = false` arm exists ONLY for the spec that
-    // pins "changes candidates, never output" — production callers
-    // always want the pruned set
-    val pruned =
-      if (positionalFilter)
-        rows.filter(lit((num + den).toLong) * col("__ub") >=
-          lit(num.toLong) * (col("s_a") + col("s_b")))
-      else rows
-    pruned.select(col("id_a"), col("id_b"), col("s_a"), col("s_b")).distinct()
-  }
+      .filter(lit((num + den).toLong) * col("__ub") >=
+        lit(num.toLong) * (col("s_a") + col("s_b")))
+      .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"))
+      .distinct()
 
-  /** Candidate and verified-pair COUNTS per threshold, one corpus pass:
-    * the shingle explode, vocabulary frequencies, and the per-doc
-    * canonical-order window — the expensive corpus-wide stages — run
-    * ONCE (persisted); each threshold derives only its prefix cut,
-    * candidate join, and candidate-sized native verification from the
-    * shared frame (the X159 run-the-expensive-stages-once pattern).
-    * Returns (num, den, candidates, pairs) per input threshold —
-    * driver-sized by construction; the tier-pricing query
-    * (q_setsim_vs_lsh) is the consumer.
+  /** Candidate and verified-pair COUNTS per threshold, one tokenization:
+    * the per-doc shingle sets are built once (persisted) and each
+    * threshold takes its exact pairs from the block kernel
+    * ([[setSimSelfJoin]]) over them. The candidate count is the
+    * relational prefix join's ([[setSimCandFromPrefix]] over the
+    * `(cnt, tok)` positions, also persisted once per sweep): a candidate
+    * count is where an exact similarity join's cost lives, so it IS the
+    * price of losslessness the tier-pricing query (q_setsim_vs_lsh)
+    * weighs against the LSH tier's. Returns (num, den, candidates,
+    * pairs) per input threshold; `pairs` equals [[setSimJoinExact]]'s
+    * row count.
     */
   def setSimExactCounts(docs: DataFrame, idCol: String, textCol: String,
                         thresholds: Seq[(Int, Int)], n: Int = 3)
       : Seq[(Int, Int, Long, Long)] = {
-    // tokenize once for the WHOLE sweep (r19): every threshold's
-    // verification fetch reads the cached arrays instead of re-shingling
     val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
     val tok = setSimTokFromSets(sets)
     val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val sized = setSimSized(tok, freq).persist(Disk)
     try thresholds.map { case (num, den) =>
-      require(num >= 1 && den >= num,
-        s"need a threshold in (0, 1]: got $num/$den")
-      val prefix = sized
-        .filter(col("pos") <= col("s") -
-          expr(s"($num * s + ${den - 1}) DIV $den") + 1)
-      val cand = setSimCandFromPrefix(prefix, num, den, positionalFilter = true)
-        .persist(Disk)
-      val nCand = cand.count()
-      val verified = setSimVerify(cand, docs, docs, idCol, textCol, num, den, n,
-        preSetsA = Some(sets), preSetsB = Some(sets))
-      val nPairs = verified.count()
-      verified.unpersist(blocking = false)
-      cand.unpersist(blocking = false)
+      val nPairs = setSimSelfJoin(sets, num, den).count()
+      val nCand = setSimCandFromPrefix(
+        sized.filter(col("pos") <= setSimPrefixLen(num, den)), num, den).count()
       (num, den, nCand, nPairs)
     } finally {
       sized.unpersist(blocking = false)
@@ -947,38 +923,24 @@ object Dedup {
     * none does, the exact tier's candidate surplus is the price of
     * closing the miss probability.
     *
-    * Cost shape: the exact corpus-wide stages (shingle explode,
-    * vocabulary frequencies, canonical-order window) run ONCE
-    * (persisted, the setSimExactCounts pattern) with each threshold
-    * paying only its prefix cut + candidate join + candidate-sized
-    * verification; signatures are computed once PER k (geometries
-    * sharing k reuse it) and only the banding re-runs per geometry;
-    * recovered counts are broadcast semi-joins of capped candidates
-    * against the exact pair sets. Counts are driver-sized; the result
-    * frame is a literal table.
+    * Cost shape: the corpus is tokenized ONCE (persisted shingle sets)
+    * and each threshold's exact pairs come from the block kernel
+    * ([[setSimSelfJoin]]) over them, persisted as (id_a, id_b);
+    * `exact_pairs` equals [[setSimJoinExact]]'s row count. Signatures
+    * are computed once PER k (geometries sharing k reuse it) and only
+    * the banding re-runs per geometry; recovered counts are semi-joins
+    * of capped candidates against the exact pair sets. Counts are
+    * driver-sized; the result frame is a literal table.
     */
   def lshGeometryFrontier(docs: DataFrame, idCol: String, textCol: String,
                           thresholds: Seq[(Int, Int)], n: Int = 3,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    thresholds.foreach { case (num, den) =>
-      require(num >= 1 && den >= num,
-        s"need a threshold in (0, 1]: got $num/$den") }
-    // tokenize once for the whole frontier sweep (r19, the
-    // setSimExactCounts pattern)
     val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
-    val tok = setSimTokFromSets(sets)
-    val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val sized = setSimSized(tok, freq).persist(Disk)
     try {
       val exact = thresholds.map { case (num, den) =>
-        val prefix = sized
-          .filter(col("pos") <= col("s") -
-            expr(s"($num * s + ${den - 1}) DIV $den") + 1)
-        val cand = setSimCandFromPrefix(prefix, num, den, positionalFilter = true)
-        val pairs = setSimVerify(cand, docs, docs, idCol, textCol, num, den, n,
-            preSetsA = Some(sets), preSetsB = Some(sets))
+        val pairs = setSimSelfJoin(sets, num, den)
           .select(col("id_a"), col("id_b")).persist(Disk)
         (num, den, pairs, pairs.count())
       }
@@ -1013,10 +975,7 @@ object Dedup {
             col("lsh_candidates"))
           .orderBy("threshold", "k", "band_rows")
       } finally exact.foreach(_._3.unpersist(blocking = false))
-    } finally {
-      sized.unpersist(blocking = false)
-      sets.unpersist(blocking = false)
-    }
+    } finally sets.unpersist(blocking = false)
   }
 
   /** EXACT two-table (R-S) set-similarity join — [[setSimJoinExact]]'s
@@ -1063,26 +1022,9 @@ object Dedup {
     // verify stage materializes).
     val freq = tokA.unionAll(tokB).groupBy("tok").agg(count(lit(1)).as("cnt"))
       .persist(Disk)
-    val preA = setSimPrefix(tokA, freq, num, den)
-    val preB = setSimPrefix(tokB, freq, num, den)
-    val cand = broadcast(preA).as("a").join(preB.as("b"),
-        col("a.tok") === col("b.tok"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.s").as("s_a"), col("b.s").as("s_b"),
-        (lit(1L) + least(col("a.s") - col("a.pos"), col("b.s") - col("b.pos")))
-          .as("__ub"))
-      .filter(lit(den.toLong) * least(col("s_a"), col("s_b")) >=
-        lit(num.toLong) * greatest(col("s_a"), col("s_b")))
-      // positional filter — same first-shared-token bound as the
-      // self-join (see setSimCandidates), order-agnostic so it holds
-      // across tables under the shared union-frequency order
-      .filter(lit((num + den).toLong) * col("__ub") >=
-        lit(num.toLong) * (col("s_a") + col("s_b")))
-      .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"))
-      .distinct()
-    setSimVerify(cand, probes, corpus, idCol, textCol, num, den, n,
-      releasables = Seq(freq, setsA, setsB),
-      preSetsA = Some(setsA), preSetsB = Some(setsB))
+    val cand = setSimPrefixPairs(broadcast(setSimPrefix(tokA, freq, num, den)),
+      setSimPrefix(tokB, freq, num, den), lit(true), num, den)
+    setSimVerify(cand, setsA, setsB, num, den, releasables = Seq(freq, setsA, setsB))
   }
 
   /** (id, s, tok) over DISTINCT word n-gram shingles — the set
@@ -1112,7 +1054,7 @@ object Dedup {
     * stage was the largest wall item of q_setsim_join, re-shingling
     * ~every candidate doc the prefix stage had already shingled).
     */
-  private[ops] def setSimSets(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def setSimSets(docs: DataFrame, idCol: String, textCol: String,
                          n: Int): DataFrame =
     docs.select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingleArray(col(textCol), n)).as("__sh"))
@@ -1125,8 +1067,11 @@ object Dedup {
       explode(col("__sh")).as("tok"))
 
   /** Rarest-global-frequency-first canonical positions over the WHOLE
-    * token list — (tok, id, s, pos) with pos = row_number by (cnt, tok)
-    * within id (ties by token — a total order both engines share). One
+    * token list — (tok, id, s, pos) with pos = dense_rank by (cnt, tok)
+    * within id (ties by token — a total order both engines share). The
+    * dense rank gives every copy of a duplicated identical row the same
+    * positions, 1..s; a row number would number c copies c·s deep, and
+    * the prefix cut at s would keep only ⌈p/c⌉ distinct tokens. One
     * window function over one exchange+sort; `s` arrives narrow on the
     * token stream (see [[setSimTok]]) instead of a second window pass.
     * `joinType` is `inner` when `freq` covers every token (self-join /
@@ -1142,7 +1087,7 @@ object Dedup {
         .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
     joined
       .withColumn("pos",
-        row_number().over(Window.partitionBy("id").orderBy(col("cnt"), col("tok"))))
+        dense_rank().over(Window.partitionBy("id").orderBy(col("cnt"), col("tok"))))
       .select(col("tok"), col("id"), col("s"), col("pos"))
   }
 
@@ -1152,74 +1097,44 @@ object Dedup {
     */
   private[ops] def setSimPrefix(tok: DataFrame, freq: DataFrame,
                            num: Int, den: Int): DataFrame =
-    setSimSized(tok, freq)
-      .filter(col("pos") <= col("s") -
-        expr(s"($num * s + ${den - 1}) DIV $den") + 1)
+    setSimSized(tok, freq).filter(col("pos") <= setSimPrefixLen(num, den))
 
-  /** Native per-pair verification: fetch just the candidate documents'
-    * texts (broadcast semi-joins — each side scanned once, never
-    * shuffled) and compute the exact distinct-shingle overlap with the
-    * fused [[graft.functions.ShingleOverlap]] kernel, then the
-    * integer-exact Jaccard gate `den·|A∩B| ≥ num·|A∪B|` on its LONG
-    * counts. `docsA`/`docsB` are the id_a/id_b sides — identical for the
-    * self-join, per-table for the R-S form.
+  /** The prefix length `s − ⌈num·s/den⌉ + 1` of a set of size `s`, in
+    * integer arithmetic (a float ceil rounds up spuriously at exact
+    * multiples and shortens the prefix).
+    */
+  private def setSimPrefixLen(num: Int, den: Int): Column =
+    expr(s"s - ($num * s + ${den - 1}) DIV $den + 1")
+
+  /** Per-pair verification of TWO-TABLE candidates (id_a, id_b, s_a,
+    * s_b): fetch just the candidate documents' shingle sets from each
+    * side's [[setSimSets]] frame (broadcast semi-joins — each side
+    * scanned once, never shuffled), count |A∩B| with a codegen'd
+    * `array_intersect`, then apply the integer-exact Jaccard gate
+    * `den·|A∩B| ≥ num·|A∪B|` on LONG counts (|A∪B| = s_a + s_b − inter,
+    * carried from the candidate stage). Self-joins never come here: the
+    * block kernel ([[setSimSelfJoin]]) verifies inside its blocks.
     *
     * Why not the relational intersection count (join candidates back to
     * the (id, tok) table twice and group): that join materializes
     * Σ_cand s_a rows — measured 17.4M at sf0.1-twin scale, ~1.1 BILLION
-    * at ×64, whose sort spill exhausted the disk. The native kernel
-    * makes verification candidate-sized: one row per pair, two bounded
-    * text payloads, zero shingle shuffle — the exact move nearDupPairs
-    * made for the LSH tier (its scaladoc: "the 200× shingle blowup of
-    * the relational formulation never materializes"). The DuckDB oracle
-    * keeps the relational formulation — opposite plan, identical
-    * output, which is the point of the oracle.
+    * at ×64, whose sort spill exhausted the disk. Intersecting the
+    * fetched sets makes verification candidate-sized: one row per pair,
+    * two bounded payloads, zero shingle shuffle. The DuckDB oracle keeps
+    * the relational formulation — opposite plan, identical output, which
+    * is the point of the oracle.
     */
-  private[ops] def setSimVerify(cand: DataFrame, docsA: DataFrame, docsB: DataFrame,
-                           idCol: String, textCol: String,
-                           num: Int, den: Int, n: Int,
-                           detach: Boolean = false,
-                           releasables: Seq[DataFrame] = Seq.empty,
-                           preSetsA: Option[DataFrame] = None,
-                           preSetsB: Option[DataFrame] = None): DataFrame = {
-    // carry the candidate stage's set sizes through: |A∪B| = s_a+s_b−inter,
-    // so verification needs only the INTERSECTION per pair
+  private def setSimVerify(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
+                           num: Int, den: Int, detach: Boolean = false,
+                           releasables: Seq[DataFrame] = Seq.empty): DataFrame = {
     val pairs = cand.select(col("id_a"), col("id_b"), col("s_a"), col("s_b"))
       .persist(Disk)
-    // each candidate document's distinct shingle set is computed ONCE at
-    // fetch time (a candidate doc appears in ~(pairs/docs) pairs — r18
-    // profile: re-shingling per PAIR via the fused text kernel made
-    // verification ~70% of q_setsim_join); the per-pair kernel is then
-    // a codegen'd array_intersect over the pre-tokenized sets. Counts are
-    // bit-identical to the text kernel's: same distinct shingle sets,
-    // same integer gate. `preSetsA`/`preSetsB` (r19): a caller whose
-    // prefix stage already tokenized the side hands its persisted
-    // [[setSimSets]] frame here, so the fetch reads cached arrays
-    // instead of re-shingling every candidate doc a second time — the
-    // arrays are definitionally the same sets, counts unchanged.
-    def sideSets(df: DataFrame, pre: Option[DataFrame],
-                 ids: DataFrame): DataFrame =
-      pre.getOrElse(setSimSets(df, idCol, textCol, n))
-        .select(col("id").as("__cid"), col("__sh"))
-        .join(broadcast(ids.distinct()), Seq("__cid"), "left_semi")
-    // self-join verification (docsA eq docsB): ONE corpus scan against
-    // the union of both pair sides — the candidateTexts contract — and
-    // both joins read the cached fetch; the R-S form keeps per-side
-    // scans (different tables). r18, guide §2.4.
-    val (txtA, txtB, toRelease) =
-      if (docsA eq docsB) {
-        val txt = sideSets(docsA, preSetsA,
-          pairs.select(col("id_a").as("__cid"))
-            .union(pairs.select(col("id_b").as("__cid")))).persist(Disk)
-        (txt, txt, Seq(txt))
-      } else {
-        val ta = sideSets(docsA, preSetsA, pairs.select(col("id_a").as("__cid")))
-        val tb = sideSets(docsB, preSetsB, pairs.select(col("id_b").as("__cid")))
-        (ta, tb, Seq.empty[DataFrame])
-      }
+    def fetch(sets: DataFrame, id: String, sh: String): DataFrame =
+      sets.select(col("id").as(id), col("__sh").as(sh))
+        .join(broadcast(pairs.select(id).distinct()), Seq(id), "left_semi")
     val result = pairs
-      .join(txtA.select(col("__cid").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
-      .join(txtB.select(col("__cid").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
+      .join(fetch(setsA, "id_a", "__sha"), Seq("id_a"))
+      .join(fetch(setsB, "id_b", "__shb"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("__sha"), col("__shb"))).cast(LongType)
           .as("inter"),
@@ -1232,9 +1147,8 @@ object Dedup {
           .as("jaccard"))
     // detach = the index-probing caller (setSimAgainstIndex): see
     // eagerlyDetachedWith for why its results must not enter the cache
-    if (detach)
-      eagerlyDetachedWith(result, () => (), pairs +: (toRelease ++ releasables): _*)
-    else eagerly(result, pairs +: (toRelease ++ releasables): _*)
+    if (detach) eagerlyDetachedWith(result, () => (), pairs +: releasables: _*)
+    else eagerly(result, pairs +: releasables: _*)
   }
 
   /** Distinct shingle sets of just the candidate-pair documents —
@@ -1383,8 +1297,8 @@ object Dedup {
     setSimVerify(
       setSimAgainstIndexCandidates(probes, idCol, textCol, indexPath,
         num, den, n, preSets = Some(probeSets)),
-      probes, corpus, idCol, textCol, num, den, n, detach = true,
-      releasables = Seq(probeSets), preSetsA = Some(probeSets))
+      probeSets, setSimSets(corpus, idCol, textCol, n), num, den, detach = true,
+      releasables = Seq(probeSets))
   }
 
   /** The candidate-generation stage of [[setSimAgainstIndex]] as an
@@ -1412,25 +1326,9 @@ object Dedup {
     val freq = spark.read.parquet(s"$indexPath/freq")
     val probeTok = preSets.map(setSimTokFromSets)
       .getOrElse(setSimTok(probes, idCol, textCol, n))
-    val preA = setSimSized(probeTok, freq, "left")
-      .filter(col("pos") <= col("s") -
-        expr(s"($num * s + ${den - 1}) DIV $den") + 1)
-    val preB = idxTok
-      .filter(col("pos") <= col("s") -
-        expr(s"($num * s + ${den - 1}) DIV $den") + 1)
-    val cand = broadcast(preA).as("a").join(preB.as("b"),
-        col("a.tok") === col("b.tok"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.s").as("s_a"), col("b.s").as("s_b"),
-        (lit(1L) + least(col("a.s") - col("a.pos"), col("b.s") - col("b.pos")))
-          .as("__ub"))
-      .filter(lit(den.toLong) * least(col("s_a"), col("s_b")) >=
-        lit(num.toLong) * greatest(col("s_a"), col("s_b")))
-      .filter(lit((num + den).toLong) * col("__ub") >=
-        lit(num.toLong) * (col("s_a") + col("s_b")))
-      .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"))
-      .distinct()
-    cand
+    val cut = col("pos") <= setSimPrefixLen(num, den)
+    setSimPrefixPairs(broadcast(setSimSized(probeTok, freq, "left").filter(cut)),
+      idxTok.filter(cut), lit(true), num, den)
   }
 
   /** Drift gauge for the FROZEN canonical order of a set-sim prefix
@@ -1506,7 +1404,7 @@ object Dedup {
     // counts over the SAME rows (each sampled doc's token list is
     // complete in the index, so the per-doc window is exact)
     val samp = tokAll.filter(pmod(col("id"), lit(sampleMod)) === 0)
-    val cut = expr(s"s - ($num * s + ${den - 1}) DIV $den + 1")
+    val cut = setSimPrefixLen(num, den)
     def mass(pref: DataFrame, out: String): DataFrame =
       pref.groupBy("tok").agg(count(lit(1)).as("p"))
         .agg(coalesce(sum((col("p").cast(dec) * (col("p").cast(dec) - 1) /
@@ -1514,7 +1412,7 @@ object Dedup {
     val mS = mass(samp.filter(col("pos") <= cut), "ms")
     val mF = mass(samp.join(fresh, Seq("tok"))
       .withColumn("pos2",
-        row_number().over(Window.partitionBy("id").orderBy(col("fcnt"), col("tok"))))
+        dense_rank().over(Window.partitionBy("id").orderBy(col("fcnt"), col("tok"))))
       .filter(col("pos2") <= cut), "mf")
     val nD = col("n").cast(dec)
     val bigD = nD * nD * nD - nD // n(n²−1), exact in decimal
@@ -1589,54 +1487,6 @@ object Dedup {
           (col("__na") + col("__nb") - col("__i")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
     eagerlyDetachedWith(result, recordCap, Seq(pairs, newTxt, oldTxt) ++ counts: _*)
-  }
-
-  /** All-pairs EXACT n-gram Jaccard at `threshold`, via prefix filtering
-    * (the PPJoin candidate condition): order each document's shingles by
-    * a global total order (md5 — uniform, engine-free); any pair with
-    * Jaccard >= t MUST share a shingle within each side's first
-    * |S| - ceil(t*|S|) + 1 shingles, so the candidate self-join runs on
-    * prefixes only (~(1-t) of the rows, (1-t)^2 of the pair blowup) and
-    * the verified result is identical to the naive all-pairs join.
-    * Still inherently quadratic in prefix document frequency — for
-    * collision-driven cost at corpus scale use [[nearDupPairs]].
-    */
-  def jaccardAllPairs(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double): DataFrame = {
-    val sh = shingles(docs, idCol, textCol).persist(Disk)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(md5(col("shingle")), col("shingle"))
-    val prefix = sh
-      .withColumn("__rk", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
-      .filter(col("__rk") <= col("__n") - ceil(col("__n") * threshold) + 1)
-      .select("id", "shingle")
-      .persist(Disk)
-    val pairs = prefix.select(col("id").as("id_a"), col("shingle"))
-      .join(prefix.select(col("id").as("id_b"), col("shingle")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // verification is per-pair array_intersect over shingle sets computed
-    // once per candidate doc (identical values to the relational
-    // jaccardForPairs formulation AND the fused text kernel — see
-    // candidateShingles), broadcast joins + local compare instead of
-    // shingle-keyed shuffles; candidate sets come from one semi-joined
-    // corpus scan
-    val pairsC = pairs.persist(Disk)
-    val txt = candidateShingles(docs, idCol, textCol, pairsC)
-    val result = pairsC
-      .join(txt.select(col("__cid").as("id_a"), col("__n").as("__na"),
-        col("__sh").as("__sha")), Seq("id_a"))
-      .join(txt.select(col("__cid").as("id_b"), col("__n").as("__nb"),
-        col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("__na"), col("__nb"),
-        size(array_intersect(col("__sha"), col("__shb"))).as("__i"))
-      .select(col("id_a"), col("id_b"),
-        (col("__i").cast("double") /
-          (col("__na") + col("__nb") - col("__i")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    eagerly(result, sh, prefix, pairsC, txt)
   }
 
   /** Dedup clusters: connected components over the near-dup pair graph,

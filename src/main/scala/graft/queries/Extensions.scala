@@ -2273,9 +2273,12 @@ object Extensions {
           .cast("int"), lit(3))
         val twins = docs.select((col("doc_id") + 10000000L).as("doc_id"),
           array_join(slice(words, lit(1), keep), " ").as("text"))
+        // the pair output is small: one single-partition exchange orders
+        // it, where an orderBy's range-partition sampler would run the
+        // block kernel a second time
         Dedup.setSimJoinExact(docs.unionAll(twins), "doc_id", "text",
             num = 7, den = 10)
-          .orderBy("id_a", "id_b")
+          .repartition(1).sortWithinPartitions("id_a", "id_b")
       },
       Some("""WITH twins AS (SELECT doc_id + 10000000 AS doc_id,
              |array_to_string(list_slice(string_split(text, ' '), 1,
@@ -2438,10 +2441,9 @@ object Extensions {
     // both tiers face matches spanning the swept thresholds; LSH
     // geometry is the deployed default (6 components, 3 bands of 2),
     // so the recovered counts price the PRODUCTION knob. Counts are
-    // driver-sized; the corpus-wide exact stages (explode, vocabulary
-    // frequencies, the canonical-order window) run ONCE via
-    // Dedup.setSimExactCounts — each threshold pays only its prefix
-    // cut, candidate join, and candidate-sized verification — and the
+    // driver-sized; Dedup.setSimExactCounts tokenizes the corpus ONCE
+    // and takes each threshold's exact pairs from the block kernel (the
+    // candidate column is the relational prefix join's count), and the
     // LSH pipeline runs once total.
     Q("q_setsim_vs_lsh",
       (s, d) => {
@@ -2817,12 +2819,16 @@ object Extensions {
              |FROM lab GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " "))),
 
     // Exact all-pairs n-gram Jaccard — the ground truth the LSH pipeline
-    // approximates (oracle-scale only; quadratic in shingle frequency).
+    // approximates — from the exact set-sim block kernel at 9/10 (the
+    // integer gate 10·inter ≥ 9·uni admits exactly the pairs whose
+    // double ratio reaches 0.9), rounded once from the LONG counts.
     Q("q_ngram_jaccard",
-      (s, d) => Dedup.jaccardAllPairs(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.9)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("id_a", "id_b"),
+      (s, d) => Dedup.setSimSelfJoin(
+          Dedup.setSimSets(Tables.documents(s, d), "doc_id", "text", 3), 9, 10)
+        .select(col("id_a"), col("id_b"),
+          round(col("inter").cast(DoubleType) / col("uni").cast(DoubleType), 4)
+            .as("jaccard"))
+        .repartition(1).sortWithinPartitions("id_a", "id_b"),
       Some(s"""WITH $ShinglesCte,
              |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
              |inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS i FROM sh a

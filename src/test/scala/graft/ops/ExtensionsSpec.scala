@@ -208,7 +208,7 @@ class ExtensionsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val lsh = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = Dedup.jaccardAllPairs(docs, "doc_id", "text", threshold = 0.9)
+    val exact = Dedup.setSimJoinExact(docs, "doc_id", "text", 9, 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty)
     // LSH candidates ⊆ verified exact pairs, and recall is high at j≥0.9
@@ -218,7 +218,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("prefix-filtered exact jaccard == naive all-pairs join") {
     val docs = Tables.documents(spark, sf)
-    val prefix = Dedup.jaccardAllPairs(docs, "doc_id", "text", threshold = 0.9)
+    val prefix = Dedup.setSimJoinExact(docs, "doc_id", "text", 9, 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // naive candidate generation: full shingle self-join (no prefix cut)
     val sh = Dedup.shingles(docs, "doc_id", "text")
@@ -1196,12 +1196,23 @@ class ExtensionsSpec extends SparkSpec {
       val keep = math.max(math.ceil(w.length * (0.5 + (id % 10) * 0.05)).toInt, 3)
       (id + 10000000L, w.take(keep).mkString(" "))
     }
-    val corpus = (docs ++ twins).toSeq.toDF("doc_id", "text")
-    def cands(positional: Boolean) = graft.ops.Dedup.setSimCandidates(
-        corpus, "doc_id", "text", 7, 10, positionalFilter = positional)
+    val tok = Dedup.setSimTokFromSets(Dedup.setSimSets(
+      (docs ++ twins).toSeq.toDF("doc_id", "text"), "doc_id", "text", 3))
+    val prefix = Dedup.setSimPrefix(tok, tok.groupBy("tok").agg(count(lit(1)).as("cnt")), 7, 10)
+      .persist()
+    val pruned = Dedup.setSimCandFromPrefix(prefix, 7, 10)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val pruned = cands(positional = true)
-    val full = cands(positional = false)
+    // the unfiltered candidates, built on the driver from the same
+    // prefix rows: every pair sharing a prefix token that passes the
+    // length filter
+    val full = prefix.select($"tok", $"id", $"s").as[(String, Long, Long)].collect()
+      .groupBy(_._1).values.flatMap { rows =>
+        for {
+          (_, a, sa) <- rows.toSeq; (_, b, sb) <- rows.toSeq
+          if a < b && 10L * math.min(sa, sb) >= 7L * math.max(sa, sb)
+        } yield (a, b)
+      }.toSet
+    prefix.unpersist()
     assert(pruned.subsetOf(full), "positional filter may only remove candidates")
     assert(pruned.size < full.size,
       s"positional filter pruned nothing (${full.size} candidates)")
@@ -1324,6 +1335,33 @@ class ExtensionsSpec extends SparkSpec {
     assert(direct.nonEmpty, "fixture produced no qualifying pairs")
     assert(indexed == direct,
       s"missed ${(direct -- indexed).take(5)}; spurious ${(indexed -- direct).take(5)}")
+  }
+
+  test("setSimJoinExactRS and setSimAgainstIndex on duplicated identical rows == " +
+    "cross sweep, copies multiplied") {
+    // a probe or corpus id present c times (identical copies) holds the
+    // same prefix as one copy, and each pair returns once per
+    // combination of copies (c_a·c_b rows), as in the self-join
+    import SetSimBlockSpec._
+    val corpusRows = duplicatedOf(baseOf(twinCorpus(spark, sf)))
+    val probeRows = corpusRows.map { case (id, t) => (Long.box(id + 20000000L), t) }
+    val (probes, corpus) = (frame(spark, probeRows), frame(spark, corpusRows))
+    val idx = java.nio.file.Files.createTempDirectory("setsim_dup_idx").toString + "/idx"
+    Dedup.writeSetSimIndex(corpus, "doc_id", "text", idx)
+    for ((num, den) <- Seq((7, 10), (9, 10))) {
+      val want = rows(sweep(probeRows, corpusRows, num, den, self = false)
+        .toDF("id_a", "id_b", "inter", "uni")
+        .select($"id_a", $"id_b",
+          round($"inter".cast("double") / $"uni".cast("double"), 6).as("jaccard")))
+      assert(want.nonEmpty, s"no cross pairs at $num/$den")
+      for ((name, got) <- Seq(
+          "setSimJoinExactRS" ->
+            rows(Dedup.setSimJoinExactRS(probes, corpus, "doc_id", "text", num, den)),
+          "setSimAgainstIndex" ->
+            rows(Dedup.setSimAgainstIndex(probes, "doc_id", "text", idx, corpus, num, den))))
+        assert(got == want, s"$name at $num/$den: ${got.size} rows vs ${want.size}; " +
+          s"missing ${want.diff(got).take(5)}, extra ${got.diff(want).take(5)}")
+    }
   }
 
   test("setSim index append: frozen-order batches serve losslessly") {

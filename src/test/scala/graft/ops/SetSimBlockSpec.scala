@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,55 +8,27 @@ import graft.{SparkSpec, Tables}
 
 /** Differential test of the block-local PPJoin behind
   * `Dedup.setSimJoinExact`: on the twin corpora and on degenerate
-  * fixtures it must return the rows of the prefix self-join → distinct →
-  * fetch-join chain it replaced, which is kept here as the reference.
+  * fixtures it must return the rows of a driver-side all-pairs sweep
+  * (`SetSimBlockSpec.sweep`). The tests named "== join chain" compare
+  * with the prefix self-join → distinct → fetch-join chain the kernel
+  * replaced; on those fixtures the chain returned exactly the sweep's
+  * rows, and the sweep is now the reference.
   */
 class SetSimBlockSpec extends SparkSpec {
   import spark.implicits._
+  import SetSimBlockSpec._
 
-  private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  /** The sweep's pairs of `docs` at num/den, `jaccard` rounded by Spark
+    * as the join rounds it.
+    */
+  private def swept(docs: Seq[Doc], num: Int, den: Int): Seq[(Long, Long, Long)] =
+    rows(sweep(docs, docs, num, den, self = true).toDF("id_a", "id_b", "inter", "uni")
+      .select($"id_a", $"id_b",
+        round($"inter".cast("double") / $"uni".cast("double"), 6).as("jaccard")))
 
-  // ---- reference: the prefix self-join → verify chain ---------------------
-
-  private def setSimJoinExactChain(docs: DataFrame, idCol: String, textCol: String,
-                                   num: Int, den: Int, n: Int = 3): DataFrame = {
-    import Dedup._
-    require(num >= 1 && den >= num,
-      s"need a threshold in (0, 1]: got $num/$den")
-    // documents with fewer than n words have no shingle set and are
-    // absent from the join (the minhash-tier contract)
-    // the corpus is TOKENIZED once per join (r19): the persisted per-doc
-    // array frame feeds the frequency aggregate and the order join (as
-    // cheap explodes of cached arrays) AND the verification fetch (the
-    // arrays are the sets) — the r18 shape persisted the exploded rows
-    // instead, which left verification re-shingling every candidate doc
-    // from raw text (profiled as q_setsim_join's largest wall stage)
-    val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
-    val tok = setSimTokFromSets(sets)
-    val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    // the prefix frame feeds BOTH sides of the candidate self-join, and
-    // the broadcast build side defeats exchange reuse — the r18 plan
-    // capture (plans/r18/setsim_candidates_stage.txt) shows the whole
-    // explode → frequency → order-window pipeline planned TWICE. Persist
-    // it once; released after the verify stage materializes.
-    val prefix = setSimPrefix(tok, freq, num, den).persist(Disk)
-    setSimVerify(setSimCandFromPrefix(prefix, num, den, positionalFilter = true),
-      docs, docs, idCol, textCol, num, den, n,
-      releasables = Seq(sets, prefix),
-      preSetsA = Some(sets), preSetsB = Some(sets))
-  }
-
-  /** Full rows as a sorted multiset, `jaccard` by its bits. */
-  private def rows(df: DataFrame): Seq[(Long, Long, Long)] = {
-    val out = df.select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect()
-      .map { case (a, b, j) => (a, b, java.lang.Double.doubleToLongBits(j)) }.sorted.toSeq
-    df.unpersist()
-    out
-  }
-
-  private def same(docs: DataFrame, num: Int, den: Int, minPairs: Int = 1): Seq[(Long, Long, Long)] = {
-    val want = rows(setSimJoinExactChain(docs, "doc_id", "text", num, den))
-    val got = rows(Dedup.setSimJoinExact(docs, "doc_id", "text", num, den))
+  private def same(docs: Seq[Doc], num: Int, den: Int, minPairs: Int = 1): Seq[(Long, Long, Long)] = {
+    val want = swept(docs, num, den)
+    val got = rows(Dedup.setSimJoinExact(frame(spark, docs), "doc_id", "text", num, den))
     assert(got == want, s"rows differ at $num/$den:\n${got.diff(want).take(5)}\n" +
       s"vs\n${want.diff(got).take(5)}")
     assert(want.size >= minPairs, s"${want.size} pairs: the fixture would not exercise the kernel")
@@ -65,31 +37,11 @@ class SetSimBlockSpec extends SparkSpec {
 
   // ---- fixtures ----------------------------------------------------------
 
-  /** q_setsim_join's corpus: every document plus a prefix-keep twin. */
-  private def twins(docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
-    val keep = greatest(ceil(size(words) *
-        (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
-      .cast("int"), lit(3))
-    docs.unionAll(docs.select((col("doc_id") + 10000000L).as("doc_id"),
-      array_join(slice(words, lit(1), keep), " ").as("text")))
-  }
-
-  private val Schema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType)))
-
-  private def frame(rows: Seq[(java.lang.Long, String)]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (id, t) => Row(id, t) }, 3), Schema)
-
   /** The sf0.001 twin corpus as rows, documents first. */
-  private lazy val corpus: Seq[(java.lang.Long, String)] =
-    twins(Tables.documents(spark, sf).select($"doc_id", $"text"))
-      .as[(Long, String)].collect().toSeq.sortBy(_._1).map { case (id, t) => (Long.box(id), t) }
+  private lazy val corpus: Seq[Doc] = twinCorpus(spark, sf)
 
   /** Its first 60 documents and their twins. */
-  private lazy val base: Seq[(java.lang.Long, String)] =
-    corpus.take(60) ++ corpus.filter(_._1 >= 10000000L).take(60)
+  private lazy val base: Seq[Doc] = baseOf(corpus)
 
   private val Thresholds = Seq((7, 10), (1, 2), (9, 10), (1, 1))
 
@@ -98,29 +50,44 @@ class SetSimBlockSpec extends SparkSpec {
   for (dir <- Seq(sf, new java.io.File(sf).getParent + "/sf0.01"); (num, den) <- Thresholds)
     test(s"setSimJoinExact == join chain on the ${new java.io.File(dir).getName} " +
       s"twin corpus at $num/$den") {
-      same(twins(Tables.documents(spark, dir).select($"doc_id", $"text")), num, den)
+      same(twinCorpus(spark, dir), num, den)
     }
+
+  test("setSimExactCounts and lshGeometryFrontier count setSimJoinExact's pairs " +
+    "on the sf0.001 twin corpus") {
+    val docs = frame(spark, corpus)
+    val joined = Thresholds.map { case (num, den) =>
+      Dedup.setSimJoinExact(docs, "doc_id", "text", num, den).count() }
+    val counts = Dedup.setSimExactCounts(docs, "doc_id", "text", Thresholds)
+    assert(counts.map(_._4) == joined, s"setSimExactCounts $counts vs $joined")
+    assert(counts.forall { case (_, _, cand, pairs) => cand >= pairs }, counts)
+    val frontier = Dedup.lshGeometryFrontier(docs, "doc_id", "text", Thresholds)
+      .select($"threshold", $"exact_pairs").distinct().as[(Double, Long)].collect().toMap
+    assert(frontier == Thresholds.map { case (num, den) => num.toDouble / den }.zip(joined).toMap,
+      s"lshGeometryFrontier $frontier vs $joined")
+    assert(joined.forall(_ > 0), joined)
+  }
 
   // ---- degenerate fixtures -------------------------------------------------
 
   test("setSimJoinExact == join chain on an empty frame") {
-    for ((num, den) <- Thresholds) same(frame(Nil), num, den, minPairs = 0)
+    for ((num, den) <- Thresholds) same(Nil, num, den, minPairs = 0)
   }
 
   test("setSimJoinExact == join chain with documents of fewer than 3 words") {
-    val short = Seq[(java.lang.Long, String)]((900L, ""), (901L, "a"), (902L, "a b"),
+    val short = Seq[Doc]((900L, ""), (901L, "a"), (902L, "a b"),
       (903L, "a b"), (904L, "a b c"), (905L, "a b c"), (906L, " "))
-    for ((num, den) <- Thresholds) same(frame(base ++ short), num, den)
+    for ((num, den) <- Thresholds) same(base ++ short, num, den)
     // the two 3-word documents are one pair at J = 1
-    assert(same(frame(short), 1, 1) == Seq((904L, 905L, java.lang.Double.doubleToLongBits(1.0))))
+    assert(same(short, 1, 1) == Seq((904L, 905L, java.lang.Double.doubleToLongBits(1.0))))
   }
 
   test("setSimJoinExact == join chain with NULL text and NULL ids") {
     // 912 repeats the first document's text: at 1/1 it is the one pair
-    val nulls = Seq[(java.lang.Long, String)]((910L, null), (911L, null), (912L, base.head._2),
+    val nulls = Seq[Doc]((910L, null), (911L, null), (912L, base.head._2),
       (null, base.head._2), (null, base.head._2), (null, base(70)._2), (null, null))
     for ((num, den) <- Thresholds) {
-      val got = same(frame(base ++ nulls), num, den)
+      val got = same(base ++ nulls, num, den)
       assert(!got.exists { case (a, b, _) => a == 910L || b == 910L || a == 911L || b == 911L })
     }
   }
@@ -128,22 +95,16 @@ class SetSimBlockSpec extends SparkSpec {
   test("setSimJoinExact == join chain with one block of 300 identical documents") {
     val text = base.head._2
     val giant = (1 to 300).map(i => (Long.box(1000L + i), text))
-    val got = same(frame(giant ++ base.take(20)), 7, 10)
+    val got = same(giant ++ base.take(20), 7, 10)
     assert(got.count { case (a, b, _) => a > 1000L && b <= 1300L } == 300 * 299 / 2)
   }
 
   // Duplicated identical rows are one document per id, and each pair is
-  // returned once per combination of copies. At 1/1 every prefix is one
-  // element, and the chain agrees. Below 1/1 the chain numbers a
-  // duplicated id's rows c·s positions deep but cuts the prefix at s, so
-  // its prefix holds only ⌈p/c⌉ distinct shingles and it misses pairs;
-  // there the expected rows are the driver-side all-pairs sweep.
-  private lazy val duplicated: Seq[(java.lang.Long, String)] =
-    base ++ base.take(8) ++ base.slice(60, 64) ++ base.take(2) ++
-      base.take(4).map { case (id, t) => (Long.box(id + 500L), t) }
+  // returned once per combination of copies.
+  private lazy val duplicated: Seq[Doc] = duplicatedOf(base)
 
   test("setSimJoinExact == join chain with duplicated identical rows at 1/1") {
-    val got = same(frame(duplicated), 1, 1)
+    val got = same(duplicated, 1, 1)
     val one = java.lang.Double.doubleToLongBits(1.0)
     // the first document has three copies, and its text under id + 500 one
     val first = base.head._1.longValue
@@ -151,27 +112,7 @@ class SetSimBlockSpec extends SparkSpec {
   }
 
   test("setSimJoinExact with duplicated identical rows == all-pairs sweep, copies multiplied") {
-    val docs = frame(duplicated)
-    val copies = duplicated.groupBy(_._1.longValue).map { case (id, rs) => id -> rs.size }
-    val sets = duplicated.distinct.map { case (id, t) =>
-      id.longValue -> t.split(" ", -1).toSeq.sliding(3).filter(_.size == 3)
-        .map(_.mkString(" ")).toSet
-    }
-    for ((num, den) <- Seq((7, 10), (9, 10))) {
-      val brute = for {
-        (a, sa) <- sets; (b, sb) <- sets if a < b
-        inter = (sa & sb).size.toLong; uni = (sa | sb).size.toLong
-        if uni > 0 && den * inter >= num * uni
-        _ <- 0 until copies(a) * copies(b)
-      } yield (a, b, inter, uni)
-      val want = rows(brute.toDF("id_a", "id_b", "inter", "uni")
-        .select($"id_a", $"id_b", round($"inter".cast("double") / $"uni".cast("double"), 6)
-          .as("jaccard")))
-      val got = rows(Dedup.setSimJoinExact(docs, "doc_id", "text", num, den))
-      assert(got == want, s"rows differ at $num/$den:\n${got.diff(want).take(5)}\n" +
-        s"vs\n${want.diff(got).take(5)}")
-      assert(want.nonEmpty, s"no pairs at $num/$den")
-    }
+    for ((num, den) <- Seq((7, 10), (9, 10))) same(duplicated, num, den)
   }
 
   // ---- the pair kernel -----------------------------------------------------
@@ -180,10 +121,7 @@ class SetSimBlockSpec extends SparkSpec {
     "and only the first common element's block verifies") {
     // every pair that shares a prefix element, under a rarest-first
     // order of this fixture, checked in each block it meets
-    val sets = corpus.map { case (id, t) =>
-      id.longValue -> t.split(" ", -1).toSeq.sliding(3).filter(_.size == 3)
-        .map(_.mkString(" ")).toSet
-    }
+    val sets = corpus.map { case (id, t) => id.longValue -> shingleSet(t) }
     val freq = sets.flatMap(_._2).groupBy(identity).map { case (t, ts) => t -> ts.size }
     val order = freq.keys.toSeq.sortBy(t => (freq(t), t)).zipWithIndex.toMap
     val pruned = Seq((7, 10), (1, 2), (9, 10)).map { case (num, den) =>
@@ -220,4 +158,82 @@ class SetSimBlockSpec extends SparkSpec {
     // at 9/10 the prefixes are too short for the bound to bite here
     assert(pruned.take(2).forall(_ > 0), s"pruned by position: $pruned")
   }
+}
+
+/** The set-sim fixtures and the driver-side all-pairs sweep, shared with
+  * the two-table tests in ExtensionsSpec.
+  */
+object SetSimBlockSpec {
+  type Doc = (java.lang.Long, String)
+
+  private val Schema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** `docs` as a (doc_id, text) frame of three partitions. */
+  def frame(spark: SparkSession, docs: Seq[Doc]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(docs.map { case (id, t) => Row(id, t) }, 3), Schema)
+
+  /** A pair frame's rows as a sorted multiset, `jaccard` by its bits;
+    * the frame is released.
+    */
+  def rows(df: DataFrame): Seq[(Long, Long, Long)] = {
+    import df.sparkSession.implicits._
+    val out = df.select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect()
+      .map { case (a, b, j) => (a, b, java.lang.Double.doubleToLongBits(j)) }.sorted.toSeq
+    df.unpersist()
+    out
+  }
+
+  /** The distinct word 3-grams of `text` under `split(text, " ", -1)`
+    * semantics; none for a NULL text.
+    */
+  def shingleSet(text: String): Set[String] =
+    if (text == null) Set.empty
+    else text.split(" ", -1).toSeq.sliding(3).filter(_.size == 3).map(_.mkString(" ")).toSet
+
+  /** (a, b, |A∩B|, |A∪B|) for every a of `left` and b of `right` (a < b
+    * when `self`) with den·|A∩B| ≥ num·|A∪B| over distinct 3-gram sets,
+    * once per combination of copies of the two rows; NULL ids never pair.
+    */
+  def sweep(left: Seq[Doc], right: Seq[Doc], num: Int, den: Int,
+            self: Boolean): Seq[(Long, Long, Long, Long)] = {
+    def sets(docs: Seq[Doc]) = docs.filter(_._1 != null).groupBy(_._1.longValue).toSeq
+      .map { case (id, rs) => (id, rs.size, shingleSet(rs.head._2)) }
+    val r = sets(right)
+    for {
+      (a, ca, sa) <- sets(left)
+      (b, cb, sb) <- r if !self || a < b
+      inter = (sa & sb).size.toLong
+      uni = sa.size + sb.size - inter if uni > 0 && den * inter >= num * uni
+      _ <- 0 until ca * cb
+    } yield (a, b, inter, uni)
+  }
+
+  /** q_setsim_join's corpus in `dir`: every document plus a prefix-keep
+    * twin, as rows sorted by id.
+    */
+  def twinCorpus(spark: SparkSession, dir: String): Seq[Doc] = {
+    import spark.implicits._
+    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
+    val words = split(col("text"), " ")
+    val keep = greatest(ceil(size(words) *
+        (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
+      .cast("int"), lit(3))
+    docs.unionAll(docs.select((col("doc_id") + 10000000L).as("doc_id"),
+        array_join(slice(words, lit(1), keep), " ").as("text")))
+      .as[(Long, String)].collect().toSeq.sortBy(_._1).map { case (id, t) => (Long.box(id), t) }
+  }
+
+  /** The first 60 documents of a twin corpus and their twins. */
+  def baseOf(corpus: Seq[Doc]): Seq[Doc] =
+    corpus.take(60) ++ corpus.filter(_._1 >= 10000000L).take(60)
+
+  /** Duplicated identical rows: the first two documents in three
+    * copies, the next six and four twins in two, and the first four
+    * texts once more under id + 500.
+    */
+  def duplicatedOf(base: Seq[Doc]): Seq[Doc] =
+    base ++ base.take(8) ++ base.slice(60, 64) ++ base.take(2) ++
+      base.take(4).map { case (id, t) => (Long.box(id + 500L), t) }
 }

@@ -893,6 +893,18 @@ class PlanSpec extends SparkSpec {
     val exchanges = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges <= 4, s"$exchanges exchanges:\n$p")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
+    // the pairs are ordered through one single-partition exchange: a
+    // range partitioning's sampler would run the block kernel twice
+    assert(!p.contains("rangepartitioning"), p)
+  }
+
+  test("q_ngram_jaccard on the set-sim block kernel: three hash exchanges, no join, no cache") {
+    // the exact all-pairs Jaccard is the self-join kernel at 9/10 — the
+    // md5-ordered prefix self-join and its persisted frames are gone
+    val p = plan("q_ngram_jaccard")
+    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"), p.take(1500))
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p.take(1500))
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
   }
 
   test("setsim decontamination: the probe prefix side broadcasts into the candidate join") {
