@@ -498,10 +498,13 @@ object Dedup {
     // reach banding), so the kernel's both-empty → null case cannot
     // occur here.
     lshPairOverlap(docs, idCol, textCol, k, bandRows, maxBucket)(_
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double")).as("jaccard"))
+      .select(col("id_a"), col("id_b"), OverlapJaccard)
       .filter(col("jaccard") >= threshold))
+
+  /** `jaccard` of a [[pairOverlap]] row: inter / (na + nb − inter). */
+  private val OverlapJaccard: Column =
+    (col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double"))
+      .as("jaccard")
 
   /** [[nearDupPairs]]' pipeline with the RAW intersection/union counts
     * (id_a, id_b, inter, uni) instead of the double jaccard, gated by
@@ -523,7 +526,7 @@ object Dedup {
     lshPairOverlap(docs, idCol, textCol, k, bandRows, maxBucket)(_
       .select(col("id_a"), col("id_b"), col("inter").cast(LongType).as("inter"),
         ((col("na") + col("nb")).cast(LongType) - col("inter").cast(LongType)).as("uni"))
-      .filter(lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni")))
+      .filter(setSimAtLeast(num, den)))
   }
 
   /** The shared body of the LSH pair measures ([[nearDupPairs]],
@@ -551,16 +554,25 @@ object Dedup {
     val (cand, counts, recordCap) =
       lshCandidatesReleasable(lshBands(sig, k, bandRows), maxBucket)
     val pairs = cand.persist(Disk)
-    val txt = candidateShingles(docs, idCol, textCol, pairs)
-    val overlap = pairs
-      .join(txt.select(col("__cid").as("id_a"), col("__n").as("na"),
-        col("__sh").as("__sha")), Seq("id_a"))
-      .join(txt.select(col("__cid").as("id_b"), col("__n").as("nb"),
-        col("__sh").as("__shb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("na"), col("nb"),
-        size(array_intersect(col("__sha"), col("__shb"))).as("inter"))
-    eagerlyWith(tail(overlap), recordCap, Seq(sig, pairs, txt) ++ counts: _*)
+    val txt = candidateShingles(docs, idCol, textCol,
+      pairs.select(col("id_a").as("__cid")).union(pairs.select(col("id_b").as("__cid"))))
+    eagerlyWith(tail(pairOverlap(pairs, "id_a", txt, "id_b", txt)), recordCap,
+      Seq(sig, pairs, txt) ++ counts: _*)
   }
+
+  /** (a, b, na, nb, inter) per `pairs(a, b)` row: both documents'
+    * distinct-shingle set sizes from their [[candidateShingles]] frames
+    * and |A∩B|, intersected locally by a codegen'd `array_intersect`.
+    */
+  private def pairOverlap(pairs: DataFrame, a: String, txtA: DataFrame,
+                          b: String, txtB: DataFrame): DataFrame =
+    pairs
+      .join(txtA.select(col("__cid").as(a), col("__n").as("na"),
+        col("__sh").as("__sha")), Seq(a))
+      .join(txtB.select(col("__cid").as(b), col("__n").as("nb"),
+        col("__sh").as("__shb")), Seq(b))
+      .select(col(a), col(b), col("na"), col("nb"),
+        size(array_intersect(col("__sha"), col("__shb"))).as("inter"))
 
   /** EXACT set-similarity self-join — every pair with Jaccard ≥
     * num/den over DISTINCT word n-gram shingle sets, with NO miss
@@ -651,8 +663,8 @@ object Dedup {
   /** [[setSimJoinExact]]'s pairs as LONG (id_a, id_b, inter, uni) from a
     * [[setSimSets]] frame — the one engine of every exact set-sim
     * SELF-join: the tier sweeps ([[setSimExactCounts]],
-    * [[lshGeometryFrontier]]) hand it their persisted frame once per
-    * threshold, so the corpus is tokenized once per sweep, and
+    * [[lshGeometryFrontier]]) run it once per sweep over their persisted
+    * frame ([[setSimSweepPairs]]), and
     * q_ngram_jaccard rounds its own measure from the counts.
     */
   private[graft] def setSimSelfJoin(sets: DataFrame, num: Int, den: Int): DataFrame = {
@@ -881,33 +893,60 @@ object Dedup {
       .distinct()
 
   /** Candidate and verified-pair COUNTS per threshold, one tokenization:
-    * the per-doc shingle sets are built once (persisted) and each
-    * threshold takes its exact pairs from the block kernel
-    * ([[setSimSelfJoin]]) over them. The candidate count is the
-    * relational prefix join's ([[setSimCandFromPrefix]] over the
-    * `(cnt, tok)` positions, also persisted once per sweep): a candidate
-    * count is where an exact similarity join's cost lives, so it IS the
-    * price of losslessness the tier-pricing query (q_setsim_vs_lsh)
-    * weighs against the LSH tier's. Returns (num, den, candidates,
-    * pairs) per input threshold; `pairs` equals [[setSimJoinExact]]'s
-    * row count.
+    * the per-doc shingle sets are built once (persisted) and the block
+    * kernel runs once for the whole sweep ([[setSimSweepPairs]]). The
+    * candidate count is the relational prefix join's
+    * ([[setSimCandFromPrefix]] over the `(cnt, tok)` positions, also
+    * persisted once per sweep): a candidate count is where an exact
+    * similarity join's cost lives, so it IS the price of losslessness the
+    * tier-pricing query (q_setsim_vs_lsh) weighs against the LSH tier's.
+    * Returns (num, den, candidates, pairs) per input threshold; `pairs`
+    * equals [[setSimJoinExact]]'s row count.
     */
   def setSimExactCounts(docs: DataFrame, idCol: String, textCol: String,
                         thresholds: Seq[(Int, Int)], n: Int = 3)
       : Seq[(Int, Int, Long, Long)] = {
+    require(thresholds.nonEmpty, "a threshold sweep needs a threshold")
     val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
     val tok = setSimTokFromSets(sets)
     val freq = tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val sized = setSimSized(tok, freq).persist(Disk)
-    try thresholds.map { case (num, den) =>
-      val nPairs = setSimSelfJoin(sets, num, den).count()
-      val nCand = setSimCandFromPrefix(
-        sized.filter(col("pos") <= setSimPrefixLen(num, den)), num, den).count()
-      (num, den, nCand, nPairs)
+    val pairs = setSimSweepPairs(sets, thresholds)
+    try {
+      val nPairs = setSimSweepCounts(pairs, thresholds)
+      thresholds.zip(nPairs).map { case ((num, den), np) =>
+        val nCand = setSimCandFromPrefix(
+          sized.filter(col("pos") <= setSimPrefixLen(num, den)), num, den).count()
+        (num, den, nCand, np)
+      }
     } finally {
+      pairs.unpersist(blocking = false)
       sized.unpersist(blocking = false)
       sets.unpersist(blocking = false)
     }
+  }
+
+  /** A threshold sweep's exact pairs from ONE block-kernel run
+    * ([[setSimSelfJoin]]) at the sweep's lowest threshold, persisted as
+    * LONG (id_a, id_b, inter, uni): each threshold's pairs are the integer
+    * filter [[setSimAtLeast]] over it, exact because the kernel's `inter`
+    * is exact for every pair it emits.
+    */
+  private def setSimSweepPairs(sets: DataFrame, thresholds: Seq[(Int, Int)]): DataFrame = {
+    val (num, den) = thresholds.reduce { (a, b) =>
+      if (a._1.toLong * b._2 <= b._1.toLong * a._2) a else b }
+    setSimSelfJoin(sets, num, den).persist(Disk)
+  }
+
+  /** den·inter ≥ num·uni over LONG counts: the pair is at Jaccard ≥ num/den. */
+  private def setSimAtLeast(num: Int, den: Int): Column =
+    lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni")
+
+  /** The rows of `pairs` at each threshold, in one job. */
+  private def setSimSweepCounts(pairs: DataFrame, thresholds: Seq[(Int, Int)]): Seq[Long] = {
+    val row = pairs.select(thresholds.map { case (num, den) =>
+      count(when(setSimAtLeast(num, den), lit(1))) }: _*).head()
+    thresholds.indices.map(row.getLong)
   }
 
   /** The LSH geometry FRONTIER priced against the exact tier — the
@@ -924,12 +963,14 @@ object Dedup {
     * closing the miss probability.
     *
     * Cost shape: the corpus is tokenized ONCE (persisted shingle sets)
-    * and each threshold's exact pairs come from the block kernel
-    * ([[setSimSelfJoin]]) over them, persisted as (id_a, id_b);
-    * `exact_pairs` equals [[setSimJoinExact]]'s row count. Signatures
-    * are computed once PER k (geometries sharing k reuse it) and only
-    * the banding re-runs per geometry; recovered counts are semi-joins
-    * of capped candidates against the exact pair sets. Counts are
+    * and the block kernel runs once for the sweep
+    * ([[setSimSweepPairs]]); `exact_pairs` equals [[setSimJoinExact]]'s
+    * row count. Signatures are computed once PER k (geometries sharing k
+    * reuse it) and only the banding re-runs per geometry; one action per
+    * geometry left-joins its capped candidates to the exact pairs (one
+    * row per pair: copies of a duplicated row collapse) and counts them
+    * and, per threshold, those that are exact pairs there, and the cap
+    * is recorded after it from the cached bucket counts. Counts are
     * driver-sized; the result frame is a literal table.
     */
   def lshGeometryFrontier(docs: DataFrame, idCol: String, textCol: String,
@@ -937,45 +978,49 @@ object Dedup {
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    require(thresholds.nonEmpty, "a threshold sweep needs a threshold")
     val sets = setSimSets(docs, idCol, textCol, n).persist(Disk)
+    val exact = setSimSweepPairs(sets, thresholds)
+    val distinctPairs = exact.distinct().persist(Disk)
     try {
-      val exact = thresholds.map { case (num, den) =>
-        val pairs = setSimSelfJoin(sets, num, den)
-          .select(col("id_a"), col("id_b")).persist(Disk)
-        (num, den, pairs, pairs.count())
-      }
-      try {
-        val rows = lshGeometries.groupBy(_._1).toSeq.sortBy(_._1)
-          .flatMap { case (k, geoms) =>
-            val sig = minhashSignatureNarrow(docs, idCol, textCol, n, k)
-              .persist(Disk)
-            try geoms.sortBy(_._2).flatMap { case (_, bandRows) =>
-              val cand = lshCandidates(lshBands(sig, k, bandRows), maxBucket)
-                .persist(Disk)
-              try {
-                val nCand = cand.count()
-                exact.map { case (num, den, pairs, nExact) =>
-                  val rec = cand.join(pairs, Seq("id_a", "id_b"), "left_semi")
-                    .count()
-                  (num.toDouble / den, k, bandRows, k / bandRows,
-                    lshCaptureProb(num.toDouble / den, bandRows, k / bandRows),
-                    nExact, rec, nCand)
-                }
-              } finally cand.unpersist(blocking = false)
-            } finally sig.unpersist(blocking = false)
-          }
-        rows.toDF("threshold", "k", "band_rows", "bands", "__cap",
-            "exact_pairs", "lsh_recovered", "lsh_candidates")
-          .select(col("threshold"), col("k"), col("band_rows"), col("bands"),
-            round(col("__cap"), 4).as("capture_at_t"),
-            col("exact_pairs"), col("lsh_recovered"),
-            when(col("exact_pairs") === 0, lit(null))
-              .otherwise(round(col("lsh_recovered").cast("double") /
-                col("exact_pairs").cast("double"), 4)).as("lsh_recall"),
-            col("lsh_candidates"))
-          .orderBy("threshold", "k", "band_rows")
-      } finally exact.foreach(_._3.unpersist(blocking = false))
-    } finally sets.unpersist(blocking = false)
+      val nExact = setSimSweepCounts(exact, thresholds)
+      val rows = lshGeometries.groupBy(_._1).toSeq.sortBy(_._1)
+        .flatMap { case (k, geoms) =>
+          val sig = minhashSignatureNarrow(docs, idCol, textCol, n, k)
+            .persist(Disk)
+          try geoms.sortBy(_._2).flatMap { case (_, bandRows) =>
+            val (cand, capped, recordCap) =
+              lshCandidatesReleasable(lshBands(sig, k, bandRows), maxBucket)
+            val counts = try {
+              val row = cand.join(distinctPairs, Seq("id_a", "id_b"), "left")
+                .select(count(lit(1)) +: thresholds.map { case (num, den) =>
+                  count(when(setSimAtLeast(num, den), lit(1))) }: _*)
+                .head()
+              recordCap()
+              row
+            } finally capped.foreach(_.unpersist(blocking = false))
+            thresholds.zip(nExact).zipWithIndex.map { case (((num, den), ne), i) =>
+              (num.toDouble / den, k, bandRows, k / bandRows,
+                lshCaptureProb(num.toDouble / den, bandRows, k / bandRows),
+                ne, counts.getLong(i + 1), counts.getLong(0))
+            }
+          } finally sig.unpersist(blocking = false)
+        }
+      rows.toDF("threshold", "k", "band_rows", "bands", "__cap",
+          "exact_pairs", "lsh_recovered", "lsh_candidates")
+        .select(col("threshold"), col("k"), col("band_rows"), col("bands"),
+          round(col("__cap"), 4).as("capture_at_t"),
+          col("exact_pairs"), col("lsh_recovered"),
+          when(col("exact_pairs") === 0, lit(null))
+            .otherwise(round(col("lsh_recovered").cast("double") /
+              col("exact_pairs").cast("double"), 4)).as("lsh_recall"),
+          col("lsh_candidates"))
+        .orderBy("threshold", "k", "band_rows")
+    } finally {
+      distinctPairs.unpersist(blocking = false)
+      exact.unpersist(blocking = false)
+      sets.unpersist(blocking = false)
+    }
   }
 
   /** EXACT two-table (R-S) set-similarity join — [[setSimJoinExact]]'s
@@ -1141,7 +1186,7 @@ object Dedup {
         (col("s_a") + col("s_b")).as("__ss"))
       .select(col("id_a"), col("id_b"), col("inter"),
         (col("__ss") - col("inter")).as("uni"))
-      .filter(lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni"))
+      .filter(setSimAtLeast(num, den))
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") / col("uni").cast("double"), 6)
           .as("jaccard"))
@@ -1151,12 +1196,12 @@ object Dedup {
     else eagerly(result, pairs +: releasables: _*)
   }
 
-  /** Distinct shingle sets of just the candidate-pair documents —
-    * (__cid, __n, __sh): ONE corpus scan (a broadcast semi-join against
-    * the candidate id set) instead of the two full scans that joining
-    * each pair side directly against the corpus would cost — at 100 TB
-    * the verification stage reads the corpus once, and the surviving
-    * table is O(candidate docs), cached. Tokenized AT FETCH TIME (r18):
+  /** Distinct shingle sets of just the candidate documents, those whose
+    * id is in `ids(__cid)` — (__cid, __n, __sh): ONE corpus scan (a
+    * broadcast semi-join against the distinct ids) instead of the two
+    * full scans that joining each pair side directly against the corpus
+    * would cost — at 100 TB the verification stage reads the corpus
+    * once, and the surviving table is O(candidate docs), cached. Tokenized AT FETCH TIME (r18):
     * a candidate doc appears in (pairs / docs) pairs on average, and the
     * per-pair text kernels re-shingled both sides every time — the r18
     * profile had that re-shingling as ~70% of the exact set-sim join.
@@ -1167,15 +1212,12 @@ object Dedup {
     * one wordStarts scan), same integer counts, same IEEE division.
     */
   private def candidateShingles(docs: DataFrame, idCol: String, textCol: String,
-                                pairs: DataFrame, n: Int = 3): DataFrame = {
-    val candIds = pairs.select(col("id_a").as("__cid"))
-      .union(pairs.select(col("id_b").as("__cid"))).distinct()
+                                ids: DataFrame, n: Int = 3): DataFrame =
     docs.select(col(idCol).as("__cid"),
         array_distinct(TextAnalysis.shingleArray(col(textCol), n)).as("__sh"))
       .select(col("__cid"), size(col("__sh")).as("__n"), col("__sh"))
-      .join(broadcast(candIds), Seq("__cid"), "left_semi")
+      .join(broadcast(ids.distinct()), Seq("__cid"), "left_semi")
       .persist(Disk)
-  }
 
   /** Persist the LSH band index of a corpus: rows (band_id, band_key,
     * id). This is the incremental-dedup enabler — each new batch (a
@@ -1467,24 +1509,12 @@ object Dedup {
     // per-pair kernel is array_intersect over the precomputed sets (see
     // candidateShingles — counts and the jaccard double are identical
     // to the fused text kernel's)
-    def sideSets(df: DataFrame, ids: DataFrame) =
-      df.select(col(idCol).as("__cid"),
-          array_distinct(TextAnalysis.shingleArray(col(textCol), 3)).as("__sh"))
-        .select(col("__cid"), size(col("__sh")).as("__n"), col("__sh"))
-        .join(broadcast(ids.distinct()), Seq("__cid"), "left_semi")
-        .persist(Disk)
-    val newTxt = sideSets(newDocs, pairs.select(col("id_new").as("__cid")))
-    val oldTxt = sideSets(corpus, pairs.select(col("id_old").as("__cid")))
-    val result = pairs
-      .join(newTxt.select(col("__cid").as("id_new"), col("__n").as("__na"),
-        col("__sh").as("__sha")), Seq("id_new"))
-      .join(oldTxt.select(col("__cid").as("id_old"), col("__n").as("__nb"),
-        col("__sh").as("__shb")), Seq("id_old"))
-      .select(col("id_new"), col("id_old"), col("__na"), col("__nb"),
-        size(array_intersect(col("__sha"), col("__shb"))).as("__i"))
-      .select(col("id_new"), col("id_old"),
-        (col("__i").cast("double") /
-          (col("__na") + col("__nb") - col("__i")).cast("double")).as("jaccard"))
+    val newTxt = candidateShingles(newDocs, idCol, textCol,
+      pairs.select(col("id_new").as("__cid")))
+    val oldTxt = candidateShingles(corpus, idCol, textCol,
+      pairs.select(col("id_old").as("__cid")))
+    val result = pairOverlap(pairs, "id_new", newTxt, "id_old", oldTxt)
+      .select(col("id_new"), col("id_old"), OverlapJaccard)
       .filter(col("jaccard") >= threshold)
     eagerlyDetachedWith(result, recordCap, Seq(pairs, newTxt, oldTxt) ++ counts: _*)
   }

@@ -22,103 +22,338 @@ import graft.ops.{Behavior, Dedup, Multimodal, Pack, Resample, Sampling, Scale, 
   */
 object Extensions {
 
-  /** DuckDB shingle CTE shared by the MinHash/Jaccard oracles (3-word
-    * shingles, distinct per doc; 1-based list indexing, range is [a, b)).
-    */
-  private def shinglesCteOver(table: String) =
-    s"""sh AS (SELECT DISTINCT doc_id AS id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-       |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM $table) words,
-       |LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t)""".stripMargin
-  private val ShinglesCte = shinglesCteOver("documents")
-
-  // one md5 per shingle, component i = hex chunk [i*5, i*5+5) (Dedup.sigWidth(6)=5)
-  private val SigCols = (0 until 6)
-    .map(i => s"min(substr(md5(shingle), ${i * 5 + 1}, 5)) AS s$i").mkString(", ")
-
   private def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString(", ")
 
-  /** Oracle for q_setsim_lsh_frontier, GENERATED from the same
-    * [[graft.ops.Dedup.lshGeometries]] enumeration and
-    * [[graft.ops.Dedup.sigWidth]] chunk widths the engine uses — the
-    * geometry set, per-k signature scheme, and banding cannot drift
-    * between the two sides. Replays, over the q_setsim_join twin corpus:
-    * one chunked-md5 signature CTE per distinct k, one banding +
-    * candidate CTE per geometry, the exact prefix-filter join per
-    * threshold (the q_setsim_vs_lsh relational formulation, keeping
-    * (id_a, id_b)), and a UNION ALL row per (threshold, geometry) with
-    * capture/recall/candidate columns.
+  // ---- text near-dup and set-sim family dials ---------------------------
+  // Read by each member's Spark call AND by [[DedupSql]], so the engine
+  // and its oracle replay cannot drift apart on a dial.
+
+  /** Twins: every document's prefix-keep twin under doc_id + TwinOffset,
+    * its keep step `doc_id % TwinCycle`.
     */
-  private lazy val FrontierOracleSql: String = {
-    val geoms = graft.ops.Dedup.lshGeometries
-    val thresholds = Seq((7, 10), (9, 10))
-    val sigCtes = geoms.map(_._1).distinct.sorted.map { k =>
-      val w = graft.ops.Dedup.sigWidth(k)
-      val cols = (0 until k)
-        .map(i => s"min(substr(md5(shingle), ${i * w + 1}, $w)) AS s$i")
-        .mkString(", ")
-      s"sig$k AS (SELECT id, $cols FROM sh GROUP BY id)"
-    }
-    val bandCtes = geoms.map { case (k, r) =>
-      val sel = (0 until k / r).map { bi =>
-        val key = (0 until r).map(j => s"s${bi * r + j}").mkString(" || '|' || ")
-        s"SELECT $bi AS band_id, $key AS band_key, id FROM sig$k"
-      }.mkString(" UNION ALL ")
-      s"bands${k}_$r AS ($sel), cand${k}_$r AS (SELECT DISTINCT a.id AS id_a, " +
-        s"b.id AS id_b FROM bands${k}_$r a JOIN bands${k}_$r b " +
-        "ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.id < b.id)"
-    }
-    val exactCtes = thresholds.map { case (num, den) =>
-      s"""pre$num AS (SELECT id, tok, s, pos FROM sized
-         |WHERE pos <= s - ($num * s + ${den - 1}) // $den + 1),
-         |pcand$num AS (SELECT DISTINCT id_a, id_b, s_a, s_b FROM
-         |(SELECT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b,
-         |1 + least(a.s - a.pos, b.s - b.pos) AS ub
-         |FROM pre$num a JOIN pre$num b ON a.tok = b.tok AND a.id < b.id) x
-         |WHERE $den * least(s_a, s_b) >= $num * greatest(s_a, s_b)
-         |AND ${num + den} * ub >= $num * (s_a + s_b)),
-         |pi$num AS (SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-         |FROM pcand$num c JOIN tok ta ON ta.id = c.id_a
-         |JOIN tok tb ON tb.id = c.id_b AND tb.tok = ta.tok GROUP BY c.id_a, c.id_b),
-         |ex$num AS (SELECT c.id_a, c.id_b FROM pcand$num c JOIN pi$num USING (id_a, id_b)
-         |WHERE $den * inter >= $num * (c.s_a + c.s_b - inter))""".stripMargin
-    }
-    val rowSelects = for {
-      (num, den) <- thresholds; (k, r) <- geoms.sortBy(g => (g._1, g._2))
-    } yield {
-      val b = k / r
-      s"""SELECT CAST($num AS DOUBLE) / $den AS threshold,
-         |CAST($k AS INTEGER) AS k, CAST($r AS INTEGER) AS band_rows,
-         |CAST($b AS INTEGER) AS bands,
-         |round(1 - pow(1 - pow(CAST($num AS DOUBLE) / $den, $r), $b), 4) AS capture_at_t,
-         |(SELECT CAST(count(*) AS BIGINT) FROM ex$num) AS exact_pairs,
-         |(SELECT CAST(count(*) AS BIGINT) FROM cand${k}_$r c
-         |JOIN ex$num USING (id_a, id_b)) AS lsh_recovered,
-         |CASE WHEN (SELECT count(*) FROM ex$num) = 0 THEN NULL
-         |ELSE round(CAST((SELECT count(*) FROM cand${k}_$r c JOIN ex$num USING (id_a, id_b)) AS DOUBLE)
-         |/ (SELECT count(*) FROM ex$num), 4) END AS lsh_recall,
-         |(SELECT CAST(count(*) AS BIGINT) FROM cand${k}_$r) AS lsh_candidates""".stripMargin
-    }
-    (s"""WITH twins AS (SELECT doc_id + 10000000 AS doc_id,
-        |array_to_string(list_slice(string_split(text, ' '), 1,
-        |greatest(CAST(ceil(len(string_split(text, ' ')) *
-        |(CAST(0.5 AS DOUBLE) + (doc_id % 10) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-        |FROM documents),
-        |corpus AS (SELECT doc_id, text FROM documents
-        |UNION ALL SELECT doc_id, text FROM twins),
-        |sh AS (SELECT DISTINCT doc_id AS id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus) words,
-        |LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t),
-        |tok AS (SELECT id, shingle AS tok FROM sh),
-        |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY tok),
-        |sized AS (SELECT id, tok, cnt,
-        |row_number() OVER (PARTITION BY id ORDER BY cnt, tok) AS pos,
-        |count(*) OVER (PARTITION BY id) AS s
-        |FROM tok JOIN freq USING (tok)),
-        |""".stripMargin +
-      (sigCtes ++ bandCtes ++ exactCtes).mkString(",\n") + "\n" +
-      rowSelects.mkString(" UNION ALL ") +
-      " ORDER BY threshold, k, band_rows").replace("\n", " ")
+  private val TwinOffset = 10000000L
+  private val TwinCycle = 10
+  /** Probes: a twin of every ProbeEvery-th document under doc_id +
+    * ProbeOffset, its keep step `(doc_id % (10·ProbeEvery)) DIV ProbeEvery`.
+    */
+  private val ProbeOffset = 20000000L
+  private val ProbeEvery = 25
+  /** A twin keeps KeepBase + step·KeepStep of its words, at least KeepMin. */
+  private val KeepBase = 0.5
+  private val KeepStep = 0.05
+  private val KeepMin = 3
+  /** The exact joins' threshold (num/den), and the two swept thresholds. */
+  private val ExactJ = (7, 10)
+  private val SweepThresholds = Seq((7, 10), (9, 10))
+  /** The LSH verify thresholds q_dedup_threshold_sweep prices. */
+  private val SweepJ = Seq(0.7, 0.8, 0.9)
+  /** The verify threshold of the deployed LSH tier (k = 6, 3 bands of 2). */
+  private val NearDupJ = 0.8
+  private val LshK = 6
+  private val LshRows = 2
+
+  /** `docs` (doc_id, text) cut to prefix-keep twins under doc_id + `offset`. */
+  private def prefixTwins(docs: org.apache.spark.sql.DataFrame, offset: Long,
+      step: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val words = split(col("text"), " ")
+    val keep = greatest(ceil(size(words) *
+        (lit(KeepBase) + step.cast(DoubleType) * lit(KeepStep)))
+      .cast("int"), lit(KeepMin))
+    docs.select((col("doc_id") + offset).as("doc_id"),
+      array_join(slice(words, lit(1), keep), " ").as("text"))
   }
+
+  /** The twin corpus: every document (doc_id, text) plus its twin. The
+    * fixture's own near-dups all sit at j ≥ 0.9; the twins' pair
+    * similarities span the swept thresholds.
+    */
+  private def twinCorpus(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    docs.unionAll(prefixTwins(docs, TwinOffset, col("doc_id") % TwinCycle))
+  }
+
+  /** The documents (doc_id, text) and the probe twins of every
+    * ProbeEvery-th one, whose matches span the exact threshold.
+    */
+  private def probeSplit(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    (docs, prefixTwins(docs.filter(col("doc_id") % ProbeEvery === 0), ProbeOffset,
+      expr(s"(doc_id % ${10 * ProbeEvery}) DIV $ProbeEvery")))
+  }
+
+  /** Oracle composer of the text near-dup and set-sim family, on the
+    * [[AnnSql]] model: each member's DuckDB replay is a list of the named
+    * CTE pieces below plus a tail, so a piece (the twin corpus, the
+    * shingle sets, the signature and bands, the verified pairs, the
+    * closure, the exact prefix chain, the SimHash votes) is written once.
+    * The relations most readers read more than once (shingles,
+    * signatures, bands, candidates, set sizes and the exact chain) are
+    * `MATERIALIZED`: DuckDB 1.0 otherwise inlines a CTE at every
+    * reference, and the frontier's 38 rows would re-derive the shingles,
+    * signatures and exact pairs per reference and run out of memory.
+    *
+    * Relations: `sh(id, shingle)` the distinct word 3-grams;
+    * `lp(id_a, id_b, i, na, nb, j)` the LSH candidate pairs with their
+    * overlap, set sizes and Jaccard; `vpairs` those at [[NearDupJ]];
+    * `cl(doc_id, cluster_id)` the closure; `pc<num>`/`ex<num>` the exact
+    * tier's candidates and pairs.
+    */
+  private object DedupSql {
+
+    /** `name AS MATERIALIZED (body)`. */
+    private def cte(name: String, body: String): String = s"$name AS MATERIALIZED ($body)"
+
+    /** The kept words of `text` at keep step `step`. The keep-fraction
+      * arithmetic must run in IEEE DOUBLE on BOTH engines: DuckDB types
+      * bare 0.5/0.05 as DECIMAL (exact), Spark lit(0.5) as double — at an
+      * exact-integer product (e.g. 100 words × 0.55: double says
+      * 55.000000000000007, decimal says 55) ceil() diverges by one word
+      * and the twin texts differ, so both literals are CAST to DOUBLE
+      * before any arithmetic.
+      */
+    private def prefixKeep(step: String): String =
+      s"""array_to_string(list_slice(string_split(text, ' '), 1,
+         |greatest(CAST(ceil(len(string_split(text, ' ')) *
+         |(CAST($KeepBase AS DOUBLE) + ($step) * CAST($KeepStep AS DOUBLE))) AS INTEGER), $KeepMin)), ' ')""".stripMargin
+
+    /** `twins(doc_id, text)` and `corpus`, the documents plus the twins. */
+    val TwinCorpus: String =
+      s"""twins AS (SELECT doc_id + $TwinOffset AS doc_id,
+         |${prefixKeep(s"doc_id % $TwinCycle")} AS text FROM documents),
+         |corpus AS (SELECT doc_id, text FROM documents
+         |UNION ALL SELECT doc_id, text FROM twins)""".stripMargin
+
+    /** `probes(id, text)`. */
+    val Probes: String =
+      s"""probes AS (SELECT doc_id + $ProbeOffset AS id,
+         |${prefixKeep(s"(doc_id % ${10 * ProbeEvery}) // $ProbeEvery")} AS text
+         |FROM documents WHERE doc_id % $ProbeEvery = 0)""".stripMargin
+
+    /** `name(id, shingle)`: the distinct word 3-grams of each row of
+      * `from` (keyed by its column `id`); 1-based list indexing, range is
+      * [a, b), so a text of fewer than 3 words has none.
+      */
+    def shingles(name: String = "sh", from: String = "documents", id: String = "doc_id"): String =
+      cte(name,
+        s"""SELECT DISTINCT $id AS id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
+           |FROM (SELECT $id, string_split(text, ' ') AS w FROM $from) words,
+           |LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t""".stripMargin)
+
+    /** `name(id, s0 … s<k-1>)`: each document's k-component MinHash over
+      * `sh` — one md5 per shingle, component i the minimum of hex chunk
+      * [i·w, i·w + w) with w = [[graft.ops.Dedup.sigWidth]](k), the
+      * engine's chunking.
+      */
+    def sig(k: Int, name: String = "sig"): String = {
+      val w = Dedup.sigWidth(k)
+      cte(name, (0 until k)
+        .map(i => s"min(substr(md5(shingle), ${i * w + 1}, $w)) AS s$i")
+        .mkString("SELECT id, ", ", ", " FROM sh GROUP BY id"))
+    }
+
+    /** `bands<sfx>(band_id, band_key, id)`: `sig`'s k/r bands of r
+      * components joined by '|'; `cand<sfx>(id_a, id_b)` the pairs sharing
+      * a band key (the uncapped band self-join).
+      */
+    def bands(k: Int, r: Int, sig: String = "sig", sfx: String = ""): String = {
+      val sel = (0 until k / r).map { b =>
+        (0 until r).map(j => s"s${b * r + j}").mkString(s"SELECT $b AS band_id, ", " || '|' || ",
+          s" AS band_key, id FROM $sig")
+      }
+      cte(s"bands$sfx", sel.mkString("\nUNION ALL "))
+    }
+
+    def cand(sfx: String = ""): String =
+      cte(s"cand$sfx", s"""SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands$sfx a
+         |JOIN bands$sfx b ON a.band_id = b.band_id AND a.band_key = b.band_key
+         |AND a.id < b.id""".stripMargin)
+
+    /** The deployed LSH tier over `sh` ([[graft.ops.Dedup.nearDupPairs]]'
+      * default geometry): `sig`, `bands`, `cand`, then per candidate pair
+      * `lp(id_a, id_b, i, na, nb, j)`.
+      *
+      * SCOPE NOTE: the oracle replays the UNCAPPED band self-join, while
+      * the engine path drops band buckets above Dedup.DefaultMaxBucket
+      * (4096). The two agree exactly as long as no bucket exceeds the cap
+      * — the cap's own documented contract at oracle scale; the capped
+      * regime (boilerplate-heavy corpora) is covered by SkewCapSpec's
+      * 5k-copy stress plus the CapMetrics drop ledger the bench records,
+      * NOT by this oracle.
+      */
+    val Lsh: String =
+      Seq(sig(LshK), bands(LshK, LshRows), cand()).mkString("", ",\n", ",\n") +
+        cte("sizes", "SELECT id, count(*) AS n FROM sh GROUP BY id") + ",\n" +
+        s"""lp AS (SELECT x.id_a, x.id_b, x.i, sa.n AS na, sb.n AS nb,
+           |CAST(x.i AS DOUBLE) / (sa.n + sb.n - x.i) AS j
+           |FROM (SELECT c.id_a, c.id_b, count(*) AS i FROM cand c
+           |JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
+           |GROUP BY c.id_a, c.id_b) x
+           |JOIN sizes sa ON x.id_a = sa.id JOIN sizes sb ON x.id_b = sb.id)""".stripMargin
+
+    /** `vpairs(id_a, id_b, j)`: the LSH pairs that verify at [[NearDupJ]]. */
+    val Verified: String = s"vpairs AS (SELECT id_a, id_b, j FROM lp WHERE j >= $NearDupJ)"
+
+    private val Reach = "reach(src, dst)"
+
+    /** `cl(doc_id, cluster_id)`: every id of a `pairs(id_a, id_b)` edge
+      * with the least id it reaches — the closure [[graft.ops.Dedup.clusters]]
+      * computes, as a recursive transitive closure.
+      */
+    def closure(pairs: String = "vpairs"): String =
+      s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+         |UNION SELECT id_b, id_a FROM $pairs),
+         |$Reach AS (SELECT src, dst FROM edges
+         |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+         |cl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
+         |FROM reach GROUP BY src)""".stripMargin
+
+    /** The canonical-collapse filter over `cl`: a document survives unless
+      * its cluster's least id is another one.
+      */
+    val Survives: String = "doc_id NOT IN (SELECT doc_id FROM cl WHERE cluster_id <> doc_id)"
+
+    /** The exact prefix-filter chain, the relational replay of the exact
+      * set-sim joins ([[graft.ops.Dedup.setSimJoinExact]] and its R-S
+      * form), over shingle relations `a` and `b` — a self-join (`id_a <
+      * id_b`) when they are the same relation. `freq` counts each shingle
+      * over both sides; `pos_<side>` numbers each set's shingles by (cnt,
+      * shingle), the canonical order, with `s` the set size. Per threshold
+      * num/den: `pc<num>(id_a, id_b, s_a, s_b)` are the pairs sharing a
+      * token of both prefixes `pos ≤ s − ⌈num·s/den⌉ + 1`, past the
+      * integer length filter and the PPJoin positional filter, and
+      * `ex<num>(id_a, id_b, inter, uni)` the pairs with den·|A∩B| ≥
+      * num·|A∪B|. All gating is integer, as in the engine.
+      */
+    def exact(a: String, b: String, thresholds: Seq[(Int, Int)]): String = {
+      val sides = Seq(a, b).distinct
+      val freq = cte("freq", sides.map(t => s"SELECT shingle FROM $t")
+        .mkString("SELECT shingle, CAST(count(*) AS BIGINT) AS cnt FROM (", " UNION ALL ",
+          ") u GROUP BY shingle"))
+      val pos = sides.map(t => cte(s"pos_$t",
+        s"""SELECT id, shingle, row_number() OVER (PARTITION BY id ORDER BY cnt, shingle) AS pos,
+           |count(*) OVER (PARTITION BY id) AS s FROM $t JOIN freq USING (shingle)""".stripMargin))
+      val self = if (a == b) " AND a.id < b.id" else ""
+      val chain = thresholds.map { case (num, den) =>
+        def prefix(x: String) = s"$x.pos <= $x.s - ($num * $x.s + ${den - 1}) // $den + 1"
+        cte(s"pc$num",
+          s"""SELECT DISTINCT id_a, id_b, s_a, s_b FROM
+             |(SELECT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b,
+             |1 + least(a.s - a.pos, b.s - b.pos) AS ub
+             |FROM pos_$a a JOIN pos_$b b ON a.shingle = b.shingle$self
+             |WHERE ${prefix("a")} AND ${prefix("b")}) x
+             |WHERE $den * least(s_a, s_b) >= $num * greatest(s_a, s_b)
+             |AND ${num + den} * ub >= $num * (s_a + s_b)""".stripMargin) + ",\n" +
+          cte(s"ex$num",
+            s"""SELECT id_a, id_b, inter, s_a + s_b - inter AS uni FROM
+               |(SELECT c.id_a, c.id_b, c.s_a, c.s_b, CAST(count(*) AS BIGINT) AS inter
+               |FROM pc$num c JOIN $a ta ON ta.id = c.id_a
+               |JOIN $b tb ON tb.id = c.id_b AND tb.shingle = ta.shingle
+               |GROUP BY c.id_a, c.id_b, c.s_a, c.s_b) x
+               |WHERE $den * inter >= $num * (s_a + s_b - inter)""".stripMargin)
+      }
+      (Seq(freq) ++ pos ++ chain).mkString(",\n")
+    }
+
+    /** The exact tier's `jaccard`, rounded as the engine rounds it. */
+    val ExactJaccard: String = "round(CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE), 6) AS jaccard"
+
+    /** `lsh_recall` of `lsh_recovered` over `exact_pairs` (NULL without any). */
+    val Recall: String = """CASE WHEN exact_pairs = 0 THEN NULL
+      |ELSE round(CAST(lsh_recovered AS DOUBLE) / exact_pairs, 4) END AS lsh_recall""".stripMargin
+
+    /** `sig(id, simhash)`: [[graft.ops.Dedup.simhash]] over whitespace
+      * tokens — per bit, +1/−1 votes of each token's md5 prefix, set when
+      * the sum is ≥ 0. 16 hex digits parse as UBIGINT (BIGINT overflows
+      * past bit 62); the signed combine reproduces the two's-complement
+      * long exactly.
+      */
+    val Simhash: String = {
+      val votes = (0 until Dedup.SimhashBits).map(b =>
+        s"sum(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b").mkString(", ")
+      val combine = (0 until Dedup.SimhashBits).map(b =>
+        s"CASE WHEN v$b >= 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END").mkString(" + ")
+      s"""tok AS (SELECT doc_id AS id,
+         |CAST(concat('0x', substring(md5(t.tok), 1, 16)) AS UBIGINT) AS h
+         |FROM documents, LATERAL (SELECT unnest(string_split(text, ' ')) AS tok) t),
+         |votes AS (SELECT id, $votes FROM tok GROUP BY id),
+         |sig AS (SELECT id, $combine AS simhash FROM votes)""".stripMargin
+    }
+
+    /** The replay: `ctes` in order (RECURSIVE when one is the closure),
+      * then `select`.
+      */
+    def answer(ctes: String*)(select: String): String =
+      ((if (ctes.exists(_.contains(Reach))) "WITH RECURSIVE " else "WITH ") +
+        ctes.mkString(",\n") + "\n" + select).replace("\n", " ")
+
+    /** Oracle for q_setsim_lsh_frontier, GENERATED from the same
+      * [[graft.ops.Dedup.lshGeometries]] enumeration and
+      * [[graft.ops.Dedup.sigWidth]] chunk widths the engine uses — the
+      * geometry set, per-k signature scheme, and banding cannot drift
+      * between the two sides. Over the twin corpus: the exact chain per
+      * swept threshold, one signature per distinct k, one banding and
+      * candidate set per geometry, and per geometry one pass over its
+      * candidates that counts them and the exact pairs among them at
+      * every threshold.
+      */
+    lazy val Frontier: String = {
+      val geoms = Dedup.lshGeometries.sortBy(g => (g._1, g._2))
+      def g(k: Int, r: Int) = s"${k}_$r"
+      val sigs = geoms.map(_._1).distinct.map(k => sig(k, s"sig$k"))
+      val cands = geoms.map { case (k, r) => bands(k, r, s"sig$k", g(k, r)) + ",\n" + cand(g(k, r)) }
+      val counts = geoms.map { case (k, r) =>
+        val joins = SweepThresholds.map { case (num, _) =>
+          s"LEFT JOIN ex$num e$num ON e$num.id_a = c.id_a AND e$num.id_b = c.id_b" }
+        val recs = SweepThresholds.map { case (num, _) => s"count(e$num.id_a) AS rec$num" }
+        cte(s"n${g(k, r)}", s"SELECT count(*) AS nc, ${recs.mkString(", ")} " +
+          s"FROM cand${g(k, r)} c ${joins.mkString(" ")}")
+      }
+      val rows = for { (num, den) <- SweepThresholds; (k, r) <- geoms } yield
+        s"""SELECT CAST($num AS DOUBLE) / $den AS threshold,
+           |CAST($k AS INTEGER) AS k, CAST($r AS INTEGER) AS band_rows,
+           |CAST(${k / r} AS INTEGER) AS bands,
+           |round(1 - pow(1 - pow(CAST($num AS DOUBLE) / $den, $r), ${k / r}), 4) AS capture_at_t,
+           |(SELECT count(*) FROM ex$num) AS exact_pairs, rec$num AS lsh_recovered,
+           |nc AS lsh_candidates FROM n${g(k, r)}""".stripMargin
+      answer(Seq(TwinCorpus, shingles(from = "corpus"), exact("sh", "sh", SweepThresholds)) ++
+        sigs ++ cands ++ counts :+ s"f AS (${rows.mkString("\nUNION ALL ")})": _*)(
+        s"""SELECT threshold, k, band_rows, bands, capture_at_t,
+           |CAST(exact_pairs AS BIGINT) AS exact_pairs, CAST(lsh_recovered AS BIGINT) AS lsh_recovered,
+           |$Recall, CAST(lsh_candidates AS BIGINT) AS lsh_candidates
+           |FROM f ORDER BY threshold, k, band_rows""".stripMargin)
+    }
+  }
+
+  /** Oracle for q_minhash_signature AND q_minhash_udaf: the typed
+    * Aggregator must produce the codegen path's signature exactly.
+    */
+  private val MinhashSignatureSql =
+    DedupSql.answer(DedupSql.shingles(), DedupSql.sig(LshK))(
+      (0 until LshK).map(i => s"s$i").mkString("SELECT id AS doc_id, ", ", ",
+        " FROM sig ORDER BY doc_id"))
+
+  /** Oracle for q_minhash_lsh_pairs AND q_sql_neardup: the one-statement
+    * Spark SQL pipeline is result-identical to the DataFrame one.
+    */
+  private val NearDupPairsSql =
+    DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified)(
+      "SELECT id_a, id_b, round(j, 4) AS jaccard FROM vpairs ORDER BY id_a, id_b")
+
+  /** Oracle for q_decontaminate AND q_bloom_decontaminate: the Bloom
+    * prefilter must not change the exact answer.
+    */
+  private val DecontaminateSql =
+    DedupSql.answer(DedupSql.shingles(),
+      """own AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles
+        |FROM sh WHERE id % 50 <> 0 GROUP BY id),
+        |b AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
+        |hits AS (SELECT id, CAST(count(*) AS BIGINT) AS n_overlap FROM sh
+        |WHERE id % 50 <> 0 AND shingle IN (SELECT shingle FROM b) GROUP BY id)""".stripMargin)(
+      """SELECT own.id AS doc_id, n_shingles,
+        |CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
+        |round(CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles, 5) AS overlap_ratio
+        |FROM own LEFT JOIN hits ON own.id = hits.id
+        |ORDER BY doc_id""".stripMargin)
 
   /** Number of frequency-ranked merge rules q_bpe_encode applies. */
   private val BpeRules = 16
@@ -151,8 +386,8 @@ object Extensions {
     * per-doc flagged starts → gaps-and-islands. ONE definition — the
     * gram width (7 = n−1) and the island break rule (gap >= n) are
     * load-bearing boundaries, and a fix applied to a duplicated copy
-    * would silently leave the other oracle stale (the ShinglesCte
-    * precedent).
+    * would silently leave the other oracle stale (the rule
+    * [[DedupSql]]'s pieces follow).
     */
   private val NgramIslandCtes =
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -202,66 +437,6 @@ object Extensions {
              |SELECT id, md5(ct) AS clean_md5,
              |CAST(CASE WHEN ct = '' THEN 0 ELSE len(string_split(ct, ' ')) END AS BIGINT) AS n_after
              |FROM cl ORDER BY id""".stripMargin.replace("\n", " ")
-
-  /** Shared CTE chain reproducing the MinHash+LSH candidate/verify
-    * pipeline in DuckDB (used by the pairs query and the cluster
-    * closure on top of it).
-    *
-    * SCOPE NOTE: the oracle replays the UNCAPPED band self-join, while
-    * the engine path drops band buckets above Dedup.DefaultMaxBucket
-    * (4096). The two agree exactly as long as no bucket exceeds the cap
-    * — the cap's own documented contract at oracle scale; the capped
-    * regime (boilerplate-heavy corpora) is covered by SkewCapSpec's
-    * 5k-copy stress plus the CapMetrics drop ledger the bench records,
-    * NOT by this oracle.
-    */
-  private def lshPairsCtesOver(table: String) =
-    s"""${shinglesCteOver(table)},
-       |sig AS (SELECT id, $SigCols FROM sh GROUP BY id),
-       |bands AS (
-       |SELECT 0 AS band_id, s0 || '|' || s1 AS band_key, id FROM sig
-       |UNION ALL SELECT 1, s2 || '|' || s3, id FROM sig
-       |UNION ALL SELECT 2, s4 || '|' || s5, id FROM sig),
-       |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands a
-       |JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.id < b.id),
-       |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
-       |inter AS (SELECT c.id_a, c.id_b, count(*) AS i FROM cand c
-       |JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-       |GROUP BY c.id_a, c.id_b)""".stripMargin
-  private val LshPairsCtes = lshPairsCtesOver("documents")
-
-  /** Oracle for q_minhash_signature AND q_minhash_udaf: the typed
-    * Aggregator must produce the codegen path's signature exactly.
-    */
-  private val MinhashSignatureSql =
-    s"WITH $ShinglesCte SELECT id AS doc_id, $SigCols FROM sh GROUP BY id ORDER BY doc_id"
-      .replace("\n", " ")
-
-  /** Oracle for q_minhash_lsh_pairs AND q_sql_neardup: the one-statement
-    * Spark SQL pipeline is result-identical to the DataFrame one.
-    */
-  private val NearDupPairsSql =
-    s"""WITH $LshPairsCtes
-       |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-       |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-       |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-       |ORDER BY id_a, id_b""".stripMargin.replace("\n", " ")
-
-  /** Oracle for q_decontaminate AND q_bloom_decontaminate: the Bloom
-    * prefilter must not change the exact answer.
-    */
-  private val DecontaminateSql =
-    s"""WITH $ShinglesCte,
-       |own AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles
-       |FROM sh WHERE id % 50 <> 0 GROUP BY id),
-       |b AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
-       |hits AS (SELECT id, CAST(count(*) AS BIGINT) AS n_overlap FROM sh
-       |WHERE id % 50 <> 0 AND shingle IN (SELECT shingle FROM b) GROUP BY id)
-       |SELECT own.id AS doc_id, n_shingles,
-       |CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-       |round(CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles, 5) AS overlap_ratio
-       |FROM own LEFT JOIN hits ON own.id = hits.id
-       |ORDER BY doc_id""".stripMargin.replace("\n", " ")
 
   /** Oracle for q_bigram_lm AND q_bigram_lm_hashed: the hashed keys are
     * answer-identical to the exact bigram strings absent ~2⁻⁶⁴ collisions.
@@ -2136,14 +2311,14 @@ object Extensions {
              |WHERE rn = 1 GROUP BY source ORDER BY source""".stripMargin.replace("\n", " "))),
 
     Q("q_minhash_signature",
-      (s, d) => Dedup.minhashSignatureNarrow(Tables.documents(s, d), "doc_id", "text", k = 6)
+      (s, d) => Dedup.minhashSignatureNarrow(Tables.documents(s, d), "doc_id", "text", k = LshK)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
       Some(MinhashSignatureSql)),
 
     Q("q_minhash_lsh_pairs",
       (s, d) => Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.8, k = 6, bandRows = 2)
+          threshold = NearDupJ, k = LshK, bandRows = LshRows)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("id_a", "id_b"),
       Some(NearDupPairsSql)),
@@ -2168,20 +2343,13 @@ object Extensions {
           expr("sum(sz * (sz - 1)) div 2").as("candidate_pairs"))
         .withColumn("band_id", col("band_id").cast(LongType))
         .orderBy("band_id"),
-      Some(s"""WITH $ShinglesCte,
-             |sig AS (SELECT id, $SigCols FROM sh GROUP BY id),
-             |bands AS (
-             |SELECT CAST(0 AS BIGINT) AS band_id, s0 || '|' || s1 AS band_key, id FROM sig
-             |UNION ALL SELECT 1, s2 || '|' || s3, id FROM sig
-             |UNION ALL SELECT 2, s4 || '|' || s5, id FROM sig),
-             |buckets AS (SELECT band_id, band_key, count(*) AS sz
-             |FROM bands GROUP BY band_id, band_key)
-             |SELECT band_id, CAST(count(*) AS BIGINT) AS n_buckets,
-             |CAST(max(sz) AS BIGINT) AS max_bucket,
-             |CAST(sum(CASE WHEN sz > 1 THEN sz ELSE 0 END) AS BIGINT) AS colliding_docs,
-             |CAST(sum(sz * (sz - 1)) // 2 AS BIGINT) AS candidate_pairs
-             |FROM buckets GROUP BY band_id ORDER BY band_id"""
-        .stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.sig(LshK), DedupSql.bands(LshK, LshRows),
+        "buckets AS (SELECT band_id, band_key, count(*) AS sz FROM bands GROUP BY band_id, band_key)")(
+        """SELECT CAST(band_id AS BIGINT) AS band_id, CAST(count(*) AS BIGINT) AS n_buckets,
+          |CAST(max(sz) AS BIGINT) AS max_bucket,
+          |CAST(sum(CASE WHEN sz > 1 THEN sz ELSE 0 END) AS BIGINT) AS colliding_docs,
+          |CAST(sum(sz * (sz - 1)) // 2 AS BIGINT) AS candidate_pairs
+          |FROM buckets GROUP BY 1 ORDER BY band_id""".stripMargin))),
 
     // Dedup clusters: connected components over the verified near-dup
     // pairs — a~b, b~c collapse to one cluster even without an a~c pair.
@@ -2190,18 +2358,10 @@ object Extensions {
     Q("q_dedup_clusters",
       (s, d) => Dedup.clusters(
           Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
-            threshold = 0.8).select("id_a", "id_b"))
+            threshold = NearDupJ).select("id_a", "id_b"))
         .orderBy("doc_id"),
-      Some(s"""WITH RECURSIVE $LshPairsCtes,
-             |vpairs AS (SELECT id_a, id_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-             |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-             |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified,
+        DedupSql.closure())("SELECT doc_id, cluster_id FROM cl ORDER BY doc_id"))),
 
     // Dedup cluster-size histogram — the duplicate-family report every
     // data card and dedup review carries: how many families of each
@@ -2213,7 +2373,7 @@ object Extensions {
     Q("q_dedup_cluster_stats",
       (s, d) => Dedup.clusters(
           Dedup.nearDupPairs(Tables.documents(s, d), "doc_id", "text",
-            threshold = 0.8).select("id_a", "id_b"))
+            threshold = NearDupJ).select("id_a", "id_b"))
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz"))
         .agg(count(lit(1)).as("n_clusters"),
@@ -2221,39 +2381,12 @@ object Extensions {
         .select(col("sz").as("cluster_size"), col("n_clusters"),
           col("docs_removed"))
         .orderBy("cluster_size"),
-      Some(s"""WITH RECURSIVE $LshPairsCtes,
-             |vpairs AS (SELECT id_a, id_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |cl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-             |FROM reach GROUP BY src),
-             |cs AS (SELECT cluster_id, count(*) AS sz FROM cl GROUP BY cluster_id)
-             |SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-             |CAST(sum(sz - 1) AS BIGINT) AS docs_removed
-             |FROM cs GROUP BY sz ORDER BY cluster_size"""
-        .stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified,
+        DedupSql.closure(), "cs AS (SELECT cluster_id, count(*) AS sz FROM cl GROUP BY cluster_id)")(
+        """SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
+          |CAST(sum(sz - 1) AS BIGINT) AS docs_removed
+          |FROM cs GROUP BY sz ORDER BY cluster_size""".stripMargin))),
 
-    // The dedup THRESHOLD dial priced as a sweep (r14) — the
-    // q_ivf_probe_curve pattern applied to near-dup verification: pair
-    // and doc counts at jaccard ≥ 0.7 / 0.8 / 0.9 from ONE
-    // candidate+verify pass (each verified pair explodes to the
-    // thresholds it clears; the expensive stages — banding, the bucket
-    // join, per-pair ShingleJaccard — run once). The number a curation
-    // review reads before moving the dedup bar: how many more docs does
-    // 0.7 pull in, how many does 0.9 release. The fixture's own
-    // near-dups all sit at j ≥ 0.9 (the sweep would read flat), so the
-    // corpus is augmented with a deterministic TWIN per doc — the
-    // prefix keeping 50–95% of the words by doc_id — whose pair
-    // similarities span the swept range (the q_zipf_fit_gate move:
-    // make the fixture exercise both sides of the dial). Candidates
-    // are banding-driven (geometry fixed), so the sweep prices the
-    // threshold GIVEN the deployed LSH geometry — exactly what
-    // flipping the production knob would do; the oracle replays the
-    // same candidate set over the same twin-injected corpus.
     // EXACT set-similarity self-join (Dedup.setSimJoinExact): every
     // shingle-set pair at Jaccard >= 7/10 with NO miss probability —
     // the AllPairs/PPJoin prefix filter (rarest-first canonical order,
@@ -2265,52 +2398,15 @@ object Extensions {
     // a miss is not an option. ExtensionsSpec pins output ==
     // brute-force all-pairs on the fixture.
     Q("q_setsim_join",
-      (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
-          .cast("int"), lit(3))
-        val twins = docs.select((col("doc_id") + 10000000L).as("doc_id"),
-          array_join(slice(words, lit(1), keep), " ").as("text"))
-        // the pair output is small: one single-partition exchange orders
-        // it, where an orderBy's range-partition sampler would run the
-        // block kernel a second time
-        Dedup.setSimJoinExact(docs.unionAll(twins), "doc_id", "text",
-            num = 7, den = 10)
-          .repartition(1).sortWithinPartitions("id_a", "id_b")
-      },
-      Some("""WITH twins AS (SELECT doc_id + 10000000 AS doc_id,
-             |array_to_string(list_slice(string_split(text, ' '), 1,
-             |greatest(CAST(ceil(len(string_split(text, ' ')) *
-             |(CAST(0.5 AS DOUBLE) + (doc_id % 10) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-             |FROM documents),
-             |corpus AS (SELECT doc_id, text FROM documents
-             |UNION ALL SELECT doc_id, text FROM twins),
-             |tok AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus))),
-             |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY tok),
-             |sized AS (SELECT id, tok, cnt,
-             |row_number() OVER (PARTITION BY id ORDER BY cnt, tok) AS pos,
-             |count(*) OVER (PARTITION BY id) AS s
-             |FROM tok JOIN freq USING (tok)),
-             |pre AS (SELECT id, tok, s FROM sized
-             |WHERE pos <= s - (7 * s + 9) // 10 + 1),
-             |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-             |a.s AS s_a, b.s AS s_b
-             |FROM pre a JOIN pre b ON a.tok = b.tok AND a.id < b.id
-             |WHERE 10 * least(a.s, b.s) >= 7 * greatest(a.s, b.s)),
-             |i AS (SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-             |FROM cand c JOIN tok ta ON ta.id = c.id_a
-             |JOIN tok tb ON tb.id = c.id_b AND tb.tok = ta.tok
-             |GROUP BY c.id_a, c.id_b)
-             |SELECT c.id_a, c.id_b,
-             |round(CAST(inter AS DOUBLE) / CAST(c.s_a + c.s_b - inter AS DOUBLE), 6) AS jaccard
-             |FROM cand c JOIN i USING (id_a, id_b)
-             |WHERE 10 * inter >= 7 * (c.s_a + c.s_b - inter)
-             |ORDER BY id_a, id_b""".stripMargin.replace("\n", " "))),
+      // the pair output is small: one single-partition exchange orders
+      // it, where an orderBy's range-partition sampler would run the
+      // block kernel a second time
+      (s, d) => Dedup.setSimJoinExact(twinCorpus(s, d), "doc_id", "text",
+          num = ExactJ._1, den = ExactJ._2)
+        .repartition(1).sortWithinPartitions("id_a", "id_b"),
+      Some(DedupSql.answer(DedupSql.TwinCorpus, DedupSql.shingles(from = "corpus"),
+        DedupSql.exact("sh", "sh", Seq(ExactJ)))(
+        s"SELECT id_a, id_b, ${DedupSql.ExactJaccard} FROM ex${ExactJ._1} ORDER BY id_a, id_b"))),
 
     // The exact set-similarity join in its PRODUCTION shape: two-table
     // (R-S) decontamination (Dedup.setSimJoinExactRS) — eval-suite
@@ -2327,56 +2423,17 @@ object Extensions {
     // threshold instead of clustering at j≈1.
     Q("q_setsim_decontaminate",
       (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + expr("(doc_id % 250) DIV 25").cast(DoubleType) * lit(0.05)))
-          .cast("int"), lit(3))
-        val probes = docs.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"),
-            array_join(slice(words, lit(1), keep), " ").as("text"))
+        val (docs, probes) = probeSplit(s, d)
         Dedup.setSimJoinExactRS(probes, docs, "doc_id", "text",
-            num = 7, den = 10)
+            num = ExactJ._1, den = ExactJ._2)
           .select(col("id_a").as("probe_id"), col("id_b").as("doc_id"),
             col("jaccard"))
           .orderBy("probe_id", "doc_id")
       },
-      Some("""WITH probes AS (SELECT doc_id + 20000000 AS id,
-             |array_to_string(list_slice(string_split(text, ' '), 1,
-             |greatest(CAST(ceil(len(string_split(text, ' ')) *
-             |(CAST(0.5 AS DOUBLE) + ((doc_id % 250) // 25) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-             |FROM documents WHERE doc_id % 25 = 0),
-             |toka AS (SELECT DISTINCT id, tok FROM
-             |(SELECT id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT id, string_split(text, ' ') AS w FROM probes))),
-             |tokb AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-             |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM
-             |(SELECT id, tok FROM toka UNION ALL SELECT id, tok FROM tokb) u GROUP BY tok),
-             |prea AS (SELECT id, tok, s FROM (SELECT id, tok,
-             |row_number() OVER (PARTITION BY id ORDER BY cnt, tok) AS pos,
-             |count(*) OVER (PARTITION BY id) AS s
-             |FROM toka JOIN freq USING (tok)) x WHERE pos <= s - (7 * s + 9) // 10 + 1),
-             |preb AS (SELECT id, tok, s FROM (SELECT id, tok,
-             |row_number() OVER (PARTITION BY id ORDER BY cnt, tok) AS pos,
-             |count(*) OVER (PARTITION BY id) AS s
-             |FROM tokb JOIN freq USING (tok)) x WHERE pos <= s - (7 * s + 9) // 10 + 1),
-             |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-             |a.s AS s_a, b.s AS s_b
-             |FROM prea a JOIN preb b ON a.tok = b.tok
-             |WHERE 10 * least(a.s, b.s) >= 7 * greatest(a.s, b.s)),
-             |i AS (SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-             |FROM cand c JOIN toka ta ON ta.id = c.id_a
-             |JOIN tokb tb ON tb.id = c.id_b AND tb.tok = ta.tok
-             |GROUP BY c.id_a, c.id_b)
-             |SELECT c.id_a AS probe_id, c.id_b AS doc_id,
-             |round(CAST(inter AS DOUBLE) / CAST(c.s_a + c.s_b - inter AS DOUBLE), 6) AS jaccard
-             |FROM cand c JOIN i USING (id_a, id_b)
-             |WHERE 10 * inter >= 7 * (c.s_a + c.s_b - inter)
-             |ORDER BY probe_id, doc_id""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.Probes, DedupSql.shingles("toka", "probes", "id"),
+        DedupSql.shingles("tokb"), DedupSql.exact("toka", "tokb", Seq(ExactJ)))(
+        s"""SELECT id_a AS probe_id, id_b AS doc_id, ${DedupSql.ExactJaccard}
+           |FROM ex${ExactJ._1} ORDER BY probe_id, doc_id""".stripMargin))),
 
     // The lossless tier in its INCREMENTAL form: the corpus's prefix
     // index persisted once (Dedup.writeSetSimIndex — ordered token
@@ -2391,44 +2448,26 @@ object Extensions {
     // ExtensionsSpec pins index-served == the direct two-table join.
     Q("q_setsim_index",
       (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + expr("(doc_id % 250) DIV 25").cast(DoubleType) * lit(0.05)))
-          .cast("int"), lit(3))
-        val probes = docs.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"),
-            array_join(slice(words, lit(1), keep), " ").as("text"))
+        val (docs, probes) = probeSplit(s, d)
         val idx = Fixtures.dir("setsim_index_q", d)
         Dedup.writeSetSimIndex(docs, "doc_id", "text", idx)
         Dedup.setSimAgainstIndex(probes, "doc_id", "text", idx, docs,
-            num = 7, den = 10)
+            num = ExactJ._1, den = ExactJ._2)
           .select(col("id_a").as("probe_id"), col("id_b").as("doc_id"),
             col("jaccard"))
           .orderBy("probe_id", "doc_id")
       },
-      Some("""WITH probes AS (SELECT doc_id + 20000000 AS id,
-             |array_to_string(list_slice(string_split(text, ' '), 1,
-             |greatest(CAST(ceil(len(string_split(text, ' ')) *
-             |(CAST(0.5 AS DOUBLE) + ((doc_id % 250) // 25) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-             |FROM documents WHERE doc_id % 25 = 0),
-             |toka AS (SELECT DISTINCT id, tok FROM
-             |(SELECT id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT id, string_split(text, ' ') AS w FROM probes))),
-             |tokb AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-             |sa AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM toka GROUP BY id),
-             |sb AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM tokb GROUP BY id),
-             |i AS (SELECT a.id AS ia, b.id AS ib, CAST(count(*) AS BIGINT) AS c
-             |FROM toka a JOIN tokb b ON a.tok = b.tok GROUP BY a.id, b.id)
-             |SELECT ia AS probe_id, ib AS doc_id,
-             |round(CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE), 6) AS jaccard
-             |FROM i JOIN sa ON sa.id = ia JOIN sb ON sb.id = ib
-             |WHERE 10 * c >= 7 * (sa.n + sb.n - c)
-             |ORDER BY probe_id, doc_id""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.Probes, DedupSql.shingles("toka", "probes", "id"),
+        DedupSql.shingles("tokb"),
+        """sa AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM toka GROUP BY id),
+          |sb AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM tokb GROUP BY id),
+          |i AS (SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS BIGINT) AS inter
+          |FROM toka a JOIN tokb b ON a.shingle = b.shingle GROUP BY a.id, b.id),
+          |bf AS (SELECT id_a, id_b, inter, sa.n + sb.n - inter AS uni
+          |FROM i JOIN sa ON sa.id = id_a JOIN sb ON sb.id = id_b)""".stripMargin)(
+        s"""SELECT id_a AS probe_id, id_b AS doc_id, ${DedupSql.ExactJaccard}
+           |FROM bf WHERE ${ExactJ._2} * inter >= ${ExactJ._1} * uni
+           |ORDER BY probe_id, doc_id""".stripMargin))),
 
     // The exact tier PRICED against the LSH tier (the X147/X159
     // pattern): per threshold, the exact join's pair count and
@@ -2448,30 +2487,21 @@ object Extensions {
     Q("q_setsim_vs_lsh",
       (s, d) => {
         import s.implicits._
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
-          .cast("int"), lit(3))
-        val twins = docs.select((col("doc_id") + 10000000L).as("doc_id"),
-          array_join(slice(words, lit(1), keep), " ").as("text"))
-        val corpus = docs.unionAll(twins)
+        val corpus = twinCorpus(s, d)
         // LSH-recovered pairs carry LONG inter/uni counts so every
         // threshold cut below uses the SAME integer gate as the exact
         // tier (den·inter ≥ num·uni) — a double `jaccard >= t` re-filter
         // could round a representation-gap ratio into passing and break
         // the pinned recovered ≤ exact invariant (r17 ADVICE)
         val lshVer = Dedup.nearDupPairCounts(corpus, "doc_id", "text",
-            num = 7, den = 10).select(col("inter"), col("uni"))
+            num = SweepThresholds.head._1, den = SweepThresholds.head._2)
+          .select(col("inter"), col("uni"))
           .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
         val lshCandN = Dedup.lshCandidates(Dedup.lshBands(
           Dedup.minhashSignatureNarrow(corpus, "doc_id", "text"))).count()
-        val thresholds = Seq((0.7, 7, 10), (0.9, 9, 10))
-        val exact = Dedup.setSimExactCounts(corpus, "doc_id", "text",
-          thresholds.map { case (_, num, den) => (num, den) })
-        val rows = thresholds.zip(exact).map {
-          case ((t, nm, dn), (_, _, nCand, nPairs)) =>
-            (t, nPairs,
+        val rows = Dedup.setSimExactCounts(corpus, "doc_id", "text", SweepThresholds).map {
+          case (nm, dn, nCand, nPairs) =>
+            (nm.toDouble / dn, nPairs,
               lshVer.filter(lit(dn.toLong) * col("inter") >=
                 lit(nm.toLong) * col("uni")).count(),
               nCand, lshCandN)
@@ -2487,67 +2517,21 @@ object Extensions {
             col("exact_candidates"), col("lsh_candidates"))
           .orderBy("threshold")
       },
-      Some(s"""WITH twins AS (SELECT doc_id + 10000000 AS doc_id,
-             |array_to_string(list_slice(string_split(text, ' '), 1,
-             |greatest(CAST(ceil(len(string_split(text, ' ')) *
-             |(CAST(0.5 AS DOUBLE) + (doc_id % 10) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-             |FROM documents),
-             |corpus AS (SELECT doc_id, text FROM documents
-             |UNION ALL SELECT doc_id, text FROM twins),
-             |tok AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus))),
-             |freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY tok),
-             |sized AS (SELECT id, tok, cnt,
-             |row_number() OVER (PARTITION BY id ORDER BY cnt, tok) AS pos,
-             |count(*) OVER (PARTITION BY id) AS s
-             |FROM tok JOIN freq USING (tok)),
-             |pre7 AS (SELECT id, tok, s, pos FROM sized WHERE pos <= s - (7 * s + 9) // 10 + 1),
-             |pre9 AS (SELECT id, tok, s, pos FROM sized WHERE pos <= s - (9 * s + 9) // 10 + 1),
-             |cand7 AS (SELECT DISTINCT id_a, id_b, s_a, s_b FROM
-             |(SELECT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b,
-             |1 + least(a.s - a.pos, b.s - b.pos) AS ub
-             |FROM pre7 a JOIN pre7 b ON a.tok = b.tok AND a.id < b.id) x
-             |WHERE 10 * least(s_a, s_b) >= 7 * greatest(s_a, s_b)
-             |AND 17 * ub >= 7 * (s_a + s_b)),
-             |cand9 AS (SELECT DISTINCT id_a, id_b, s_a, s_b FROM
-             |(SELECT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b,
-             |1 + least(a.s - a.pos, b.s - b.pos) AS ub
-             |FROM pre9 a JOIN pre9 b ON a.tok = b.tok AND a.id < b.id) x
-             |WHERE 10 * least(s_a, s_b) >= 9 * greatest(s_a, s_b)
-             |AND 19 * ub >= 9 * (s_a + s_b)),
-             |i7 AS (SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-             |FROM cand7 c JOIN tok ta ON ta.id = c.id_a
-             |JOIN tok tb ON tb.id = c.id_b AND tb.tok = ta.tok GROUP BY c.id_a, c.id_b),
-             |i9 AS (SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-             |FROM cand9 c JOIN tok ta ON ta.id = c.id_a
-             |JOIN tok tb ON tb.id = c.id_b AND tb.tok = ta.tok GROUP BY c.id_a, c.id_b),
-             |ex7 AS (SELECT c.id_a FROM cand7 c JOIN i7 USING (id_a, id_b)
-             |WHERE 10 * inter >= 7 * (c.s_a + c.s_b - inter)),
-             |ex9 AS (SELECT c.id_a FROM cand9 c JOIN i9 USING (id_a, id_b)
-             |WHERE 10 * inter >= 9 * (c.s_a + c.s_b - inter)),
-             |${lshPairsCtesOver("corpus")},
-             |lv AS (SELECT i, sa.n + sb.n - i AS u
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id),
-             |s7 AS (SELECT CAST(0.7 AS DOUBLE) AS threshold,
-             |(SELECT count(*) FROM ex7) AS exact_pairs,
-             |(SELECT count(*) FROM lv WHERE 10 * i >= 7 * u) AS lsh_recovered,
-             |(SELECT count(*) FROM cand7) AS exact_candidates),
-             |s9 AS (SELECT CAST(0.9 AS DOUBLE) AS threshold,
-             |(SELECT count(*) FROM ex9) AS exact_pairs,
-             |(SELECT count(*) FROM lv WHERE 10 * i >= 9 * u) AS lsh_recovered,
-             |(SELECT count(*) FROM cand9) AS exact_candidates),
-             |lc AS (SELECT count(*) AS lsh_candidates FROM cand)
-             |SELECT threshold, CAST(exact_pairs AS BIGINT) AS exact_pairs,
-             |CAST(lsh_recovered AS BIGINT) AS lsh_recovered,
-             |CAST(exact_pairs - lsh_recovered AS BIGINT) AS lsh_missed,
-             |CASE WHEN exact_pairs = 0 THEN NULL
-             |ELSE round(CAST(lsh_recovered AS DOUBLE) / exact_pairs, 4) END AS lsh_recall,
-             |CAST(exact_candidates AS BIGINT) AS exact_candidates,
-             |CAST((SELECT lsh_candidates FROM lc) AS BIGINT) AS lsh_candidates
-             |FROM (SELECT * FROM s7 UNION ALL SELECT * FROM s9) u
-             |ORDER BY threshold""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.TwinCorpus, DedupSql.shingles(from = "corpus"),
+        DedupSql.exact("sh", "sh", SweepThresholds), DedupSql.Lsh,
+        SweepThresholds.map { case (num, den) =>
+          s"""SELECT CAST($num AS DOUBLE) / $den AS threshold,
+             |(SELECT count(*) FROM ex$num) AS exact_pairs,
+             |(SELECT count(*) FROM lp WHERE $den * i >= $num * (na + nb - i)) AS lsh_recovered,
+             |(SELECT count(*) FROM pc$num) AS exact_candidates""".stripMargin
+        }.mkString("t AS (", "\nUNION ALL ", ")"))(
+        s"""SELECT threshold, CAST(exact_pairs AS BIGINT) AS exact_pairs,
+           |CAST(lsh_recovered AS BIGINT) AS lsh_recovered,
+           |CAST(exact_pairs - lsh_recovered AS BIGINT) AS lsh_missed,
+           |${DedupSql.Recall},
+           |CAST(exact_candidates AS BIGINT) AS exact_candidates,
+           |CAST((SELECT count(*) FROM cand) AS BIGINT) AS lsh_candidates
+           |FROM t ORDER BY threshold""".stripMargin))),
 
     // The frozen canonical order's DRIFT GAUGE (Dedup.setSimIndexDrift):
     // appendToSetSimIndex keeps losslessness under the stored frequency
@@ -2575,48 +2559,42 @@ object Extensions {
         Dedup.appendToSetSimIndex(drifted, "doc_id", "text", idx)
         Dedup.setSimIndexDrift(s, idx, num = 7, den = 10, sampleMod = 4)
       },
-      Some("""WITH drift AS (SELECT doc_id + 30000000 AS doc_id,
-             |'the quick brown fox jumps over the lazy dog and then ' || text AS text
-             |FROM documents WHERE doc_id % 3 = 0),
-             |tok0 AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-             |tokd AS (SELECT DISTINCT id, tok FROM
-             |(SELECT doc_id AS id, unnest(list_transform(range(1, len(w) - 1),
-             |i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM drift))),
-             |sfreq AS (SELECT tok, CAST(count(*) AS BIGINT) AS scnt FROM tok0 GROUP BY tok),
-             |toka AS (SELECT id, tok FROM tok0 UNION ALL SELECT id, tok FROM tokd),
-             |fresh AS (SELECT tok, CAST(count(*) AS BIGINT) AS fcnt FROM toka GROUP BY tok),
-             |vocab AS (SELECT f.tok, f.fcnt, coalesce(s.scnt, 0) AS scnt
-             |FROM fresh f LEFT JOIN sfreq s USING (tok)),
-             |ranked AS (SELECT row_number() OVER (ORDER BY scnt, tok) AS rs,
-             |row_number() OVER (ORDER BY fcnt, tok) AS rf FROM vocab),
-             |ra AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             |coalesce(CAST(sum(CAST(rs - rf AS BIGINT) * CAST(rs - rf AS BIGINT)) AS HUGEINT),
-             |CAST(0 AS HUGEINT)) AS s2 FROM ranked),
-             |sized AS (SELECT t.id, t.tok, f.fcnt,
-             |row_number() OVER (PARTITION BY t.id ORDER BY coalesce(s.scnt, 0), t.tok) AS pos,
-             |row_number() OVER (PARTITION BY t.id ORDER BY f.fcnt, t.tok) AS pos2,
-             |count(*) OVER (PARTITION BY t.id) AS s
-             |FROM toka t LEFT JOIN sfreq s USING (tok) JOIN fresh f USING (tok)
-             |WHERE t.id % 4 = 0),
-             |ms AS (SELECT coalesce(CAST(sum(CAST(p AS HUGEINT) * (p - 1) // 2) AS HUGEINT),
-             |CAST(0 AS HUGEINT)) AS m FROM
-             |(SELECT count(*) AS p FROM sized WHERE pos <= s - (7 * s + 9) // 10 + 1 GROUP BY tok)),
-             |mf AS (SELECT coalesce(CAST(sum(CAST(p AS HUGEINT) * (p - 1) // 2) AS HUGEINT),
-             |CAST(0 AS HUGEINT)) AS m FROM
-             |(SELECT count(*) AS p FROM sized WHERE pos2 <= s - (7 * s + 9) // 10 + 1 GROUP BY tok))
-             |SELECT ra.n AS n_tokens,
-             |CASE WHEN ra.n < 2 THEN 1.0
-             |ELSE round(1.0 - 6.0 * CAST(ra.s2 AS DOUBLE) /
-             |CAST(CAST(ra.n AS HUGEINT) * ra.n * ra.n - ra.n AS DOUBLE), 6) END AS rank_corr,
-             |CAST(ms.m AS BIGINT) AS cand_mass_stored,
-             |CAST(mf.m AS BIGINT) AS cand_mass_refrozen,
-             |(ms.m > 2 * mf.m OR (ra.n >= 2 AND 30 * ra.s2 >
-             |CAST(ra.n AS HUGEINT) * ra.n * ra.n - ra.n)) AS refreeze
-             |FROM ra, ms, mf""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(
+        """drift AS (SELECT doc_id + 30000000 AS doc_id,
+          |'the quick brown fox jumps over the lazy dog and then ' || text AS text
+          |FROM documents WHERE doc_id % 3 = 0)""".stripMargin,
+        DedupSql.shingles("tok0"), DedupSql.shingles("tokd", "drift"),
+        """sfreq AS (SELECT shingle, CAST(count(*) AS BIGINT) AS scnt FROM tok0 GROUP BY shingle),
+          |toka AS (SELECT id, shingle FROM tok0 UNION ALL SELECT id, shingle FROM tokd),
+          |fresh AS (SELECT shingle, CAST(count(*) AS BIGINT) AS fcnt FROM toka GROUP BY shingle),
+          |vocab AS (SELECT f.shingle, f.fcnt, coalesce(s.scnt, 0) AS scnt
+          |FROM fresh f LEFT JOIN sfreq s USING (shingle)),
+          |ranked AS (SELECT row_number() OVER (ORDER BY scnt, shingle) AS rs,
+          |row_number() OVER (ORDER BY fcnt, shingle) AS rf FROM vocab),
+          |ra AS (SELECT CAST(count(*) AS BIGINT) AS n,
+          |coalesce(CAST(sum(CAST(rs - rf AS BIGINT) * CAST(rs - rf AS BIGINT)) AS HUGEINT),
+          |CAST(0 AS HUGEINT)) AS s2 FROM ranked),
+          |sized AS (SELECT t.id, t.shingle, f.fcnt,
+          |row_number() OVER (PARTITION BY t.id ORDER BY coalesce(s.scnt, 0), t.shingle) AS pos,
+          |row_number() OVER (PARTITION BY t.id ORDER BY f.fcnt, t.shingle) AS pos2,
+          |count(*) OVER (PARTITION BY t.id) AS s
+          |FROM toka t LEFT JOIN sfreq s USING (shingle) JOIN fresh f USING (shingle)
+          |WHERE t.id % 4 = 0),
+          |ms AS (SELECT coalesce(CAST(sum(CAST(p AS HUGEINT) * (p - 1) // 2) AS HUGEINT),
+          |CAST(0 AS HUGEINT)) AS m FROM
+          |(SELECT count(*) AS p FROM sized WHERE pos <= s - (7 * s + 9) // 10 + 1 GROUP BY shingle)),
+          |mf AS (SELECT coalesce(CAST(sum(CAST(p AS HUGEINT) * (p - 1) // 2) AS HUGEINT),
+          |CAST(0 AS HUGEINT)) AS m FROM
+          |(SELECT count(*) AS p FROM sized WHERE pos2 <= s - (7 * s + 9) // 10 + 1 GROUP BY shingle))""".stripMargin)(
+        """SELECT ra.n AS n_tokens,
+          |CASE WHEN ra.n < 2 THEN 1.0
+          |ELSE round(1.0 - 6.0 * CAST(ra.s2 AS DOUBLE) /
+          |CAST(CAST(ra.n AS HUGEINT) * ra.n * ra.n - ra.n AS DOUBLE), 6) END AS rank_corr,
+          |CAST(ms.m AS BIGINT) AS cand_mass_stored,
+          |CAST(mf.m AS BIGINT) AS cand_mass_refrozen,
+          |(ms.m > 2 * mf.m OR (ra.n >= 2 AND 30 * ra.s2 >
+          |CAST(ra.n AS HUGEINT) * ra.n * ra.n - ra.n)) AS refreeze
+          |FROM ra, ms, mf""".stripMargin))),
 
     // The LSH GEOMETRY FRONTIER priced against the exact tier
     // (Dedup.lshGeometryFrontier): q_setsim_vs_lsh fixes geometry at the
@@ -2632,35 +2610,34 @@ object Extensions {
     // prefix-filter join relationally — generated from the SAME
     // lshGeometries enumeration, so geometry set and SQL can't drift.
     Q("q_setsim_lsh_frontier",
-      (s, d) => {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
-          .cast("int"), lit(3))
-        val twins = docs.select((col("doc_id") + 10000000L).as("doc_id"),
-          array_join(slice(words, lit(1), keep), " ").as("text"))
-        Dedup.lshGeometryFrontier(docs.unionAll(twins), "doc_id", "text",
-          Seq((7, 10), (9, 10)))
-      },
-      Some(FrontierOracleSql)),
+      (s, d) => Dedup.lshGeometryFrontier(twinCorpus(s, d), "doc_id", "text",
+        SweepThresholds),
+      Some(DedupSql.Frontier)),
 
+    // The dedup THRESHOLD dial priced as a sweep (r14) — the
+    // q_ivf_probe_curve pattern applied to near-dup verification: pair
+    // and doc counts at jaccard ≥ 0.7 / 0.8 / 0.9 from ONE
+    // candidate+verify pass (each verified pair explodes to the
+    // thresholds it clears; the expensive stages — banding, the bucket
+    // join, per-pair ShingleJaccard — run once). The number a curation
+    // review reads before moving the dedup bar: how many more docs does
+    // 0.7 pull in, how many does 0.9 release. The fixture's own
+    // near-dups all sit at j ≥ 0.9 (the sweep would read flat), so the
+    // corpus is augmented with a deterministic TWIN per doc — the
+    // prefix keeping 50–95% of the words by doc_id — whose pair
+    // similarities span the swept range (the q_zipf_fit_gate move:
+    // make the fixture exercise both sides of the dial). Candidates
+    // are banding-driven (geometry fixed), so the sweep prices the
+    // threshold GIVEN the deployed LSH geometry — exactly what
+    // flipping the production knob would do; the oracle replays the
+    // same candidate set over the same twin-injected corpus.
     Q("q_dedup_threshold_sweep",
       (s, d) => {
         import s.implicits._
-        val thresholds = Seq(0.7, 0.8, 0.9)
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val words = split(col("text"), " ")
-        val keep = greatest(ceil(size(words) *
-            (lit(0.5) + (col("doc_id") % 10).cast("double") * lit(0.05)))
-          .cast("int"), lit(3))
-        val twins = docs.select((col("doc_id") + 10000000L).as("doc_id"),
-          array_join(slice(words, lit(1), keep), " ").as("text"))
-        val corpus = docs.unionAll(twins)
-        val pairs = Dedup.nearDupPairs(corpus, "doc_id", "text",
-          threshold = thresholds.min)
+        val pairs = Dedup.nearDupPairs(twinCorpus(s, d), "doc_id", "text",
+          threshold = SweepJ.min)
         val sweep = pairs.withColumn("threshold",
-            explode(array(thresholds.map(lit): _*)))
+            explode(array(SweepJ.map(lit): _*)))
           .filter(col("jaccard") >= col("threshold"))
         val nPairs = sweep.groupBy("threshold")
           .agg(count(lit(1)).as("n_pairs"))
@@ -2668,7 +2645,7 @@ object Extensions {
           .select(col("threshold"), explode(array(col("id_a"), col("id_b"))).as("id"))
           .distinct()
           .groupBy("threshold").agg(count(lit(1)).as("n_docs"))
-        thresholds.toDF("threshold")
+        SweepJ.toDF("threshold")
           .join(nPairs, Seq("threshold"), "left")
           .join(nDocs, Seq("threshold"), "left")
           .select(col("threshold"),
@@ -2676,37 +2653,22 @@ object Extensions {
             coalesce(col("n_docs"), lit(0L)).as("n_docs"))
           .orderBy("threshold")
       },
-      // the keep-fraction arithmetic must run in IEEE DOUBLE on BOTH
-      // engines: DuckDB types bare 0.5/0.05 as DECIMAL (exact), Spark
-      // lit(0.5) as double — at an exact-integer product (e.g. 100
-      // words × 0.55: double says 55.000000000000007, decimal says 55)
-      // ceil() diverges by one word and the twin texts differ, so the
-      // oracle CASTs both literals to DOUBLE before any arithmetic
-      Some(s"""WITH twins AS (SELECT doc_id + 10000000 AS doc_id,
-             |array_to_string(list_slice(string_split(text, ' '), 1,
-             |greatest(CAST(ceil(len(string_split(text, ' ')) *
-             |(CAST(0.5 AS DOUBLE) + (doc_id % 10) * CAST(0.05 AS DOUBLE))) AS INTEGER), 3)), ' ') AS text
-             |FROM documents),
-             |corpus AS (SELECT doc_id, text FROM documents
-             |UNION ALL SELECT doc_id, text FROM twins),
-             |${lshPairsCtesOver("corpus")},
-             |vj AS (SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id),
-             |thr AS (SELECT CAST(t.threshold AS DOUBLE) AS threshold
-             |FROM (VALUES (0.7), (0.8), (0.9)) t(threshold)),
-             |tp AS (SELECT thr.threshold, vj.id_a, vj.id_b
-             |FROM thr JOIN vj ON vj.j >= thr.threshold),
-             |np AS (SELECT threshold, count(*) AS n_pairs FROM tp GROUP BY threshold),
-             |nd AS (SELECT threshold, count(*) AS n_docs FROM (
-             |SELECT DISTINCT threshold, id FROM (
-             |SELECT threshold, id_a AS id FROM tp
-             |UNION ALL SELECT threshold, id_b FROM tp) u) v GROUP BY threshold)
-             |SELECT thr.threshold,
-             |CAST(coalesce(np.n_pairs, 0) AS BIGINT) AS n_pairs,
-             |CAST(coalesce(nd.n_docs, 0) AS BIGINT) AS n_docs
-             |FROM thr LEFT JOIN np ON np.threshold = thr.threshold
-             |LEFT JOIN nd ON nd.threshold = thr.threshold
-             |ORDER BY thr.threshold""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.TwinCorpus, DedupSql.shingles(from = "corpus"), DedupSql.Lsh,
+        s"""thr AS (SELECT CAST(t.threshold AS DOUBLE) AS threshold
+           |FROM (VALUES ${SweepJ.map(t => s"($t)").mkString(", ")}) t(threshold)),
+           |tp AS (SELECT thr.threshold, lp.id_a, lp.id_b
+           |FROM thr JOIN lp ON lp.j >= thr.threshold),
+           |np AS (SELECT threshold, count(*) AS n_pairs FROM tp GROUP BY threshold),
+           |nd AS (SELECT threshold, count(*) AS n_docs FROM (
+           |SELECT DISTINCT threshold, id FROM (
+           |SELECT threshold, id_a AS id FROM tp
+           |UNION ALL SELECT threshold, id_b FROM tp) u) v GROUP BY threshold)""".stripMargin)(
+        """SELECT thr.threshold,
+          |CAST(coalesce(np.n_pairs, 0) AS BIGINT) AS n_pairs,
+          |CAST(coalesce(nd.n_docs, 0) AS BIGINT) AS n_docs
+          |FROM thr LEFT JOIN np ON np.threshold = thr.threshold
+          |LEFT JOIN nd ON nd.threshold = thr.threshold
+          |ORDER BY thr.threshold""".stripMargin))),
 
     // The dedup report's HEADLINE number: what share of the corpus's
     // tokens sits inside near-dup families, and what share collapsing
@@ -2720,7 +2682,7 @@ object Extensions {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val cl = Dedup.clusters(Dedup.nearDupPairs(docs, "doc_id", "text",
-          threshold = 0.8).select("id_a", "id_b"))
+          threshold = NearDupJ).select("id_a", "id_b"))
         docs.select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("w"))
           .join(cl, Seq("doc_id"), "left")
           .agg(
@@ -2734,27 +2696,17 @@ object Extensions {
             round(col("removable_tokens").cast(DoubleType) /
               col("total_tokens").cast(DoubleType), 5).as("removable_share"))
       },
-      Some(s"""WITH RECURSIVE $LshPairsCtes,
-             |vpairs AS (SELECT id_a, id_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |cl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-             |FROM reach GROUP BY src),
-             |t AS (SELECT d.doc_id, len(string_split(d.text, ' ')) AS w,
-             |cl.cluster_id FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id)
-             |SELECT CAST(sum(w) AS BIGINT) AS total_tokens,
-             |CAST(sum(CASE WHEN cluster_id IS NOT NULL THEN w ELSE 0 END) AS BIGINT)
-             |AS dup_family_tokens,
-             |CAST(sum(CASE WHEN cluster_id IS NOT NULL AND cluster_id <> doc_id
-             |THEN w ELSE 0 END) AS BIGINT) AS removable_tokens,
-             |round(CAST(sum(CASE WHEN cluster_id IS NOT NULL AND cluster_id <> doc_id
-             |THEN w ELSE 0 END) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 5)
-             |AS removable_share FROM t"""
-        .stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified, DedupSql.closure(),
+        """t AS (SELECT d.doc_id, len(string_split(d.text, ' ')) AS w,
+          |cl.cluster_id FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id)""".stripMargin)(
+        """SELECT CAST(sum(w) AS BIGINT) AS total_tokens,
+          |CAST(sum(CASE WHEN cluster_id IS NOT NULL THEN w ELSE 0 END) AS BIGINT)
+          |AS dup_family_tokens,
+          |CAST(sum(CASE WHEN cluster_id IS NOT NULL AND cluster_id <> doc_id
+          |THEN w ELSE 0 END) AS BIGINT) AS removable_tokens,
+          |round(CAST(sum(CASE WHEN cluster_id IS NOT NULL AND cluster_id <> doc_id
+          |THEN w ELSE 0 END) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 5)
+          |AS removable_share FROM t""".stripMargin))),
 
     // Data-card summary: the release-note stat block for a corpus drop —
     // doc/token/char totals, source+language breadth, English share, and
@@ -2795,7 +2747,7 @@ object Extensions {
     Q("q_crossdup_matrix",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = NearDupJ)
           .select("id_a", "id_b")
         val src = docs.select(col("doc_id"), col("source"))
         pairs
@@ -2807,16 +2759,13 @@ object Extensions {
           .agg(count(lit(1)).cast(LongType).as("n_pairs"))
           .orderBy("source_a", "source_b")
       },
-      Some(s"""WITH $LshPairsCtes,
-             |vp AS (SELECT id_a, id_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |lab AS (SELECT least(da.source, db.source) AS source_a,
-             |greatest(da.source, db.source) AS source_b
-             |FROM vp JOIN documents da ON vp.id_a = da.doc_id
-             |JOIN documents db ON vp.id_b = db.doc_id)
-             |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs
-             |FROM lab GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified,
+        """lab AS (SELECT least(da.source, db.source) AS source_a,
+          |greatest(da.source, db.source) AS source_b
+          |FROM vpairs vp JOIN documents da ON vp.id_a = da.doc_id
+          |JOIN documents db ON vp.id_b = db.doc_id)""".stripMargin)(
+        """SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs
+          |FROM lab GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))),
 
     // Exact all-pairs n-gram Jaccard — the ground truth the LSH pipeline
     // approximates — from the exact set-sim block kernel at 9/10 (the
@@ -2829,33 +2778,21 @@ object Extensions {
           round(col("inter").cast(DoubleType) / col("uni").cast(DoubleType), 4)
             .as("jaccard"))
         .repartition(1).sortWithinPartitions("id_a", "id_b"),
-      Some(s"""WITH $ShinglesCte,
-             |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
-             |inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS i FROM sh a
-             |JOIN sh b ON a.shingle = b.shingle AND a.id < b.id GROUP BY 1, 2)
-             |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.9
-             |ORDER BY id_a, id_b""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(),
+        """sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
+          |inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS i FROM sh a
+          |JOIN sh b ON a.shingle = b.shingle AND a.id < b.id GROUP BY 1, 2)""".stripMargin)(
+        """SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
+          |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
+          |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.9
+          |ORDER BY id_a, id_b""".stripMargin))),
 
     Q("q_simhash",
       (s, d) => Dedup.simhashNarrow(Tables.documents(s, d), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
-      Some {
-        val votes = (0 until Dedup.SimhashBits).map(b =>
-          s"sum(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b").mkString(", ")
-        val combine = (0 until Dedup.SimhashBits).map(b =>
-          s"CASE WHEN v$b >= 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END").mkString(" + ")
-        // 16 hex digits parse as UBIGINT (BIGINT overflows past bit 62);
-        // the signed combine reproduces the two's-complement long exactly
-        s"""WITH tok AS (SELECT doc_id AS id,
-           |CAST(concat('0x', substring(md5(t.tok), 1, 16)) AS UBIGINT) AS h
-           |FROM documents, LATERAL (SELECT unnest(string_split(text, ' ')) AS tok) t),
-           |votes AS (SELECT id, $votes FROM tok GROUP BY id)
-           |SELECT id AS doc_id, $combine AS simhash FROM votes ORDER BY doc_id"""
-          .stripMargin.replace("\n", " ")
-      }),
+      Some(DedupSql.answer(DedupSql.Simhash)(
+        "SELECT id AS doc_id, simhash FROM sig ORDER BY doc_id"))),
 
     // SimHash near-dup pairs within Hamming radius 1, via the banded
     // (pigeonhole) join — the scale path; the oracle verifies all-pairs.
@@ -2863,22 +2800,12 @@ object Extensions {
       (s, d) => Dedup.simhashPairsBanded(
           Dedup.simhashNarrow(Tables.documents(s, d), "doc_id", "text"), maxHamming = 1)
         .orderBy("id_a", "id_b"),
-      Some {
-        val votes = (0 until Dedup.SimhashBits).map(b =>
-          s"sum(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b").mkString(", ")
-        val combine = (0 until Dedup.SimhashBits).map(b =>
-          s"CASE WHEN v$b >= 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END").mkString(" + ")
-        s"""WITH tok AS (SELECT doc_id AS id,
-           |CAST(concat('0x', substring(md5(t.tok), 1, 16)) AS UBIGINT) AS h
-           |FROM documents, LATERAL (SELECT unnest(string_split(text, ' ')) AS tok) t),
-           |votes AS (SELECT id, $votes FROM tok GROUP BY id),
-           |sig AS (SELECT id, $combine AS simhash FROM votes)
-           |SELECT a.id AS id_a, b.id AS id_b,
-           |CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-           |FROM sig a JOIN sig b ON a.id < b.id
-           |WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-           |ORDER BY id_a, id_b""".stripMargin.replace("\n", " ")
-      }),
+      Some(DedupSql.answer(DedupSql.Simhash)(
+        """SELECT a.id AS id_a, b.id AS id_b,
+          |CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+          |FROM sig a JOIN sig b ON a.id < b.id
+          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
+          |ORDER BY id_a, id_b""".stripMargin))),
 
     // Benchmark decontamination: per-train-doc count/ratio of distinct
     // 3-grams that appear anywhere in the held-out "benchmark" slice
@@ -2902,25 +2829,15 @@ object Extensions {
     Q("q_dedup_canonical",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = NearDupJ)
           .select("id_a", "id_b")
         Dedup.canonicalDocs(docs, "doc_id", pairs)
           .select(col("doc_id"), col("source"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE $LshPairsCtes,
-             |vpairs AS (SELECT id_a, id_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |losers AS (SELECT src AS doc_id FROM reach
-             |GROUP BY src HAVING least(src, min(dst)) <> src)
-             |SELECT doc_id, source FROM documents
-             |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-             |ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified,
+        DedupSql.closure())(
+        s"SELECT doc_id, source FROM documents WHERE ${DedupSql.Survives} ORDER BY doc_id"))),
 
     // ---- Similarity search ----------------------------------------------
 
@@ -4387,11 +4304,10 @@ object Extensions {
           round(col("cont_a"), 4).as("cont_a"),
           round(col("cont_b"), 4).as("cont_b"))
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH $LshPairsCtes
-             |SELECT id_a, id_b, round(CAST(i AS DOUBLE) / sa.n, 4) AS cont_a,
-             |round(CAST(i AS DOUBLE) / sb.n, 4) AS cont_b
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |ORDER BY id_a, id_b""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh)(
+        """SELECT id_a, id_b, round(CAST(i AS DOUBLE) / na, 4) AS cont_a,
+          |round(CAST(i AS DOUBLE) / nb, 4) AS cont_b
+          |FROM lp ORDER BY id_a, id_b""".stripMargin))),
 
     // Point-in-time read over the type-2 history: every user's state AS
     // OF Jan 15 — the query the history table exists for. A pure filter
@@ -4756,18 +4672,15 @@ object Extensions {
         val idx = Fixtures.dir("band_index_q", d)
         Dedup.writeBandIndex(old, "doc_id", "text", idx)
         Dedup.nearDupsAgainstIndex(docs.filter(col("doc_id") >= 400),
-            "doc_id", "text", idx, old, threshold = 0.8)
+            "doc_id", "text", idx, old, threshold = NearDupJ)
           .select(col("id_new"), col("id_old"),
             round(col("jaccard"), 4).as("jaccard"))
           .orderBy("id_new", "id_old")
       },
-      Some(s"""WITH $LshPairsCtes
-             |SELECT id_b AS id_new, id_a AS id_old,
-             |round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE id_a < 400 AND id_b >= 400
-             |AND CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-             |ORDER BY id_new, id_old""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified)(
+        """SELECT id_b AS id_new, id_a AS id_old, round(j, 4) AS jaccard
+          |FROM vpairs WHERE id_a < 400 AND id_b >= 400
+          |ORDER BY id_new, id_old""".stripMargin))),
 
     // JSONL round-trip (the LLM-corpus interchange format): documents
     // written as newline-delimited JSON with nested typed metadata, read
@@ -4814,7 +4727,7 @@ object Extensions {
         val d1 = Dedup.materializeLeaf(graft.catalog.Catalog.dedupFirst(
           corpus.withColumn("__nk", md5(TextAnalysis.normalizeText(col("text")))),
           Seq("__nk"), "doc_id").drop("__nk"))._1
-        val pairs = Dedup.nearDupPairs(d1, "doc_id", "text", threshold = 0.8)
+        val pairs = Dedup.nearDupPairs(d1, "doc_id", "text", threshold = NearDupJ)
           .select("id_a", "id_b")
         val d2 = Dedup.canonicalDocs(d1, "doc_id", pairs)
         def stage(name: String, df: org.apache.spark.sql.DataFrame) =
@@ -4825,42 +4738,19 @@ object Extensions {
           .unionByName(stage("2_canonical", d2))
           .orderBy("stage")
       },
-      Some("""WITH RECURSIVE corpus AS (SELECT doc_id, text FROM documents
-             |UNION ALL SELECT doc_id + 10000, upper(text) FROM documents WHERE doc_id < 50),
-             |norm AS (SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text),
-             |'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS nk FROM corpus),
-             |keep1 AS (SELECT min(doc_id) AS doc_id FROM norm GROUP BY nk),
-             |d1 AS (SELECT c.* FROM corpus c JOIN keep1 USING (doc_id)),
-             |sh AS (SELECT DISTINCT doc_id AS id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM d1) words,
-             |LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t),
-             |sig AS (SELECT id, min(substr(md5(shingle), 1, 5)) AS s0,
-             |min(substr(md5(shingle), 6, 5)) AS s1, min(substr(md5(shingle), 11, 5)) AS s2,
-             |min(substr(md5(shingle), 16, 5)) AS s3, min(substr(md5(shingle), 21, 5)) AS s4,
-             |min(substr(md5(shingle), 26, 5)) AS s5 FROM sh GROUP BY id),
-             |bands AS (SELECT 0 AS band_id, s0 || '|' || s1 AS band_key, id FROM sig
-             |UNION ALL SELECT 1, s2 || '|' || s3, id FROM sig
-             |UNION ALL SELECT 2, s4 || '|' || s5, id FROM sig),
-             |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands a
-             |JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.id < b.id),
-             |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
-             |inter AS (SELECT c.id_a, c.id_b, count(*) AS i FROM cand c
-             |JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-             |GROUP BY c.id_a, c.id_b),
-             |vpairs AS (SELECT id_a, id_b FROM inter
-             |JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |losers AS (SELECT src AS doc_id FROM reach
-             |GROUP BY src HAVING least(src, min(dst)) <> src),
-             |d2 AS (SELECT doc_id FROM d1 WHERE doc_id NOT IN (SELECT doc_id FROM losers))
-             |SELECT '0_raw' AS stage, CAST(count(*) AS BIGINT) AS docs FROM corpus
-             |UNION ALL SELECT '1_normalized', CAST(count(*) AS BIGINT) FROM d1
-             |UNION ALL SELECT '2_canonical', CAST(count(*) AS BIGINT) FROM d2
-             |ORDER BY stage""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(
+        """corpus AS (SELECT doc_id, text FROM documents
+          |UNION ALL SELECT doc_id + 10000, upper(text) FROM documents WHERE doc_id < 50),
+          |norm AS (SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text),
+          |'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS nk FROM corpus),
+          |keep1 AS (SELECT min(doc_id) AS doc_id FROM norm GROUP BY nk),
+          |d1 AS (SELECT c.* FROM corpus c JOIN keep1 USING (doc_id))""".stripMargin,
+        DedupSql.shingles(from = "d1"), DedupSql.Lsh, DedupSql.Verified, DedupSql.closure(),
+        s"d2 AS (SELECT doc_id FROM d1 WHERE ${DedupSql.Survives})")(
+        """SELECT '0_raw' AS stage, CAST(count(*) AS BIGINT) AS docs FROM corpus
+          |UNION ALL SELECT '1_normalized', CAST(count(*) AS BIGINT) FROM d1
+          |UNION ALL SELECT '2_canonical', CAST(count(*) AS BIGINT) FROM d2
+          |ORDER BY stage""".stripMargin))),
 
     // Canonical text normalization (case/punct/whitespace-invariant
     // form + md5 fingerprint): the cheap fuzzy-exact dedup tier below
@@ -5329,29 +5219,25 @@ object Extensions {
     Q("q_minhash_estimate",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+        val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", threshold = NearDupJ)
         val sig = Dedup.minhashSignatureNarrow(docs, "doc_id", "text")
-        val sa = sig.toDF("id_a" +: (0 until 6).map(i => s"a$i"): _*)
-        val sb = sig.toDF("id_b" +: (0 until 6).map(i => s"b$i"): _*)
-        val agree = (0 until 6)
+        val sa = sig.toDF("id_a" +: (0 until LshK).map(i => s"a$i"): _*)
+        val sb = sig.toDF("id_b" +: (0 until LshK).map(i => s"b$i"): _*)
+        val agree = (0 until LshK)
           .map(i => (col(s"a$i") === col(s"b$i")).cast("int"))
           .reduce(_ + _)
         pairs.join(sa, "id_a").join(sb, "id_b")
           .select(col("id_a"), col("id_b"),
             round(col("jaccard"), 4).as("jaccard"),
-            round(agree.cast(DoubleType) / 6.0, 4).as("estimate"))
+            round(agree.cast(DoubleType) / LshK.toDouble, 4).as("estimate"))
           .orderBy("id_a", "id_b")
       },
-      Some(s"""WITH $LshPairsCtes,
-             |verified AS (SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
-             |FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8)
-             |SELECT v.id_a, v.id_b, round(v.j, 4) AS jaccard,
-             |round((CAST(a.s0 = b.s0 AS INT) + CAST(a.s1 = b.s1 AS INT) +
-             |CAST(a.s2 = b.s2 AS INT) + CAST(a.s3 = b.s3 AS INT) +
-             |CAST(a.s4 = b.s4 AS INT) + CAST(a.s5 = b.s5 AS INT)) / 6.0, 4) AS estimate
-             |FROM verified v JOIN sig a ON v.id_a = a.id JOIN sig b ON v.id_b = b.id
-             |ORDER BY v.id_a, v.id_b""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(DedupSql.shingles(), DedupSql.Lsh, DedupSql.Verified)(
+        s"""SELECT v.id_a, v.id_b, round(v.j, 4) AS jaccard,
+           |round((${(0 until LshK).map(i => s"CAST(a.s$i = b.s$i AS INT)").mkString(" + ")})
+           |/ ${LshK.toDouble}, 4) AS estimate
+           |FROM vpairs v JOIN sig a ON v.id_a = a.id JOIN sig b ON v.id_b = b.id
+           |ORDER BY v.id_a, v.id_b""".stripMargin))),
 
     // Mixture drift monitoring: KL(source ‖ corpus) over unigram
     // distributions, in bits — flags the source whose language shifted.
@@ -5457,7 +5343,7 @@ object Extensions {
         val (q, _) = Dedup.materializeLeaf(docs.filter(col("doc_id") % 50 =!= 0)
           .filter((size(filter(toks, t => t.isin(TextAnalysis.StopwordsEn.map(lit): _*)))
             .cast(DoubleType) / size(toks).cast(DoubleType)) >= 0.05))
-        val pairs = Dedup.nearDupPairs(q, "doc_id", "text", threshold = 0.8)
+        val pairs = Dedup.nearDupPairs(q, "doc_id", "text", threshold = NearDupJ)
           .select("id_a", "id_b")
         // the canonical corpus feeds THREE downstream branches (the
         // contamination ratio's own/hits sides and the final anti-join) —
@@ -5475,53 +5361,25 @@ object Extensions {
             sum(TextAnalysis.tokenCount(col("text"))).as("n_tokens"))
           .orderBy("split")
       },
-      Some(s"""WITH RECURSIVE
-             |corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
-             |q AS (SELECT doc_id, text FROM corp
-             |WHERE CAST(len(list_filter(string_split(text,' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
-             |/ CAST(len(string_split(text,' ')) AS DOUBLE) >= 0.05),
-             |sh AS (SELECT DISTINCT doc_id AS id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM q) words,
-             |LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t),
-             |sig AS (SELECT id, $SigCols FROM sh GROUP BY id),
-             |bands AS (
-             |SELECT 0 AS band_id, s0 || '|' || s1 AS band_key, id FROM sig
-             |UNION ALL SELECT 1, s2 || '|' || s3, id FROM sig
-             |UNION ALL SELECT 2, s4 || '|' || s5, id FROM sig),
-             |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands a
-             |JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.id < b.id),
-             |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
-             |inter AS (SELECT c.id_a, c.id_b, count(*) AS i FROM cand c
-             |JOIN sh a ON a.id = c.id_a JOIN sh b ON b.id = c.id_b AND b.shingle = a.shingle
-             |GROUP BY c.id_a, c.id_b),
-             |vpairs AS (SELECT id_a, id_b FROM inter
-             |JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-             |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM vpairs
-             |UNION SELECT id_b, id_a FROM vpairs),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |losers AS (SELECT src AS doc_id FROM reach
-             |GROUP BY src HAVING least(src, min(dst)) <> src),
-             |ded AS (SELECT doc_id, text FROM q
-             |WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
-             |dsh AS (SELECT DISTINCT doc_id AS id, w[i]||' '||w[i+1]||' '||w[i+2] AS shingle
-             |FROM (SELECT doc_id, string_split(text,' ') AS w FROM ded) words,
-             |LATERAL (SELECT unnest(range(1, len(w)-1)) AS i) t),
-             |bsh AS (SELECT DISTINCT w[i]||' '||w[i+1]||' '||w[i+2] AS shingle
-             |FROM (SELECT string_split(text,' ') AS w FROM documents WHERE doc_id % 50 = 0) words,
-             |LATERAL (SELECT unnest(range(1, len(w)-1)) AS i) t),
-             |ratio AS (SELECT id, CAST(count(*) FILTER (WHERE shingle IN (SELECT shingle FROM bsh)) AS DOUBLE)
-             |/ count(*) AS r FROM dsh GROUP BY id),
-             |clean AS (SELECT dd.doc_id, dd.text FROM ded dd LEFT JOIN ratio ON dd.doc_id = ratio.id
-             |WHERE coalesce(r, 0) <= 0.5)
-             |SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-             |CAST(count(*) AS BIGINT) AS n_docs,
-             |CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens
-             |FROM (SELECT doc_id, text,
-             |CAST(concat('0x', substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')),1,4)) AS BIGINT) % 100 AS b
-             |FROM clean) x
-             |GROUP BY 1 ORDER BY 1""".stripMargin.replace("\n", " "))),
+      Some(DedupSql.answer(
+        s"""corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
+           |q AS (SELECT doc_id, text FROM corp
+           |WHERE CAST(len(list_filter(string_split(text,' '), t -> t IN (${inList(TextAnalysis.StopwordsEn)}))) AS DOUBLE)
+           |/ CAST(len(string_split(text,' ')) AS DOUBLE) >= 0.05)""".stripMargin,
+        DedupSql.shingles(from = "q"), DedupSql.Lsh, DedupSql.Verified, DedupSql.closure(),
+        s"ded AS (SELECT doc_id, text FROM q WHERE ${DedupSql.Survives})",
+        DedupSql.shingles("dsh", "ded"), DedupSql.shingles("bsh", "documents WHERE doc_id % 50 = 0"),
+        """ratio AS (SELECT id, CAST(count(*) FILTER (WHERE shingle IN (SELECT shingle FROM bsh)) AS DOUBLE)
+          |/ count(*) AS r FROM dsh GROUP BY id),
+          |clean AS (SELECT dd.doc_id, dd.text FROM ded dd LEFT JOIN ratio ON dd.doc_id = ratio.id
+          |WHERE coalesce(r, 0) <= 0.5)""".stripMargin)(
+        """SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
+          |CAST(count(*) AS BIGINT) AS n_docs,
+          |CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens
+          |FROM (SELECT doc_id, text,
+          |CAST(concat('0x', substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')),1,4)) AS BIGINT) % 100 AS b
+          |FROM clean) x
+          |GROUP BY 1 ORDER BY 1""".stripMargin))),
 
     // The curation pipeline's join stage on a BUCKETED layout: documents
     // and their per-doc token stats are written once as co-bucketed
@@ -5707,27 +5565,23 @@ object Extensions {
             length(col("rs")).as("canon_len"))
           .orderBy("cluster_id")
       },
-      Some("""WITH RECURSIVE a AS (SELECT doc_id AS rid, lower(substr(text, 1, 40)) AS rs
-             |FROM documents WHERE doc_id < 400),
-             |b AS (SELECT rid + 20000 AS rid, substr(rs, 1, 4) || substr(rs, 6) AS rs
-             |FROM a WHERE rid % 3 = 0),
-             |c AS (SELECT rid + 40000 AS rid, substr(rs, 1, 9) || substr(rs, 11) AS rs
-             |FROM a WHERE rid % 4 = 0),
-             |recs AS (SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM c),
-             |cand AS (SELECT x.rid AS id_a, y.rid AS id_b FROM recs x JOIN recs y
-             |ON lower(substr(x.rs, 1, 3)) = lower(substr(y.rs, 1, 3))
-             |AND abs(length(x.rs) - length(y.rs)) <= 2 AND x.rid < y.rid
-             |WHERE levenshtein(x.rs, y.rs) <= 2),
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-             |UNION SELECT id_b, id_a FROM cand),
-             |reach(src, dst) AS (SELECT src, dst FROM edges
-             |UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-             |lab AS (SELECT src AS rid, least(src, min(dst)) AS cluster_id
-             |FROM reach GROUP BY src),
-             |ent AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_records
-             |FROM lab GROUP BY cluster_id)
-             |SELECT e.cluster_id, e.n_records, CAST(length(r.rs) AS INTEGER) AS canon_len
-             |FROM ent e JOIN recs r ON r.rid = e.cluster_id
-             |ORDER BY cluster_id""".stripMargin.replace("\n", " ")))
+      Some(DedupSql.answer(
+        """a AS (SELECT doc_id AS rid, lower(substr(text, 1, 40)) AS rs
+          |FROM documents WHERE doc_id < 400),
+          |b AS (SELECT rid + 20000 AS rid, substr(rs, 1, 4) || substr(rs, 6) AS rs
+          |FROM a WHERE rid % 3 = 0),
+          |c AS (SELECT rid + 40000 AS rid, substr(rs, 1, 9) || substr(rs, 11) AS rs
+          |FROM a WHERE rid % 4 = 0),
+          |recs AS (SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM c),
+          |cand AS (SELECT x.rid AS id_a, y.rid AS id_b FROM recs x JOIN recs y
+          |ON lower(substr(x.rs, 1, 3)) = lower(substr(y.rs, 1, 3))
+          |AND abs(length(x.rs) - length(y.rs)) <= 2 AND x.rid < y.rid
+          |WHERE levenshtein(x.rs, y.rs) <= 2)""".stripMargin,
+        DedupSql.closure("cand"),
+        """ent AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_records
+          |FROM cl GROUP BY cluster_id)""".stripMargin)(
+        """SELECT e.cluster_id, e.n_records, CAST(length(r.rs) AS INTEGER) AS canon_len
+          |FROM ent e JOIN recs r ON r.rid = e.cluster_id
+          |ORDER BY cluster_id""".stripMargin)))
   )
 }

@@ -56,16 +56,39 @@ class SetSimBlockSpec extends SparkSpec {
   test("setSimExactCounts and lshGeometryFrontier count setSimJoinExact's pairs " +
     "on the sf0.001 twin corpus") {
     val docs = frame(spark, corpus)
-    val joined = Thresholds.map { case (num, den) =>
-      Dedup.setSimJoinExact(docs, "doc_id", "text", num, den).count() }
+    val exact = Thresholds.map { case (num, den) =>
+      Dedup.setSimJoinExact(docs, "doc_id", "text", num, den)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSeq }
+    val joined = exact.map(_.size.toLong)
     val counts = Dedup.setSimExactCounts(docs, "doc_id", "text", Thresholds)
     assert(counts.map(_._4) == joined, s"setSimExactCounts $counts vs $joined")
     assert(counts.forall { case (_, _, cand, pairs) => cand >= pairs }, counts)
-    val frontier = Dedup.lshGeometryFrontier(docs, "doc_id", "text", Thresholds)
-      .select($"threshold", $"exact_pairs").distinct().as[(Double, Long)].collect().toMap
-    assert(frontier == Thresholds.map { case (num, den) => num.toDouble / den }.zip(joined).toMap,
-      s"lshGeometryFrontier $frontier vs $joined")
     assert(joined.forall(_ > 0), joined)
+    // every row of the frontier against a driver-side reference: per
+    // geometry the capped LSH candidates, per threshold the exact pairs
+    // among them
+    val cands = Dedup.lshGeometries.map { case (k, r) =>
+      (k, r) -> Dedup.lshCandidates(Dedup.lshBands(
+          Dedup.minhashSignatureNarrow(docs, "doc_id", "text", k = k), k, r))
+        .as[(Long, Long)].collect().toSet }.toMap
+    val want = (for {
+      ((num, den), pairs) <- Thresholds.zip(exact); ((k, r), cand) <- cands
+    } yield (num.toDouble / den, k, r) ->
+      (k / r, pairs.size.toLong, pairs.toSet.count(cand).toLong, cand.size.toLong)).toMap
+    val got = Dedup.lshGeometryFrontier(docs, "doc_id", "text", Thresholds).collect()
+      .map(row => (row.getDouble(0), row.getInt(1), row.getInt(2)) -> row).toMap
+    assert(got.size == Thresholds.size * Dedup.lshGeometries.size && got.keySet == want.keySet,
+      s"frontier rows ${got.keySet.diff(want.keySet)} vs ${want.keySet.diff(got.keySet)}")
+    for (((t, k, r), (bands, nExact, nRec, nCand)) <- want) {
+      val row = got((t, k, r))
+      assert((row.getInt(3), row.getLong(5), row.getLong(6), row.getLong(8)) ==
+        ((bands, nExact, nRec, nCand)), s"frontier row $row vs ($bands, $nExact, $nRec, $nCand)")
+      def round4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(row.getDouble(4) == round4(Dedup.lshCaptureProb(t, r, bands)), row)
+      assert(row.getDouble(7) == round4(nRec.toDouble / nExact), row)
+    }
+    // the fixture exercises recall: some geometry misses pairs another finds
+    assert(want.values.exists { case (_, e, rec, _) => rec > 0 && rec < e }, want)
   }
 
   // ---- degenerate fixtures -------------------------------------------------
