@@ -1,25 +1,29 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** Parquet-backed typed metadata store: the reference's Postgres catalog
-  * re-expressed as `Dataset[T]` tables with anti-join-enforced unique
-  * keys and full-refresh overwrite commits.
+  * re-expressed as `Dataset[T]` tables with unique keys checked at commit
+  * and full-refresh overwrite commits.
   *
   * Semantics mapped from the reference:
-  *  - create-or-get (app/utils/onadata_utils.py:265-292): semi-join
-  *    existence check, anti-join insert — the row that already holds the
-  *    unique key wins, exactly like the DB constraint + get-then-create.
+  *  - create-or-get (app/utils/onadata_utils.py:265-292): existence check
+  *    on the re-read rows, insert of the absent keys only — the row that
+  *    already holds the unique key wins, exactly like the DB constraint +
+  *    get-then-create.
   *  - status update + failure accounting (app/core/importer.py:129-220,
-  *    app/utils/hyper_utils.py:239-263): pure column transforms guarded
-  *    by the FileStatus transition table.
+  *    app/utils/hyper_utils.py:239-263): pure row transforms guarded by
+  *    the FileStatus transition table.
   *  - Catalog tables are small: every join against extract-scale data
   *    should broadcast (callers wrap in `broadcast(...)`).
   *
-  * Writes are read-modify-overwrite of a small parquet dataset — atomic
-  * via the output committer; the lastUpdated stamp is caller-provided so
-  * replays are deterministic (no wall-clock in the data path).
+  * Writes are read-modify-overwrite of a small parquet dataset: the
+  * table is re-read under the lock, changed as driver rows (the
+  * reference's Postgres row update), written as one file into staging
+  * and renamed into place ([[commit]]) — one Spark job to read, one to
+  * write. The commit also primes the table's snapshot with the rows it
+  * wrote. The lastUpdated stamp is caller-provided so replays are
+  * deterministic (no wall-clock in the data path).
   */
 class MetaStore(spark: SparkSession, root: String) {
   import spark.implicits._
@@ -37,20 +41,21 @@ class MetaStore(spark: SparkSession, root: String) {
   // ---- driver-side snapshot cache ---------------------------------------
   // The catalog is the reference's Postgres: tiny and driver-side by
   // design. Serving paths (one HTTP GET each) should not launch a Spark
-  // job per request, so collected snapshots are cached here and
-  // invalidated by every write — all writes flow through `overwrite` or
-  // an `init*`, making those the two invalidation choke points. Local
-  // writes invalidate directly; OTHER processes' writes (safe under
+  // job per request, so collected snapshots are cached here. Every
+  // write flows through `commit`, which replaces its table's snapshot
+  // with the rows it just committed — the next GET after a local write
+  // is a cache hit, not a reload. OTHER processes' writes (safe under
   // CatalogLock) surface through the `_catalog_version` stamp every
   // write bumps under the lock: `snapshot()` revalidates against it
   // with one tiny FS read per request — still ZERO Spark jobs on the
-  // cached path — and clears the cache when the stamp moved, so a
-  // long-lived Serve process sees another driver's committed registry
-  // write on its next request. Mutations never read the cache — every
-  // RMW re-reads parquet under the lock. (A catalog mutated only by
-  // pre-stamp builds carries no version file; such writes stay on the
-  // old read-your-own-writes visibility until a new-build write stamps
-  // it.)
+  // cached path — and drops a table's snapshot when its stamp moved, so
+  // a long-lived Serve process sees another driver's committed registry
+  // write on its next request. A stamp that cannot be read (a rename in
+  // flight) leaves the cache as it is. Mutations never read the cache —
+  // every RMW re-reads parquet under the lock. (A catalog mutated only
+  // by pre-stamp builds carries no version file; such writes stay on
+  // the old read-your-own-writes visibility until a new-build write
+  // stamps it.)
 
   private val snapshots = new java.util.concurrent.ConcurrentHashMap[String, Seq[Any]]()
 
@@ -63,9 +68,13 @@ class MetaStore(spark: SparkSession, root: String) {
   /** One `<table> <uuid>` line per registry — PER-TABLE stamps, so a
     * busy hyperfiles writer never evicts the servers/users/configs
     * snapshots of every serving process (a catalog-global stamp would
-    * 4× the reload traffic of each commit).
+    * 4× the reload traffic of each commit). None when the file cannot
+    * be read: absent, or caught between the two steps of a writer's
+    * rename-over (on the local FS, Hadoop's overwrite rename deletes
+    * the old file before it moves the new one in, and moves its
+    * checksum separately).
     */
-  private def readVersion(): Map[String, String] = {
+  private def readVersion(): Option[Map[String, String]] = {
     val (fs, _) = graft.etl.Refresh.hfs(spark, root)
     try {
       val in = fs.open(versionPath)
@@ -73,11 +82,11 @@ class MetaStore(spark: SparkSession, root: String) {
         try new String(org.apache.commons.io.IOUtils.toByteArray(in),
           java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
-      txt.linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { l =>
+      Some(txt.linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { l =>
         val sp = l.indexOf(' ')
         if (sp <= 0) None else Some(l.take(sp) -> l.drop(sp + 1))
-      }.toMap
-    } catch { case _: java.io.IOException => Map.empty }
+      }.toMap)
+    } catch { case _: java.io.IOException => None }
   }
 
   /** Bump `table`'s cross-process invalidation stamp (called under the
@@ -85,11 +94,15 @@ class MetaStore(spark: SparkSession, root: String) {
     * of the stamp file never interleaves). tmp + rename-overwrite, the
     * same commit shape as the id sequence. The local cache marker
     * advances too, so the writing process never re-clears its own
-    * just-refreshed snapshot.
+    * just-primed snapshot; the stamps other processes moved since this
+    * one last looked drop their tables' snapshots first, as a read's
+    * revalidation would.
     */
   private def bumpVersion(table: String): Unit = {
     val (fs, _) = graft.etl.Refresh.hfs(spark, root)
-    val next = readVersion() + (table -> java.util.UUID.randomUUID().toString)
+    // under the lock no writer is mid-rename, so unreadable == absent
+    val seen = readVersion().getOrElse(Map.empty)
+    val next = seen + (table -> java.util.UUID.randomUUID().toString)
     val body = next.toSeq.sorted.map { case (t, v) => s"$t $v" }.mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(root, "._catalog_version.tmp")
     val out = fs.create(tmp, true)
@@ -98,23 +111,29 @@ class MetaStore(spark: SparkSession, root: String) {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       tmp.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, versionPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    adopt(seen)
     cachedVersion = next
   }
 
   /** Drop exactly the cached snapshots whose stamp moved (another
-    * process committed that table). Benign races only: a concurrent
-    * writer can at worst cause one extra invalidate-and-reload (loads
-    * always re-read parquet, so nothing stale is ever reinstated).
+    * process committed that table) and remember `v` as seen.
     */
-  private def revalidateSnapshots(): Unit = {
-    val v = readVersion()
+  private def adopt(v: Map[String, String]): Unit =
     if (v != cachedVersion) {
       v.foreach { case (t, stamp) =>
         if (!cachedVersion.get(t).contains(stamp)) { snapshots.remove(t); () }
       }
       cachedVersion = v
     }
-  }
+
+  /** Revalidate against the stamp file. An unreadable stamp is unknown,
+    * not empty: adopting an empty map there would make the next
+    * readable stamp look like a move of every table and drop every
+    * snapshot. Benign races only: a concurrent writer can at worst cause
+    * one extra invalidate-and-reload (loads always re-read parquet, so
+    * nothing stale is ever reinstated).
+    */
+  private def revalidateSnapshots(): Unit = readVersion().foreach(adopt)
 
   private def snapshot[T](table: String)(load: => Seq[T]): Seq[T] = {
     revalidateSnapshots()
@@ -135,8 +154,6 @@ class MetaStore(spark: SparkSession, root: String) {
         Thread.sleep(50)
         load
     }
-
-  private def invalidateSnapshot(table: String): Unit = { snapshots.remove(table); () }
 
   // ---- write serialization ----------------------------------------------
   // Every mutator is a read-modify-WRITE over a whole registry table;
@@ -159,9 +176,10 @@ class MetaStore(spark: SparkSession, root: String) {
     CatalogLock.withLock(fs, rootPath)(body)
   }
 
-  /** Cached driver-side rows, refreshed lazily after any write through
-    * this store. Total order by id, so pagination over the snapshot is
-    * deterministic without a per-request sort job.
+  /** Cached driver-side rows: primed by every commit through this store,
+    * reloaded lazily after another process's commit. Total order by id,
+    * so pagination over the snapshot is deterministic without a
+    * per-request sort job.
     */
   def hyperFilesSnapshot(): Seq[HyperFileMeta] =
     snapshot("hyperfiles")(readHyperFiles().collect().toSeq.sortBy(_.id))
@@ -252,45 +270,49 @@ class MetaStore(spark: SparkSession, root: String) {
     }
   }
 
-  def writeHyperFiles(ds: Dataset[HyperFileMeta]): Unit = {
-    // self-check the unique key before commit (cheap: catalog-sized)
-    val dupes = ds.groupBy($"userId", $"formId").count().filter($"count" > 1).count()
-    require(dupes == 0, s"unique (userId, formId) violated by $dupes keys")
-    // read-modify-overwrite on the same path: materialize into staging
-    // (no driver round-trip), then atomically rename into place — the
-    // same commit pattern as Refresh.incremental
-    overwrite(ds.toDF(), "hyperfiles")
+  /** Commit `ds` as the whole hyperfiles table, under the lock. */
+  def writeHyperFiles(ds: Dataset[HyperFileMeta]): Unit =
+    mutate { commitHyperFiles(ds.collect().toSeq); () }
+
+  /** The hyperfiles commit: the (userId, formId) key is checked on the
+    * driver rows (catalog-sized) before anything is written.
+    */
+  private def commitHyperFiles(rows: Seq[HyperFileMeta]): Seq[HyperFileMeta] = {
+    requireUnique(rows, "(userId, formId)")(f => (f.userId, f.formId))
+    commit("hyperfiles", rows)(_.id)
   }
 
-  def initHyperFiles(rows: Seq[HyperFileMeta]): Unit = mutate {
-    rows.toDS().coalesce(1).write.mode("overwrite").parquet(path("hyperfiles"))
-    invalidateSnapshot("hyperfiles")
-    bumpVersion("hyperfiles")
-  }
+  /** The read-modify-write every row-level hyperfiles mutator shares:
+    * re-read the committed table (never the snapshot), change it on the
+    * driver, commit.
+    */
+  private def rewriteHyperFiles(change: Seq[HyperFileMeta] => Seq[HyperFileMeta]): Unit =
+    mutate { commitHyperFiles(change(readHyperFiles().collect().toSeq)); () }
+
+  def initHyperFiles(rows: Seq[HyperFileMeta]): Unit =
+    mutate { commit("hyperfiles", rows)(_.id); () }
 
   /** Create-or-get: insert only rows whose (userId, formId) is absent;
-    * existing rows (and their state) are preserved verbatim.
+    * existing rows (and their state) are preserved verbatim. Returns the
+    * committed table.
     */
   def createOrGet(incoming: Dataset[HyperFileMeta]): Dataset[HyperFileMeta] = mutate {
-    val existing = readHyperFiles()
-    val fresh = incoming.join(existing, Seq("userId", "formId"), "left_anti")
-      .as[HyperFileMeta]
-    val merged = existing.unionByName(fresh)
-    writeHyperFiles(merged)
-    readHyperFiles()
+    val existing = readHyperFiles().collect().toSeq
+    val taken = existing.map(f => (f.userId, f.formId)).toSet
+    val fresh = incoming.collect().toSeq.filterNot(f => taken((f.userId, f.formId)))
+    commitHyperFiles(existing ++ fresh).toDS()
   }
 
   /** Guarded status transition for one file id; illegal transitions are
     * no-ops (the reference answers HTTP 202 and leaves the row alone).
     */
-  def transition(fileId: Long, to: String, at: java.sql.Timestamp): Unit = mutate {
+  def transition(fileId: Long, to: String, at: java.sql.Timestamp): Unit = {
     require(FileStatus.All.contains(to), s"unknown status $to")
-    val updated = readHyperFiles().map { f =>
+    rewriteHyperFiles(_.map { f =>
       if (f.id == fileId && FileStatus.canTransition(f.fileStatus, to))
         f.copy(fileStatus = to, lastUpdated = at)
       else f
-    }
-    writeHyperFiles(updated)
+    })
   }
 
   /** Failure accounting (threshold from ops.State.FailureThreshold): on
@@ -300,9 +322,9 @@ class MetaStore(spark: SparkSession, root: String) {
     * counter and set file_available.
     */
   def recordSyncResult(fileId: Long, success: Boolean,
-                       at: java.sql.Timestamp, reason: String = ""): Unit = mutate {
+                       at: java.sql.Timestamp, reason: String = ""): Unit = {
     val thr = graft.ops.State.FailureThreshold
-    val updated = readHyperFiles().map { f =>
+    rewriteHyperFiles(_.map { f =>
       if (f.id != fileId) f
       else if (success)
         f.copy(fileStatus = FileStatus.FileAvailable,
@@ -319,8 +341,7 @@ class MetaStore(spark: SparkSession, root: String) {
             (MetaKeys.FailureReason -> reason),
           lastUpdated = at)
       }
-    }
-    writeHyperFiles(updated)
+    })
     // count AFTER the catalog write commits: a success whose catalog
     // write throws reaches the caller's failure path, which calls back
     // here with success=false — counting up front would tally that one
@@ -336,20 +357,17 @@ class MetaStore(spark: SparkSession, root: String) {
     * DELETE /files/{id}, file.py:146-160 — job cancel + object delete
     * are the caller's side effects). No-op on an unknown id.
     */
-  def delete(fileId: Long): Unit =
-    mutate { writeHyperFiles(readHyperFiles().filter(_.id != fileId)) }
+  def delete(fileId: Long): Unit = rewriteHyperFiles(_.filter(_.id != fileId))
 
   /** Field-level update of one row (the PATCH surface, file.py:117-143:
     * re-attach configuration / rename). Pure copy-transform; unknown id
     * is a no-op. The caller stamps `lastUpdated` (replay-deterministic).
     */
   def update(fileId: Long, at: java.sql.Timestamp)
-            (f: HyperFileMeta => HyperFileMeta): Unit = mutate {
-    val updated = readHyperFiles().map { row =>
+            (f: HyperFileMeta => HyperFileMeta): Unit =
+    rewriteHyperFiles(_.map { row =>
       if (row.id == fileId) f(row).copy(id = row.id, lastUpdated = at) else row
-    }
-    writeHyperFiles(updated)
-  }
+    })
 
   /** Read a registry table where a genuinely ABSENT table is an EMPTY
     * registry (first use — nothing has been created yet), shared by all
@@ -373,22 +391,18 @@ class MetaStore(spark: SparkSession, root: String) {
 
   def readServers(): Dataset[ServerMeta] = readOrEmpty[ServerMeta]("servers")
 
-  def initServers(rows: Seq[ServerMeta]): Unit = mutate {
-    rows.toDS().coalesce(1).write.mode("overwrite").parquet(path("servers"))
-    invalidateSnapshot("servers")
-    bumpVersion("servers")
-  }
+  def initServers(rows: Seq[ServerMeta]): Unit =
+    mutate { commit("servers", rows)(_.id); () }
 
   /** Create-or-get under the unique `url` key (server.py:14-37: the
     * registry answers the EXISTING row for a known url).
     */
   def createOrGetServer(incoming: ServerMeta): ServerMeta = mutate {
-    val existing = readServers() // absent table == empty registry
-    existing.filter(_.url == incoming.url).collect().headOption.getOrElse {
-      val staged = existing.unionByName(Seq(incoming).toDS())
-      val dupes = staged.groupBy($"url").count().filter($"count" > 1).count()
-      require(dupes == 0, s"unique url violated by $dupes keys")
-      overwrite(staged.toDF(), "servers")
+    val existing = readServers().collect().toSeq // absent table == empty registry
+    existing.find(_.url == incoming.url).getOrElse {
+      val staged = existing :+ incoming
+      requireUnique(staged, "url")(_.url)
+      commit("servers", staged)(_.id)
       incoming
     }
   }
@@ -397,11 +411,8 @@ class MetaStore(spark: SparkSession, root: String) {
 
   def readUsers(): Dataset[UserMeta] = readOrEmpty[UserMeta]("users")
 
-  def initUsers(rows: Seq[UserMeta]): Unit = mutate {
-    rows.toDS().coalesce(1).write.mode("overwrite").parquet(path("users"))
-    invalidateSnapshot("users")
-    bumpVersion("users")
-  }
+  def initUsers(rows: Seq[UserMeta]): Unit =
+    mutate { commit("users", rows)(_.id); () }
 
   /** Create-or-get under the unique (serverId, username) key — the OAuth
     * callback's user upsert (oauth.py:115-135: a known user is updated
@@ -417,9 +428,7 @@ class MetaStore(spark: SparkSession, root: String) {
         // recycled under the HMAC tokens minted from it
         val id = nextId("users", existing.map(_.id).maxOption.getOrElse(0L))
         val row = UserMeta(id, username, serverId)
-        // the rows are driver-side, so the write never reads its own
-        // target; staging + atomic rename keeps concurrent readers safe
-        overwrite((existing :+ row).toDS().toDF(), "users")
+        commit("users", existing :+ row)(_.id)
         row
       }
   }
@@ -429,44 +438,61 @@ class MetaStore(spark: SparkSession, root: String) {
 
   def readConfigs(): Dataset[ConfigMeta] = readOrEmpty[ConfigMeta]("configurations")
 
-  def initConfigs(rows: Seq[ConfigMeta]): Unit = mutate {
-    rows.toDS().coalesce(1).write.mode("overwrite").parquet(path("configurations"))
-    invalidateSnapshot("configurations")
-    bumpVersion("configurations")
-  }
+  def initConfigs(rows: Seq[ConfigMeta]): Unit =
+    mutate { commit("configurations", rows)(_.id); () }
 
   /** Create-or-get under the composite unique key
     * (configuration.py:19-54).
     */
   def createOrGetConfig(incoming: ConfigMeta): ConfigMeta = mutate {
-    val existing = readConfigs() // absent table == empty registry
-    existing.filter(c => c.serverAddress == incoming.serverAddress &&
+    val existing = readConfigs().collect().toSeq // absent table == empty registry
+    existing.find(c => c.serverAddress == incoming.serverAddress &&
         c.tokenName == incoming.tokenName && c.userId == incoming.userId)
-      .collect().headOption.getOrElse {
-        overwrite(existing.unionByName(Seq(incoming).toDS()).toDF(), "configurations")
+      .getOrElse {
+        commit("configurations", existing :+ incoming)(_.id)
         incoming
       }
   }
 
   /** PATCH surface for a configuration (configuration.py:57-95). */
-  def updateConfig(configId: Long)(f: ConfigMeta => ConfigMeta): Unit =
-    mutate { overwrite(readConfigs()
-      .map(c => if (c.id == configId) f(c).copy(id = c.id) else c).toDF(),
-      "configurations") }
+  def updateConfig(configId: Long)(f: ConfigMeta => ConfigMeta): Unit = mutate {
+    commit("configurations", readConfigs().collect().toSeq
+      .map(c => if (c.id == configId) f(c).copy(id = c.id) else c))(_.id)
+    ()
+  }
 
   /** DELETE a configuration row (configuration.py:98-123). */
-  def deleteConfig(configId: Long): Unit =
-    mutate { overwrite(readConfigs().filter(_.id != configId).toDF(), "configurations") }
+  def deleteConfig(configId: Long): Unit = mutate {
+    commit("configurations", readConfigs().collect().toSeq.filter(_.id != configId))(_.id)
+    ()
+  }
 
-  /** Read-modify-overwrite with the same staging + atomic-rename commit
-    * as [[writeHyperFiles]].
+  private def requireUnique[T, K](rows: Seq[T], what: String)(key: T => K): Unit = {
+    val dupes = rows.groupBy(key).count(_._2.size > 1)
+    require(dupes == 0, s"unique $what violated by $dupes keys")
+  }
+
+  /** The one write shape of every registry, called under the lock: the
+    * driver rows become one parquet file in staging, which is renamed
+    * into place (a concurrent reader sees the old table or the new one,
+    * never a mix); then the table's stamp is bumped for other processes
+    * and its snapshot primed with the rows as a re-read returns them
+    * (sorted by id, through the encoder, so timestamps carry parquet's
+    * microsecond precision). Returns the primed rows.
     */
-  private def overwrite(df: org.apache.spark.sql.DataFrame, table: String): Unit = {
+  private def commit[T: Encoder](table: String, rows: Seq[T])(id: T => Long): Seq[T] = {
     val (fs, target) = graft.etl.Refresh.hfs(spark, path(table))
     val staging = new org.apache.hadoop.fs.Path(path(table) + "__staging")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    spark.createDataset(rows).coalesce(1).write.mode("overwrite").parquet(staging.toString)
     graft.etl.Refresh.swapInto(fs, staging, target)
-    invalidateSnapshot(table)
-    bumpVersion(table) // cross-process visibility (see the cache note)
+    val enc = org.apache.spark.sql.catalyst.encoders.encoderFor[T]
+    val toRow = enc.createSerializer()
+    val fromRow = enc.resolveAndBind().createDeserializer()
+    val stored = rows.map(r => fromRow(toRow(r))).sortBy(id)
+    // the swap has committed `stored`: the cache holds it even if the
+    // stamp bump below throws (nothing would ever drop a stale snapshot)
+    try bumpVersion(table) // cross-process visibility (see the cache note)
+    finally snapshots.put(table, stored)
+    stored
   }
 }

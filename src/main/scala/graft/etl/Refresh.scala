@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** Full-refresh columnar extract writer.
   *
@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale posture: `partitionByCols` lets callers lay the extract out as
   * `(server_id, form_id, sync_date)` hive partitions so downstream reads
-  * prune; the count is taken from the written files' parquet footers
-  * (a metadata-only scan — no data re-read).
+  * prune. Every writer returns the number of rows its write job wrote,
+  * observed on the written frame itself ([[writeCounted]]) — the extract
+  * is never read back to count it.
   */
 object Refresh {
 
@@ -30,6 +31,29 @@ object Refresh {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
+  /** Run `write` on `df` with a row counter attached and return the rows
+    * the write job wrote: a `Dataset.observe` node counts them as they
+    * stream into the writer, so the count costs no job of its own and no
+    * read of the files. Spark completes the observation from a query
+    * listener once the write's execution ends; an observer the optimizer
+    * removed (a frame it proved empty) completes with no value, which is
+    * 0. Should the listener event never arrive (a dropped event), the
+    * frame is counted again after [[ObservationWait]] rather than
+    * waiting forever — before the caller swaps anything, so the count
+    * still sees the inputs the write saw.
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    try {
+      val row = scala.concurrent.Await.result(obs.future, ObservationWait)
+      if (row.length == 0) 0L else row.getLong(0)
+    } catch { case _: java.util.concurrent.TimeoutException => df.count() }
+  }
+
+  private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
 
   /** Swap a fully-written `staging` directory into place at `target`:
     * move the current extract (if any) aside, rename staging in, drop the
@@ -124,8 +148,8 @@ object Refresh {
     }
   }
 
-  /** Overwrite `path` with `df` as parquet and return the row count of the
-    * written extract (read back, as the reference's COPY count does).
+  /** Overwrite `path` with `df` as parquet and return the number of rows
+    * written (the reference's COPY count).
     *
     * NOT crash/cancel-safe against the PREVIOUS extract: `mode
     * ("overwrite")` clears the target before the new files commit, so a
@@ -135,13 +159,15 @@ object Refresh {
     */
   def overwrite(df: DataFrame, path: String,
                 partitionByCols: Seq[String] = Nil): Long = {
+    val n = writeCounted(df)(writeParquet(_, path, partitionByCols))
+    ensureReadable(df.sparkSession, path, df.schema)
+    n
+  }
+
+  private def writeParquet(df: DataFrame, path: String, partitionByCols: Seq[String]): Unit = {
     val w = df.write.mode("overwrite")
     val w2 = if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w
     w2.parquet(path)
-    ensureReadable(df.sparkSession, path, df.schema)
-    // count() over freshly-written parquet is served from footer row-group
-    // metadata (no column data is scanned).
-    df.sparkSession.read.parquet(path).count()
   }
 
   /** Full refresh of a LIVE extract: write the new copy to a staging
@@ -159,39 +185,24 @@ object Refresh {
     * (e.g. the PQ codebooks) that must land ATOMICALLY with the data:
     * written into staging, they ride the same rename, so no crash can
     * commit data without its sidecar or vice versa.
+    *
+    * Returns the rows written; callers that only rebuild an index ignore
+    * it (the count is observed during the write, so it costs nothing).
     */
   def overwriteStaged(df: DataFrame, path: String,
                       partitionByCols: Seq[String] = Nil,
                       beforeSwap: Path => Unit = _ => ()): Long = {
-    overwriteStagedUncounted(df, path, partitionByCols, beforeSwap)
-    // count() over freshly-written parquet is served from footer
-    // row-group metadata — no column data is re-read
-    df.sparkSession.read.parquet(path).count()
-  }
-
-  /** [[overwriteStaged]] without the read-back row count — for index
-    * writers (band/set-sim/IVF/PQ, streaming extract ticks) that
-    * discard the count: the footer read is metadata-only but still a
-    * full Spark job plus a file listing per call, pure fixed overhead
-    * on every index rebuild/sync tick (r18: two such jobs per
-    * set-sim-index build). Callers that report an imported-row count
-    * (the reference's COPY semantics) keep [[overwriteStaged]].
-    */
-  def overwriteStagedUncounted(df: DataFrame, path: String,
-                               partitionByCols: Seq[String] = Nil,
-                               beforeSwap: Path => Unit = _ => ()): Unit = {
     val spark = df.sparkSession
     val (fs, target) = hfs(spark, path)
     // a crashed prior swap may have left the extract at __old only —
     // restore it so a failed THIS write still leaves data at target
     recoverHalfSwap(fs, target)
     val staging = new Path(path + "__staging")
-    val w = df.write.mode("overwrite")
-    val w2 = if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w
-    w2.parquet(staging.toString)
+    val n = writeCounted(df)(writeParquet(_, staging.toString, partitionByCols))
     ensureReadable(spark, staging.toString, df.schema)
     beforeSwap(staging)
     swapInto(fs, staging, target)
+    n
   }
 
   /** DYNAMIC partition overwrite: replace ONLY the hive partitions
@@ -205,20 +216,17 @@ object Refresh {
   def overwritePartitions(df: DataFrame, path: String,
                           partitionByCols: Seq[String]): Long = {
     require(partitionByCols.nonEmpty, "dynamic overwrite needs partition columns")
-    // count the REFRESHED rows, served from the cache the write warmed —
+    // the count is the REFRESHED rows, as the write observed them —
     // re-reading the extract would (a) return the whole table's count,
     // not this tick's import (the reference counts rows synced), and
     // (b) list/footer-scan every untouched partition of a 100 TB extract
     // per tick just to produce that wrong number
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      cached.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionByCols: _*)
-        .parquet(path)
-      ensureReadable(df.sparkSession, path, df.schema)
-      cached.count()
-    } finally cached.unpersist(blocking = false)
+    val n = writeCounted(df)(_.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionByCols: _*)
+      .parquet(path))
+    ensureReadable(df.sparkSession, path, df.schema)
+    n
   }
 
   /** Incremental refresh: MERGE the delta into the extract by key —
@@ -259,9 +267,9 @@ object Refresh {
       case None => upserted
     }
     val staging = new Path(extractPath + "__staging")
-    merged.write.mode("overwrite").parquet(staging.toString)
+    val n = writeCounted(merged)(_.write.mode("overwrite").parquet(staging.toString))
     swapInto(fs, staging, target)
-    spark.read.parquet(extractPath).count()
+    n
   }
 
   /** Extract-hygiene diagnostic: per leaf partition, the data-file count
@@ -370,11 +378,11 @@ object Refresh {
     val (fs, target) = hfs(spark, extractPath)
     val partCols = partitionColumnsOf(fs, target)
     val staging = new Path(extractPath + "__compact")
-    if (partCols.isEmpty) {
+    val n = if (partCols.isEmpty) {
       val bytes = fs.getContentSummary(target).getLength
       val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      spark.read.parquet(extractPath).coalesce(parts)
-        .write.mode("overwrite").parquet(staging.toString)
+      writeCounted(spark.read.parquet(extractPath).coalesce(parts))(
+        _.write.mode("overwrite").parquet(staging.toString))
     } else {
       import spark.implicits._
       val leaves = leafPartitions(fs, target, partCols.length)
@@ -405,19 +413,19 @@ object Refresh {
         // join the tiny per-leaf plan on the partition-value strings, then
         // salt deterministically so each leaf splits into ~its file count
         val keyExpr = array(partCols.map(col): _*)
-        df.join(broadcast(plan), keyExpr <=> col("__pv"), "left")
+        writeCounted(df.join(broadcast(plan), keyExpr <=> col("__pv"), "left")
           .withColumn("__salt",
             pmod(xxhash64(dataCols.map(col): _*), coalesce(col("__nf"), lit(1L))))
           .repartition(partCols.map(col) :+ col("__salt"): _*)
-          .drop("__pv", "__nf", "__salt")
-          .write.mode("overwrite").partitionBy(partCols: _*).parquet(staging.toString)
+          .drop("__pv", "__nf", "__salt"))(
+          _.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging.toString))
       } finally inferPrev match {
         case Some(v) => spark.conf.set(inferKey, v)
         case None => spark.conf.unset(inferKey)
       }
     }
     swapInto(fs, staging, target)
-    spark.read.parquet(extractPath).count()
+    n
   }
 
   /** Overwrite `path` range-sorted on `sortCols`: rows are range-
@@ -433,10 +441,9 @@ object Refresh {
     val ranged =
       if (numFiles > 0) df.repartitionByRange(numFiles, cols: _*)
       else df.repartitionByRange(cols: _*)
-    ranged.sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(path)
+    val n = writeCounted(ranged.sortWithinPartitions(cols: _*))(writeParquet(_, path, Nil))
     ensureReadable(df.sparkSession, path, df.schema)
-    df.sparkSession.read.parquet(path).count()
+    n
   }
 
   /** Z-value of numeric columns: each column is quantile-bucketed into
@@ -488,9 +495,9 @@ object Refresh {
     val ranged =
       if (numFiles > 0) withZ.repartitionByRange(numFiles, col("__z"))
       else withZ.repartitionByRange(col("__z"))
-    ranged.sortWithinPartitions("__z").drop("__z")
-      .write.mode("overwrite").parquet(path)
+    val n = writeCounted(ranged.sortWithinPartitions("__z").drop("__z"))(
+      writeParquet(_, path, Nil))
     ensureReadable(df.sparkSession, path, df.schema)
-    df.sparkSession.read.parquet(path).count()
+    n
   }
 }

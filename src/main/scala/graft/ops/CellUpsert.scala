@@ -88,9 +88,9 @@ object CellUpsert {
       case None => merged
     }
     // dynamic partition overwrite WITHOUT Refresh.overwritePartitions:
-    // that helper ends with a read-back count of the WHOLE dataset,
-    // which here would scan the full store on every upsert — the entire
-    // point is to touch only cells
+    // that helper also lists every cell directory of the store
+    // (ensureReadable) and waits for its observed count, on every
+    // upsert — the entire point is to touch only cells
     toWrite.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(cellCol)

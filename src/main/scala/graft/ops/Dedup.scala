@@ -1233,7 +1233,7 @@ object Dedup {
     */
   def writeBandIndex(docs: DataFrame, idCol: String, textCol: String,
                      path: String, k: Int = 6, bandRows: Int = 2): Unit = {
-    graft.etl.Refresh.overwriteStagedUncounted(
+    graft.etl.Refresh.overwriteStaged(
       lshBands(minhashSignatureNarrow(docs, idCol, textCol, k = k), k, bandRows),
       path)
   }
@@ -1282,9 +1282,9 @@ object Dedup {
       // concurrent writes would RACE the cache population and tokenize
       // the corpus twice.
       freq.count()
-      overlapped(graft.etl.Refresh.overwriteStagedUncounted(
+      overlapped(graft.etl.Refresh.overwriteStaged(
           setSimSized(tok, freq), s"$path/tokens"))(_ => ()) {
-        graft.etl.Refresh.overwriteStagedUncounted(freq, s"$path/freq")
+        graft.etl.Refresh.overwriteStaged(freq, s"$path/freq")
       }
     } finally {
       freq.unpersist(blocking = false)

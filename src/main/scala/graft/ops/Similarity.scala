@@ -365,7 +365,7 @@ object Similarity {
     val stored =
       if (quantized) assigned.withColumn(vecCol, quantize8(col(vecCol)))
       else assigned
-    graft.etl.Refresh.overwriteStagedUncounted(stored, path, partitionByCols = Seq("cell"))
+    graft.etl.Refresh.overwriteStaged(stored, path, partitionByCols = Seq("cell"))
     centroids
   }
 
@@ -585,7 +585,7 @@ object Similarity {
       // previous index fully probe-able.
       val emptyCodes = vectors
         .select(col(idCol), typedLit(Seq.empty[Int]).as("codes")).limit(0)
-      graft.etl.Refresh.overwriteStagedUncounted(emptyCodes, path,
+      graft.etl.Refresh.overwriteStaged(emptyCodes, path,
         beforeSwap = staging =>
           writePqAbsentSidecar(spark, staging.toString, pqM, pqKs))
       return Array.empty
@@ -598,12 +598,12 @@ object Similarity {
     val sidecarIntoStaging = (staging: org.apache.hadoop.fs.Path) =>
       writePqSidecar(spark, staging.toString, pqM, pqKs, cb, cents, residual)
     if (ivfCells > 0)
-      graft.etl.Refresh.overwriteStagedUncounted(
+      graft.etl.Refresh.overwriteStaged(
         ivfAssign(vectors, idCol, vecCol, cents)
           .select(col(idCol), codes, col("__cell").as("cell")),
         path, partitionByCols = Seq("cell"), beforeSwap = sidecarIntoStaging)
     else
-      graft.etl.Refresh.overwriteStagedUncounted(vectors.select(col(idCol), codes),
+      graft.etl.Refresh.overwriteStaged(vectors.select(col(idCol), codes),
         path, beforeSwap = sidecarIntoStaging)
     cb
   }

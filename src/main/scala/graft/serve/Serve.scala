@@ -337,7 +337,7 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
                 Map("configuration-id" -> c.id.toString)).getOrElse(Map.empty[String, String])
               val row = HyperFileMeta(newId, userId, formId, filename,
                 FileStatus.Queued, isActive = true, metaData, clock())
-              store.createOrGet(Seq(row).toDS()) // write invalidates the snapshot
+              store.createOrGet(Seq(row).toDS()) // the commit primes the snapshot
               val owner = store.hyperFilesSnapshot()
                 .find(f => f.userId == userId && f.formId == formId).get
               val created = owner.id == newId
@@ -359,9 +359,8 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
     */
   private def patchFile(ex: HttpExchange, idStr: String): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    // extract plain values BEFORE the distributed transform: the update
-    // closure must not capture `this` (the server instance is not
-    // serializable, and executors have no business holding it)
+    // extract plain values before the update closure runs under the
+    // catalog lock
     val newName = jsonField(body, "filename")
     val newConfig = jsonField(body, "configuration_id")
     lookup(ex, idStr) { f =>

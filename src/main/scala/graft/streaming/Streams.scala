@@ -86,7 +86,7 @@ object Streams {
         // restart) must not have destroyed the previous extract in the
         // meantime — readers keep the committed copy until the new one
         // is complete
-        if (!batch.isEmpty) Refresh.overwriteStagedUncounted(prepare(latestExport(batch)), extractPath)
+        if (!batch.isEmpty) { Refresh.overwriteStaged(prepare(latestExport(batch)), extractPath); () }
       }
       .start()
   }
@@ -231,7 +231,7 @@ object Streams {
                   // a timeout mid-write would destroy the PREVIOUS
                   // extract. Staging keeps the committed extract intact
                   // until the new copy is complete.
-                  Refresh.overwriteStagedUncounted(prepare(latestExport(batch)), extractPath)
+                  Refresh.overwriteStaged(prepare(latestExport(batch)), extractPath)
                   postCommit(extractPath); true
                 } finally spark.sparkContext.clearJobGroup()
               }

@@ -234,6 +234,134 @@ class MetaStoreSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("recordSyncResult launches the re-read and the write only; the next snapshot read none") {
+    val store = freshStore()
+    // the re-read alone: parquet schema inference plus the scan
+    val (_, reRead) = jobsDuring(store.readHyperFiles().collect())
+    val (_, record) = jobsDuring(
+      store.recordSyncResult(1L, success = true, ts("2024-01-02 00:00:00")))
+    assert(record == reRead + 1, s"recordSyncResult launched $record jobs; re-read is $reRead")
+    val (snap, served) = jobsDuring(store.hyperFilesSnapshot())
+    assert(served == 0, s"the snapshot after a commit launched $served jobs")
+    assert(snap.find(_.id == 1L).get.lastUpdated == ts("2024-01-02 00:00:00"))
+  }
+
+  test("every mutator primes its table's snapshot with exactly what a re-read returns") {
+    val store = freshStore()
+    // sub-microsecond nanos: parquet keeps microseconds, so a snapshot
+    // primed with the caller's Timestamp would differ from the table
+    val at = ts("2024-05-06 07:08:09.123456789")
+    def primed[T](what: String, snapshot: () => Seq[T], reread: => Seq[T]): Unit = {
+      val (got, jobs) = jobsDuring(snapshot())
+      assert(jobs == 0, s"$what: snapshot launched $jobs jobs")
+      assert(got == reread, s"$what: primed snapshot differs from the table")
+    }
+    def hyper(what: String): Unit =
+      primed(what, () => store.hyperFilesSnapshot(), store.readHyperFiles().collect().toSeq.sortBy(_.id))
+    store.createOrGet(Seq(HyperFileMeta(3L, 11L, 100L, "c.parquet", FileStatus.Queued,
+      isActive = true, Map("k" -> "v", "configuration-id" -> "4"), at)).toDS())
+    hyper("createOrGet")
+    store.transition(3L, FileStatus.Syncing, at)
+    hyper("transition")
+    store.recordSyncResult(3L, success = false, at, "boom")
+    hyper("recordSyncResult failure")
+    store.recordSyncResult(3L, success = true, at)
+    hyper("recordSyncResult success")
+    store.update(2L, at)(_.copy(filename = "renamed.parquet", metaData = Map("a" -> "1")))
+    hyper("update")
+    store.delete(1L)
+    hyper("delete")
+    store.writeHyperFiles(store.readHyperFiles())
+    hyper("writeHyperFiles")
+    assert(store.hyperFilesSnapshot().map(_.id) == Seq(2L, 3L))
+    assert(store.hyperFilesSnapshot().last.lastUpdated.getNanos == 123456000)
+    // the three registries commit the same way
+    def servers(what: String): Unit =
+      primed(what, () => store.serversSnapshot(), store.readServers().collect().toSeq.sortBy(_.id))
+    def users(what: String): Unit =
+      primed(what, () => store.usersSnapshot(), store.readUsers().collect().toSeq.sortBy(_.id))
+    def configs(what: String): Unit =
+      primed(what, () => store.configsSnapshot(), store.readConfigs().collect().toSeq.sortBy(_.id))
+    store.createOrGetServer(ServerMeta(5L, "https://five.example"))
+    servers("createOrGetServer")
+    store.createOrGetUser("ana", 5L)
+    users("createOrGetUser")
+    store.createOrGetConfig(ConfigMeta(2L, 1L, "https://five.example", "t", Map("x" -> "y")))
+    configs("createOrGetConfig")
+    store.updateConfig(2L)(_.copy(tokenName = "t2"))
+    configs("updateConfig")
+    store.deleteConfig(2L)
+    configs("deleteConfig")
+    assert(store.configsSnapshot().isEmpty)
+  }
+
+  test("an unreadable version stamp keeps the cached snapshots; a later write still invalidates") {
+    // a stamp bump renames over the stamp file, and on the local FS that
+    // rename deletes the old file first: a read landing in the gap must
+    // not adopt "no stamps" and make the next read drop every snapshot
+    val root = java.nio.file.Files.createTempDirectory("metastorestamp").toString
+    val a = new MetaStore(spark, root)
+    a.initServers(Seq(ServerMeta(1L, "https://one.example")))
+    a.initHyperFiles(Seq(HyperFileMeta(1L, 10L, 100L, "a.parquet", FileStatus.FileAvailable,
+      isActive = true, Map.empty, ts("2024-01-01 00:00:00"))))
+    a.serversSnapshot(); a.hyperFilesSnapshot() // cached, whatever priming did
+    val (fs, _) = graft.etl.Refresh.hfs(spark, root)
+    val stamp = new org.apache.hadoop.fs.Path(root, "_catalog_version")
+    val kept = fs.open(stamp)
+    val body = try org.apache.commons.io.IOUtils.toByteArray(kept) finally kept.close()
+    assert(fs.delete(stamp, false))
+    val (_, gap) = jobsDuring { a.serversSnapshot(); a.hyperFilesSnapshot() }
+    assert(gap == 0, s"reads while the stamp was unreadable launched $gap jobs")
+    // the rename completes: the same stamps are back, nothing moved
+    val out = fs.create(stamp, true)
+    try out.write(body) finally out.close()
+    val (_, after) = jobsDuring { a.serversSnapshot(); a.hyperFilesSnapshot() }
+    assert(after == 0, s"the stamp's return dropped the cached snapshots ($after jobs)")
+    // a real commit from another store still reaches A, and only the
+    // table it wrote is reloaded
+    new MetaStore(spark, root).createOrGetServer(ServerMeta(2L, "https://two.example"))
+    assert(a.serversSnapshot().map(_.id) == Seq(1L, 2L))
+    val (_, other) = jobsDuring(a.hyperFilesSnapshot())
+    assert(other == 0, s"a servers commit reloaded the hyperfiles snapshot ($other jobs)")
+  }
+
+  test("a commit whose stamp bump fails still serves the rows it swapped in") {
+    val root = java.nio.file.Files.createTempDirectory("metastorebump").toString
+    val store = new MetaStore(spark, root)
+    store.initHyperFiles(Seq(HyperFileMeta(1L, 10L, 100L, "a.parquet", FileStatus.FileAvailable,
+      isActive = true, Map.empty, ts("2024-01-01 00:00:00"))))
+    assert(store.hyperFilesSnapshot().head.lastUpdated == ts("2024-01-01 00:00:00"))
+    // a directory where the bump writes its temporary stamp: the create fails
+    val (fs, _) = graft.etl.Refresh.hfs(spark, root)
+    val blocker = new org.apache.hadoop.fs.Path(root, "._catalog_version.tmp")
+    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(blocker, "x")))
+    intercept[java.io.IOException](
+      store.recordSyncResult(1L, success = true, ts("2024-01-02 00:00:00")))
+    val (snap, jobs) = jobsDuring(store.hyperFilesSnapshot())
+    assert(jobs == 0, s"the snapshot after the failed bump launched $jobs jobs")
+    assert(snap == store.readHyperFiles().collect().toSeq.sortBy(_.id),
+      "the cache kept the pre-commit rows after the swap committed")
+    assert(snap.find(_.id == 1L).get.lastUpdated == ts("2024-01-02 00:00:00"))
+    fs.delete(blocker, true)
+  }
+
+  test("a local commit drops the snapshots another process's commits made stale") {
+    // committing reads the stamp file under the lock and remembers every
+    // stamp in it; a table another store moved since must be dropped
+    // then, or no later revalidation would ever see it move
+    val root = java.nio.file.Files.createTempDirectory("metastoreadopt").toString
+    val a = new MetaStore(spark, root)
+    val b = new MetaStore(spark, root)
+    a.initServers(Seq(ServerMeta(1L, "https://one.example")))
+    a.initHyperFiles(Seq(HyperFileMeta(1L, 10L, 100L, "a.parquet", FileStatus.FileAvailable,
+      isActive = true, Map.empty, ts("2024-01-01 00:00:00"))))
+    assert(a.serversSnapshot().map(_.id) == Seq(1L))
+    b.createOrGetServer(ServerMeta(2L, "https://two.example"))
+    a.recordSyncResult(1L, success = true, ts("2024-01-02 00:00:00"))
+    assert(a.serversSnapshot().map(_.id) == Seq(1L, 2L),
+      "a local commit hid another store's server commit from the cache")
+  }
+
   test("CatalogLock: stale locks are evicted, fresh locks block, reentry passes through") {
     val dir = java.nio.file.Files.createTempDirectory("catlock").toString
     val (fs, root) = graft.etl.Refresh.hfs(spark, dir)

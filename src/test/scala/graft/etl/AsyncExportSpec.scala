@@ -148,4 +148,19 @@ class AsyncExportSpec extends SparkSpec {
     assert(out.where("score IS NULL").count() == 1L)
     assert(out.where("name IS NULL").count() == 1L)
   }
+
+  test("syncExport launches exactly three jobs: header, inference, write") {
+    // the imported-row count comes from the write itself; reading the
+    // extract back to count it was two more jobs per sync
+    val dir = java.nio.file.Files.createTempDirectory("asyncjobs")
+    val csv = dir.resolve("export.csv")
+    java.nio.file.Files.write(csv, "id,score,name\n1,2.5,alice\n2,n/a,\n".getBytes)
+    val poll = (_: String) => Accepted("SUCCESS", exportUrl = Some(csv.toString))
+    def sync(): Long = AsyncExport.syncExport(spark, base, poll,
+      fetch = p => Some(p), sleeper = _ => (), extractPath = s"$dir/extract")
+    sync() // a first sync of the extract, then the pinned re-sync
+    val (n, jobs) = jobsDuring(sync())
+    assert(n == 2L)
+    assert(jobs == 3L, s"a sync launched $jobs Spark jobs")
+  }
 }

@@ -8,6 +8,15 @@ import graft.SparkSpec
 class EtlSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
+  /** Every `Refresh` writer that takes a frame of (id, payload, part). */
+  private val writers = Seq[(String, (org.apache.spark.sql.DataFrame, String) => Long)](
+    "overwrite" -> ((df, p) => Refresh.overwrite(df, p)),
+    "overwrite_partitioned" -> ((df, p) => Refresh.overwrite(df, p, Seq("part"))),
+    "overwriteStaged" -> ((df, p) => Refresh.overwriteStaged(df, p)),
+    "overwriteStaged_partitioned" -> ((df, p) => Refresh.overwriteStaged(df, p, Seq("part"))),
+    "overwritePartitions" -> ((df, p) => Refresh.overwritePartitions(df, p, Seq("part"))),
+    "overwriteSorted" -> ((df, p) => Refresh.overwriteSorted(df, p, Seq("id"))))
+
   test("an empty write leaves a READABLE empty extract, partitioned or not") {
     // a parquet write of zero rows emits no data files — a schemaless
     // reader of the extract then dies with UNABLE_TO_INFER_SCHEMA. The
@@ -17,14 +26,9 @@ class EtlSpec extends SparkSpec {
     // writer.
     import spark.implicits._
     val empty = Seq.empty[(Long, String, String)].toDF("id", "payload", "part")
-    for ((name, write) <- Seq[(String, (org.apache.spark.sql.DataFrame, String) => Any)](
-        "overwrite" -> ((df, p) => Refresh.overwrite(df, p)),
-        "overwrite_partitioned" -> ((df, p) => Refresh.overwrite(df, p, Seq("part"))),
-        "overwriteStaged" -> ((df, p) => Refresh.overwriteStaged(df, p)),
-        "overwritePartitions" -> ((df, p) => Refresh.overwritePartitions(df, p, Seq("part"))),
-        "overwriteSorted" -> ((df, p) => Refresh.overwriteSorted(df, p, Seq("id"))))) {
+    for ((name, write) <- writers) {
       val path = java.nio.file.Files.createTempDirectory(s"empty_$name").toString + "/extract"
-      write(empty, path)
+      assert(write(empty, path) == 0L, s"$name: an empty write counted rows")
       val back = spark.read.parquet(path) // schemaless — must infer
       assert(back.count() == 0, s"$name: expected empty extract")
       assert(back.columns.toSeq == Seq("id", "payload", "part"),
@@ -34,6 +38,50 @@ class EtlSpec extends SparkSpec {
     val path2 = java.nio.file.Files.createTempDirectory("nonempty").toString + "/e"
     Refresh.overwrite(Seq((1L, "a", "x")).toDF("id", "payload", "part"), path2, Seq("part"))
     assert(spark.read.parquet(path2).count() == 1)
+  }
+
+  test("every Refresh writer returns the rows it wrote, as a read-back counts them") {
+    // the count is observed on the frame being written, never read back;
+    // this pins it to what a reader of the committed extract counts,
+    // on rows (with a NULL partition value), on frames that are empty
+    // before and after optimization, partitioned or not, and through
+    // incremental's merge with tombstones
+    import spark.implicits._
+    val rows = (1L to 60L).map(i => (i, s"p$i", if (i % 7 == 0) null else s"x${i % 3}"))
+      .toDF("id", "payload", "part")
+    val frames = Seq(
+      "rows" -> rows,
+      "empty_local" -> Seq.empty[(Long, String, String)].toDF("id", "payload", "part"),
+      "empty_filtered" -> rows.where($"id" < 0))
+    def check(what: String, path: String)(write: => Long): Unit = {
+      val t0 = System.nanoTime()
+      val n = write
+      val s = (System.nanoTime() - t0) / 1e9
+      // a write whose observation never completed would wait out the
+      // fallback bound before counting again
+      assert(s < 30, s"$what: took $s s — the observed count did not arrive")
+      assert(n == spark.read.parquet(path).count(), s"$what: returned $n")
+    }
+    val compacted = ("compact", (df: org.apache.spark.sql.DataFrame, p: String) => {
+      Refresh.overwrite(df.repartition(4), p)
+      Refresh.compact(spark, p)
+    })
+    val incremental = ("incremental",
+      (df: org.apache.spark.sql.DataFrame, p: String) => Refresh.incremental(spark, df, p, Seq("id")))
+    for ((frame, df) <- frames; (name, write) <- writers :+ compacted :+ incremental) {
+      val path = java.nio.file.Files.createTempDirectory(s"count_$name").toString + "/extract"
+      check(s"$name on $frame", path)(write(df, path))
+    }
+    val zPath = java.nio.file.Files.createTempDirectory("count_z").toString + "/extract"
+    check("overwriteZOrdered on rows", zPath)(Refresh.overwriteZOrdered(rows, zPath, Seq("id"), 4))
+    // incremental with tombstones: a merge that updates, inserts and deletes
+    val path = java.nio.file.Files.createTempDirectory("count_tomb").toString + "/extract"
+    Refresh.incremental(spark, rows, path, Seq("id"))
+    val delta = (55L to 70L).map(i => (i, s"q$i", "y")).toDF("id", "payload", "part")
+    val tombs = (1L to 20L).map(Tuple1(_)).toDF("id")
+    check("incremental with tombstones", path)(
+      Refresh.incremental(spark, delta, path, Seq("id"), Some(tombs)))
+    assert(spark.read.parquet(path).count() == 50L) // 60 + 10 new - 20 deleted
   }
 
   test("incremental refresh merges delta by key: updates win, inserts append") {
