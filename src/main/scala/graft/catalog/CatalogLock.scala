@@ -76,8 +76,9 @@ object CatalogLock {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   // lock paths held by the current thread — reentrant acquisition
-  // (createOrGetUser's nextId inside mutate) must be a pass-through,
-  // not a self-deadlock that resolves by stealing our own lock
+  // (a locked body that calls another store mutator) must be a
+  // pass-through, not a self-deadlock that resolves by stealing our own
+  // lock
   private val heldByThread = new ThreadLocal[scala.collection.mutable.Set[String]] {
     override def initialValue(): scala.collection.mutable.Set[String] =
       scala.collection.mutable.Set.empty

@@ -5,8 +5,9 @@ import java.sql.Timestamp
 /** Typed metadata-catalog rows — fixed-schema `Dataset[T]` case classes
   * mirroring the reference's SQLAlchemy models (SURVEY.md §1.1/§1.3).
   *
-  * Uniqueness invariants (enforced by MetaStore's anti-join writes, the
-  * Spark analog of the DB unique constraints):
+  * Uniqueness invariants (each declared once by its MetaStore registry
+  * and checked at every commit, the analog of the DB unique constraints;
+  * a commit that breaks one throws [[UniqueKeyViolation]]):
   *  - HyperFileMeta: (userId, formId)   [app/models/hyperfile.py:43]
   *  - UserMeta:      (serverId, username) [app/models/user.py:8-10]
   *  - ServerMeta:    url                  [app/models/server.py:8]

@@ -1,29 +1,41 @@
 package graft.catalog
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+
+import graft.etl.Refresh
+
+/** A commit that would leave two rows of one registry under one unique
+  * key (the Postgres unique-constraint violation). Nothing is written.
+  */
+final class UniqueKeyViolation(msg: String) extends IllegalArgumentException(msg)
 
 /** Parquet-backed typed metadata store: the reference's Postgres catalog
-  * re-expressed as `Dataset[T]` tables with unique keys checked at commit
-  * and full-refresh overwrite commits.
+  * (HyperFile, User, Server and Configuration tables) re-expressed as
+  * four registries of one shape. Each registry declares its table
+  * name, its id and its unique key once ([[Registry]]); everything else
+  * is shared:
+  *  - one read ([[read]]): the encoder's schema, so no inference job; an
+  *    absent table is an empty registry, a half-swapped one is settled
+  *    and recovered first, and columns an older build did not write are
+  *    null (zero for non-nullable primitives) — the alembic analog;
+  *  - one snapshot ([[snapshot]]): driver rows cached per table;
+  *  - one commit ([[commit]]): unique key checked on the driver rows,
+  *    one parquet file swapped in, the stamp bumped, the snapshot primed;
+  *  - one rewrite ([[rewrite]]): lock, re-read, change, commit;
+  *  - one create-or-get ([[createOrGet]], app/utils/onadata_utils.py:
+  *    265-292): inside the same lock the row holding the key wins, and
+  *    only an absent key takes a new id from the table's sequence.
   *
-  * Semantics mapped from the reference:
-  *  - create-or-get (app/utils/onadata_utils.py:265-292): existence check
-  *    on the re-read rows, insert of the absent keys only — the row that
-  *    already holds the unique key wins, exactly like the DB constraint +
-  *    get-then-create.
-  *  - status update + failure accounting (app/core/importer.py:129-220,
-  *    app/utils/hyper_utils.py:239-263): pure row transforms guarded by
-  *    the FileStatus transition table.
-  *  - Catalog tables are small: every join against extract-scale data
-  *    should broadcast (callers wrap in `broadcast(...)`).
-  *
-  * Writes are read-modify-overwrite of a small parquet dataset: the
-  * table is re-read under the lock, changed as driver rows (the
-  * reference's Postgres row update), written as one file into staging
-  * and renamed into place ([[commit]]) — one Spark job to read, one to
-  * write. The commit also primes the table's snapshot with the rows it
-  * wrote. The lastUpdated stamp is caller-provided so replays are
-  * deterministic (no wall-clock in the data path).
+  * Status updates and failure accounting (app/core/importer.py:129-220,
+  * app/utils/hyper_utils.py:239-263) are row transforms over a rewrite,
+  * guarded by the FileStatus transition table. Catalog tables are small:
+  * every join against extract-scale data should broadcast (callers wrap
+  * in `broadcast(...)`). The lastUpdated stamp is caller-provided so
+  * replays are deterministic (no wall-clock in the data path).
   */
 class MetaStore(spark: SparkSession, root: String) {
   import spark.implicits._
@@ -36,7 +48,23 @@ class MetaStore(spark: SparkSession, root: String) {
     */
   val metrics: graft.Metrics = new graft.Metrics
 
-  private def path(table: String) = s"$root/$table"
+  /** One catalog table: its directory under the root, its id, and its
+    * unique key (the reference's DB constraint, named for messages).
+    */
+  private final class Registry[T, K](val table: String, val keyName: String,
+                                     val id: T => Long, val key: T => K)
+                                    (implicit val enc: Encoder[T])
+
+  private val hyperFiles = new Registry[HyperFileMeta, (Long, Long)](
+    "hyperfiles", "(userId, formId)", _.id, f => (f.userId, f.formId))
+  private val servers = new Registry[ServerMeta, String]("servers", "url", _.id, _.url)
+  private val users = new Registry[UserMeta, (Long, String)](
+    "users", "(serverId, username)", _.id, u => (u.serverId, u.username))
+  private val configs = new Registry[ConfigMeta, (String, String, Long)](
+    "configurations", "(serverAddress, tokenName, userId)", _.id,
+    c => (c.serverAddress, c.tokenName, c.userId))
+
+  private def fs = Refresh.hfs(spark, root)._1
 
   // ---- driver-side snapshot cache ---------------------------------------
   // The catalog is the reference's Postgres: tiny and driver-side by
@@ -63,7 +91,24 @@ class MetaStore(spark: SparkSession, root: String) {
   // never observed a stamp file (fresh catalog or pre-stamp writers only)
   @volatile private var cachedVersion: Map[String, String] = Map.empty
 
-  private val versionPath = new org.apache.hadoop.fs.Path(root, "_catalog_version")
+  private val versionPath = new Path(root, "_catalog_version")
+
+  /** The whole of a small catalog file (the version stamp, a sequence). */
+  private def readSmall(p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
+    finally in.close()
+  }
+
+  /** Replace a small catalog file: write `.<name>.tmp`, rename it over. */
+  private def writeSmall(p: Path, body: String): Unit = {
+    val tmp = new Path(root, s".${p.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes(UTF_8))
+    finally out.close()
+    FileContext.getFileContext(tmp.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, p, Options.Rename.OVERWRITE)
+  }
 
   /** One `<table> <uuid>` line per registry — PER-TABLE stamps, so a
     * busy hyperfiles writer never evicts the servers/users/configs
@@ -74,43 +119,25 @@ class MetaStore(spark: SparkSession, root: String) {
     * the old file before it moves the new one in, and moves its
     * checksum separately).
     */
-  private def readVersion(): Option[Map[String, String]] = {
-    val (fs, _) = graft.etl.Refresh.hfs(spark, root)
-    try {
-      val in = fs.open(versionPath)
-      val txt =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      Some(txt.linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { l =>
-        val sp = l.indexOf(' ')
-        if (sp <= 0) None else Some(l.take(sp) -> l.drop(sp + 1))
-      }.toMap)
-    } catch { case _: java.io.IOException => None }
-  }
+  private def readVersion(): Option[Map[String, String]] =
+    try Some(readSmall(versionPath).linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { l =>
+      val sp = l.indexOf(' ')
+      if (sp <= 0) None else Some(l.take(sp) -> l.drop(sp + 1))
+    }.toMap)
+    catch { case _: java.io.IOException => None }
 
   /** Bump `table`'s cross-process invalidation stamp (called under the
-    * catalog lock at both write choke points, so the read-modify-write
-    * of the stamp file never interleaves). tmp + rename-overwrite, the
-    * same commit shape as the id sequence. The local cache marker
-    * advances too, so the writing process never re-clears its own
-    * just-primed snapshot; the stamps other processes moved since this
-    * one last looked drop their tables' snapshots first, as a read's
-    * revalidation would.
+    * catalog lock by every commit, so the read-modify-write of the stamp
+    * file never interleaves). The local cache marker advances too, so
+    * the writing process never re-clears its own just-primed snapshot;
+    * the stamps other processes moved since this one last looked drop
+    * their tables' snapshots first, as a read's revalidation would.
     */
   private def bumpVersion(table: String): Unit = {
-    val (fs, _) = graft.etl.Refresh.hfs(spark, root)
     // under the lock no writer is mid-rename, so unreadable == absent
     val seen = readVersion().getOrElse(Map.empty)
     val next = seen + (table -> java.util.UUID.randomUUID().toString)
-    val body = next.toSeq.sorted.map { case (t, v) => s"$t $v" }.mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(root, "._catalog_version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, versionPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    writeSmall(versionPath, next.toSeq.sorted.map { case (t, v) => s"$t $v" }.mkString("\n"))
     adopt(seen)
     cachedVersion = next
   }
@@ -126,34 +153,22 @@ class MetaStore(spark: SparkSession, root: String) {
       cachedVersion = v
     }
 
-  /** Revalidate against the stamp file. An unreadable stamp is unknown,
-    * not empty: adopting an empty map there would make the next
-    * readable stamp look like a move of every table and drop every
-    * snapshot. Benign races only: a concurrent writer can at worst cause
-    * one extra invalidate-and-reload (loads always re-read parquet, so
-    * nothing stale is ever reinstated).
+  /** Cached driver rows of a registry, sorted by id so pagination over
+    * them is deterministic without a per-request sort job. Revalidation
+    * against the stamp file comes first; an unreadable stamp is unknown,
+    * not empty (adopting an empty map would make the next readable stamp
+    * look like a move of every table). A load racing a concurrent
+    * commit's rename swap can see the table directory mid-move, so it
+    * settles briefly and retries once; a second failure propagates.
     */
-  private def revalidateSnapshots(): Unit = readVersion().foreach(adopt)
-
-  private def snapshot[T](table: String)(load: => Seq[T]): Seq[T] = {
-    revalidateSnapshots()
-    snapshots.computeIfAbsent(table, _ => loadSettled(load).asInstanceOf[Seq[Any]])
-      .asInstanceOf[Seq[T]]
+  private def snapshot[T](r: Registry[T, _]): Seq[T] = {
+    readVersion().foreach(adopt)
+    def load() = read(r).collect().toSeq.sortBy(r.id)
+    snapshots.computeIfAbsent(r.table, _ =>
+      try load()
+      catch { case scala.util.control.NonFatal(_) => Thread.sleep(50); load() }
+    ).asInstanceOf[Seq[T]]
   }
-
-  /** One bounded retry around a snapshot load: a load racing a
-    * concurrent commit's rename swap can see the table directory
-    * mid-move (listed files relocated under it). The swap is two
-    * metadata renames, so a short settle + one retry covers the window;
-    * a second failure is a real error and propagates.
-    */
-  private def loadSettled[T](load: => Seq[T]): Seq[T] =
-    try load
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        Thread.sleep(50)
-        load
-    }
 
   // ---- write serialization ----------------------------------------------
   // Every mutator is a read-modify-WRITE over a whole registry table;
@@ -168,147 +183,153 @@ class MetaStore(spark: SparkSession, root: String) {
   // is the honest price; reads and snapshot serving never take it.
   // Every RMW body re-READS its registry from parquet while holding the
   // lock, so it always extends the latest committed state — the
-  // driver-side snapshot cache below never feeds a mutation.
+  // driver-side snapshot cache never feeds a mutation.
   // MetaStoreSpec pins lost-update freedom for racing threads on one
   // instance AND for racing DISTINCT instances over one root.
-  private def mutate[T](body: => T): T = {
-    val (fs, rootPath) = graft.etl.Refresh.hfs(spark, root)
-    CatalogLock.withLock(fs, rootPath)(body)
+  private def mutate[T](body: => T): T =
+    CatalogLock.withLock(fs, new Path(root))(body)
+
+  /** The one read of every registry, one Spark job when collected. The
+    * parquet is read with the encoder's schema (no inference job), so a
+    * catalog written by an OLDER build still reads: columns the file
+    * lacks come back null and non-nullable primitives among them get
+    * the type's zero (alembic's `server_default`; a null there would
+    * throw at collect), while columns the current build dropped are
+    * never selected. New catalog fields should prefer nullable types
+    * (String / Map / Option) so the null IS the default.
+    *
+    * A genuinely ABSENT table is an EMPTY registry (nothing created
+    * yet). A crashed overwrite may have left the table at `__old` only:
+    * the settle first lets a LIVE writer's swap finish, then recovers
+    * it (see Refresh.settleHalfSwap), so the registry reads as its
+    * recovered contents, never as an empty table a later create-or-get
+    * would overwrite. A failure reading an EXISTING table propagates.
+    */
+  private def read[T](r: Registry[T, _]): Dataset[T] = {
+    implicit val enc: Encoder[T] = r.enc
+    val schema = enc.schema
+    val target = new Path(root, r.table)
+    Refresh.settleHalfSwap(fs, target)
+    if (!fs.exists(target)) spark.emptyDataset[T]
+    else spark.read.schema(schema).parquet(target.toString)
+      .select(schema.fields.toSeq.map { f =>
+        if (f.nullable) col(f.name)
+        else coalesce(col(f.name), lit(0).cast(f.dataType)).as(f.name)
+      }: _*)
+      .as[T]
   }
 
-  /** Cached driver-side rows: primed by every commit through this store,
-    * reloaded lazily after another process's commit. Total order by id,
-    * so pagination over the snapshot is deterministic without a
-    * per-request sort job.
+  /** The one write shape of every registry, called under the lock: the
+    * unique key is checked on the driver rows (catalog-sized), which
+    * then become one parquet file in staging, renamed into place (a
+    * concurrent reader sees the old table or the new one, never a mix);
+    * then the table's stamp is bumped for other processes and its
+    * snapshot primed with the rows as a re-read returns them (sorted by
+    * id, through the encoder, so timestamps carry parquet's microsecond
+    * precision). Returns the primed rows.
     */
-  def hyperFilesSnapshot(): Seq[HyperFileMeta] =
-    snapshot("hyperfiles")(readHyperFiles().collect().toSeq.sortBy(_.id))
+  private def commit[T](r: Registry[T, _], rows: Seq[T]): Seq[T] = {
+    implicit val enc: Encoder[T] = r.enc
+    val dupes = rows.groupBy(r.key).count(_._2.size > 1)
+    if (dupes > 0)
+      throw new UniqueKeyViolation(s"unique ${r.keyName} of ${r.table} violated by $dupes keys")
+    val staging = new Path(root, r.table + "__staging")
+    spark.createDataset(rows).coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    Refresh.swapInto(fs, staging, new Path(root, r.table))
+    val e = org.apache.spark.sql.catalyst.encoders.encoderFor[T]
+    val toRow = e.createSerializer()
+    val fromRow = e.resolveAndBind().createDeserializer()
+    val stored = rows.map(row => fromRow(toRow(row))).sortBy(r.id)
+    // the swap has committed `stored`: the cache holds it even if the
+    // stamp bump below throws (nothing would ever drop a stale snapshot)
+    try bumpVersion(r.table) // cross-process visibility (see the cache note)
+    finally snapshots.put(r.table, stored)
+    stored
+  }
 
-  def serversSnapshot(): Seq[ServerMeta] =
-    snapshot("servers")(readServers().collect().toSeq.sortBy(_.id))
+  /** Replace a whole registry with `rows`, under the lock. */
+  private def replace[T](r: Registry[T, _], rows: => Seq[T]): Unit =
+    mutate(commit(r, rows))
 
-  def usersSnapshot(): Seq[UserMeta] =
-    snapshot("users")(readUsers().collect().toSeq.sortBy(_.id))
-
-  def configsSnapshot(): Seq[ConfigMeta] =
-    snapshot("configurations")(readConfigs().collect().toSeq.sortBy(_.id))
-
-  /** Monotonic id allocation per table — the Postgres-sequence analog
-    * the reference relies on: an id is NEVER reused after a delete.
-    * max(id)+1 over live rows would recycle the highest id once its row
-    * is deleted, and any dangling reference to it (a file's stored
-    * `configuration-id`, a saved download URL) would silently resolve
-    * to the NEW unrelated row instead of failing. Persisted as a
-    * high-water-mark file under the catalog root (read-modify-rename,
-    * single-writer like every catalog commit); `currentMax` folds in
-    * pre-sequence catalogs on first use.
+  /** The read-modify-write every row-level mutator shares: re-read the
+    * committed table (never the snapshot), change it on the driver,
+    * commit. Returns the committed rows.
     */
-  def nextId(table: String, currentMax: Long): Long = mutate {
-    // under the same catalog lock as every registry RMW (reentrant when
-    // called mid-mutation, e.g. createOrGetUser): the high-water-mark
-    // read-modify-rename must not interleave across processes either,
-    // or two drivers mint the same id
-    val (fs, _) = graft.etl.Refresh.hfs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(root, s"_seq_$table")
-    val prev =
-      if (!fs.exists(p)) 0L
-      else {
-        val in = fs.open(p)
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
+  private def rewrite[T](r: Registry[T, _])(change: Seq[T] => Seq[T]): Seq[T] =
+    mutate(commit(r, change(read(r).collect().toSeq)))
+
+  /** Create-or-get under `key`: the row that already holds it wins, as
+    * with the DB constraint + get-then-create; otherwise `make` builds
+    * the row from a fresh sequence id and it is committed. Returns the
+    * row (as committed) and whether it was created.
+    */
+  private def createOrGet[T, K](r: Registry[T, K], key: K)(make: Long => T): (T, Boolean) =
+    mutate {
+      val existing = read(r).collect().toSeq
+      existing.find(r.key(_) == key) match {
+        case Some(row) => (row, false)
+        case None =>
+          val row = make(nextId(r.table, existing.map(r.id).maxOption.getOrElse(0L)))
+          (commit(r, existing :+ row).find(r.key(_) == key).get, true)
       }
-    val next = math.max(prev, currentMax) + 1L
-    val tmp = new org.apache.hadoop.fs.Path(root, s"._seq_$table.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
+
+  /** Monotonic id allocation per table, called under the lock — the
+    * Postgres-sequence analog the reference relies on: an id is NEVER
+    * reused after a delete. max(id)+1 over live rows would recycle the
+    * highest id once its row is deleted, and any dangling reference to
+    * it (a file's stored `configuration-id`, a saved download URL, a
+    * user's HMAC token) would silently resolve to the NEW unrelated row
+    * instead of failing. Persisted as a high-water-mark file
+    * `_seq_<table>` under the catalog root; `currentMax` folds in
+    * pre-sequence catalogs and rows committed with their own ids.
+    */
+  private def nextId(table: String, currentMax: Long): Long = {
+    val p = new Path(root, s"_seq_$table")
+    val next = math.max(if (fs.exists(p)) readSmall(p).trim.toLong else 0L, currentMax) + 1L
+    writeSmall(p, next.toString)
     next
   }
 
-  def readHyperFiles(): Dataset[HyperFileMeta] = {
-    // half-swap handling before the read: a missing table with a __old
-    // sibling is a crashed overwrite's only copy, not an error to throw
-    // on — or a LIVE writer mid-swap, which the settle distinguishes
-    // without taking the lock (see Refresh.settleHalfSwap)
-    val (fs, target) = graft.etl.Refresh.hfs(spark, path("hyperfiles"))
-    graft.etl.Refresh.settleHalfSwap(fs, target)
-    evolve[HyperFileMeta](spark.read.parquet(path("hyperfiles")))
-  }
+  // ---- hyperfiles (app/models/hyperfile.py, unique (userId, formId)) -----
 
-  /** Schema evolution on read — the alembic analog (reference
-    * `app/alembic/`): a catalog written by an OLDER build (narrower
-    * case class) still reads after a field is added. Columns the file
-    * lacks are null-filled via `unionByName(allowMissingColumns)`
-    * against the encoder's schema; non-nullable primitives among them
-    * get the type's zero value (alembic's `server_default`), since a
-    * null in a primitive field would throw at collect time. Columns the
-    * file has but the case class dropped ride along ignored — encoders
-    * bind by name. New catalog fields should prefer nullable types
-    * (String / Map / Option) so the null fill IS the default; the
-    * zero-fill covers the primitive exception.
+  def readHyperFiles(): Dataset[HyperFileMeta] = read(hyperFiles)
+
+  /** Cached driver rows: primed by every commit through this store,
+    * reloaded lazily after another process's commit.
     */
-  private def evolve[T](raw: org.apache.spark.sql.DataFrame)
-      (implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    val missing = enc.schema.fields.filterNot(f => raw.columns.contains(f.name))
-    if (missing.isEmpty) raw.as[T]
-    else {
-      val aligned = spark.emptyDataset[T].toDF()
-        .unionByName(raw, allowMissingColumns = true)
-      missing.filterNot(_.nullable).foldLeft(aligned) { (df, f) =>
-        f.dataType match {
-          case _: org.apache.spark.sql.types.NumericType =>
-            df.na.fill(0L, Seq(f.name))
-          case org.apache.spark.sql.types.BooleanType =>
-            df.na.fill(value = false, Seq(f.name))
-          case _ => df
-        }
-      }.as[T]
-    }
-  }
+  def hyperFilesSnapshot(): Seq[HyperFileMeta] = snapshot(hyperFiles)
+
+  def initHyperFiles(rows: Seq[HyperFileMeta]): Unit = replace(hyperFiles, rows)
 
   /** Commit `ds` as the whole hyperfiles table, under the lock. */
   def writeHyperFiles(ds: Dataset[HyperFileMeta]): Unit =
-    mutate { commitHyperFiles(ds.collect().toSeq); () }
+    replace(hyperFiles, ds.collect().toSeq)
 
-  /** The hyperfiles commit: the (userId, formId) key is checked on the
-    * driver rows (catalog-sized) before anything is written.
+  /** Create-or-get of rows that carry their own ids: insert only rows
+    * whose (userId, formId) is absent; existing rows (and their state)
+    * are preserved verbatim. Returns the committed table.
     */
-  private def commitHyperFiles(rows: Seq[HyperFileMeta]): Seq[HyperFileMeta] = {
-    requireUnique(rows, "(userId, formId)")(f => (f.userId, f.formId))
-    commit("hyperfiles", rows)(_.id)
-  }
+  def createOrGet(incoming: Dataset[HyperFileMeta]): Dataset[HyperFileMeta] =
+    rewrite(hyperFiles) { existing =>
+      val taken = existing.map(hyperFiles.key).toSet
+      existing ++ incoming.collect().filterNot(f => taken(hyperFiles.key(f)))
+    }.toDS()
 
-  /** The read-modify-write every row-level hyperfiles mutator shares:
-    * re-read the committed table (never the snapshot), change it on the
-    * driver, commit.
+  /** Create-or-get of one file under (userId, formId) (the POST
+    * /api/v1/files catalog half); a created row's id comes from the
+    * sequence.
     */
-  private def rewriteHyperFiles(change: Seq[HyperFileMeta] => Seq[HyperFileMeta]): Unit =
-    mutate { commitHyperFiles(change(readHyperFiles().collect().toSeq)); () }
-
-  def initHyperFiles(rows: Seq[HyperFileMeta]): Unit =
-    mutate { commit("hyperfiles", rows)(_.id); () }
-
-  /** Create-or-get: insert only rows whose (userId, formId) is absent;
-    * existing rows (and their state) are preserved verbatim. Returns the
-    * committed table.
-    */
-  def createOrGet(incoming: Dataset[HyperFileMeta]): Dataset[HyperFileMeta] = mutate {
-    val existing = readHyperFiles().collect().toSeq
-    val taken = existing.map(f => (f.userId, f.formId)).toSet
-    val fresh = incoming.collect().toSeq.filterNot(f => taken((f.userId, f.formId)))
-    commitHyperFiles(existing ++ fresh).toDS()
-  }
+  def createOrGetFile(userId: Long, formId: Long)
+                     (make: Long => HyperFileMeta): (HyperFileMeta, Boolean) =
+    createOrGet(hyperFiles, (userId, formId))(make)
 
   /** Guarded status transition for one file id; illegal transitions are
     * no-ops (the reference answers HTTP 202 and leaves the row alone).
     */
   def transition(fileId: Long, to: String, at: java.sql.Timestamp): Unit = {
     require(FileStatus.All.contains(to), s"unknown status $to")
-    rewriteHyperFiles(_.map { f =>
+    rewrite(hyperFiles)(_.map { f =>
       if (f.id == fileId && FileStatus.canTransition(f.fileStatus, to))
         f.copy(fileStatus = to, lastUpdated = at)
       else f
@@ -324,7 +345,7 @@ class MetaStore(spark: SparkSession, root: String) {
   def recordSyncResult(fileId: Long, success: Boolean,
                        at: java.sql.Timestamp, reason: String = ""): Unit = {
     val thr = graft.ops.State.FailureThreshold
-    rewriteHyperFiles(_.map { f =>
+    rewrite(hyperFiles)(_.map { f =>
       if (f.id != fileId) f
       else if (success)
         f.copy(fileStatus = FileStatus.FileAvailable,
@@ -357,7 +378,7 @@ class MetaStore(spark: SparkSession, root: String) {
     * DELETE /files/{id}, file.py:146-160 — job cancel + object delete
     * are the caller's side effects). No-op on an unknown id.
     */
-  def delete(fileId: Long): Unit = rewriteHyperFiles(_.filter(_.id != fileId))
+  def delete(fileId: Long): Unit = rewrite(hyperFiles)(_.filter(_.id != fileId))
 
   /** Field-level update of one row (the PATCH surface, file.py:117-143:
     * re-attach configuration / rename). Pure copy-transform; unknown id
@@ -365,134 +386,77 @@ class MetaStore(spark: SparkSession, root: String) {
     */
   def update(fileId: Long, at: java.sql.Timestamp)
             (f: HyperFileMeta => HyperFileMeta): Unit =
-    rewriteHyperFiles(_.map { row =>
+    rewrite(hyperFiles)(_.map { row =>
       if (row.id == fileId) f(row).copy(id = row.id, lastUpdated = at) else row
     })
 
-  /** Read a registry table where a genuinely ABSENT table is an EMPTY
-    * registry (first use — nothing has been created yet), shared by all
-    * three registries and every HTTP handler above them. A transient
-    * failure reading an EXISTING table still propagates: falling back to
-    * empty there would let a create-or-get overwrite wipe the registry
-    * on an FS hiccup.
-    */
-  private def readOrEmpty[T: org.apache.spark.sql.Encoder](table: String): Dataset[T] = {
-    val (fs, target) = graft.etl.Refresh.hfs(spark, path(table))
-    // a crashed overwrite may have left the registry at __old only — a
-    // half-swapped table must READ as its recovered contents, not as an
-    // empty registry a later create-or-get would then overwrite; the
-    // settle variant first lets a LIVE writer's swap finish
-    graft.etl.Refresh.settleHalfSwap(fs, target)
-    if (!fs.exists(target)) spark.emptyDataset[T]
-    else evolve[T](spark.read.parquet(path(table))) // see evolve: alembic analog
-  }
-
   // ---- server registry (app/models/server.py, unique url) ---------------
 
-  def readServers(): Dataset[ServerMeta] = readOrEmpty[ServerMeta]("servers")
+  def readServers(): Dataset[ServerMeta] = read(servers)
 
-  def initServers(rows: Seq[ServerMeta]): Unit =
-    mutate { commit("servers", rows)(_.id); () }
+  def serversSnapshot(): Seq[ServerMeta] = snapshot(servers)
+
+  def initServers(rows: Seq[ServerMeta]): Unit = replace(servers, rows)
 
   /** Create-or-get under the unique `url` key (server.py:14-37: the
     * registry answers the EXISTING row for a known url).
     */
-  def createOrGetServer(incoming: ServerMeta): ServerMeta = mutate {
-    val existing = readServers().collect().toSeq // absent table == empty registry
-    existing.find(_.url == incoming.url).getOrElse {
-      val staged = existing :+ incoming
-      requireUnique(staged, "url")(_.url)
-      commit("servers", staged)(_.id)
-      incoming
-    }
-  }
+  def createOrGetServer(url: String): (ServerMeta, Boolean) =
+    createOrGet(servers, url)(ServerMeta(_, url))
+
+  /** As above for a row that carries its own id (a creation still
+    * advances the sequence past it).
+    */
+  def createOrGetServer(incoming: ServerMeta): ServerMeta =
+    createOrGet(servers, servers.key(incoming))(_ => incoming)._1
 
   // ---- user registry (app/models/user.py, unique (serverId, username)) --
 
-  def readUsers(): Dataset[UserMeta] = readOrEmpty[UserMeta]("users")
+  def readUsers(): Dataset[UserMeta] = read(users)
 
-  def initUsers(rows: Seq[UserMeta]): Unit =
-    mutate { commit("users", rows)(_.id); () }
+  def usersSnapshot(): Seq[UserMeta] = snapshot(users)
+
+  def initUsers(rows: Seq[UserMeta]): Unit = replace(users, rows)
 
   /** Create-or-get under the unique (serverId, username) key — the OAuth
     * callback's user upsert (oauth.py:115-135: a known user is updated
     * in place, an unknown one created). Returns the owning row. An
-    * absent users table (fresh catalog root, nothing ever signed in) is
-    * an EMPTY registry, not an error — the first sign-in creates it.
+    * absent users table (nothing ever signed in) is an empty registry:
+    * the first sign-in creates it.
     */
-  def createOrGetUser(username: String, serverId: Long): UserMeta = mutate {
-    val existing: Seq[UserMeta] = readUsers().collect().toSeq // absent == empty
-    existing.find(u => u.username == username && u.serverId == serverId)
-      .getOrElse {
-        // sequence allocator, never max+1 — a deleted top id must not be
-        // recycled under the HMAC tokens minted from it
-        val id = nextId("users", existing.map(_.id).maxOption.getOrElse(0L))
-        val row = UserMeta(id, username, serverId)
-        commit("users", existing :+ row)(_.id)
-        row
-      }
-  }
+  def createOrGetUser(username: String, serverId: Long): UserMeta =
+    createOrGet(users, (serverId, username))(UserMeta(_, username, serverId))._1
 
   // ---- configuration registry (app/models/configuration.py,
   //      unique (serverAddress, tokenName, userId)) ----------------------
 
-  def readConfigs(): Dataset[ConfigMeta] = readOrEmpty[ConfigMeta]("configurations")
+  def readConfigs(): Dataset[ConfigMeta] = read(configs)
 
-  def initConfigs(rows: Seq[ConfigMeta]): Unit =
-    mutate { commit("configurations", rows)(_.id); () }
+  def configsSnapshot(): Seq[ConfigMeta] = snapshot(configs)
+
+  def initConfigs(rows: Seq[ConfigMeta]): Unit = replace(configs, rows)
 
   /** Create-or-get under the composite unique key
-    * (configuration.py:19-54).
+    * (configuration.py:19-54); a new row has no export settings.
     */
-  def createOrGetConfig(incoming: ConfigMeta): ConfigMeta = mutate {
-    val existing = readConfigs().collect().toSeq // absent table == empty registry
-    existing.find(c => c.serverAddress == incoming.serverAddress &&
-        c.tokenName == incoming.tokenName && c.userId == incoming.userId)
-      .getOrElse {
-        commit("configurations", existing :+ incoming)(_.id)
-        incoming
-      }
-  }
+  def createOrGetConfig(userId: Long, serverAddress: String,
+                        tokenName: String): (ConfigMeta, Boolean) =
+    createOrGet(configs, (serverAddress, tokenName, userId))(
+      ConfigMeta(_, userId, serverAddress, tokenName, Map.empty))
 
-  /** PATCH surface for a configuration (configuration.py:57-95). */
-  def updateConfig(configId: Long)(f: ConfigMeta => ConfigMeta): Unit = mutate {
-    commit("configurations", readConfigs().collect().toSeq
-      .map(c => if (c.id == configId) f(c).copy(id = c.id) else c))(_.id)
-    ()
-  }
+  /** As above for a row that carries its own id (a creation still
+    * advances the sequence past it).
+    */
+  def createOrGetConfig(incoming: ConfigMeta): ConfigMeta =
+    createOrGet(configs, configs.key(incoming))(_ => incoming)._1
+
+  /** PATCH surface for a configuration (configuration.py:57-95). A
+    * change that moves the row onto another row's key throws
+    * [[UniqueKeyViolation]] and commits nothing.
+    */
+  def updateConfig(configId: Long)(f: ConfigMeta => ConfigMeta): Unit =
+    rewrite(configs)(_.map(c => if (c.id == configId) f(c).copy(id = c.id) else c))
 
   /** DELETE a configuration row (configuration.py:98-123). */
-  def deleteConfig(configId: Long): Unit = mutate {
-    commit("configurations", readConfigs().collect().toSeq.filter(_.id != configId))(_.id)
-    ()
-  }
-
-  private def requireUnique[T, K](rows: Seq[T], what: String)(key: T => K): Unit = {
-    val dupes = rows.groupBy(key).count(_._2.size > 1)
-    require(dupes == 0, s"unique $what violated by $dupes keys")
-  }
-
-  /** The one write shape of every registry, called under the lock: the
-    * driver rows become one parquet file in staging, which is renamed
-    * into place (a concurrent reader sees the old table or the new one,
-    * never a mix); then the table's stamp is bumped for other processes
-    * and its snapshot primed with the rows as a re-read returns them
-    * (sorted by id, through the encoder, so timestamps carry parquet's
-    * microsecond precision). Returns the primed rows.
-    */
-  private def commit[T: Encoder](table: String, rows: Seq[T])(id: T => Long): Seq[T] = {
-    val (fs, target) = graft.etl.Refresh.hfs(spark, path(table))
-    val staging = new org.apache.hadoop.fs.Path(path(table) + "__staging")
-    spark.createDataset(rows).coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    graft.etl.Refresh.swapInto(fs, staging, target)
-    val enc = org.apache.spark.sql.catalyst.encoders.encoderFor[T]
-    val toRow = enc.createSerializer()
-    val fromRow = enc.resolveAndBind().createDeserializer()
-    val stored = rows.map(r => fromRow(toRow(r))).sortBy(id)
-    // the swap has committed `stored`: the cache holds it even if the
-    // stamp bump below throws (nothing would ever drop a stale snapshot)
-    try bumpVersion(table) // cross-process visibility (see the cache note)
-    finally snapshots.put(table, stored)
-    stored
-  }
+  def deleteConfig(configId: Long): Unit = rewrite(configs)(_.filter(_.id != configId))
 }

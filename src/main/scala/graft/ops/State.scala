@@ -35,9 +35,6 @@ object State {
   def toDeactivate(df: DataFrame, keyCol: String, isFailure: org.apache.spark.sql.Column): DataFrame =
     failureCounts(df, keyCol, isFailure).filter(col("deactivate")).drop("deactivate")
 
-  val Statuses: Seq[String] =
-    Seq("queued", "syncing", "file_available", "latest_sync_failed", "file_unavailable")
-
   /** T3 guard: rows whose status permits a new sync (the reference returns
     * HTTP 202 while queued/syncing — file.py:188-199).
     */

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.{ConfigMeta, FileStatus, HyperFileMeta, MetaStore, ServerMeta}
+import graft.catalog.{ConfigMeta, FileStatus, HyperFileMeta, MetaStore, ServerMeta, UniqueKeyViolation}
 
 /** Thin HTTP product shell over the metadata catalog + extract store —
   * the serving surface a reference user actually curls
@@ -81,8 +81,6 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
               _ => sys.error("no OAuth transport configured"),
             newStateKey: () => String =
               () => java.util.UUID.randomUUID().toString) {
-
-  import spark.implicits._
 
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
@@ -329,18 +327,11 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
               val filename = m.get("title").map(t => s"$t.parquet")
                 .orElse(jsonField(body, "filename"))
                 .getOrElse(s"form_$formId.parquet")
-              // sequence allocator, never max+1: a deleted top id must
-              // not be recycled under a dangling reference
-              val newId = store.nextId("hyperfiles",
-                store.hyperFilesSnapshot().map(_.id).maxOption.getOrElse(0L))
               val metaData = configRow.map(c =>
                 Map("configuration-id" -> c.id.toString)).getOrElse(Map.empty[String, String])
-              val row = HyperFileMeta(newId, userId, formId, filename,
-                FileStatus.Queued, isActive = true, metaData, clock())
-              store.createOrGet(Seq(row).toDS()) // the commit primes the snapshot
-              val owner = store.hyperFilesSnapshot()
-                .find(f => f.userId == userId && f.formId == formId).get
-              val created = owner.id == newId
+              val (owner, created) = store.createOrGetFile(userId, formId)(
+                HyperFileMeta(_, userId, formId, filename, FileStatus.Queued,
+                  isActive = true, metaData, clock()))
               if (created && jsonField(body, "sync_immediately").contains("true"))
                 sync(owner.id)
               respondJson(ex, if (created) 201 else 200, fileJson(owner, withUrls = true))
@@ -418,11 +409,8 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
                 // normalize like the OAuth login lookup (trailing slash
                 // stripped) so the unique-url key and the by-url match
                 // agree on one spelling
-                val normalized = url.stripSuffix("/")
-                val nextId = store.nextId("servers",
-                  store.serversSnapshot().map(_.id).maxOption.getOrElse(0L))
-                val row = store.createOrGetServer(ServerMeta(nextId, normalized))
-                respondJson(ex, if (row.id == nextId) 201 else 200, serverJson(row))
+                val (row, created) = store.createOrGetServer(url.stripSuffix("/"))
+                respondJson(ex, if (created) 201 else 200, serverJson(row))
             }
           case ("GET", Array(id), "servers") =>
             id.toLongOption.flatMap(i =>
@@ -438,11 +426,8 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
             (jsonField(body, "user_id").flatMap(_.toLongOption),
              jsonField(body, "server_address"), jsonField(body, "token_name")) match {
               case (Some(uid), Some(addr), Some(tok)) =>
-                val nextId = store.nextId("configurations",
-                  store.configsSnapshot().map(_.id).maxOption.getOrElse(0L))
-                val row = store.createOrGetConfig(
-                  ConfigMeta(nextId, uid, addr, tok, Map.empty))
-                respondJson(ex, if (row.id == nextId) 201 else 200, configJson(row))
+                val (row, created) = store.createOrGetConfig(uid, addr, tok)
+                respondJson(ex, if (created) 201 else 200, configJson(row))
               case _ => respondJson(ex, 400,
                 """{"detail":"user_id, server_address and token_name are required"}""")
             }
@@ -466,8 +451,9 @@ class Serve(spark: SparkSession, store: MetaStore, token: String,
         }
       }
     } catch {
-      case BadRequest(m) =>
-        respondJson(ex, 400, s"""{"detail":${jsonStr(m)}}""")
+      // UniqueKeyViolation: a configuration PATCH onto another row's key
+      case e @ (_: BadRequest | _: UniqueKeyViolation) =>
+        respondJson(ex, 400, s"""{"detail":${jsonStr(e.getMessage)}}""")
       case e: Throwable =>
         respondJson(ex, 500, s"""{"detail":${jsonStr(String.valueOf(e.getMessage))}}""")
     } finally ex.close()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.catalog.FileStatus
 import graft.etl.Refresh
 
 /** Structured Streaming re-expression of the reference's scheduling/state
@@ -282,7 +283,7 @@ object Streams {
                    at: java.sql.Timestamp): Boolean = {
     val failed = store.readHyperFiles().collect()
       .find(_.id == fileId)
-      .exists(_.fileStatus == graft.catalog.FileStatus.LatestSyncFailed)
+      .exists(_.fileStatus == FileStatus.LatestSyncFailed)
     if (!failed) false
     else
       try { postCommit(extractPath); store.recordSyncResult(fileId, success = true, at); true }
@@ -549,9 +550,9 @@ object Streams {
   }
 
   def statusOf(s: FileState): String =
-    if (!s.active) "file_unavailable"
-    else if (s.consecutiveFailures == 0) "file_available"
-    else "latest_sync_failed"
+    if (!s.active) FileStatus.FileUnavailable
+    else if (s.consecutiveFailures == 0) FileStatus.FileAvailable
+    else FileStatus.LatestSyncFailed
 
   /** The streaming failure tracker. State lives in the checkpoint (RocksDB
     * or HDFS-backed), partitioned by key hash — at 100 TB of sync logs the

@@ -117,6 +117,17 @@ class MetaStoreSpec extends SparkSpec {
       f.copy(metaData = Map(MetaKeys.SyncFailures -> "0"), isActive = true))
     val migrated = store.readHyperFiles().filter(_.id == 1L).head()
     assert(migrated.isActive && migrated.metaData(MetaKeys.SyncFailures) == "0")
+    // the other registries read through the same path: a configurations
+    // table written before exportSettings existed, and a users table
+    // that still carries a since-dropped column
+    Seq((1L, 10L, "https://t.example", "pat"))
+      .toDF("id", "userId", "serverAddress", "tokenName")
+      .coalesce(1).write.parquet(s"$root/configurations")
+    assert(store.readConfigs().collect().toSeq ==
+      Seq(ConfigMeta(1L, 10L, "https://t.example", "pat", null)))
+    Seq((1L, "ana", 1L, "dropped-in-v2")).toDF("id", "username", "serverId", "legacyRole")
+      .coalesce(1).write.parquet(s"$root/users")
+    assert(store.readUsers().collect().toSeq == Seq(UserMeta(1L, "ana", 1L)))
   }
 
   test("concurrent writers never lose an update (store-level write serialization)") {
@@ -236,11 +247,21 @@ class MetaStoreSpec extends SparkSpec {
 
   test("recordSyncResult launches the re-read and the write only; the next snapshot read none") {
     val store = freshStore()
-    // the re-read alone: parquet schema inference plus the scan
-    val (_, reRead) = jobsDuring(store.readHyperFiles().collect())
+    store.initServers(Seq(ServerMeta(1L, "https://one.example")))
+    store.initUsers(Seq(UserMeta(1L, "ana", 1L)))
+    store.initConfigs(Seq(ConfigMeta(1L, 1L, "https://one.example", "t", Map.empty)))
+    // a re-read of any registry is its scan alone: no schema inference job
+    Seq[(String, () => Any)](
+      "hyperfiles" -> (() => store.readHyperFiles().collect()),
+      "servers" -> (() => store.readServers().collect()),
+      "users" -> (() => store.readUsers().collect()),
+      "configurations" -> (() => store.readConfigs().collect())).foreach { case (t, reRead) =>
+      val (_, jobs) = jobsDuring(reRead())
+      assert(jobs == 1, s"a $t re-read launched $jobs jobs")
+    }
     val (_, record) = jobsDuring(
       store.recordSyncResult(1L, success = true, ts("2024-01-02 00:00:00")))
-    assert(record == reRead + 1, s"recordSyncResult launched $record jobs; re-read is $reRead")
+    assert(record == 2, s"recordSyncResult launched $record jobs; want the re-read and the write")
     val (snap, served) = jobsDuring(store.hyperFilesSnapshot())
     assert(served == 0, s"the snapshot after a commit launched $served jobs")
     assert(snap.find(_.id == 1L).get.lastUpdated == ts("2024-01-02 00:00:00"))

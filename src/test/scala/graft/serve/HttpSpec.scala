@@ -681,6 +681,46 @@ class HttpSpec extends SparkSpec {
     }
   }
 
+  test("a configuration PATCH onto another row's unique key is 400 and changes neither row") {
+    withServer { (port, store, _) =>
+      // config 1 is (tableau, pat-a, user 10): give user 10 a second token
+      val (s, b) = bodyRequest(port, "/api/v1/configurations", "POST",
+        """{"user_id":10,"server_address":"https://tableau.example.org","token_name":"pat-c"}""")
+      assert(s == 201, b)
+      val id = """"id":(\d+)""".r.findFirstMatchIn(b).get.group(1).toLong
+      val (s2, b2) = bodyRequest(port, s"/api/v1/configurations/$id", "PATCH",
+        """{"token_name":"pat-a"}""")
+      assert(s2 == 400, b2)
+      assert(b2.contains("\"detail\""), b2)
+      assert(store.readConfigs().collect().map(c => c.id -> c.tokenName).toMap ==
+        Map(1L -> "pat-a", id -> "pat-c"))
+      assert(request(port, s"/api/v1/configurations/$id")._2.contains(""""token_name":"pat-c""""))
+    }
+  }
+
+  test("a duplicate create spends no id: the next new row takes the previous new id + 1") {
+    withServer { (port, _, _) =>
+      def post(path: String, body: String, want: Int): Long = {
+        val (s, b) = bodyRequest(port, path, "POST", body)
+        assert(s == want, s"$path $body: $b")
+        """"id":(\d+)""".r.findFirstMatchIn(b).get.group(1).toLong
+      }
+      Seq(
+        ("/api/v1/servers", """{"url":"https://a.example.org"}""",
+          """{"url":"https://b.example.org"}"""),
+        ("/api/v1/configurations",
+          """{"user_id":10,"server_address":"https://t.example.org","token_name":"a"}""",
+          """{"user_id":10,"server_address":"https://t.example.org","token_name":"b"}"""),
+        ("/api/v1/files", """{"user_id":60,"form_id":600}""", """{"user_id":61,"form_id":600}""")
+      ).foreach { case (path, first, second) =>
+        val a = post(path, first, 201)
+        assert(post(path, first, 200) == a, s"$path: the duplicate did not answer the existing row")
+        val b = post(path, second, 201)
+        assert(b == a + 1, s"$path: the duplicate spent an id (new rows $a, then $b)")
+      }
+    }
+  }
+
   test("delete: side effects run, row gone, 204; unknown id is 404") {
     withServer { (port, store, _) =>
       val conn = new URI(s"http://127.0.0.1:$port/api/v1/files/7").toURL

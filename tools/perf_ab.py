@@ -18,9 +18,14 @@ lets one checkout's build delete the other's classes. Each side builds
 itself on its first run.
 
 Prints one JSON line per metric of the workload's result line: each
-side's median, quartiles and runs, and how many pairs each side won (by
+side's median, quartiles and runs, how many pairs each side won (by
 the metric's `better` direction in BENCHMARK.json; ties count for
-neither). Every run's full result line is appended to SCRATCH/runs.jsonl.
+neither; a pair counts only when both of its runs succeeded) and how many
+of its runs failed. Every run's full result line is appended to
+SCRATCH/runs.jsonl; a failed run (non-zero exit or no result line) is
+appended as {"side", "seed", "run_failed": true, "exit"} (a result line's
+own "failed" counts failed operations) and the A/B carries on. Exits 1
+after the summary if any run failed.
 """
 import argparse
 import json
@@ -69,16 +74,19 @@ def run(side_dir, a, seconds, seed, log):
            "--seconds", str(seconds), "--trace", str(a.trace)]
     p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
-    if p.returncode != 0 or not lines:
+    result = json.loads(lines[-1]) if p.returncode == 0 and lines else None
+    if result is None:
         sys.stderr.write(p.stderr[-3000:])
-        sys.exit(f"perf_ab: {side_dir.name} seed {seed} failed (exit {p.returncode})")
-    result = json.loads(lines[-1])
-    log.write(json.dumps({"side": side_dir.name, "seed": seed, **result}) + "\n")
+        sys.stderr.write(f"perf_ab: {side_dir.name} seed {seed} failed (exit {p.returncode})\n")
+    record = result or {"run_failed": True, "exit": p.returncode}
+    log.write(json.dumps({"side": side_dir.name, "seed": seed, **record}) + "\n")
     log.flush()
     return result
 
 
 def summary(xs):
+    if not xs:
+        return {"median": None, "q1": None, "q3": None, "runs": xs}
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
     return {"median": med, "q1": q1, "q3": q3, "runs": xs}
 
@@ -99,25 +107,37 @@ def main():
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for k in ("end_to_end", "per_layer") for m in bench[k]}
 
-    results = {"base": [], "head": []}
+    results = {"base": {}, "head": {}}  # side -> seed -> result line
+    failed = {"base": 0, "head": 0}
     with open(a.scratch / "runs.jsonl", "a") as log:
         for i, seed in enumerate(seeds(a.seeds)):
             order = ("base", "head") if i % 2 == 0 else ("head", "base")
             for side in order:
-                results[side].append(run(sides[side], a, bench["run_seconds"], seed, log))
+                r = run(sides[side], a, bench["run_seconds"], seed, log)
+                if r is None:
+                    failed[side] += 1
+                else:
+                    results[side][seed] = r
 
-    correct = all(r["correct"] for rs in results.values() for r in rs)
-    for name in results["base"][0]["metrics"]:
-        xs = {s: [r["metrics"][name]["value"] for r in results[s]] for s in results}
+    done = [r for rs in results.values() for r in rs.values()]
+    correct = all(r["correct"] for r in done)
+    names = dict.fromkeys(name for r in done for name in r["metrics"]) or [None]
+    for name in names:
+        xs = {s: {k: r["metrics"][name]["value"] for k, r in results[s].items()
+                  if name in r["metrics"]} for s in results}
         sign = -1 if better.get(name, "lower") == "lower" else 1
         wins = {"base": 0, "head": 0}
-        for b, h in zip(xs["base"], xs["head"]):
+        paired = [k for k in xs["base"] if k in xs["head"]]
+        for k in paired:
+            b, h = xs["base"][k], xs["head"][k]
             if b != h:
                 wins["head" if sign * (h - b) > 0 else "base"] += 1
         print(json.dumps({"workload": a.workload, "metric": name, "better": better.get(name),
-                          "pairs": len(xs["base"]), "all_correct": correct,
-                          "base": {**summary(xs["base"]), "wins": wins["base"]},
-                          "head": {**summary(xs["head"]), "wins": wins["head"]}}))
+                          "pairs": len(paired), "all_correct": correct,
+                          **{s: {**summary(list(xs[s].values())), "wins": wins[s],
+                                 "failed": failed[s]} for s in results}}))
+    if any(failed.values()):
+        sys.exit(f"perf_ab: failed runs: base {failed['base']}, head {failed['head']}")
 
 
 if __name__ == "__main__":
